@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -16,59 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Local-disk tuning mirroring "size maxPartitionBytes to the
-      // cluster": the default 4 MB openCostInBytes floors the scan split
-      // at 4 MB, so a 35 MB parquet table reads in 9 tasks on a 32-core
-      // box and the longest scan stage runs at 28% parallelism. Local
-      // NVMe has no real per-file open cost; 1 MB lets bytes-per-core
-      // set the split down to the row-group scale. NOT lower: splits
-      // below the row-group size are EMPTY (parquet parallelism is
-      // row-group-bounded), and a scan that reports 32 splits with 6
-      // non-empty defeats every numPartitions-based under-split floor
-      // (Curate.contamination's repartition guard — measured 9.7 s vs
-      // 5.7 s at sf1.5 when 256 KB splits masked the 6-row-group file).
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      // Codegen class cache sized to the workload, not Spark's default
-      // 100 entries: this suite carries ~120 queries x 10-30 distinct
-      // whole-stage/expression codegen units each, so at the default the
-      // driver-side Janino cache thrashes — every stage of every query
-      // RECOMPILES its generated class on every run (measured full-suite
-      // A/B on one box session: 76.4/80.8 s at the default vs 47.9 s at
-      // 5000; per-query wins are uniform across the suite, zero
-      // regressions). Scale-independent: compile cost is pure driver/
-      // executor-local constant per stage — at 100 TB the same classes
-      // are compiled once and reused for hours, and a long-lived
-      // production driver serving many queries wants exactly this
-      // (~50-100 KB metaspace per cached class; 5000 entries is a few
-      // hundred MB bounded, static conf so it must ride the builder).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Let AQE size the partitioning INSIDE cached plans too: the
-      // default (false) freezes an operator-persisted aggregate at the
-      // static shuffle partition count, so every downstream stage of a
-      // few-MB cached intermediate runs `spark.sql.shuffle.partitions`
-      // near-empty tasks — ~0.2 CPU-s of fixed task cost each, dozens of
-      // wasted task-slots per query tail.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-    // A/B knob for plan-level experiments (e.g. AQE on/off): semicolon-
-    // separated k=v overrides; the driver's contract call never sets it
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(';').iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry must be k=v: $kv")
-        builder.config(kv.take(i), kv.drop(i + 1))
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session(Driver.cpus).getOrCreate()
     // The only unpartitioned windows in the suite run over
     // post-aggregation relations bounded by construction (≤ bins rows in
     // q_hist_quantiles, one row per source in q_epoch_plan, one row per
@@ -81,49 +29,20 @@ object Bench {
     // JVM/codegen warmup so the first timed query isn't charged for it
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    def timeOnce(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // guide §1.5: label every job with its query so event-log profiling
-      // (tools/profile_eventlog.py) can attribute jobs/stages per query
-      spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        // LOUD failure: the -1 sentinel excludes the query from the
-        // total, so a silently-crashing regression would read as a
-        // speedup in the driver-parsed line
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        return -1.0
-      } finally spark.sparkContext.setJobDescription(null)
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // optional args = query-name subset (local iteration); the driver's
-    // contract call passes none and times the full suite
-    val names =
-      if (args.nonEmpty) args.toSeq.sorted
-      else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")}")
-    // run the whole suite `runs` times (round-robin, not back-to-back per
-    // query) so per-query numbers aren't flattered by a just-warmed cache.
-    // clearCache runs per QUERY, not per pass: operators persist through
-    // never-closed default PersistScopes and CacheManager matches by
-    // canonicalized plan, so a later (alphabetical) query sharing a
-    // deterministic sub-plan with an earlier one would otherwise get the
-    // cache built on the earlier query's clock — its min would exclude a
-    // cost it pays alone (Verify clears per query for the same reason)
-    val samples: Seq[Map[String, Double]] = (1 to runs).map { _ =>
-      names.map { n =>
-        val t = timeOnce(n, SparkEntry.queries(n))
-        spark.catalog.clearCache() // release operator-persisted intermediates
-        n -> t
-      }.toMap
+    // contract call passes none and times the full suite. The whole
+    // suite runs `runs` times (round-robin, not back-to-back per query)
+    // so per-query numbers aren't flattered by a just-warmed cache; a
+    // query that threw in every pass reads -1.
+    val passes = (1 to runs).flatMap { _ =>
+      Driver.eachQuery(spark, "bench", args.toSeq) { (_, query) =>
+        val t0 = System.nanoTime()
+        query(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
-    val best = names.map { n =>
-      val ts = samples.map(_(n)).filter(_ >= 0)
-      n -> (if (ts.isEmpty) -1.0 else ts.min)
+    val best = passes.groupMap(_._1)(_._2).toSeq.sortBy(_._1).map {
+      case (n, ts) => n -> ts.flatten.minOption.getOrElse(-1.0)
     }
     val qs = best.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan (and timing)
   * for named SparkEntry queries. Usage:
   *   runMain graft.Explain <sfDir> <query> [query ...]
@@ -9,22 +7,9 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
-    // fail fast on a typo'd LAST name instead of after earlier queries ran
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val spark = Driver.session(Driver.cpus).getOrCreate()
+    Driver.eachQuery(spark, "explain", args.drop(1).toSeq) { (name, query) =>
+      val df = query(spark, sfDir)
       println(s"\n========== $name ==========")
       df.explain("formatted")
       // noop-sink like Bench: count() would let Catalyst prune the very
@@ -33,9 +18,6 @@ object Explain {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       println(f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      // release operator-persisted intermediates between queries (the
-      // full default run would otherwise accumulate ~99 queries' caches)
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -1,74 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, rest @ _*) = args
     // optional extra args: run only these queries (local iteration aid;
     // the driver always calls with exactly two args = full dump)
-    val only: Set[String] = rest.toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
-        "a typo here would silently verify nothing")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Harmless with timestamp[us] testdata (r7+); makes INT64
-      // TIMESTAMP(NANOS) testdata (≤r6) read as BIGINT nanos. Either way
-      // Tables.events normalizes ts to BIGINT epoch-nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: 4 MB default open-cost floor caps local scan
-      // parallelism at a handful of tasks for the MB-scale test tables
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // see Bench.scala: the 100-entry default codegen cache thrashes
-      // across this suite's ~thousands of distinct codegen units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, only @ _*) = args
+    val spark = Driver.session(Driver.cpus).getOrCreate()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        // Canonical dump order: sort by every orderable column
-        // (name-sorted) so the single output file is byte-stable across
-        // runs — insurance against any order sensitivity in the driver's
-        // hash (round-6 q_transitions flake). Map-typed columns are not
-        // orderable in Spark and are skipped as sort keys.
-        def orderable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-          case _: org.apache.spark.sql.types.MapType => false
-          case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => orderable(f.dataType))
-          case a: org.apache.spark.sql.types.ArrayType => orderable(a.elementType)
-          case _ => true
-        }
-        val keys = df.schema.fields.filter(f => orderable(f.dataType))
-          .map(_.name).sorted.map(org.apache.spark.sql.functions.col)
-        val sorted = if (keys.isEmpty) df else df.coalesce(1).sortWithinPartitions(keys: _*)
-        sorted.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // delete any STALE dump from a prior run into the same outDir:
-        // leaving it would let the driver compare old results as current
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm))
-          p.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
-      }
-      // operators persist shared sub-relations (shingle/band indexes);
-      // release them so 49 sequential queries don't accumulate blocks
-      spark.catalog.clearCache()
+    def rm(p: java.io.File): Unit = {
+      Option(p.listFiles).foreach(_.foreach(rm))
+      p.delete(); ()
+    }
+    // Canonical dump order: sort by every orderable column (name-sorted)
+    // so the single output file is byte-stable across runs — insurance
+    // against any order sensitivity in the driver's hash (round-6
+    // q_transitions flake). Map-typed columns are not orderable in
+    // Spark and are skipped as sort keys.
+    def orderable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
+      case _: org.apache.spark.sql.types.MapType => false
+      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => orderable(f.dataType))
+      case a: org.apache.spark.sql.types.ArrayType => orderable(a.elementType)
+      case _ => true
+    }
+    Driver.eachQuery(spark, "verify", only) { (name, query) =>
+      // delete any STALE dump from a prior run into the same outDir
+      // first: if this query fails, the driver must not compare old
+      // results as current
+      rm(new java.io.File(s"$outDir/$name"))
+      val df = query(spark, sfDir)
+      val keys = df.schema.fields.filter(f => orderable(f.dataType))
+        .map(_.name).sorted.map(org.apache.spark.sql.functions.col)
+      val sorted = if (keys.isEmpty) df else df.coalesce(1).sortWithinPartitions(keys: _*)
+      sorted.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

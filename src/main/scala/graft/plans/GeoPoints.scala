@@ -214,10 +214,13 @@ case class PointsArea(child: Expression) extends PointsArrayInput {
   override def nullSafeEval(input: Any): Any =
     GeoPoints.evalArea(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-      |java.lang.Double r = graft.plans.GeoPoints.evalArea($a);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """.stripMargin)
+    nullSafeCodeGen(ctx, ev, a => {
+      val r = ctx.freshName("r")
+      s"""
+        |java.lang.Double $r = graft.plans.GeoPoints.evalArea($a);
+        |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+      """.stripMargin
+    })
   override protected def withNewChildInternal(newChild: Expression): PointsArea =
     copy(child = newChild)
 }
@@ -228,10 +231,13 @@ case class PointsLength(child: Expression) extends PointsArrayInput {
   override def nullSafeEval(input: Any): Any =
     GeoPoints.evalLength(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-      |java.lang.Double r = graft.plans.GeoPoints.evalLength($a);
-      |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """.stripMargin)
+    nullSafeCodeGen(ctx, ev, a => {
+      val r = ctx.freshName("r")
+      s"""
+        |java.lang.Double $r = graft.plans.GeoPoints.evalLength($a);
+        |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+      """.stripMargin
+    })
   override protected def withNewChildInternal(newChild: Expression): PointsLength =
     copy(child = newChild)
 }

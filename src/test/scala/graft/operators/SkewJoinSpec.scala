@@ -19,6 +19,13 @@ class SkewJoinSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+      // the coalescing floor too (default 1 MB): AQE may coalesce an
+      // operator-persisted intermediate (canChangeCachedPlanOutputPartitioning),
+      // and a test-sized one would collapse to ONE partition — one map
+      // task feeding the join shuffle, whose hot partition AQE then
+      // cannot split (splits cut along map outputs); a multi-GB
+      // intermediate keeps its partitions
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "8KB",
       // enough partitions that the hot bucket's partition towers over
       // the MEDIAN one (the skew detector's baseline) — with the spec
       // session's default handful, the hot buckets ARE the median

@@ -10,56 +10,96 @@ Each query materializes fully (fetchall) — the analogue of the Spark
 bench's noop-sink write. With a timeout, a query that exceeds it is
 interrupted and reported as -timeout (negative = did not finish): at the
 heavy tier some oracles are quadratic (IEJoin radius join) and would run
-for hours — the timeout marker IS the scale finding.
+for hours — the timeout marker IS the scale finding. A query that errors
+reports -1.
+
+`connect` and `duck_min` are the one DuckDB set-up and timer; the
+structural sweep (tools/bench_structural.py) imports them.
 """
-import sys, time, json, threading
+import json
+import os
+import sys
+import threading
+import time
+
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+
+def connect(sf):
+    """A connection with one view per testdata table, running as many
+    threads as the Spark side's local[N] (SPARK_GRAFT_CPUS, else every
+    core), so a paired ratio compares equal parallelism."""
+    con = duckdb.connect()
+    con.execute(f"SET threads TO {int(os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count())}")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
+
+
+def duck_min(con, sql, runs, timeout=None):
+    """Min wall seconds over `runs` fully materialized runs of `sql`.
+    A run past `timeout` is interrupted and ends the series: the result
+    is the best earlier run (a later timeout under box load must not
+    discard a completed minimum), or -timeout if none finished. Any
+    other error raises."""
+    best = None
+    for _ in range(runs):
+        # the done-flag + lock close the race where the timer fires
+        # between fetchall() returning and cancel(): a stray interrupt
+        # would poison the connection and abort the NEXT run instantly
+        lock = threading.Lock()
+        done = [False]
+
+        def maybe_interrupt():
+            with lock:
+                if not done[0]:
+                    con.interrupt()
+        timer = threading.Timer(timeout, maybe_interrupt) if timeout else None
+        if timer:
+            timer.start()
+        t0 = time.monotonic()
+        try:
+            con.execute(sql).fetchall()
+            with lock:
+                done[0] = True
+            took = time.monotonic() - t0
+            best = took if best is None else min(best, took)
+        except Exception:
+            with lock:
+                done[0] = True
+            # an interrupt surfaces as InterruptException or, depending
+            # on where it lands, as another error type: judge by the clock
+            if timeout and time.monotonic() - t0 >= timeout - 0.5:
+                return best if best is not None else -timeout
+            raise
+        finally:
+            if timer:
+                timer.cancel()
+    return best
+
 
 def main():
     sf = sys.argv[1]
     oracles = json.load(open(sys.argv[2]))
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     timeout = float(sys.argv[4]) if len(sys.argv) > 4 else None
-    con = duckdb.connect()
-    con.execute(f"SET threads TO 32")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = connect(sf)
     best = {}
     for name, sql in sorted(oracles.items()):
-        ts = []
-        for _ in range(runs):
-            timer = None
-            if timeout:
-                timer = threading.Timer(timeout, con.interrupt)
-                timer.start()
-            t0 = time.monotonic()
-            try:
-                con.execute(sql).fetchall()
-            except duckdb.InterruptException:
-                ts = [-timeout]
-                sys.stderr.write(f"{name}: timed out after {timeout}s\n")
-                break
-            except Exception as e:
-                took = time.monotonic() - t0
-                # an interrupt can surface as InvalidInputException too
-                if timeout and took >= timeout - 0.5:
-                    ts = [-timeout]
-                    sys.stderr.write(f"{name}: timed out after {timeout}s\n")
-                else:
-                    ts = [-1.0]
-                    sys.stderr.write(f"{name}: {str(e)[:120]}\n")
-                break
-            finally:
-                if timer:
-                    timer.cancel()
-            ts.append(time.monotonic() - t0)
-        best[name] = min(ts)
+        try:
+            best[name] = duck_min(con, sql, runs, timeout)
+        except Exception as e:
+            best[name] = -1.0
+            sys.stderr.write(f"{name}: {str(e)[:120]}\n")
+        if timeout and best[name] == -timeout:
+            sys.stderr.write(f"{name}: timed out after {timeout}s\n")
     total = sum(v for v in best.values() if v >= 0)
     print(json.dumps({"engine": "duckdb", "sf": sf, "runs": runs,
                       "total": round(total, 3),
                       "queries": {k: round(v, 4) for k, v in best.items()}}))
+
 
 if __name__ == "__main__":
     main()

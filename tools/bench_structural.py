@@ -2,17 +2,22 @@
 """Structural cross-engine sweep: every structural query (DuckDB does
 >= 0.5 s of real work at sf0.1 — the set BENCH_structural_r11.json
 pinned) runs SOLO in its own Spark JVM (min over SPARK_GRAFT_BENCH_RUNS
-runs) and in DuckDB (same box, same parquet, tools/bench_duckdb.py
-semantics inline), producing one machine-readable artifact.
+runs) and in DuckDB (same box, same parquet, tools/bench_duckdb.py's
+timer), producing one machine-readable artifact. Explicit query names
+sweep just those (a family crossover at sf3/sf6) instead.
 
-Usage: python3 tools/bench_structural.py <sfDir> <out.json> [runs=3] [duck_timeout_s=300]
+Usage: python3 tools/bench_structural.py <sfDir> <out.json> [runs=3] [duck_timeout_s=300] [query ...]
 
 A DuckDB timeout reports duckdb_s = -timeout and gate = "PASS (DNF)":
 the reference engine did not finish, which at the heavy tier IS the
-scale finding. Gate: spark <= 2x duckdb.
+scale finding. Gate: spark <= 2x duckdb. Every row whose Spark time or
+ratio moved by more than +-25% against the newest committed artifact of
+the same tier carries a WATCH. The sweep exits non-zero when a query it
+was asked for has no row (a Spark failure is reported and skipped).
 """
-import json, os, re, subprocess, sys, time
-import duckdb
+import json, os, re, subprocess, sys
+
+from bench_duckdb import connect, duck_min
 
 QUERIES = [
   # dbt model layer FIRST (R18: the adjudicated rows land early so a
@@ -38,9 +43,9 @@ QUERIES = [
 def prior_artifact(sf, out_path):
     """Newest committed structural artifact for the SAME tier (by round
     number in the filename), excluding the one being written — the
-    drift reference for DNF rows (VERDICT r20 #3: when DuckDB DNFs the
-    gate carries no ratio, so a Spark-side regression would otherwise
-    ride through invisibly as "PASS (DNF)")."""
+    drift reference (VERDICT r20 #3: a DNF row carries no ratio, and a
+    passing row's ratio can double, q_ann_ivf 0.262 -> 0.544 in r21,
+    without crossing the gate)."""
     import glob
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tier = os.path.basename(sf.rstrip("/")).replace(".", "")
@@ -85,11 +90,12 @@ def structural_queries():
                   f"{os.path.basename(fulls[-1])}: {sorted(extra)}",
                   flush=True)
     return QUERIES + sorted(extra)
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def spark_solo(sf, query, runs):
     detail = f"/tmp/bench_solo_{query}.json"
+    if os.path.exists(detail):
+        os.unlink(detail)  # never read a stale detail from a failed run
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf,
                SPARK_GRAFT_BENCH_RUNS=str(runs),
                SPARK_GRAFT_BENCH_OUT=detail)
@@ -97,48 +103,24 @@ def spark_solo(sf, query, runs):
         ["sbt", "-batch", f"runMain graft.Bench {query}"],
         capture_output=True, text=True, env=env, cwd=os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))))
-    m = re.search(r'\{"metric".*\}', out.stdout)
-    if not m:
-        sys.stderr.write(out.stdout[-2000:] + out.stderr[-2000:])
-        raise SystemExit(f"no bench line for {query}")
-    return json.load(open(detail))["queries"][query]
+    s = json.load(open(detail))["queries"][query] if os.path.exists(detail) else -1.0
+    if out.returncode != 0 or s < 0:  # -1 = the query threw inside Bench
+        raise RuntimeError(f"Bench failed:\n{out.stdout[-2000:]}{out.stderr[-2000:]}")
+    return s
 
 
-def duck_solo(con, sql, runs, timeout):
-    import threading
-    best = None
-    for _ in range(runs):
-        # the done-flag + lock close the race where the timer fires
-        # between fetchall() returning and cancel(): a stray interrupt
-        # would poison the connection and abort the NEXT run instantly
-        lock = threading.Lock()
-        done = [False]
-
-        def maybe_interrupt():
-            with lock:
-                if not done[0]:
-                    con.interrupt()
-        timer = threading.Timer(timeout, maybe_interrupt)
-        timer.start()
-        t0 = time.monotonic()
-        try:
-            con.execute(sql).fetchall()
-            with lock:
-                done[0] = True
-            took = time.monotonic() - t0
-            best = took if best is None else min(best, took)
-        except Exception:
-            with lock:
-                done[0] = True
-            took = time.monotonic() - t0
-            if took >= timeout - 0.5:
-                # a completed earlier run is a valid minimum — a later
-                # timeout (box load) must not discard it as a DNF
-                return best if best is not None else -timeout
-            raise
-        finally:
-            timer.cancel()
-    return best
+def drift(row, prior_row, prior_name):
+    """WATCH text when the row's Spark time or ratio moved by more than
+    +-25% against the prior artifact's row, else None."""
+    moved = []
+    for key in ("spark_s", "ratio"):
+        now, was = row.get(key), (prior_row or {}).get(key)
+        if isinstance(now, (int, float)) and isinstance(was, (int, float)) \
+                and was > 0 and abs(now / was - 1.0) > 0.25:
+            moved.append(f"{key} {was:.3f} -> {now:.3f} ({now / was:.2f}x)")
+    if not moved:
+        return None
+    return f"WATCH vs {prior_name}: " + ", ".join(moved)
 
 
 def main():
@@ -146,7 +128,7 @@ def main():
     out_path = sys.argv[2]
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     duck_timeout = float(sys.argv[4]) if len(sys.argv) > 4 else 300.0
-    queries = structural_queries()
+    queries = sys.argv[5:] or structural_queries()
 
     # oracle SQL from the last Verify dump; regenerate it (one tiny
     # Verify run at sf0.001 — the oracle text is sf-independent) when the
@@ -160,11 +142,7 @@ def main():
              + queries[0]],
             check=True, capture_output=True, text=True, cwd=repo)
     oracles = json.load(open(oracle_path))
-
-    con = duckdb.connect()
-    con.execute("SET threads TO 32")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = connect(sf)
 
     # resume: keep rows already measured in a previous partial run —
     # only for queries still in the current list, and only if the prior
@@ -173,47 +151,45 @@ def main():
     mode = f"solo-min-of-{runs}"
     result = {"mode": mode, "sf": sf, "queries": {}}
     if os.path.exists(out_path):
-        prior = json.load(open(out_path))
-        if prior.get("sf") == sf and prior.get("mode") == mode:
+        partial = json.load(open(out_path))
+        if partial.get("sf") == sf and partial.get("mode") == mode:
             result["queries"] = {q: v for q, v in
-                                 prior.get("queries", {}).items()
+                                 partial.get("queries", {}).items()
                                  if q in queries}
     prior, prior_name = prior_artifact(sf, out_path)
     for q in queries:
         if q in result["queries"]:
             continue
-        s = spark_solo(sf, q, runs)
-        d = duck_solo(con, oracles[q], runs, duck_timeout)
-        watch = None
+        try:
+            s = spark_solo(sf, q, runs)
+        except RuntimeError as e:
+            print(f"{q} SPARK FAILED: {e}", flush=True)
+            continue
+        d = duck_min(con, oracles[q], runs, duck_timeout)
+        row = {"spark_s": round(s, 3), "duckdb_s": round(d, 3)}
         if d < 0:
-            gate = "PASS (DNF)"
-            ratio = None
-            # DNF blind-spot check (VERDICT r20 #3): no DuckDB
-            # denominator, so compare Spark against the PREVIOUS
-            # committed artifact's row and flag drift past +-25%
-            pv = prior.get(q, {}).get("spark_s")
-            if isinstance(pv, (int, float)) and pv > 0 and \
-                    abs(s / pv - 1.0) > 0.25:
-                watch = (f"WATCH: spark {s:.3f}s vs {pv:.3f}s in "
-                         f"{prior_name} ({s / pv:.2f}x) with no DuckDB "
-                         "denominator — adjudicate before trusting the DNF row")
+            row["gate"] = "PASS (DNF)"
         else:
-            ratio = round(s / d, 3)
-            gate = "PASS" if ratio <= 2.0 else "FAIL"
-        result["queries"][q] = {
-            "spark_s": round(s, 3),
-            "duckdb_s": round(d, 3),
-            **({"ratio": ratio} if ratio is not None else {}),
-            **({"watch": watch} if watch else {}),
-            "gate": gate}
-        print(q, result["queries"][q], flush=True)
+            row["ratio"] = round(s / d, 3)
+            row["gate"] = "PASS" if row["ratio"] <= 2.0 else "FAIL"
+        watch = drift(row, prior.get(q), prior_name)
+        if watch:
+            row["watch"] = watch
+        result["queries"][q] = row
+        print(q, row, flush=True)
         json.dump(result, open(out_path, "w"), indent=1)
     npass = sum(1 for q, v in result["queries"].items()
                 if q in queries and v["gate"].startswith("PASS"))
-    result["summary"] = f"{npass}/{len(queries)} pass the 2x gate"
+    missing = [q for q in queries if q not in result["queries"]]
+    result["summary"] = f"{npass}/{len(queries)} pass the 2x gate" + (
+        f"; MISSING {len(missing)}: {', '.join(missing)}" if missing else "")
     json.dump(result, open(out_path, "w"), indent=1)
     print(result["summary"])
+    for q, v in result["queries"].items():
+        if "watch" in v:
+            print(q, v["watch"])
+    return 1 if missing else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
-"""Attribute a Bench run's wall/CPU to jobs, stages, and plan nodes from
-a Spark event log — the profiling loop behind the R19 model-query
-surgery (no UI needed; works on the rolling zstd logs local mode writes).
+"""Attribute a Bench run's wall/CPU to queries, jobs, stages, and plan
+nodes from a Spark event log — the profiling loop behind the R19
+model-query surgery (no UI needed; works on the rolling zstd logs local
+mode writes). The drivers label every job with its query name (the job
+description), which fills the `query` column.
 
-Capture a log, then read it:
+Capture a log (any `spark.*` JVM property reaches the session), then
+read it:
 
-    SPARK_GRAFT_CONF="spark.eventLog.enabled=true;spark.eventLog.dir=/tmp/sparklogs" \
-      SPARK_GRAFT_BENCH_RUNS=2 SPARK_GRAFT_SF_DIR=benchdata/sf1.5 \
-      sbt -batch "runMain graft.Bench q_model_authority_scores"
-    python3 tools/profile_eventlog.py /tmp/sparklogs            # jobs+stages
-    python3 tools/profile_eventlog.py /tmp/sparklogs --sql [N]  # plan trees
+    mkdir -p target/sparklogs
+    SPARK_GRAFT_BENCH_RUNS=2 sbt -batch 'set javaOptions ++= Seq("-Dspark.eventLog.enabled=true", "-Dspark.eventLog.dir=target/sparklogs")' \
+      "runMain graft.Bench q_geo_area"
+    python3 tools/profile_eventlog.py target/sparklogs            # jobs+stages
+    python3 tools/profile_eventlog.py target/sparklogs --sql [N]  # plan trees
 
 Reading the output:
 - jobs/stages: with runs=2 the SECOND half of the job list is the warm
@@ -62,8 +65,10 @@ def jobs_stages(events):
     for e in events:
         t = e.get("Event", "")
         if t == "SparkListenerJobStart":
+            desc = (e.get("Properties") or {}).get("spark.job.description") or "-"
             jobs[e["Job ID"]] = [e["Submission Time"], None,
-                                 [s["Stage ID"] for s in e["Stage Infos"]]]
+                                 [s["Stage ID"] for s in e["Stage Infos"]],
+                                 desc]
         elif t == "SparkListenerJobEnd":
             if e["Job ID"] in jobs:
                 jobs[e["Job ID"]][1] = e["Completion Time"]
@@ -78,18 +83,21 @@ def jobs_stages(events):
             cpu[e["Stage ID"]][1] += 1
     if not jobs:
         raise SystemExit("no jobs in log")
+    query_of = {sid: desc for _, _, sts, desc in jobs.values() for sid in sts}
+    width = max(len(d) for _, _, _, d in jobs.values())
     base = min(v[0] for v in jobs.values())
     print("== jobs (s offsets; 2nd half of the list = warm run) ==")
-    for jid, (s, e2, sts) in sorted(jobs.items()):
+    for jid, (s, e2, sts, desc) in sorted(jobs.items()):
         if e2 is None:
             continue
-        print(f"job {jid:3d}  start={(s - base) / 1000:8.3f}  "
+        print(f"job {jid:3d}  {desc:{width}s}  start={(s - base) / 1000:8.3f}  "
               f"dur={(e2 - s) / 1000:6.3f}  stages={sorted(sts)}")
     print("== stages ==")
     for sid, name, s, c, n in sorted(stages):
         if s is None:
             continue
-        print(f"stage {sid:3d}  start={(s - base) / 1000:8.3f} "
+        print(f"stage {sid:3d}  {query_of.get(sid, '-'):{width}s}  "
+              f"start={(s - base) / 1000:8.3f} "
               f"dur={(c - s) / 1000:6.3f} tasks={n:3d} "
               f"cpu_ms={cpu[sid][0]:7d}  {name}")
 
@@ -145,7 +153,7 @@ def sql_plans(events, want=None):
 
 
 def main():
-    path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sparklogs"
+    path = sys.argv[1] if len(sys.argv) > 1 else "target/sparklogs"
     if "--sql" in sys.argv:
         i = sys.argv.index("--sql")
         want = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else None
