@@ -36,9 +36,15 @@ object Text {
   def regexTokens(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+"), lit(0))
 
-  /** Count of tokens present in a fixed vocabulary (stopword hits). */
+  /** Count of tokens present in a fixed vocabulary (stopword hits): one
+    * native [[graft.plans.ModelApply]] `countIn` over a membership table
+    * carried in the expression, as an `int` (the `langId` fold's
+    * struct accumulator is typed on it). Null tokens do not count; a
+    * NULL token array gives NULL. */
   def vocabHits(toks: Column, vocab: Seq[String]): Column =
-    size(filter(toks, t => t.isin(vocab: _*)))
+    graft.plans.ModelApply.countIn(toks,
+      graft.plans.EmbeddedModel("vocab", graft.plans.ModelTable.ones(vocab)))
+      .cast("int")
 
   /** The stopword list q_text_quality's ratio signal counts against. */
   val StopWords: Seq[String] =

@@ -224,18 +224,16 @@ object Bpe {
     seen.toSeq.zipWithIndex.toMap
   }
 
-  /** Corpus encode to TRAINER IDS: [[encodeText]] then a broadcast
-    * vocab-map lookup per token (`element_at` over a map literal —
-    * still zero shuffles). Symbols outside the vocab (characters never
-    * seen at train time) become `unkId`, the standard UNK contract. */
+  /** Corpus encode to TRAINER IDS: [[encodeText]] then one native
+    * [[graft.plans.ModelApply]] `mapOver` of the vocab, broadcast once
+    * as a hash table — still zero shuffles. Symbols outside the vocab
+    * (characters never seen at train time) become `unkId`, the standard
+    * UNK contract. */
   def encodeIds(df: DataFrame, textCol: Column,
                 merges: Seq[(String, String)], alphabet: Seq[String],
-                unkId: Int = -1, outCol: String = "bpe_ids"): DataFrame = {
-    val v = typedLit(vocab(merges, alphabet))
-    df.withColumn(outCol,
-      transform(encodeText(textCol, merges),
-        t => coalesce(element_at(v, t), lit(unkId))))
-  }
+                unkId: Int = -1, outCol: String = "bpe_ids"): DataFrame =
+    df.withColumn(outCol, graft.plans.ModelApply.vocabIds(df.sparkSession,
+      "bpe_vocab", vocab(merges, alphabet), encodeText(textCol, merges), unkId))
 
   /** Persist a learned merge table as the training artifact (one merge
     * per line, rank order, two escaped fields). Symbols never contain

@@ -144,7 +144,8 @@ object Curate {
     * benchmarks are driver-scale by nature, and the collected set is what
     * the STATELESS streaming gate
     * ([[graft.streaming.EventStream.contaminationGateStream]]) broadcasts
-    * against an unbounded stream. Same cap semantics as [[contamination]].
+    * once as a [[graft.plans.ModelApply]] membership table and probes per
+    * row of an unbounded stream. Same cap semantics as [[contamination]].
     *
     * `maxCollected` bounds the driver collect (default 4M n-grams): a
     * "benchmark" frame misconfigured to a corpus would otherwise OOM the
@@ -317,7 +318,9 @@ object Curate {
     * trains the LM on a reference corpus, then filters everything else):
     * the collected map must be broadcast-sized — train on a bounded
     * reference corpus, not the 100 TB stream. Consumed by
-    * [[graft.streaming.EventStream.lmGateStream]].
+    * [[graft.streaming.EventStream.lmGateStream]], which broadcasts it
+    * once as a [[graft.plans.ModelApply]] hash table (the plan carries
+    * the handle, not the bigrams).
     *
     * `maxCollected` bounds the driver collect (default 4M bigrams) with
     * a loud error — pointing this trainer at an unbounded corpus must

@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
   * size. The supported MODEL size is bounded, though (ADVICE r20): the
   * expression carries O(k·d) literals, so past roughly k·d ≈ 10⁵ terms
   * Janino's 64 KB method limit degrades codegen to interpreted eval
-  * (correct, slower) and the literal arrays bloat every plan string —
-  * the literal form is for the curation-gate regime (k tens to
-  * hundreds); a deployment wanting FAISS-scale k (10⁴+ cells) should
-  * shard training per coarse bucket rather than widen one argmin
-  * expression. A
+  * (correct, slower) and the literal arrays bloat every plan string.
+  * [[MaxLiteralTerms]] enforces that bound: a larger model fails before
+  * its assignment job runs, naming k, d and the limit. The literal form
+  * is for the curation-gate regime (k tens to hundreds); a deployment
+  * wanting FAISS-scale k (10⁴+ cells) should shard training per coarse
+  * bucket rather than widen one argmin expression. A
   * Lloyd training round is then a single job: row-wise assignment →
   * per-(cell, dim) decimal-exact means (map-side combinable, one
   * shuffle of ≤ k·d·parts partial rows) → a ≤ k·d-row collect that
@@ -73,13 +74,29 @@ object IvfIndex {
                         cc: Double): Column =
     vv - lit(2.0) * Similarity.dot(v, typedLit(c)) + lit(cc)
 
+  /** Most centroid literal terms (k·d) one assignment expression may
+    * carry: the r21 estimate of where the generated argmin passes the
+    * 64 KB method limit (see object doc). */
+  val MaxLiteralTerms: Long = 100000L
+
+  /** Fail, naming k, d and the limit, when a k-centroid, d-dimensional
+    * model is too large for the literal assignment form. */
+  private[operators] def requireLiteralBound(what: String, k: Int, d: Int): Unit =
+    require(k.toLong * d <= MaxLiteralTerms,
+      s"$what: k=$k centroids of d=$d dimensions need k*d = ${k.toLong * d} " +
+        s"literal terms in one assignment expression, over the limit of " +
+        s"$MaxLiteralTerms; train fewer or lower-dimensional centroids")
+
   /** Nearest-centroid id as one row expression (see object doc). */
   private def nearestLit(v: Column, vv: Column,
-                         cents: Seq[(Int, Seq[Double])]): Column =
+                         cents: Seq[(Int, Seq[Double])]): Column = {
+    requireLiteralBound("IvfIndex", cents.size,
+      cents.map(_._2.length).foldLeft(0)(math.max))
     array_min(array(cents.map { case (cid, c) =>
       struct(distToLit(v, vv, c, Similarity.dotSeq(c, c)).as("d"),
         lit(cid).as("id"))
     }: _*)).getField("id")
+  }
 
   /** The k-row centroid table as driver state (bounded by construction
     * — the same legitimacy as collecting k-means centroids anywhere). */

@@ -74,6 +74,7 @@ object PqIndex {
     require(initRows.nonEmpty, "trainBooks: empty input")
     val dim = initRows.head.getSeq[Double](0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    IvfIndex.requireLiteralBound("PqIndex.trainBooks", initRows.length, dim)
     val sub = dim / m
     // one cached row per vid, sub-vectors and self-dots materialized in
     // their own projections so the k distance terms share them (the
@@ -210,6 +211,7 @@ object PqIndex {
              keepCols: Seq[String] = Nil): DataFrame = {
     val m = books.length
     val sub = books(0)(0).length
+    IvfIndex.requireLiteralBound("PqIndex.encode", books.map(_.length).max, m * sub)
     val withSubs = df.select(
       Seq(col(idCol).as("vid"), vecD(col(vecCol)).as("v")) ++
         keepCols.map(col) ++

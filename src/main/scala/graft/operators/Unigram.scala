@@ -129,12 +129,9 @@ object Unigram {
     * table (UNK code points surfaced by the DP's fallback) become
     * `unkId` — the [[Bpe.encodeIds]] contract. */
   def encodeIds(df: DataFrame, textCol: Column, table: UnigramTable,
-                unkId: Int = -1, outCol: String = "piece_ids"): DataFrame = {
-    val v = typedLit(vocab(table))
-    df.withColumn(outCol,
-      transform(encodeText(textCol, table),
-        t => coalesce(element_at(v, t), lit(unkId))))
-  }
+                unkId: Int = -1, outCol: String = "piece_ids"): DataFrame =
+    df.withColumn(outCol, graft.plans.ModelApply.vocabIds(df.sparkSession,
+      "unigram_vocab", vocab(table), encodeText(textCol, table), unkId))
 
   /** Persist a trained piece table (first line = the UNK cost, then one
     * `piece \t cost` per line in sorted piece order). Pieces CAN contain

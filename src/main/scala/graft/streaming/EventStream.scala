@@ -370,28 +370,31 @@ object EventStream {
   /** Streaming decontamination gate: drop stream documents sharing >=
     * `minShared` distinct token n-grams with a fixed benchmark set.
     * The benchmark n-gram universe (from
-    * [[graft.operators.Curate.benchmarkNgrams]] — capped, distinct) rides
-    * along as a broadcast literal and the overlap count is a per-row
-    * array_intersect: STATELESS, no state store, no watermark, no
-    * shuffle — the stream twin of the batch inverted-index join, valid
-    * because eval benchmarks are driver-scale by nature while the STREAM
-    * is the unbounded side. Emits survivors with the overlap count for
-    * audit sinks. */
+    * [[graft.operators.Curate.benchmarkNgrams]] — capped, distinct) is
+    * broadcast once as a hash table and the overlap count is one native
+    * [[graft.plans.ModelApply]] `countIn` over the row's distinct
+    * n-grams: STATELESS, no state store, no watermark, no shuffle, and
+    * the plan carries the broadcast handle, not the n-grams — the stream
+    * twin of the batch inverted-index join, valid because eval
+    * benchmarks are driver-scale by nature while the STREAM is the
+    * unbounded side. Emits survivors with the overlap count for audit
+    * sinks. */
   def contaminationGateStream(docs: DataFrame, idCol: String, textCol: String,
                               benchNgrams: Array[String], n: Int,
                               minShared: Int): DataFrame = {
     import graft.functions.Text
+    import graft.plans.{ModelApply, ModelTable}
+    val bench = ModelApply.broadcast(docs.sparkSession, "benchmark_ngrams",
+      ModelTable.ones(benchNgrams))
     // withColumn + drop, not a projection: every OTHER input column
     // (scrubbed_text, audit metrics from an upstream gate) rides through
     // untouched — a projecting gate silently strips the scrubbed output
     // form from the composed curationStream
     docs
       .withColumn("__toks", Text.tokens(col(textCol)))
-      .withColumn("__g",
-        array_distinct(graft.plans.NGrams.ngrams(col("__toks"), n)))
-      .withColumn("n_bench_ngrams",
-        size(array_intersect(col("__g"), lit(benchNgrams))).cast("long"))
-      .drop("__toks", "__g")
+      .withColumn("n_bench_ngrams", ModelApply.countIn(
+        array_distinct(graft.plans.NGrams.ngrams(col("__toks"), n)), bench))
+      .drop("__toks")
       .where(col("n_bench_ngrams") < minShared)
   }
 
@@ -551,44 +554,39 @@ object EventStream {
 
   /** Streaming LM-quality gate (the CCNet train-batch / apply-stream
     * split): a bigram model trained once on a bounded reference corpus
-    * ([[graft.operators.Curate.lmModel]]) rides along as a map literal;
-    * each stream document scores `mean over bigram instances of the
-    * model's conditional ppm` (unseen bigrams score 0 — the stream side
-    * may contain anything) and survives at `lm_score_ppm >=
+    * ([[graft.operators.Curate.lmModel]]) is broadcast once as a hash
+    * table; each stream document scores `mean over bigram instances of
+    * the model's conditional ppm` (unseen bigrams score 0 — the stream
+    * side may contain anything) and survives at `lm_score_ppm >=
     * minScorePpm`. STATELESS: no state store, no watermark, no shuffle —
-    * scoring is a per-row expression chain, exactly [[
+    * scoring is native bigrams ([[graft.plans.NGrams]]) plus one
+    * [[graft.plans.ModelApply]] `sumOver`, exactly [[
     * graft.operators.Curate.lmScore]]'s integers when every bigram is in
     * the model. */
   def lmGateStream(docs: DataFrame, idCol: String, textCol: String,
                    model: Map[String, Long], minScorePpm: Long): DataFrame = {
     import graft.functions.Text
-    val m = typedLit(model)
+    import graft.plans.{ModelApply, ModelTable}
+    val m = ModelApply.broadcast(docs.sparkSession, "lm_model", ModelTable(model))
     // withColumn + drop (see contaminationGateStream): pass-through for
     // all non-metric input columns, so composed gates keep the scrubbed
     // output form and upstream audit metrics
     docs
-      .withColumn("__toks", Text.tokens(col(textCol)))
-      .withColumn("__bgs",
-        when(size(col("__toks")) >= 2,
-          expr("transform(sequence(1, size(__toks) - 1), " +
-            "i -> concat(__toks[i-1], ' ', __toks[i]))"))
-          .otherwise(array().cast("array<string>")))
+      .withColumn("__bgs", graft.plans.NGrams.ngrams(Text.tokens(col(textCol)), 2))
       .withColumn("n_bigrams", size(col("__bgs")).cast("long"))
-      .withColumn("__sum_ppm",
-        aggregate(
-          transform(col("__bgs"), b => coalesce(element_at(m, b), lit(0L))),
-          lit(0L), (acc, v) => acc + v))
+      .withColumn("__sum_ppm", ModelApply.sumOver(col("__bgs"), m))
       .withColumn("lm_score_ppm",
         when(col("n_bigrams") > 0, expr("__sum_ppm DIV n_bigrams"))
           .otherwise(lit(0L)))
       .where(col("n_bigrams") > 0 && col("lm_score_ppm") >= minScorePpm)
-      .drop("__toks", "__bgs", "__sum_ppm")
+      .drop("__bgs", "__sum_ppm")
   }
 
   /** Streaming mixture gate + shard label (the train-batch/apply-stream
     * split of [[graft.operators.TrainMix]]): per-source temperature
     * rates trained once on the corpus ([[graft.operators.TrainMix
-    * .mixtureRates]]) ride along as a map literal; each stream document
+    * .mixtureRates]]) are broadcast once as a hash table, read per row
+    * by one [[graft.plans.ModelApply]] `lookup`; each stream document
     * keeps iff `md5(key) mod 1e6 < rate_ppm(source)` — the IDENTICAL
     * deterministic predicate as the batch
     * [[graft.operators.TrainMix.temperatureSample]], so stream and batch
@@ -600,10 +598,11 @@ object EventStream {
     * order over the finished corpus, which a stream does not have. */
   def mixtureGateStream(docs: DataFrame, keyCol: String, sourceCol: String,
                         rates: Map[String, Long], shards: Int): DataFrame = {
-    val m = typedLit(rates)
+    import graft.plans.{ModelApply, ModelTable}
+    val m = ModelApply.broadcast(docs.sparkSession, "mixture_rates", ModelTable(rates))
     val key = col(keyCol).cast("string")
     docs
-      .withColumn("rate_ppm", element_at(m, col(sourceCol)))
+      .withColumn("rate_ppm", ModelApply.lookup(col(sourceCol).cast("string"), m))
       .where(col("rate_ppm").isNotNull &&
         pmod(graft.plans.Md5Long.md5Long(key), lit(1000000L)) < col("rate_ppm"))
       // 's|' salt = TrainMix.shardLayout's: the shard hash must be
@@ -697,9 +696,11 @@ object EventStream {
     * receives each batch's survivors.
     *
     * Same 100 TB split as every gate here: models (benchmark n-grams,
-    * LM) train on bounded reference corpora and ride along as literals;
-    * only the near-dup store grows with the corpus, and that is the
-    * one stage with per-batch state IO. */
+    * LM) train on bounded reference corpora and are broadcast once, when
+    * this is called, as [[graft.plans.ModelApply]] hash tables — the
+    * plan holds their handles, so its size does not grow with the
+    * models; only the near-dup store grows with the corpus, and that is
+    * the one stage with per-batch state IO. */
   def curationStream(docs: DataFrame, idCol: String, textCol: String,
                      minTokens: Int, maxRepRatioPpm: Long,
                      benchNgrams: Array[String], benchN: Int, minShared: Int,
@@ -740,38 +741,47 @@ object EventStream {
     if (fs.exists(p)) Some(spark.read.parquet(path)) else None
   }
 
-  /** Band signatures of one micro-batch: (doc, band, sig), persisted —
-    * the caller releases it. Delegates to [[graft.operators.Dedup
-    * .bandedSigs]], the ONE banding expression (with its k/bands
-    * fail-fast), so stream and batch LSH schemes cannot drift. */
+  /** Band signatures of one micro-batch: (doc, band, sig), cached in
+    * `scope`. Delegates to [[graft.operators.Dedup.bandedSigs]], the ONE
+    * banding expression (with its k/bands fail-fast), so stream and batch
+    * LSH schemes cannot drift. */
   private def bandSignatures(batch: DataFrame, idCol: String, textCol: String,
-                             k: Int, bands: Int): DataFrame =
-    graft.operators.Dedup.bandedSigs(
+                             k: Int, bands: Int,
+                             scope: graft.PersistScope): DataFrame =
+    scope.cache(graft.operators.Dedup.bandedSigs(
       graft.operators.Dedup.minhashSignatures(
         batch.select(col(idCol), col(textCol)), idCol, textCol, k),
-      k, bands).persist()
+      k, bands))
 
   /** Shared survivor computation + emit of the two near-dup variants
     * (plain store join vs bloom-prefiltered), parameterized by the
-    * store-hit lookup: anti-join store hits and intra-batch dups, emit
-    * survivors, return their signatures for the store commit. */
+    * store-hit keys: drop store hits and intra-batch dups, emit
+    * survivors, return their signatures for the store commit.
+    *
+    * Both drop reasons come from ONE (band, sig)-partitioned pass over
+    * the banded rows: a window `min(doc)` per bucket (the min doc id of a
+    * bucket wins inside the batch) and a left join to `hitKeys`, which
+    * shares that partitioning. A doc is dropped when any of its buckets
+    * is a store hit or has a smaller doc of this batch; the drop set
+    * only feeds an anti join, so repeated hit keys are harmless. */
   private def filterAndEmit(batch: DataFrame, idCol: String, banded: DataFrame,
-                            hitDocs: DataFrame, emit: DataFrame => Unit,
+                            hitKeys: Option[DataFrame], emit: DataFrame => Unit,
                             scope: graft.PersistScope): DataFrame = {
-    // dedup within the batch itself (min doc id per bucket wins)
-    val batchHub = banded.groupBy("band", "sig").agg(min(col("doc")).as("hub"))
-    val intraDup = banded.join(batchHub, Seq("band", "sig"))
-      .where(col("doc") =!= col("hub")).select("doc").distinct()
+    val hubbed = banded.withColumn("__hub", min(col("doc")).over(
+      org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")))
+    val dropped = hitKeys.fold(hubbed.where(col("doc") =!= col("__hub"))) { hits =>
+      hubbed.join(hits.withColumn("__hit", lit(true)), Seq("band", "sig"), "left")
+        .where(col("__hit").isNotNull || col("doc") =!= col("__hub"))
+    }.select("doc")
     // base the survivor set on ALL batch docs, not just docs that
     // produced signatures: a token-less document has no bands, is
     // trivially not a near-dup, and must pass through (it previously
     // vanished from the left_semi emit).
-    // survivors' lineage holds the STORE scan (via hitDocs), and both
+    // survivors' lineage holds the STORE scan (via hitKeys), and both
     // the emit here and the caller's store append consume it: cache it
     // or every trigger pays the O(corpus) store read twice
-    val survivors = scope.cache(batch.select(col(idCol).as("doc")).distinct()
-      .join(hitDocs, Seq("doc"), "left_anti")
-      .join(intraDup, Seq("doc"), "left_anti"))
+    val survivors = scope.cache(batch.select(col(idCol).as("doc"))
+      .join(dropped, Seq("doc"), "left_anti"))
     emit(batch.join(survivors, batch(idCol) === survivors("doc"), "left_semi"))
     banded.join(survivors, Seq("doc"), "left_semi").select("band", "sig")
   }
@@ -790,6 +800,10 @@ object EventStream {
     * the filtered output — at-least-once on replay errs toward dropping
     * re-seen docs, never emitting a dup twice.
     *
+    * The micro-batch is cached once per trigger: the banding, the survivor
+    * set and the emit all read it, and its lineage is the upstream gates
+    * (e.g. [[curationStream]]'s), which would otherwise run once per read.
+    *
     * Returns the writeStream-ready transformer: caller supplies the sink
     * for surviving docs inside `emit`. */
   def nearDupFilterBatch(storePath: String, idCol: String, textCol: String,
@@ -797,19 +811,20 @@ object EventStream {
                          emit: DataFrame => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val banded = bandSignatures(batch, idCol, textCol, k, bands)
       val scope = graft.PersistScope()
       try {
-        val seen = readStoreIfExists(spark, storePath).getOrElse(
-          spark.emptyDataFrame
-            .withColumn("band", lit(0)).withColumn("sig", lit("")))
-        // a doc survives iff NONE of its bands is already in the store
-        val hitDocs = banded.join(seen.select("band", "sig").distinct(),
-          Seq("band", "sig"), "left_semi").select("doc").distinct()
+        val docs = scope.cache(batch)
+        val banded = bandSignatures(docs, idCol, textCol, k, bands, scope)
+        // a doc survives iff NONE of its bands is already in the store.
+        // No distinct: the store holds each key once except after a
+        // replay, and a repeated key only repeats a drop — a distinct
+        // would cost one more shuffle of the store per trigger
+        val hitKeys = readStoreIfExists(spark, storePath)
+          .map(_.select("band", "sig"))
         // commit survivors' signatures AFTER the emit so replays re-filter
-        filterAndEmit(batch, idCol, banded, hitDocs, emit, scope)
+        filterAndEmit(docs, idCol, banded, hitKeys, emit, scope)
           .write.mode("append").parquet(storePath)
-      } finally { banded.unpersist(); scope.close() }
+      } finally scope.close()
   }
 
   /** [[nearDupFilterBatch]] with a driver-held Bloom sidecar over the
@@ -828,11 +843,13 @@ object EventStream {
 
     override def apply(batch: DataFrame, batchId: Long): Unit = {
       val spark = batch.sparkSession
-      val banded = bandSignatures(batch, idCol, textCol, k, bands)
       val batchScope = graft.PersistScope()
       var b: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter] = null
       try {
+        // cached once per trigger, see nearDupFilterBatch
+        val docs = batchScope.cache(batch)
+        val banded = bandSignatures(docs, idCol, textCol, k, bands, batchScope)
         val store = readStoreIfExists(spark, storePath)
         if (bloom == null) {
           bloom = store match {
@@ -850,34 +867,28 @@ object EventStream {
         // only bands the bloom cannot rule out consult the store; the
         // probe is a codegen'd native expression (plans.BloomProbe), so
         // the gate stage stays inside whole-stage codegen
-        val hitDocs = store match {
-          case Some(s) =>
-            banded.where(graft.plans.BloomProbe.mightContain(col("sig"), b))
-              .join(s.select("band", "sig").distinct(), Seq("band", "sig"), "left_semi")
-              .select("doc").distinct()
-          case None => banded.select("doc").where(lit(false))
-        }
+        val hitKeys = store.map(s =>
+          banded.where(graft.plans.BloomProbe.mightContain(col("sig"), b))
+            .select("band", "sig")
+            .join(s.select("band", "sig"), Seq("band", "sig"), "left_semi"))
         // newSigs' lineage re-reads the store + re-runs the survivor
-        // joins: persist it, or the bloom merge and the store write each
+        // joins: cache it, or the bloom merge and the store write each
         // pay a full store scan per trigger
-        val newSigs = filterAndEmit(batch, idCol, banded, hitDocs, emit,
-          batchScope).persist()
-        try {
-          // bloom merge BEFORE the store write: extra bloom entries are
-          // only false positives (a store lookup), but the reverse order
-          // can lose entries — a failure between write and merge followed
-          // by an in-JVM replay finds its own sigs already stored, skips
-          // the merge, and a later near-dup passes the bloom gate and is
-          // EMITTED. stat.bloomFilter over ZERO rows yields a null sketch
-          // (NPE on merge) — a batch can legitimately contribute no
-          // signatures (all dups, or all token-less docs), so skip then
-          if (!newSigs.isEmpty)
-            bloom.mergeInPlace(
-              newSigs.stat.bloomFilter("sig", expectedSigs, fpp))
-          newSigs.write.mode("append").parquet(storePath)
-        } finally newSigs.unpersist()
+        val newSigs = batchScope.cache(
+          filterAndEmit(docs, idCol, banded, hitKeys, emit, batchScope))
+        // bloom merge BEFORE the store write: extra bloom entries are
+        // only false positives (a store lookup), but the reverse order
+        // can lose entries — a failure between write and merge followed
+        // by an in-JVM replay finds its own sigs already stored, skips
+        // the merge, and a later near-dup passes the bloom gate and is
+        // EMITTED. stat.bloomFilter over ZERO rows yields a null sketch
+        // (NPE on merge) — a batch can legitimately contribute no
+        // signatures (all dups, or all token-less docs), so skip then
+        if (!newSigs.isEmpty)
+          bloom.mergeInPlace(
+            newSigs.stat.bloomFilter("sig", expectedSigs, fpp))
+        newSigs.write.mode("append").parquet(storePath)
       } finally {
-        banded.unpersist()
         batchScope.close()
         // a fresh broadcast per micro-batch: destroy it or thousands of
         // batches pin gigabytes of dead broadcast blocks

@@ -98,4 +98,21 @@ class IvfIndexSpec extends SparkSpec {
       assert(fused === sql, s"fused means diverged from SQL route at parts=$parts")
     }
   }
+
+  test("a centroid model one term past the literal bound fails before any job runs") {
+    // k*d = 11 * 9091 = MaxLiteralTerms + 1
+    val (k, d) = (11, 9091)
+    assert(k.toLong * d === IvfIndex.MaxLiteralTerms + 1)
+    val cents = (0 until k).map(c => (c, Seq.fill(d)(c.toDouble))).toDF("centroid_id", "c")
+    val vecs = Seq((1L, Seq.fill(d)(0.5f))).toDF("vec_id", "embedding")
+    val group = "ivf-literal-bound"
+    spark.sparkContext.setJobGroup(group, group)
+    val err = try intercept[IllegalArgumentException] {
+      IvfIndex.assign(vecs, "vec_id", "embedding", cents)
+    } finally spark.sparkContext.clearJobGroup()
+    assert(err.getMessage.contains("k=11") && err.getMessage.contains("d=9091") &&
+      err.getMessage.contains(IvfIndex.MaxLiteralTerms.toString), err.getMessage)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "a job ran before the bound check")
+  }
 }

@@ -230,4 +230,18 @@ class PqIndexSpec extends SparkSpec {
     assert(trained.map(_.map(_.toSeq).toSeq).toSeq ===
       ref.map(_.map(_.toSeq).toSeq).toSeq)
   }
+
+  test("codebooks one term past the literal bound fail before any job runs") {
+    // one subspace of k=11 centroids in d=9091 dims: k*d = MaxLiteralTerms + 1
+    val books = Array(Array.fill(11)(Array.fill(9091)(1.0)))
+    val group = "pq-literal-bound"
+    spark.sparkContext.setJobGroup(group, group)
+    val err = try intercept[IllegalArgumentException] {
+      PqIndex.encode(Seq((1L, Seq.fill(9091)(0.5f))).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", books)
+    } finally spark.sparkContext.clearJobGroup()
+    assert(err.getMessage.contains("k=11") && err.getMessage.contains("d=9091") &&
+      err.getMessage.contains(IvfIndex.MaxLiteralTerms.toString), err.getMessage)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
 }

@@ -151,6 +151,28 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("curationStream's gated plan does not grow with the models") {
+    // a model-sized literal left in the plan would make the optimized
+    // plan text grow with the model; broadcast handles keep it fixed
+    def gatedPlan(n: Int): String = {
+      val model = (0 until n).map(i => s"w$i w${i + 1}" -> (i % 997).toLong).toMap
+      val bench = (0 until n).map(i => s"b$i b${i + 1} b${i + 2}").toArray
+      // an RDD scan: the optimizer would fold gates over local rows
+      val docs = spark.sparkContext.parallelize(Seq((1L, "w1 w2 w3 b1 b2 b3")))
+        .toDF("doc_id", "text")
+      val (gated, _) = EventStream.curationStream(docs, "doc_id", "text",
+        minTokens = 1, maxRepRatioPpm = 1000000L, benchNgrams = bench, benchN = 3,
+        minShared = 1, lmModel = model, minScorePpm = 0L,
+        storePath = "unused", emit = _ => ())
+      // expression ids differ between the two builds: drop them
+      gated.queryExecution.optimizedPlan.treeString.replaceAll("#\\d+", "")
+    }
+    val small = gatedPlan(10)
+    val large = gatedPlan(10000)
+    assert(small.length === large.length, s"small:\n$small\nlarge:\n$large")
+    assert(!large.contains("w9998"), "a model key is in the plan")
+  }
+
   test("kmvDistinctStream: sketch after batched arrival == batch aggregate, bit for bit") {
     implicit val sqlCtx = spark.sqlContext
     import graft.plans.KmvSketch
