@@ -68,37 +68,44 @@ object Driver {
 
   /** Runs `body` once per named query (every registered query, sorted,
     * when `names` is empty) and returns its result per query, `None`
-    * where the query threw. Unknown names are rejected before any query
+    * where the query failed. Unknown names are rejected before any query
     * runs: a typo'd last name must not surface after the others ran.
     *
     * Each query's jobs carry its name as job description, so an event
     * log (tools/profile_eventlog.py) attributes jobs and stages per
     * query. A failure is printed, counted and never stops the loop.
-    * The cache is cleared after every query, outside `body` (so outside
-    * any timing it takes): operators persist through never-closed
-    * default PersistScopes and CacheManager matches by canonicalized
-    * plan, so a later query sharing a deterministic sub-plan with an
-    * earlier one would otherwise get the cache built on the earlier
-    * query's clock, and a full run would accumulate every query's
-    * blocks. */
+    *
+    * `body` runs inside [[PersistScope.within]]: what the query's
+    * operators cached is released when `body` ends (outside any timing
+    * it takes). Afterwards the session's CacheManager must be empty. An
+    * entry left behind is a `persist()` outside any scope, which would
+    * pile up in a long-lived driver and, since CacheManager matches by
+    * canonicalized plan, hand a later query sharing that sub-plan a
+    * cache built on this query's clock: it fails the query, and it is
+    * cleared so the next query starts empty. */
   def eachQuery[A](spark: SparkSession, tag: String, names: Seq[String],
                    queries: Map[String, Query] = SparkEntry.queries)
                   (body: (String, Query) => A): Seq[(String, Option[A])] = {
     val run = if (names.isEmpty) queries.keys.toSeq.sorted else names.distinct
     val unknown = run.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
     val results = run.map { name =>
       spark.sparkContext.setJobDescription(name)
       val out =
-        try Some(body(name, queries(name)))
+        try Some(PersistScope.within(body(name, queries(name))))
         catch { case e: Throwable =>
           System.err.println(s"[$tag] $name FAILED: ${e.getMessage}")
           None
-        } finally {
-          spark.sparkContext.setJobDescription(null)
-          spark.catalog.clearCache()
-        }
-      name -> out
+        } finally spark.sparkContext.setJobDescription(null)
+      val leaked = !cacheManager.isEmpty
+      if (leaked) {
+        System.err.println(s"[$tag] $name FAILED: left cached relations " +
+          "behind (a persist() outside PersistScope)")
+        spark.catalog.clearCache()
+      }
+      name -> (if (leaked) None else out)
     }
     val failed = results.collect { case (n, None) => n }
     if (failed.nonEmpty) System.err.println(

@@ -105,11 +105,10 @@ object SparkEntry {
       .agg(sum(col("score10")).as("total10"), count(lit(1)).as("n_orders"))
 
   private def qImpactScores(s: SparkSession, d: String): DataFrame = {
-    // persisted: the distributed rank scans it twice (histogram + join-back)
-    val scored = perCustScores(s, d)
+    // cached: the distributed rank scans it twice (histogram + join-back)
+    val scored = graft.PersistScope.cache(perCustScores(s, d)
       .select(col("o_custkey"), col("n_orders"),
-        (col("total10").cast("double") / 10).as("total_impact_level"))
-      .persist()
+        (col("total10").cast("double") / 10).as("total_impact_level")))
     ImpactScore.withPercentRank100(scored, "total_impact_level", "impact_index_score")
       .withColumn("impact_category",
         ImpactScore.severityBucket(col("impact_index_score")))
@@ -118,7 +117,8 @@ object SparkEntry {
   }
 
   private def qAuthorityRollup(s: SparkSession, d: String): DataFrame = {
-    val byAuth = perCustScores(s, d)
+    // cached: the rank scans it twice; keyspace = one row per nation
+    val byAuth = graft.PersistScope.cache(perCustScores(s, d)
       .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("authority"))
@@ -126,8 +126,7 @@ object SparkEntry {
         count(lit(1)).as("n_customers"),
         sum(col("total10")).as("t10"),
         max(col("total10")).as("mx10"),
-        min(col("total10")).as("mn10"))
-      .persist() // rank scans it twice; keyspace = one row per nation
+        min(col("total10")).as("mn10")))
     ImpactScore.withPercentRank100(byAuth, "t10", "authority_score")
       .select(
         col("authority"), col("n_customers"),
@@ -1472,7 +1471,6 @@ object SparkEntry {
     * → token-budget cut (best = most tokens first). Every stage is a
     * §2.4 operator; the full composition is what a training run ships. */
   private def qCurationPipeline(s: SparkSession, d: String): DataFrame = {
-    val scope = new graft.PersistScope
     val docs = Tables.documents(s, d)
     val corpus = docs.where(col("doc_id") % 10 =!= 0)
     val bench = docs.where(col("doc_id") % 10 === 0)
@@ -1481,7 +1479,7 @@ object SparkEntry {
     // explode, and the budget stage all reuse this one tokenize pass.
     // The cache carries only narrow derived columns (hash + trigram set),
     // never the raw text — the rest of the pipeline needs nothing else
-    val gated = scope.cache(corpus
+    val gated = graft.PersistScope.cache(corpus
       .select(col("doc_id"), col("source"), col("text"),
         Text.tokens(col("text")).as("__toks"))
       .select(col("doc_id"), col("source"), col("text"),
@@ -1497,7 +1495,7 @@ object SparkEntry {
     // 2a. exact dedup keep-min as ONE windowed rank on the content hash
     // (rank-1 == min doc_id per group; no groupBy + join-back pass)
     val dw = Window.partitionBy(col("__md5")).orderBy(col("doc_id"))
-    val exactDeduped = scope.cache(gated
+    val exactDeduped = graft.PersistScope.cache(gated
       .withColumn("__rn", row_number().over(dw))
       .where(col("__rn") === 1)
       .drop("__rn", "__md5"))
@@ -1519,8 +1517,7 @@ object SparkEntry {
     // through one task; the benchmark side is small, so its double pass
     // here is noise
     val benchAll = Dedup.shingleRows(bench, "doc_id", "text", 3)
-    val benchIdx = Dedup.capByFreq(benchAll, Seq("sh"), 64, Seq("doc", "sh"),
-        scope)
+    val benchIdx = Dedup.capByFreq(benchAll, Seq("sh"), 64, Seq("doc", "sh"))
       .select(col("doc").as("doc_b"), col("sh"))
     // contamination probes run over exactDeduped, NOT the near-dup
     // survivors (r21, guide §2.4): per-doc contamination is independent
@@ -1968,12 +1965,11 @@ object SparkEntry {
     "q_geo_geojson" -> (qGeoGeoJson _),
     "q_hist_quantiles" -> (qHistQuantiles _),
     "q_model_uprn_usrn_count" -> (qModelUprnUsrnCount _),
-    // the two model-score queries use the default PersistScope: the cached
-    // combined/raw projections are owned by the SESSION (never unpersisted
-    // here — the returned plan is lazy, so a close() before the caller's
-    // action would defeat the cache). Long-lived embedders should call
-    // Models.impactScores*(…, scope) with their own scope and close() it
-    // after materializing.
+    // the two model-score queries return lazy plans over cached
+    // combined/raw projections (PersistScope.cache): the caches belong to
+    // the caller's scope, so run the terminal action inside
+    // PersistScope.within (as Driver.eachQuery does) and the block's end
+    // releases them.
     "q_model_impact_scores" -> (qModelImpactScores _),
     "q_model_authority_scores" -> (qModelAuthorityScores _),
     "q_model_wellbeing" -> (qModelWellbeing _),

@@ -24,7 +24,7 @@ object Verify {
       case a: org.apache.spark.sql.types.ArrayType => orderable(a.elementType)
       case _ => true
     }
-    Driver.eachQuery(spark, "verify", only) { (name, query) =>
+    val results = Driver.eachQuery(spark, "verify", only) { (name, query) =>
       // delete any STALE dump from a prior run into the same outDir
       // first: if this query fails, the driver must not compare old
       // results as current
@@ -35,6 +35,9 @@ object Verify {
       val sorted = if (keys.isEmpty) df else df.coalesce(1).sortWithinPartitions(keys: _*)
       sorted.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
+    // a failure found after the dump was written (a cache the query left
+    // behind) must not leave a dump the compare would pass
+    for ((name, None) <- results) rm(new java.io.File(s"$outDir/$name"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -19,52 +19,19 @@ import org.apache.spark.sql.functions._
   */
 object Geo {
 
-  // optional exponent: PostGIS/Shapely emit 1.5e-3 for near-zero coords,
-  // and without it the scanner would match "-3 2" INSIDE the exponent —
-  // fabricating a garbage vertex instead of parsing or failing cleanly
-  private val Num = "-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?"
-  private val NumPair = s"($Num) ($Num)"
-
   /** Parse "POINT (x y)" / "LINESTRING (x y, x y, ...)" / single-shell
     * "POLYGON ((x y, ...))" into array<struct<x,y>>. Native codegen
-    * scanner ([[graft.plans.WktPoints]]); [[stGeomFromTextHof]] is the
-    * regex spec it is pinned against (GeoPointsSpec). */
+    * scanner ([[graft.plans.WktPoints]]), pinned against a regex + HOF
+    * specification in GeoPointsSpec. */
   def stGeomFromText(wkt: Column): Column =
     graft.plans.GeoPoints.wktPoints(wkt)
-
-  /** Regex + HOF formulation of [[stGeomFromText]] — the executable
-    * specification the DuckDB oracle mirrors; interpreted per row (the
-    * HOF root is CodegenFallback), so the hot path uses the native
-    * scanner. */
-  def stGeomFromTextHof(wkt: Column): Column = {
-    val pairs = regexp_extract_all(wkt, lit(NumPair), lit(0))
-    transform(pairs, p => struct(
-      split(p, " ").getItem(0).cast("double").as("x"),
-      split(p, " ").getItem(1).cast("double").as("y")))
-  }
 
   /** Mean-of-vertices centroid (matches ST_Centroid for POINT and the
     * reference's use on small line geometries). Native sequential fold
     * ([[graft.plans.PointsCentroid]]) — same left-to-right double
-    * addition order as [[stCentroidHof]], so bit-identical. */
+    * addition order as the HOF specification, so bit-identical. */
   def stCentroid(geom: Column): Column =
     graft.plans.GeoPoints.centroid(geom)
-
-  /** HOF formulation of [[stCentroid]] — executable spec (see
-    * [[stGeomFromTextHof]]). The n = 0 case is explicit (NaN, NaN):
-    * under ANSI mode a bare sx/n would THROW DIVIDE_BY_ZERO on an
-    * unparseable-WKT row and kill the whole job — degenerate input must
-    * stay a per-row value (the Codec filter-don't-fail discipline), and
-    * NaN is exactly what the non-ANSI fold always produced. */
-  def stCentroidHof(geom: Column): Column = {
-    val n = size(geom)
-    val sx = aggregate(geom, lit(0.0), (acc, p) => acc + p.getField("x"))
-    val sy = aggregate(geom, lit(0.0), (acc, p) => acc + p.getField("y"))
-    val nan = lit(Double.NaN)
-    struct(
-      when(n === 0, nan).otherwise(sx / n).as("x"),
-      when(n === 0, nan).otherwise(sy / n).as("y"))
-  }
 
   def stX(point: Column): Column = point.getField("x")
   def stY(point: Column): Column = point.getField("y")
@@ -222,36 +189,11 @@ object Geo {
   def stArea(geom: Column): Column =
     graft.plans.GeoPoints.area(geom)
 
-  /** HOF formulation of [[stArea]] — executable spec (see
-    * [[stGeomFromTextHof]]); same sequential fold order. */
-  def stAreaHof(geom: Column): Column = {
-    val n = size(geom)
-    val crosses = transform(geom, (p, i) => {
-      val q = element_at(geom, (pmod(i + 1, n) + 1).cast("int"))
-      p("x") * q("y") - q("x") * p("y")
-    })
-    abs(aggregate(crosses, lit(0.0d), (acc, v) => acc + v)) / 2
-  }
-
   /** Polyline length (open path: n-1 segments, correctly-rounded IEEE
     * sqrt per segment — identical across engines). Native sequential
     * fold ([[graft.plans.PointsLength]]). */
   def stLength(geom: Column): Column =
     graft.plans.GeoPoints.pathLength(geom)
-
-  /** HOF formulation of [[stLength]] — executable spec (see
-    * [[stGeomFromTextHof]]). */
-  def stLengthHof(geom: Column): Column = {
-    val n = size(geom)
-    // greatest(..., 0): an empty geometry (unparseable WKT) would pass
-    // slice a length of -1, which throws and kills the job on one row
-    val segs = transform(slice(geom, lit(1), greatest(n - 1, lit(0))), (p, i) => {
-      val q = element_at(geom, i + 2)
-      sqrt((q("x") - p("x")) * (q("x") - p("x")) +
-        (q("y") - p("y")) * (q("y") - p("y")))
-    })
-    aggregate(segs, lit(0.0d), (acc, v) => acc + v)
-  }
 
   /** ST_Contains(ST_Buffer(center, r), p) for circular buffers ==
     * distance(center, p) <= r (the reference's 500 m wellbeing predicate). */

@@ -13,19 +13,11 @@ object Text {
 
   /** Whitespace tokens with empties dropped (matches DuckDB
     * `list_filter(string_split(t,' '), x -> x <> '')`). Native codegen
-    * byte-scan ([[graft.plans.WsTokens]]); [[tokensHof]] is the
-    * interpreted specification it is pinned against. */
+    * byte-scan ([[graft.plans.WsTokens]]), pinned against an interpreted
+    * `filter(split(text, " "), t => t =!= "")` specification in the
+    * specs. */
   def tokens(text: Column): Column =
     graft.plans.WsTokens.wsTokens(text)
-
-  /** Higher-order-function formulation of [[tokens]] — kept as the
-    * executable specification the DuckDB oracle mirrors and as the
-    * equivalence baseline for the native expression (the
-    * NGrams/shinglesOfHof discipline). ArrayFilter is CodegenFallback,
-    * which interprets the whole subtree per row — the reason the hot
-    * path uses the native expression. */
-  def tokensHof(text: Column): Column =
-    filter(split(text, " "), t => t =!= "")
 
   /** BPE-ish word/number tokens via regex (lowercase letters runs | digit
     * runs); same count under Java regex and DuckDB RE2 for this class.
@@ -89,16 +81,11 @@ object Text {
 
   /** 64-bit token hash from md5 (first 15 hex chars -> < 2^60), identical
     * in DuckDB as `('0x'||substr(md5(t),1,15))::BIGINT`. Native codegen'd
-    * expression straight from the digest bytes (plans.Md5Long); the
-    * built-in-chain formulation is kept below as the executable spec. */
+    * expression straight from the digest bytes (plans.Md5Long), pinned
+    * against the built-in chain (hex string -> substr -> conv) in the
+    * specs. */
   def md5Long(s: Column): Column =
     graft.plans.Md5Long.md5Long(s.cast("binary"))
-
-  /** Built-in-only formulation of [[md5Long]] (hex string -> substr ->
-    * conv) — the cross-engine specification the native expression is
-    * equivalence-tested against. */
-  def md5LongHof(s: Column): Column =
-    conv(substring(md5(s.cast("binary")), 1, 15), 16, 10).cast("long")
 
   /** Polynomial rolling-hash fingerprint of the token sequence:
     * fold(acc = (acc*31 + ascii(t)*7 + len(t)) mod P). Order-sensitive, so
@@ -166,24 +153,10 @@ object Text {
     * >= w+k-1 tokens. `hs` MUST be a plain reference to the
     * pre-materialized hash array ([[md5Long]] over k-gram shingles).
     * Exact integer arithmetic throughout: the fingerprint SET is
-    * engine-portable. */
+    * engine-portable. WinnowExprsSpec pins the native form against the
+    * O(n*w) HOF specification the DuckDB oracle mirrors. */
   def winnowOf(hs: Column, w: Int): Column =
     graft.plans.WinnowExprs.winnowMin(hs, w)
-
-  /** HOF formulation of [[winnowOf]] — the executable spec the DuckDB
-    * oracle mirrors, O(n*w) interpreted with a slice allocation per
-    * window (the native deque is O(n)); WinnowExprsSpec pins them
-    * equal. */
-  def winnowOfHof(hs: Column, w: Int): Column = {
-    val cnt = size(hs) - (w - 1)
-    // NULL input -> NULL (missing document), not [] (too short to
-    // fingerprint) — the shinglesOfHof discipline; oracle mirrors
-    when(hs.isNull, lit(null).cast("array<bigint>"))
-      .when(cnt >= 1,
-      array_sort(array_distinct(
-        transform(sequence(lit(1), cnt), i => array_min(slice(hs, i, lit(w)))))))
-      .otherwise(array().cast("array<bigint>"))
-  }
 
   /** Language-ID heuristic: stopword-profile hit counts per language,
     * argmax with deterministic lexicographic tie-break. Profiles are tiny

@@ -38,8 +38,7 @@ object Curate {
                     idCol: String, textCol: String,
                     n: Int, minShared: Int,
                     maxNgramDf: Int = Int.MaxValue,
-                    broadcastBenchMaxRows: Long = 4000000,
-                    scope: PersistScope = PersistScope()): DataFrame = {
+                    broadcastBenchMaxRows: Long = 4000000): DataFrame = {
     // xxhash64 the shingle strings right after the map stage: the join
     // key, the df-cap key, and the BROADCAST payload all shrink to
     // 8-byte longs (the jaccardPairs discipline — identical results
@@ -52,8 +51,8 @@ object Curate {
     // per-doc totals) — materialize once; the cap itself is the shared
     // hot-key anti-join (Dedup.capByFreq), never a count-over-window on
     // the skewed key
-    val bench = Dedup.capByFreq(scope.cache(benchAll), Seq("sh"),
-      maxNgramDf, Seq("doc", "sh"), scope)
+    val bench = Dedup.capByFreq(PersistScope.cache(benchAll), Seq("sh"),
+      maxNgramDf, Seq("doc", "sh"))
     // broadcast-or-shuffle guard, measured on the quantity that is
     // actually broadcast: the capped INDEX's (doc, ngram) ROWS — a
     // benchmark of few-but-long documents passes any doc-count probe
@@ -131,13 +130,8 @@ object Curate {
     * otherwise vary run to run. */
   def tokenBudgetSelect(df: DataFrame, orderCols: Seq[org.apache.spark.sql.Column],
                         tokenCount: org.apache.spark.sql.Column,
-                        budget: Long,
-                        scope: PersistScope = PersistScope()): DataFrame =
-    // the scope rides into the prefix sum's internal cache of the
-    // repartitioned relation — without it each call leaks one persisted
-    // corpus copy into the session (review-found; same below)
-    Stats.withRunningTotal(df, orderCols, tokenCount, "cum_tokens",
-        scope = scope)
+                        budget: Long): DataFrame =
+    Stats.withRunningTotal(df, orderCols, tokenCount, "cum_tokens")
       .where(col("cum_tokens") <= budget)
 
   /** The distinct (df-capped) benchmark n-gram universe, collected — eval
@@ -191,14 +185,13 @@ object Curate {
     * to empty. The DuckDB oracle mirrors with the literal string, which
     * matches whenever the regex is an escaped literal. */
   def boilerplateRemove(df: DataFrame, idCol: String, textCol: String,
-                        sep: String, maxLineDf: Int,
-                        scope: PersistScope = PersistScope()): DataFrame = {
+                        sep: String, maxLineDf: Int): DataFrame = {
     // consumed 3x (hot-line counts, anti join, per-doc totals): one scan
     // NULL text coalesces to "" so the doc still appears (n_lines = 1)
     // instead of vanishing from the audit output — split(NULL) is NULL
     // and posexplode(NULL) generates zero rows (review-found; the oracle
     // mirrors the COALESCE)
-    val lines = scope.cache(df.select(col(idCol).as("doc"),
+    val lines = PersistScope.cache(df.select(col(idCol).as("doc"),
       posexplode(split(coalesce(col(textCol), lit("")), sep))
         .as(Seq("pos", "line"))))
     val hot = lines.select("doc", "line").distinct()
@@ -234,37 +227,20 @@ object Curate {
   def sourceShareCap(df: DataFrame, groupCol: String,
                      orderCols: Seq[org.apache.spark.sql.Column],
                      tokenCount: org.apache.spark.sql.Column,
-                     sharePpm: Long,
-                     scope: PersistScope = PersistScope()): DataFrame = {
+                     sharePpm: Long): DataFrame = {
     // cached: the total aggregate and the prefix-sum's range shuffle both
     // consume it — without this the token count is computed twice from
     // the raw text
-    val withN = scope.cache(df.withColumn("n_tokens", tokenCount.cast("long")))
+    val withN = PersistScope.cache(df.withColumn("n_tokens", tokenCount.cast("long")))
     val total = withN.agg(sum(col("n_tokens")).cast("decimal(38,0)").as("__total"))
     Stats.withRunningTotalBy(withN, Seq(col(groupCol)), orderCols,
-        col("n_tokens"), "cum_tokens", scope = scope)
+        col("n_tokens"), "cum_tokens")
       .crossJoin(broadcast(total))
       .where(col("cum_tokens").cast("decimal(38,0)") * lit(1000000L)
         <= col("__total") * lit(sharePpm))
       .drop("__total")
   }
 
-  /** Corpus-trained bigram language-model score per document (the
-    * CCNet-style "how typical of the corpus is this text" quality
-    * signal, integer-exact instead of a float perplexity): for every
-    * bigram instance (w1, w2), its conditional probability in ppm is
-    * `c(w1,w2) * 1e6 DIV c(w1,·)` where both counts come from the WHOLE
-    * corpus; a document's score is the mean instance ppm
-    * (`SUM DIV n_bigrams`). No ln()/float math — engine-portable
-    * (libm last-bit rounding differs per engine, see SURVEY §5).
-    *
-    * Plan shape: one bigram explode (shuffle-free row expression over the
-    * materialized token array), two groupBy count passes over the bigram
-    * relation, a model join back on (w1, w2) — all equi-joins on uniform
-    * text keys, never a doc × doc or vocab × vocab product. The bigram
-    * relation is consumed three times (c12, c1, score join): cached once.
-    * Documents with < 2 tokens carry no bigram and are absent (score
-    * undefined). */
   /** (doc, g = "w1 w2") bigram instances with multiplicity — a
     * shuffle-free row expression over the materialized token array, via
     * the native codegen'd [[graft.plans.NGrams]] (r22: the previous
@@ -289,25 +265,45 @@ object Curate {
       .select(col("doc"),
         explode(graft.plans.NGrams.ngrams(col("t"), 2)).as("g"))
 
-  def lmScore(df: DataFrame, idCol: String, textCol: String,
-              scope: PersistScope = PersistScope()): DataFrame = {
-    val bg = scope.cache(bigramRows(df, idCol, textCol))
+  /** The bigram model over bigram instances `bg`: one row per distinct
+    * bigram `g = "w1 w2"` with its conditional probability
+    * `ppm = c(w1,w2) * 1e6 DIV c(w1,·)` (exact, see [[ppmDivSql]]).
+    * c(w1,·) comes from the BIGRAM counts, not a second pass over the
+    * instance relation: SUM(c12) per w1 is the identical integer, and
+    * the c12 subtree feeding both consumers canonicalizes equal, so
+    * ReuseExchange serves it once — one full bg scan instead of two
+    * (guide §2.3 aggregate-before-shuffle, §2.4 shared exchange); w1 is
+    * recovered from the key ("w1 w2" is bijective, see bigramRows). */
+  private def bigramModel(bg: DataFrame): DataFrame = {
     val c12 = bg.groupBy("g").agg(count(lit(1)).as("c12"))
-    // c(w1,·) from the BIGRAM counts, not a second pass over the
-    // instance relation: SUM(c12) per w1 is the identical integer, and
-    // the c12 subtree feeding both consumers canonicalizes equal, so
-    // ReuseExchange serves it once — one full bg scan instead of two
-    // (guide §2.3 aggregate-before-shuffle, §2.4 shared exchange);
-    // w1 recovered from the key ("w1 w2" is bijective, see bigramRows)
     val c1 = c12.groupBy(substring_index(col("g"), " ", 1).as("w1"))
       .agg(sum("c12").as("c1"))
-    val model = c12
-      .withColumn("w1", substring_index(col("g"), " ", 1))
+    c12.withColumn("w1", substring_index(col("g"), " ", 1))
       .join(c1, "w1")
-    bg.join(model, Seq("g"))
+      .select(col("g"), expr(ppmDivSql("c12", "c1")).as("ppm"))
+  }
+
+  /** Corpus-trained bigram language-model score per document (the
+    * CCNet-style "how typical of the corpus is this text" quality
+    * signal, integer-exact instead of a float perplexity): for every
+    * bigram instance (w1, w2), its conditional probability in ppm is
+    * `c(w1,w2) * 1e6 DIV c(w1,·)` where both counts come from the WHOLE
+    * corpus; a document's score is the mean instance ppm
+    * (`SUM DIV n_bigrams`). No ln()/float math — engine-portable
+    * (libm last-bit rounding differs per engine, see SURVEY §5).
+    *
+    * Plan shape: one bigram explode (shuffle-free row expression over the
+    * materialized token array), two groupBy count passes over the bigram
+    * relation, a model join back on (w1, w2) — all equi-joins on uniform
+    * text keys, never a doc × doc or vocab × vocab product. The bigram
+    * relation is consumed three times (c12, c1, score join): cached once.
+    * Documents with < 2 tokens carry no bigram and are absent (score
+    * undefined). */
+  def lmScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val bg = PersistScope.cache(bigramRows(df, idCol, textCol))
+    bg.join(bigramModel(bg), Seq("g"))
       .groupBy("doc")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(expr(ppmDivSql("c12", "c1"))).as("__sum_ppm"))
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("ppm")).as("__sum_ppm"))
       .select(col("doc").as("doc_id"), col("n_bigrams"),
         expr("__sum_ppm DIV n_bigrams").as("lm_score_ppm"))
   }
@@ -328,15 +324,8 @@ object Curate {
     * [[benchmarkNgrams]] and the contamination broadcast guard). */
   def lmModel(df: DataFrame, idCol: String, textCol: String,
               maxCollected: Int = 4 << 20): Map[String, Long] = {
-    val bg = bigramRows(df, idCol, textCol)
-    val c12 = bg.groupBy("g").agg(count(lit(1)).as("c12"))
-    val c1 = c12.groupBy(substring_index(col("g"), " ", 1).as("w1"))
-      .agg(sum("c12").as("c1")) // see lmScore
-    val scored = c12
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-      .join(c1, "w1")
-      // the key already IS "w1 w2" — no concat_ws rebuild
-      .select(col("g").as("b"), expr(ppmDivSql("c12", "c1")).as("ppm"))
+    // the key already IS "w1 w2" — no concat_ws rebuild
+    val scored = bigramModel(bigramRows(df, idCol, textCol))
     // Int.MaxValue = deliberately uncapped (see benchmarkNgrams): the
     // +1 probe would wrap negative and throw
     val rows =
@@ -366,9 +355,8 @@ object Curate {
     * groupBy(doc) mean. Same scale discipline as [[lmScore]] — never
     * doc x doc, never vocab x vocab. */
   def nbQualityScore(df: DataFrame, idCol: String, textCol: String,
-                     labelCol: Column,
-                     scope: PersistScope = PersistScope()): DataFrame = {
-    val toks = scope.cache(
+                     labelCol: Column): DataFrame = {
+    val toks = PersistScope.cache(
       df.select(col(idCol).as("doc"), labelCol.as("__pos"),
         explode(graft.functions.Text.tokens(col(textCol))).as("tok")))
     val model = toks.groupBy("tok").agg(
@@ -426,9 +414,9 @@ object Curate {
     * doc x doc. Integer p_ppm = c * 1e6 DIV n both engines. Pairs with
     * zero shared vocabulary drop out (fully-disjoint sources are a
     * different alarm). */
-  def sourceDrift(docs: DataFrame, sourceCol: String, textCol: String,
-                  scope: PersistScope = PersistScope()): DataFrame = {
-    val counts = scope.cache(docs
+  def sourceDrift(docs: DataFrame, sourceCol: String,
+                  textCol: String): DataFrame = {
+    val counts = PersistScope.cache(docs
       .select(col(sourceCol).as("src"),
         explode(graft.functions.Text.tokens(col(textCol))).as("tok"))
       .groupBy("src", "tok").agg(count(lit(1)).as("c")))

@@ -30,31 +30,11 @@ object Dedup {
 
   /** Distinct n-token shingles over a token-array column, via the native
     * codegen'd [[graft.plans.NGrams]] expression (single tight loop per
-    * row; short docs yield []). */
+    * row; short docs yield []). NGramsSpec pins it against the
+    * interpreted HOF specification the DuckDB oracle mirrors
+    * (list_transform over range). */
   def shinglesOf(toks: Column, n: Int): Column =
     array_distinct(graft.plans.NGrams.ngrams(toks, n))
-
-  /** Interpreted higher-order-function formulation of [[shinglesOf]] —
-    * kept as the executable specification the DuckDB oracle mirrors
-    * (list_transform over range) and as the equivalence baseline for the
-    * native expression. The tokens must be a plain column reference:
-    * inlining the tokenizer here would copy it into every `element_at`.
-    * (Guarded: Spark's `sequence(1, 0)` would count DOWN, so short docs
-    * get []). */
-  def shinglesOfHof(toks: Column, n: Int): Column = {
-    val cnt = size(toks) - (n - 1)
-    // NULL input -> NULL, matching the native expression's null-intolerant
-    // eval exactly (size(NULL) is NULL, so the bare when/otherwise would
-    // silently turn NULL into [] and the two forms would diverge on the
-    // one input class the equivalence spec's =!= filter cannot see)
-    when(toks.isNull, lit(null).cast("array<string>"))
-      .when(cnt >= 1,
-        array_distinct(
-          transform(
-            sequence(lit(1), cnt),
-            i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*))))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** Convenience: text column -> shingles (tokenizes in a separate
     * projection step so the array is computed once per row). */
@@ -92,7 +72,6 @@ object Dedup {
     * consumer now, nothing left to share). */
   private[graft] def capByFreq(rel: DataFrame, keys: Seq[String], cap: Int,
                         keep: Seq[String],
-                        scope: PersistScope = PersistScope(),
                         maxHotKeys: Long = 4L << 20): DataFrame =
     if (cap == Int.MaxValue) rel
     else {
@@ -134,8 +113,7 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    n: Int, tau: Double,
-                   maxShingleDf: Int = Int.MaxValue,
-                   scope: PersistScope = PersistScope()): DataFrame = {
+                   maxShingleDf: Int = Int.MaxValue): DataFrame = {
     // The exploded shingle relation is consumed 4x (both join sides + the
     // per-doc counts); shingling is a heavy interpreted HOF chain, so
     // materialize it once instead of recomputing per consumer.
@@ -152,8 +130,8 @@ object Dedup {
     // doc frequency per shingle == row count (shingles are distinct per
     // doc); the cache is on the UNCAPPED explode so both capByFreq passes
     // read it, never the interpreted shingling
-    val sh = capByFreq(scope.cache(all), Seq("sh"), maxShingleDf,
-      Seq("doc", "sh"), scope)
+    val sh = capByFreq(PersistScope.cache(all), Seq("sh"), maxShingleDf,
+      Seq("doc", "sh"))
     val counts = sh.groupBy("doc").agg(count(lit(1)).as("n_sh"))
     val inter = sh.as("a").join(sh.as("b"), col("a.sh") === col("b.sh"))
       .where(col("a.doc") < col("b.doc"))
@@ -180,8 +158,7 @@ object Dedup {
     * the cap is mirrored in the oracle so results stay cell-exact. */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int, w: Int, minShared: Int,
-                  maxFpDf: Int = Int.MaxValue,
-                  scope: PersistScope = PersistScope()): DataFrame = {
+                  maxFpDf: Int = Int.MaxValue): DataFrame = {
     val all = df
       .select(col(idCol).as("doc"), Text.tokens(col(textCol)).as("__toks"))
       .select(col("doc"), graft.plans.NGrams.ngrams(col("__toks"), k).as("__gk"))
@@ -190,8 +167,8 @@ object Dedup {
       .select(col("doc"), explode(Text.winnowOf(col("__hs"), w)).as("fp"))
     // fingerprints are distinct per doc, so the row count per fp IS the
     // document frequency
-    val fps = capByFreq(scope.cache(all), Seq("fp"), maxFpDf,
-      Seq("doc", "fp"), scope)
+    val fps = capByFreq(PersistScope.cache(all), Seq("fp"), maxFpDf,
+      Seq("doc", "fp"))
     fps.select(col("doc").as("doc_a"), col("fp"))
       .join(fps.select(col("doc").as("doc_b"), col("fp")), Seq("fp"))
       .where(col("doc_a") < col("doc_b"))
@@ -236,10 +213,9 @@ object Dedup {
     * pair before the shuffle). */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             k: Int, bands: Int,
-                            maxBucket: Int = Int.MaxValue,
-                            scope: PersistScope = PersistScope()): DataFrame =
+                            maxBucket: Int = Int.MaxValue): DataFrame =
     candidatePairsFromSigs(minhashSignatures(df, idCol, textCol, k),
-      k, bands, maxBucket, scope)
+      k, bands, maxBucket)
 
   /** (doc, band, sig) banding of a minhash signature frame — THE one
     * banding expression (pairs path, star path, and the streaming
@@ -266,13 +242,12 @@ object Dedup {
     * callers that also consume the signatures (e.g. [[verifyPairs]])
     * cache them once instead of hashing the corpus twice. */
   def candidatePairsFromSigs(sigs: DataFrame, k: Int, bands: Int,
-                             maxBucket: Int = Int.MaxValue,
-                             scope: PersistScope = PersistScope()): DataFrame = {
+                             maxBucket: Int = Int.MaxValue): DataFrame = {
     // sized + filtered + both self-join sides consume the banded relation:
     // materialize once
     val all = bandedSigs(sigs, k, bands)
-    val banded = capByFreq(scope.cache(all), Seq("band", "sig"), maxBucket,
-      Seq("doc", "band", "sig"), scope)
+    val banded = capByFreq(PersistScope.cache(all), Seq("band", "sig"),
+      maxBucket, Seq("doc", "band", "sig"))
     banded.as("a").join(banded.as("b"), Seq("band", "sig"))
       .where(col("a.doc") < col("b.doc"))
       .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
@@ -293,15 +268,14 @@ object Dedup {
     * all-pairs. */
   def verifyPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int, bands: Int,
-                  maxBucket: Int = Int.MaxValue,
-                  scope: PersistScope = PersistScope()): DataFrame = {
+                  maxBucket: Int = Int.MaxValue): DataFrame = {
     // signatures cached ONCE and shared: candidate generation and the
     // per-pair estimate both read them — the corpus is hashed one time
-    val sigs = scope.cache(minhashSignatures(df, idCol, textCol, k))
-    val pairs = candidatePairsFromSigs(sigs, k, bands, maxBucket, scope)
+    val sigs = PersistScope.cache(minhashSignatures(df, idCol, textCol, k))
+    val pairs = candidatePairsFromSigs(sigs, k, bands, maxBucket)
     // consumed by BOTH pair sides: cache, or the corpus is re-tokenized
     // and re-distincted once per side
-    val tokSets = scope.cache(df.select(col(idCol).as("doc"),
+    val tokSets = PersistScope.cache(df.select(col(idCol).as("doc"),
       array_distinct(Text.tokens(col(textCol))).as("ts")))
     def side(p: String) =
       sigs.select(col("doc").as(s"doc_$p") +:
@@ -330,12 +304,11 @@ object Dedup {
     * of k(k-1)/2 pairs. Feed these to [[DupClusters.clusters]] — never
     * materialize the quadratic candidate-pair set just to cluster it. */
   def minhashBucketStars(df: DataFrame, idCol: String, textCol: String,
-                         k: Int, bands: Int,
-                         scope: PersistScope = PersistScope()): DataFrame = {
+                         k: Int, bands: Int): DataFrame = {
     val sigs = minhashSignatures(df, idCol, textCol, k)
     // hub aggregation + the star join both consume the banded relation:
     // materialize once (the minhash pipeline above it is the heavy part)
-    val banded = scope.cache(bandedSigs(sigs, k, bands))
+    val banded = PersistScope.cache(bandedSigs(sigs, k, bands))
     val hubs = banded.groupBy("band", "sig").agg(min(col("doc")).as("hub"))
     banded.join(hubs, Seq("band", "sig"))
       .where(col("doc") =!= col("hub"))
@@ -351,33 +324,13 @@ object Dedup {
   /** Majority fold over an array of 60-bit token hashes — the native
     * codegen expression ([[graft.plans.SimhashFold]]); one primitive
     * int[60] accumulator per row instead of the interpreted ±1-vector
-    * HOF chain (r21; DedupSpec pins it bit-identical to
-    * [[simhashOfHashesHof]] including empty/null-element inputs). The
+    * HOF chain (r21; DedupSpec pins it bit-identical to the HOF
+    * specification including empty/null-element inputs). The
     * native fold evaluates its child ONCE, so callers no longer need the
     * two-projection split that protected the HOF form from re-hashing
     * each token per bit term. */
   def simhashOfHashes(hs: Column): Column =
     graft.plans.SimhashFold.simhashFold(hs, SimhashBits)
-
-  /** Portable HOF formulation of the same fold — interpreted (slow);
-    * kept as the cross-check reference for the native expression (the
-    * DotProduct/dotHof discipline). `hs` must be a plain column
-    * reference: interpreted HOFs copy the argument expression into every
-    * use site, so an inlined md5 tree here would hash each token 60x
-    * (once per bit term). */
-  def simhashOfHashesHof(hs: Column): Column = {
-    val bitVecs = transform(hs, h =>
-      array((0 until SimhashBits).map(b =>
-        when(shiftright(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)): _*))
-    val sums = aggregate(
-      bitVecs,
-      array((0 until SimhashBits).map(_ => lit(0)): _*),
-      (acc, v) => zip_with(acc, v, (x, y) => x + y))
-    val powers = array((0 until SimhashBits).map(b => lit(1L << b)): _*)
-    aggregate(
-      zip_with(sums, powers, (s, p) => when(s > 0, p).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
 
   /** Two-projection simhash: token hashes computed ONCE per token in their
     * own select, then the bit-majority fold. ~60x less md5 work than
@@ -412,8 +365,7 @@ object Dedup {
   val SimhashBlocks = 4
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
-                   maxBucket: Int = Int.MaxValue,
-                   scope: PersistScope = PersistScope()): DataFrame = {
+                   maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= SimhashBlocks - 1,
       s"pigeonhole guarantee needs maxHamming <= ${SimhashBlocks - 1}")
     val sh = simhash(df, idCol, textCol, "sh")
@@ -421,8 +373,8 @@ object Dedup {
       posexplode(array((0 until SimhashBlocks).map(b =>
         shiftright(col("sh"), b * 15).bitwiseAND(0x7FFF)): _*))
         .as(Seq("blk", "bv")))
-    val banded = capByFreq(scope.cache(all), Seq("blk", "bv"), maxBucket,
-      Seq("doc", "sh", "blk", "bv"), scope)
+    val banded = capByFreq(PersistScope.cache(all), Seq("blk", "bv"),
+      maxBucket, Seq("doc", "sh", "blk", "bv"))
     val a = banded.select(col("doc").as("doc_a"), col("sh").as("__sha"),
       col("blk"), col("bv"))
     val b = banded.select(col("doc").as("doc_b"), col("sh").as("__shb"),
@@ -460,9 +412,8 @@ object Dedup {
     * of [p, p+n-1] and [p', p'+n-1]). Never doc x doc; the inverted
     * index is linear in corpus tokens exactly like the shingle family. */
   def dupSpans(df: DataFrame, idCol: String, textCol: String,
-               n: Int, minDocs: Int = 2,
-               scope: PersistScope = PersistScope()): DataFrame = {
-    val pos = scope.cache(
+               n: Int, minDocs: Int = 2): DataFrame = {
+    val pos = PersistScope.cache(
       df.select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__t"))
         .select(col("doc_id"),
           posexplode(graft.plans.NGrams.ngrams(col("__t"), n)).as(Seq("pos", "__g")))
@@ -514,18 +465,18 @@ object Dedup {
     * co-partitioned with the token relation — and one groupBy(doc) to
     * reassemble the kept text in position order. Never doc x doc. */
   def cutSpans(df: DataFrame, idCol: String, textCol: String,
-               n: Int, minDocs: Int = 2, keepCanonical: Boolean = false,
-               scope: PersistScope = PersistScope()): DataFrame = {
+               n: Int, minDocs: Int = 2,
+               keepCanonical: Boolean = false): DataFrame = {
     // tokenize the corpus ONCE: both the token relation and the n-gram
     // relation derive from the same cached (doc_id, tokens) base — the
     // tokenizer chain is the heaviest map stage in the operator and
     // would otherwise run twice over the full corpus
-    val base = scope.cache(
+    val base = PersistScope.cache(
       df.select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__t")))
     // the heaviest chain in the operator (tokenize -> n-grams -> md5),
     // consumed by the dupCols aggregate AND the hits join: cache like
     // dupSpans does for the identical relation
-    val pos = scope.cache(
+    val pos = PersistScope.cache(
       base.select(col("doc_id"),
           posexplode(graft.plans.NGrams.ngrams(col("__t"), n)).as(Seq("pos", "__g")))
         .select(col("doc_id"), col("pos"), Text.md5Long(col("__g")).as("g")))

@@ -187,7 +187,7 @@ object IvfIndex {
     * that loses every vector in a round drops out of the means (GROUP
     * BY semantics — identical in the SQL oracle). */
   def train(df: DataFrame, idCol: String, vecCol: String,
-            k: Int, iters: Int): DataFrame = {
+            k: Int, iters: Int): DataFrame = graft.PersistScope.within {
     val spark = df.sparkSession
     import spark.implicits._
     // scale-adaptive parallelism floor before caching ([[adaptiveFloor]]):
@@ -196,9 +196,8 @@ object IvfIndex {
     // split count so the per-round shuffle stays a handful of map tasks.
     val src = adaptiveFloor(
       df.select(col(idCol).as("vid"), vecD(col(vecCol)).as("v")))
-    val vecs = src
-      .withColumn("vv", Similarity.dot(col("v"), col("v")))
-      .persist()
+    val vecs = graft.PersistScope.cache(src
+      .withColumn("vv", Similarity.dot(col("v"), col("v"))))
     // the k init rows are numbered DRIVER-side (take(k) of a
     // TakeOrdered is bounded by contract) — an unpartitioned row_number
     // window here would be equivalent but spams `WindowExec: No
@@ -229,7 +228,6 @@ object IvfIndex {
         vecs.select(nearestLit(col("v"), col("vv"), cents).as("centroid_id"),
           col("v")))
     }
-    vecs.unpersist()
     cents.toDF("centroid_id", "c")
   }
 

@@ -66,7 +66,8 @@ object PqIndex {
     * its cid even when a lower one empties); only the returned arrays
     * are positional. */
   def trainBooks(df: DataFrame, idCol: String, vecCol: String,
-                 m: Int, k: Int, iters: Int): Array[Array[Array[Double]]] = {
+                 m: Int, k: Int, iters: Int)
+      : Array[Array[Array[Double]]] = graft.PersistScope.within {
     // init = first k vectors by id, collected once and sliced — the same
     // k rows every per-subspace train would take
     val initRows = df.select(col(idCol).as("vid"), vecD(col(vecCol)).as("v"))
@@ -84,12 +85,11 @@ object PqIndex {
     // input keeps its natural split count, a large one fans out
     val src = IvfIndex.adaptiveFloor(
       df.select(col(idCol).as("vid"), vecD(col(vecCol)).as("v0")))
-    val vecs = src
+    val vecs = graft.PersistScope.cache(src
       .select(col("vid") +: (0 until m).map(s =>
         slice(col("v0"), s * sub + 1, sub).as(s"__sub_$s")): _*)
       .select(col("*") +: (0 until m).map(s =>
-        Similarity.dot(col(s"__sub_$s"), col(s"__sub_$s")).as(s"__vv_$s")): _*)
-      .persist()
+        Similarity.dot(col(s"__sub_$s"), col(s"__sub_$s")).as(s"__vv_$s")): _*))
     // loop state: per sub, (cid, centroid) pairs — cids are NOT
     // positions while training (an emptied cluster must not renumber
     // its survivors mid-run)
@@ -181,7 +181,6 @@ object PqIndex {
             }.toSeq)
           }.toSeq.sortBy(_._1))
     }
-    vecs.unpersist()
     Array.tabulate(m)(s => books(s).map(_._2.toArray).toArray)
   }
 

@@ -35,13 +35,6 @@ object Similarity {
     s
   }
 
-  /** Portable higher-order-function formulation of the same fold —
-    * interpreted (slower); kept as the cross-check reference for the
-    * native expression. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine with a NULL (not NaN) result for zero-norm operands: 0/0

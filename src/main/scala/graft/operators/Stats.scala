@@ -162,7 +162,6 @@ object Stats {
     */
   def cumLess(df: DataFrame, scoreCol: String,
               numParts: Int = 0,
-              scope: graft.PersistScope = graft.PersistScope(),
               maxDriverHist: Int = 1 << 18): (DataFrame, Long) = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -209,7 +208,8 @@ object Stats {
     val ranged =
       if (numParts > 0) grouped.repartitionByRange(numParts, col(scoreCol))
       else grouped.repartitionByRange(col(scoreCol))
-    val parted = scope.cache(ranged.withColumn("__p", spark_partition_id()))
+    val parted =
+      graft.PersistScope.cache(ranged.withColumn("__p", spark_partition_id()))
     val totals = parted.groupBy("__p").agg(sum("__cnt").as("__t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     if (totals.isEmpty)
@@ -237,9 +237,8 @@ object Stats {
     * non-null rows only — the window form would instead order nulls
     * first and count them; coalesce upstream if null ranks are needed.
     * Same caveat for [[withNtile]]. */
-  def withPercentRank100(df: DataFrame, scoreCol: String, outCol: String,
-                         scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
-    val (cl, n) = cumLess(df, scoreCol, scope = scope)
+  def withPercentRank100(df: DataFrame, scoreCol: String, outCol: String): DataFrame = {
+    val (cl, n) = cumLess(df, scoreCol)
     val denom = lit(math.max(n - 1L, 1L).toDouble)
     df.join(cl, Seq(scoreCol))
       .withColumn(outCol, col("__cnt_less").cast("double") / denom * 100)
@@ -252,9 +251,8 @@ object Stats {
     * ntile fill — first N % buckets buckets take one extra row — as a
     * scalar integer expression over (rn, N). */
   def withNtile(df: DataFrame, coarseCol: String, tieCols: Seq[Column],
-                buckets: Int, outCol: String,
-                scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
-    val (cl, n) = cumLess(df, coarseCol, scope = scope)
+                buckets: Int, outCol: String): DataFrame = {
+    val (cl, n) = cumLess(df, coarseCol)
     val base = n / buckets
     val rem = n % buckets
     val threshold = rem * (base + 1)
@@ -298,13 +296,12 @@ object Stats {
     * token lengths). Coalesce a nullable weight upstream if NULL
     * prefixes must stay NULL. */
   def withRunningTotal(df: DataFrame, orderCols: Seq[Column], weight: Column,
-                       outCol: String, numParts: Int = 0,
-                       scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+                       outCol: String, numParts: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val parts =
       if (numParts > 0) numParts else spark.sessionState.conf.numShufflePartitions
-    val parted = scope.cache(df
+    val parted = graft.PersistScope.cache(df
       .repartitionByRange(parts, orderCols: _*)
       .withColumn("__p", spark_partition_id())
       .withColumn("__w", weight.cast("long"))) // integral weights: exact, order-free
@@ -348,12 +345,11 @@ object Stats {
     * window pass); pass a pruned projection at 100 TB. */
   def withRunningTotalBy(df: DataFrame, groupCols: Seq[Column],
                          orderCols: Seq[Column], weight: Column,
-                         outCol: String, numParts: Int = 0,
-                         scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+                         outCol: String, numParts: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val parts =
       if (numParts > 0) numParts else spark.sessionState.conf.numShufflePartitions
-    val parted = scope.cache(df
+    val parted = graft.PersistScope.cache(df
       .repartitionByRange(parts, (groupCols ++ orderCols): _*)
       .withColumn("__p", spark_partition_id())
       .withColumn("__w", weight.cast("long"))) // integral weights: exact, order-free

@@ -28,9 +28,8 @@ object TfIdf {
     * rank_in_group). */
   def topTerms(docs: DataFrame, idCol: String, textCol: String,
                tokens: Column => Column, k: Int,
-               scale: Long = 1000000L,
-               scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
-    val tf = scope.cache(docs
+               scale: Long = 1000000L): DataFrame = {
+    val tf = graft.PersistScope.cache(docs
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val nDocs = docs.select(col(idCol)).count()
@@ -74,14 +73,13 @@ object TfIdf {
     * N and sum(dl) are the two collected scalars (same legitimacy as the
     * IVF centroid collect). */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               query: Seq[String], topK: Int,
-               scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+               query: Seq[String], topK: Int): DataFrame = {
     // dl (doc length) is size(tokens): computed MAP-SIDE inside one
     // codegen stage, and only query-term hits ever reach a shuffle.
     // The previous shape exploded the full corpus token stream and
     // grouped it just to count per-doc lengths — at scale that is
     // shuffling every token vs shuffling ~|query| rows per doc.
-    val base = scope.cache(docs
+    val base = graft.PersistScope.cache(docs
       .select(col(idCol).as("doc_id"),
         graft.functions.Text.tokens(col(textCol)).as("toks"))
       .select(col("doc_id"),
@@ -184,25 +182,21 @@ object TfIdf {
     if (committed) return
     // one projected+tokenized pass feeds tf, df, AND the row count — the
     // batch source itself is read once
-    val proj = batch
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
-      .persist()
-    try {
-      val tfNew = proj
+    graft.PersistScope.within {
+      val proj = graft.PersistScope.cache(batch
+        .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks")))
+      val tfNew = graft.PersistScope.cache(proj
         .select(col("doc_id"), explode(col("__toks")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .persist()
-      try {
-        writeBatchPartition(tfNew, s"$storeDir/tf", batchId)
-        writeBatchPartition(tfNew.groupBy("term").agg(count(lit(1)).as("df")),
-          s"$storeDir/df_delta", batchId)
-        import spark.implicits._
-        // committed-batch marker lands LAST
-        writeBatchPartition(
-          Seq(proj.count()).toDF("n_docs"),
-          s"$storeDir/meta", batchId)
-      } finally tfNew.unpersist()
-    } finally proj.unpersist()
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+      writeBatchPartition(tfNew, s"$storeDir/tf", batchId)
+      writeBatchPartition(tfNew.groupBy("term").agg(count(lit(1)).as("df")),
+        s"$storeDir/df_delta", batchId)
+      import spark.implicits._
+      // committed-batch marker lands LAST
+      writeBatchPartition(
+        Seq(proj.count()).toDF("n_docs"),
+        s"$storeDir/meta", batchId)
+    }
   }
 
   /** Top-k per doc over the maintained store — identical output contract

@@ -595,27 +595,23 @@ object Models {
     * value-identical to the dbt decimal form ((t-mn)/(mx-mn) is scale
     * invariant) and engine-exact (integer differences are exact doubles;
     * one rounding at the division). */
-  def impactScores(inProgress: DataFrame, completed: DataFrame,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame =
-    impactScoresOver(combinedPermitRows(inProgress, completed), scope)
+  def impactScores(inProgress: DataFrame, completed: DataFrame): DataFrame =
+    impactScoresOver(combinedPermitRows(inProgress, completed))
 
   /** [[impactScores]] over the fused event-level scoring frame
     * ([[combinedPermitRowsFromEvents]]) — same result, one events
     * shuffle instead of the two list builds. */
   def impactScoresFromEvents(permits: DataFrame, openUsrns: DataFrame,
       uprnCounts: DataFrame, authorities: Seq[String] = Nil,
-      correlateOnAuthority: Boolean = true,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame =
+      correlateOnAuthority: Boolean = true): DataFrame =
     finishImpactScores(rawImpactFromLatest(
       latestFromEvents(permits, authorities, correlateOnAuthority),
-      openUsrns, uprnCounts), scope)
+      openUsrns, uprnCounts))
 
-  private def impactScoresOver(both: DataFrame,
-      scope: graft.PersistScope): DataFrame =
-    finishImpactScores(rawImpactLevel(both), scope)
+  private def impactScoresOver(both: DataFrame): DataFrame =
+    finishImpactScores(rawImpactLevel(both))
 
-  private def finishImpactScores(rawLevel: DataFrame,
-      scope: graft.PersistScope): DataFrame = {
+  private def finishImpactScores(rawLevel: DataFrame): DataFrame = {
     // raw feeds both the bounds agg and the normalised output. The cache
     // is load-bearing for SHARING, not just recompute: the two consumers
     // prune different column sets, so without the InMemoryRelation their
@@ -624,7 +620,7 @@ object Models {
     // aggregation ran once per consumer. The plan stays fully lazy (the
     // bounds are a broadcast subtree); the cache materializes inside the
     // terminal action's one execution.
-    val raw = scope.cache(rawLevel)
+    val raw = graft.PersistScope.cache(rawLevel)
     val bounds = raw.agg(min("total10").as("__mn10"), max("total10").as("__mx10"))
     raw.crossJoin(broadcast(bounds))
       .withColumn("total_impact_level", col("total10").cast("double") / 10)
@@ -673,31 +669,29 @@ object Models {
     * call time and the returned frame is a driver LocalRelation whose
     * row order is unspecified (sort on the score columns if a stable
     * order is needed downstream). */
-  def impactScoresHighwayAuthority(inProgress: DataFrame, completed: DataFrame,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame =
+  def impactScoresHighwayAuthority(inProgress: DataFrame,
+      completed: DataFrame): DataFrame =
     impactScoresHighwayAuthorityOver(
-      combinedPermitRows(inProgress, completed), scope)
+      combinedPermitRows(inProgress, completed))
 
   /** [[impactScoresHighwayAuthority]] over the fused event-level scoring
     * frame ([[combinedPermitRowsFromEvents]]) — same result, one events
     * shuffle instead of the two list builds. */
   def impactScoresHighwayAuthorityFromEvents(permits: DataFrame,
       openUsrns: DataFrame, uprnCounts: DataFrame,
-      authorities: Seq[String] = Nil, correlateOnAuthority: Boolean = true,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame =
+      authorities: Seq[String] = Nil,
+      correlateOnAuthority: Boolean = true): DataFrame =
     finishAuthorityScores(rawImpactFromLatest(
       latestFromEvents(permits, authorities, correlateOnAuthority),
-      openUsrns, uprnCounts, withBreakdown = true), scope)
+      openUsrns, uprnCounts, withBreakdown = true))
 
-  private def impactScoresHighwayAuthorityOver(bothRows: DataFrame,
-      scope: graft.PersistScope): DataFrame =
-    finishAuthorityScores(rawImpactLevel(bothRows, withBreakdown = true),
-      scope)
+  private def impactScoresHighwayAuthorityOver(bothRows: DataFrame): DataFrame =
+    finishAuthorityScores(rawImpactLevel(bothRows, withBreakdown = true))
 
   /** `bound` is the driver-state guard (package-visible so the spec can
     * exercise the refusal path without a million-row frame). */
   private[pipelines] def finishAuthorityScores(rawLevel: DataFrame,
-      scope: graft.PersistScope, bound: Int = 1 << 20): DataFrame = {
+      bound: Int = 1 << 20): DataFrame = {
     // `raw` is a CACHE, not a shared subplan, deliberately: its
     // consumers (rank histogram, join-back) prune different column
     // sets, so uncached they canonicalize into different exchanges that
@@ -710,10 +704,9 @@ object Models {
     // AQE stages over the caches (spark_partition_id is nondeterministic,
     // so the histogram subtrees don't even canonicalize equal), costing
     // more in stage latency than the one collect round trip it saves.
-    val raw = scope.cache(rawLevel)
-    // per-USRN integer rank counts (rank-1 == rows strictly below);
-    // scope rides in so cumLess's internal cache releases with ours
-    val (cl, n) = Stats.cumLess(raw, "total10", scope = scope)
+    val raw = graft.PersistScope.cache(rawLevel)
+    // per-USRN integer rank counts (rank-1 == rows strictly below)
+    val (cl, n) = Stats.cumLess(raw, "total10")
     val denom = lit(math.max(n - 1L, 1L).toDouble)
     // COUNT(DISTINCT usrn) as stacked aggregations: level 1 collapses to
     // the (authority, swa, usrn) grain — its partial aggregate combines
@@ -956,11 +949,11 @@ object Models {
     * broadcast-nested-loop at scale) with the exact distance filter.
     * dbt's LEFT join keeps works with no postcode in range; mirrored by
     * unioning the unmatched works back with null postcode columns. The
-    * radius join is cached through `scope`: the unmatched-works anti-join
-    * re-evaluates it, and without the cache the most expensive stage
-    * (RangeJoin + distance filter) would run twice per action. */
-  def intWorksPostcodes(stgWorks: DataFrame, postcodes: DataFrame,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+    * radius join is cached ([[graft.PersistScope.cache]]): the
+    * unmatched-works anti-join re-evaluates it, and without the cache the
+    * most expensive stage (RangeJoin + distance filter) would run twice
+    * per action. */
+  def intWorksPostcodes(stgWorks: DataFrame, postcodes: DataFrame): DataFrame = {
     // __rk: null-safe work identity for the unmatched-works anti-join.
     // stg is distinctOn'd per permit ref so refs are unique (incl. at
     // most one NULL, which distinctOn pools) — but a plain anti-join on
@@ -986,7 +979,7 @@ object Models {
       col("admin_ward_code"), col("total_population"),
       col("female_population"), col("male_population"),
       col("total_households"))
-    val joined = scope.cache(RangeJoin.radiusJoin(works, pcs,
+    val joined = graft.PersistScope.cache(RangeJoin.radiusJoin(works, pcs,
         "__wx", "__wy", "postcode_easting", "postcode_northing", 500.0)
       .withColumn("distance_m", Geo.stDistance(
         Geo.stPoint(col("__wx"), col("__wy")),
@@ -1038,8 +1031,7 @@ object Models {
     * columns ride THROUGH the radius join (bounded fanout), so the
     * composed route's join-back to stg disappears entirely. */
   def wellbeingByModel(permits: DataFrame, postcodes: DataFrame,
-      families: Seq[(String, Seq[String])], swaCode: String,
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+      families: Seq[(String, Seq[String])], swaCode: String): DataFrame = {
     require(families.nonEmpty, "wellbeingByModel: families must be non-empty")
     val allRefs = families.flatMap(_._2)
     require(allRefs.distinct.size == allRefs.size,
@@ -1274,8 +1266,7 @@ object Models {
     * Row-identical to the list route — pinned in ModelsSpec alongside
     * the fused key-set formulation. */
   def dataTestsFromEvents(permits: DataFrame, openUsrns: DataFrame,
-      uprnCounts: DataFrame, authorities: Seq[String],
-      scope: graft.PersistScope = graft.PersistScope()): DataFrame = {
+      uprnCounts: DataFrame, authorities: Seq[String]): DataFrame = {
     require(authorities.nonEmpty,
       "dataTestsFromEvents: the correlated test needs an authority list")
     // the DIMS-FREE latest frame is what gets cached: the dup-test half
@@ -1286,7 +1277,7 @@ object Models {
     // columns (event_time, event_reference) are projected away before
     // the cache build: neither consumer reads them, and they are two of
     // the widest strings in the frame.
-    val tagged = scope.cache(latestFromEvents(
+    val tagged = graft.PersistScope.cache(latestFromEvents(
       permits, authorities, correlateOnAuthority = true)
       .select((Seq("permit_reference_number", "__leg") ++
         eventScoringCols).map(col): _*))
@@ -1327,14 +1318,14 @@ object Models {
     * also runs [[Stats.cumLess]]'s histogram action). `dbt run`
     * materializes everything anyway (this entry's purpose); a caller
     * wanting ONE cheap model should call its method directly.
-    * Intermediates cached inside the models are owned by `scope` —
-    * close it when the returned frames are no longer needed. */
+    * Intermediates cached inside the models belong to the caller's
+    * [[graft.PersistScope]]: materialize the returned frames inside
+    * `PersistScope.within`, which releases them once the block ends. */
   def streetworksModels(permits: DataFrame, openUsrns: DataFrame,
                         swaCodes: DataFrame, linkedIds: DataFrame,
                         codePoint: DataFrame, p001: DataFrame,
                         p002: DataFrame,
-                        wellbeingSwaCode: String = "4720",
-                        scope: graft.PersistScope = graft.PersistScope())
+                        wellbeingSwaCode: String = "4720")
       : Map[String, DataFrame] = {
     val counts = uprnUsrnCount(openUsrns, linkedIds)
     val inLondon = inProgressList(permits, openUsrns, swaCodes, counts,
@@ -1348,8 +1339,8 @@ object Models {
       Seq("immediate_urgent", "immediate_emergency"), wellbeingSwaCode)
     val stgMajor = stgWorksByAuthority(permits, Seq("major"), wellbeingSwaCode)
     val pcs = intPostcodes(codePoint, p001, p002)
-    val emergencyPcs = intWorksPostcodes(stgEmergency, pcs, scope)
-    val majorPcs = intWorksPostcodes(stgMajor, pcs, scope)
+    val emergencyPcs = intWorksPostcodes(stgEmergency, pcs)
+    val majorPcs = intWorksPostcodes(stgMajor, pcs)
     val emergencyWellbeing = wellbeingImpact(emergencyPcs, stgEmergency)
     val majorWellbeing = wellbeingImpact(majorPcs, stgMajor)
     Map(
@@ -1357,15 +1348,15 @@ object Models {
       "in_progress_list_london" -> inLondon,
       "completed_list_london" -> doneLondon,
       "usrn_permit_details_london" -> usrnPermitDetails(inLondon, doneLondon),
-      "impact_scores_london" -> impactScores(inLondon, doneLondon, scope),
+      "impact_scores_london" -> impactScores(inLondon, doneLondon),
       "impact_scores_highway_authority_london" ->
-        impactScoresHighwayAuthority(inLondon, doneLondon, scope),
+        impactScoresHighwayAuthority(inLondon, doneLondon),
       "in_progress_list_england" -> inEngland,
       "completed_list_england" -> doneEngland,
       "usrn_permit_details_england" -> usrnPermitDetails(inEngland, doneEngland),
-      "impact_scores_england" -> impactScores(inEngland, doneEngland, scope),
+      "impact_scores_england" -> impactScores(inEngland, doneEngland),
       "impact_scores_highway_authority_england" ->
-        impactScoresHighwayAuthority(inEngland, doneEngland, scope),
+        impactScoresHighwayAuthority(inEngland, doneEngland),
       "stg_emergency_works_by_authority" -> stgEmergency,
       "stg_major_works_by_authority" -> stgMajor,
       "int_postcodes" -> pcs,

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * path length) are CodegenFallback at the root of the geo map stages —
   * the whole projection runs interpreted per row, with a regex engine
   * plus two splits per vertex. Each expression here is one tight loop;
-  * the HOF forms stay in `functions.Geo` as `*Hof` executable specs
+  * the HOF forms live on the test side as executable specs
   * (mirrored by the DuckDB oracle) and GeoPointsSpec pins equality on
   * adversarial inputs, so the two formulations cannot drift.
   */

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.sql.GraftShims
 
 /** SimHash bit-majority fold over an array of 60-bit token hashes — the
-  * native twin of `Dedup.simhashOfHashesHof` (kept as the cross-check
-  * reference, the DotProduct/dotHof discipline).
+  * native twin of the interpreted HOF fold the specs keep as the
+  * cross-check reference (the DotProduct discipline).
   *
   * The HOF formulation (`transform` to a ±1 vector per token, `aggregate`
   * of `zip_with` sums, a final power-weighted fold) is evaluated

@@ -467,13 +467,12 @@ object SnapshotTable {
     if (versionsIn(ms).isEmpty) return write(source, root, store = store)
     import org.apache.spark.sql.functions.{col, input_file_name}
     // the source plan feeds three consumers (touched-file probe,
-    // remainder anti-join, commit write) — persist it for the merge's
+    // remainder anti-join, commit write) — cache it for the merge's
     // duration or a non-trivial upstream (e.g. upsertBatch's window)
-    // recomputes per consumer
-    val preCached =
-      source.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (preCached) source else source.persist()
-    try {
+    // recomputes per consumer; a source the caller already cached stays
+    // the caller's
+    graft.PersistScope.within {
+      val src = graft.PersistScope.cache(source)
       val live = liveVersionIn(ms, root)
       val files = manifestFilesIn(ms, root, live)
       val rootP = new Path(root)
@@ -505,7 +504,7 @@ object SnapshotTable {
         }
       commitWith(remainder.unionByName(src), root, maxClaimRetries = 20,
         requireBase = Some(live), store = store)((_, _) => untouched)
-    } finally if (!preCached) src.unpersist(blocking = false)
+    }
   }
 
   /** Rewrite the live snapshot's file set into size-targeted files and

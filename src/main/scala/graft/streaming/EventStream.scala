@@ -658,11 +658,9 @@ object EventStream {
       // input, and a foreachBatch handler runs for the stream's
       // lifetime — without closing, every micro-batch would pin one
       // more cached DataFrame (the NearDupFilter lesson)
-      val scope = graft.PersistScope()
-      try {
+      graft.PersistScope.within {
         val laid = graft.operators.Stats.withRunningTotal(
-            positive, orderCols.map(col), col(tokensCol), "__cum",
-            scope = scope)
+            positive, orderCols.map(col), col(tokensCol), "__cum")
           .withColumn("__start", col("__cum") - col(tokensCol) + lit(start))
           .withColumn("__end", col("__cum") + lit(start))
           .withColumn("seq_id", expr(s"__start DIV ${budget}L"))
@@ -680,7 +678,7 @@ object EventStream {
             .toDF("batch_id", "start_off", "end_off")
             .coalesce(1).write.mode("append").parquet(statePath)
         }
-      } finally scope.close()
+      }
       }
     }
   }
@@ -742,13 +740,13 @@ object EventStream {
   }
 
   /** Band signatures of one micro-batch: (doc, band, sig), cached in
-    * `scope`. Delegates to [[graft.operators.Dedup.bandedSigs]], the ONE
-    * banding expression (with its k/bands fail-fast), so stream and batch
-    * LSH schemes cannot drift. */
+    * the trigger's scope. Delegates to
+    * [[graft.operators.Dedup.bandedSigs]], the ONE banding expression
+    * (with its k/bands fail-fast), so stream and batch LSH schemes
+    * cannot drift. */
   private def bandSignatures(batch: DataFrame, idCol: String, textCol: String,
-                             k: Int, bands: Int,
-                             scope: graft.PersistScope): DataFrame =
-    scope.cache(graft.operators.Dedup.bandedSigs(
+                             k: Int, bands: Int): DataFrame =
+    graft.PersistScope.cache(graft.operators.Dedup.bandedSigs(
       graft.operators.Dedup.minhashSignatures(
         batch.select(col(idCol), col(textCol)), idCol, textCol, k),
       k, bands))
@@ -765,8 +763,8 @@ object EventStream {
     * is a store hit or has a smaller doc of this batch; the drop set
     * only feeds an anti join, so repeated hit keys are harmless. */
   private def filterAndEmit(batch: DataFrame, idCol: String, banded: DataFrame,
-                            hitKeys: Option[DataFrame], emit: DataFrame => Unit,
-                            scope: graft.PersistScope): DataFrame = {
+                            hitKeys: Option[DataFrame],
+                            emit: DataFrame => Unit): DataFrame = {
     val hubbed = banded.withColumn("__hub", min(col("doc")).over(
       org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")))
     val dropped = hitKeys.fold(hubbed.where(col("doc") =!= col("__hub"))) { hits =>
@@ -780,8 +778,8 @@ object EventStream {
     // survivors' lineage holds the STORE scan (via hitKeys), and both
     // the emit here and the caller's store append consume it: cache it
     // or every trigger pays the O(corpus) store read twice
-    val survivors = scope.cache(batch.select(col(idCol).as("doc"))
-      .join(dropped, Seq("doc"), "left_anti"))
+    val survivors = graft.PersistScope.cache(
+      batch.select(col(idCol).as("doc")).join(dropped, Seq("doc"), "left_anti"))
     emit(batch.join(survivors, batch(idCol) === survivors("doc"), "left_semi"))
     banded.join(survivors, Seq("doc"), "left_semi").select("band", "sig")
   }
@@ -811,10 +809,9 @@ object EventStream {
                          emit: DataFrame => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val scope = graft.PersistScope()
-      try {
-        val docs = scope.cache(batch)
-        val banded = bandSignatures(docs, idCol, textCol, k, bands, scope)
+      graft.PersistScope.within {
+        val docs = graft.PersistScope.cache(batch)
+        val banded = bandSignatures(docs, idCol, textCol, k, bands)
         // a doc survives iff NONE of its bands is already in the store.
         // No distinct: the store holds each key once except after a
         // replay, and a repeated key only repeats a drop — a distinct
@@ -822,9 +819,9 @@ object EventStream {
         val hitKeys = readStoreIfExists(spark, storePath)
           .map(_.select("band", "sig"))
         // commit survivors' signatures AFTER the emit so replays re-filter
-        filterAndEmit(docs, idCol, banded, hitKeys, emit, scope)
+        filterAndEmit(docs, idCol, banded, hitKeys, emit)
           .write.mode("append").parquet(storePath)
-      } finally scope.close()
+      }
   }
 
   /** [[nearDupFilterBatch]] with a driver-held Bloom sidecar over the
@@ -843,13 +840,12 @@ object EventStream {
 
     override def apply(batch: DataFrame, batchId: Long): Unit = {
       val spark = batch.sparkSession
-      val batchScope = graft.PersistScope()
       var b: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter] = null
-      try {
+      try graft.PersistScope.within {
         // cached once per trigger, see nearDupFilterBatch
-        val docs = batchScope.cache(batch)
-        val banded = bandSignatures(docs, idCol, textCol, k, bands, batchScope)
+        val docs = graft.PersistScope.cache(batch)
+        val banded = bandSignatures(docs, idCol, textCol, k, bands)
         val store = readStoreIfExists(spark, storePath)
         if (bloom == null) {
           bloom = store match {
@@ -874,8 +870,8 @@ object EventStream {
         // newSigs' lineage re-reads the store + re-runs the survivor
         // joins: cache it, or the bloom merge and the store write each
         // pay a full store scan per trigger
-        val newSigs = batchScope.cache(
-          filterAndEmit(docs, idCol, banded, hitKeys, emit, batchScope))
+        val newSigs = graft.PersistScope.cache(
+          filterAndEmit(docs, idCol, banded, hitKeys, emit))
         // bloom merge BEFORE the store write: extra bloom entries are
         // only false positives (a store lookup), but the reverse order
         // can lose entries — a failure between write and merge followed
@@ -889,7 +885,6 @@ object EventStream {
             newSigs.stat.bloomFilter("sig", expectedSigs, fpp))
         newSigs.write.mode("append").parquet(storePath)
       } finally {
-        batchScope.close()
         // a fresh broadcast per micro-batch: destroy it or thousands of
         // batches pin gigabytes of dead broadcast blocks
         if (b != null) b.destroy()

@@ -42,8 +42,8 @@ class DriverSpec extends SparkSpec {
 
   test("the cache manager is empty after each query") {
     val queries: Map[String, Driver.Query] = Map(
-      "q_a" -> ((s, _) => s.range(10).toDF("x").persist()),
-      "q_b" -> ((s, _) => s.range(20).toDF("x").persist()))
+      "q_a" -> ((s, _) => PersistScope.cache(s.range(10).toDF("x"))),
+      "q_b" -> ((s, _) => PersistScope.cache(s.range(20).toDF("x"))))
     val emptyAtStart = mutable.Buffer[Boolean]()
     val cachedInBody = mutable.Buffer[Boolean]()
     val out = Driver.eachQuery(spark, "spec", Seq("q_a", "q_b"), queries) {
@@ -54,8 +54,23 @@ class DriverSpec extends SparkSpec {
     }
     assert(out.forall(_._2.isDefined))
     assert(cachedInBody == Seq(true, true))
-    // the first query may start over blocks an earlier suite leaked
-    assert(emptyAtStart(1), "q_a's persisted block survived into q_b")
-    assert(cacheManager.isEmpty, "q_b's persisted block survived the loop")
+    assert(emptyAtStart == Seq(true, true))
+    assert(cacheManager.isEmpty, "q_b's cached block survived the loop")
+  }
+
+  test("a query that persists outside PersistScope counts as failed") {
+    val queries: Map[String, Driver.Query] = Map(
+      "q_leak" -> ((s, _) => s.range(10).toDF("x").persist()),
+      "q_next" -> ((s, _) => s.range(20).toDF("x")))
+    val emptyAtStart = mutable.Buffer[Boolean]()
+    val out = Driver.eachQuery(spark, "spec", Seq("q_leak", "q_next"),
+      queries) { (_, query) =>
+        emptyAtStart += cacheManager.isEmpty
+        query(spark, sfDir).count()
+    }
+    assert(out == Seq("q_leak" -> None, "q_next" -> Some(20L)))
+    assert(emptyAtStart == Seq(true, true),
+      "q_leak's persisted block survived into q_next")
+    assert(cacheManager.isEmpty)
   }
 }

@@ -19,11 +19,15 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("all queries run and return rows on sf0.001") {
-    val empty = SparkEntry.queries.flatMap { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      if (n == 0) Some(name) else None
+    // through the drivers' loop: every query runs in its own scope and
+    // fails if it leaves a cached relation behind
+    val out = Driver.eachQuery(spark, "spec", Nil) { (_, query) =>
+      query(spark, sfDir).count()
     }
+    val failed = out.collect { case (name, None) => name }
+    assert(failed.isEmpty, s"queries that threw or leaked a cache: $failed")
     // every query should produce at least one row at the smallest SF
+    val empty = out.collect { case (name, Some(0L)) => name }
     assert(empty.isEmpty, s"queries with empty results: $empty")
   }
 }

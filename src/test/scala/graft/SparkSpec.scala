@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (JVM-wide, forked by sbt):
@@ -12,7 +13,12 @@ object SharedSpark {
     .getOrCreate()
 }
 
+/** Each test runs inside its own [[PersistScope]], so what a test caches
+  * is released when it ends and never leaks into the shared session. */
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  override def withFixture(test: NoArgTest): Outcome =
+    PersistScope.within(super.withFixture(test))
 }

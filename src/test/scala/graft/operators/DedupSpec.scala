@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -76,11 +76,9 @@ class DedupSpec extends SparkSpec {
     val hot = (1L to 40L).map(i => (i, "same text in every document")).toDF("doc_id", "text")
     val uncapped = Dedup.minhashCandidatePairs(hot, "doc_id", "text", 16, 4)
     assert(uncapped.count() === 40L * 39 / 2) // full quadratic pair set
-    val scope = graft.PersistScope()
     val capped = Dedup.minhashCandidatePairs(hot, "doc_id", "text", 16, 4,
-      maxBucket = 10, scope = scope)
+      maxBucket = 10)
     assert(capped.count() === 0) // hot bucket dropped before the self-join
-    scope.close()
   }
 
   test("maxShingleDf cap removes boilerplate shingles but keeps real overlap") {
@@ -91,12 +89,10 @@ class DedupSpec extends SparkSpec {
       (i, s"x y z $tail")
     }
     val df = rows.toDF("doc_id", "text")
-    val scope = graft.PersistScope()
     val pairs = Dedup.jaccardPairs(df, "doc_id", "text", 3, 0.5,
-      maxShingleDf = 10, scope = scope)
+      maxShingleDf = 10)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L))) // boilerplate-only overlaps are gone
-    scope.close()
   }
 
   test("simhashPairs: pigeonhole-exact recall at hamming <= 3") {
@@ -126,13 +122,13 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "hs")
     val both = df.select(col("id"),
         Dedup.simhashOfHashes(col("hs")).as("nat"),
-        Dedup.simhashOfHashesHof(col("hs")).as("ref"))
+        HofReference.simhashOfHashesHof(col("hs")).as("ref"))
       .collect()
     both.foreach { r => assert(r.get(1) === r.get(2), s"row ${r.get(0)}") }
     // NULL array -> NULL in both forms
     val nr = Seq((0L, null.asInstanceOf[Seq[java.lang.Long]])).toDF("id", "hs")
       .select(Dedup.simhashOfHashes(col("hs")).as("nat"),
-        Dedup.simhashOfHashesHof(col("hs")).as("ref")).collect().head
+        HofReference.simhashOfHashesHof(col("hs")).as("ref")).collect().head
     assert(nr.isNullAt(0) && nr.isNullAt(1))
   }
 

@@ -52,7 +52,7 @@ class FunnelSpec extends SparkSpec {
     }
     val df = ev(rows: _*)
     val w = 500L
-    val e = df.select($"user_id", $"event_type", $"sec").cache()
+    val e = graft.PersistScope.cache(df.select($"user_id", $"event_type", $"sec"))
     val s1 = e.where($"event_type" === "view")
       .groupBy("user_id").agg(min("sec").as("t1"))
     val s2 = e.join(s1, "user_id")

@@ -637,14 +637,12 @@ class ModelsSpec extends SparkSpec {
     // over-bound: the guard must fire with the actionable message after
     // shipping at most bound+1 rows (limit-probe), never the full frame
     val e = intercept[IllegalArgumentException] {
-      Models.finishAuthorityScores(rawLevel, graft.PersistScope(),
-        bound = 2)
+      Models.finishAuthorityScores(rawLevel, bound = 2)
     }
     assert(e.getMessage.contains("more than 2 authority rows") &&
       e.getMessage.contains("grouping keys"), e.getMessage)
     // at-bound: same frame, bound 3 — materializes all three authorities
-    val ok = Models.finishAuthorityScores(rawLevel, graft.PersistScope(),
-      bound = 3)
+    val ok = Models.finishAuthorityScores(rawLevel, bound = 3)
     assert(ok.count() === 3L)
     assert(ok.columns.contains("highway_authority_impact_score"))
   }

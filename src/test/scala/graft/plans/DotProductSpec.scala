@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{SparkSpec, Tables}
+import graft.{HofReference, SparkSpec, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ class DotProductSpec extends SparkSpec {
       .crossJoin(emb.select(col("embedding").as("other")).limit(5))
     val diffs = paired.select(
       Similarity.dot(col("embedding"), col("other")).as("native"),
-      Similarity.dotHof(col("embedding"), col("other")).as("hof"))
+      HofReference.dotHof(col("embedding"), col("other")).as("hof"))
       .where(col("native") =!= col("hof"))
     assert(diffs.count() === 0)
   }
@@ -32,7 +32,7 @@ class DotProductSpec extends SparkSpec {
       .toDF("a", "b")
     val nm = mismatch.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof"))
+      HofReference.dotHof(col("a"), col("b")).as("hof"))
       .as[(Option[Double], Option[Double])].head()
     assert(nm === ((None, None))) // truncated partial sum would be wrong
 
@@ -40,7 +40,7 @@ class DotProductSpec extends SparkSpec {
       .toDF("a", "b")
     val ne = nullElem.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof"))
+      HofReference.dotHof(col("a"), col("b")).as("hof"))
       .as[(Option[Double], Option[Double])].head()
     assert(ne === ((None, None)))
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.functions.Geo
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ class GeoPointsSpec extends SparkSpec {
       .toDF("id", "wkt")
       .select(col("id"),
         Geo.stGeomFromText(col("wkt")).as("native"),
-        Geo.stGeomFromTextHof(col("wkt")).as("hof"))
+        HofReference.stGeomFromTextHof(col("wkt")).as("hof"))
     val rows = df.selectExpr("id",
       "cast(native as string) n", "cast(hof as string) h").collect()
     rows.foreach { r =>
@@ -44,11 +44,11 @@ class GeoPointsSpec extends SparkSpec {
         "transform(pts, p -> struct(p._1 AS x, p._2 AS y))").as("geom"))
     val out = df.select(col("id"),
       Geo.stCentroid(col("geom")).as("nc"),
-      Geo.stCentroidHof(col("geom")).as("hc"),
+      HofReference.stCentroidHof(col("geom")).as("hc"),
       Geo.stArea(col("geom")).as("na"),
-      Geo.stAreaHof(col("geom")).as("ha"),
+      HofReference.stAreaHof(col("geom")).as("ha"),
       Geo.stLength(col("geom")).as("nl"),
-      Geo.stLengthHof(col("geom")).as("hl"))
+      HofReference.stLengthHof(col("geom")).as("hl"))
       .selectExpr("id", "cast(nc as string)", "cast(hc as string)",
         "cast(na as string)", "cast(ha as string)",
         "cast(nl as string)", "cast(hl as string)")
@@ -76,7 +76,7 @@ class GeoPointsSpec extends SparkSpec {
       val native = spark.range(4)
         .select(Geo.stArea(geom), Geo.stLength(geom)).collect().toSeq
       val hof = spark.range(4)
-        .select(Geo.stAreaHof(geom), Geo.stLengthHof(geom)).collect().toSeq
+        .select(HofReference.stAreaHof(geom), HofReference.stLengthHof(geom)).collect().toSeq
       assert(native.length == 4 && native == hof)
     } finally spark.conf.unset(fallback)
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ class Md5LongSpec extends SparkSpec {
       "x" * 1000, "tab\tand\nnewline", "0", "deadbeef").toDF("s")
     val diff = inputs.select(
       Text.md5Long(col("s")).as("native"),
-      Text.md5LongHof(col("s")).as("builtin"))
+      HofReference.md5LongHof(col("s")).as("builtin"))
       .where(col("native") =!= col("builtin"))
     assert(diff.count() === 0)
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.operators.Dedup
 import graft.functions.Text
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ class NGramsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 4)) {
       val diff = docs.select(
         Dedup.shinglesOf(col("toks"), n).as("native"),
-        Dedup.shinglesOfHof(col("toks"), n).as("hof"))
+        HofReference.shinglesOfHof(col("toks"), n).as("hof"))
         .where(col("native") =!= col("hof"))
       assert(diff.count() === 0, s"n=$n mismatch")
     }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
@@ -23,7 +23,7 @@ class WinnowExprsSpec extends SparkSpec {
     for (w <- Seq(1, 2, 3, 5, 9)) {
       val diff = df.select(col("id"),
         Text.winnowOf(col("hs"), w).as("n"),
-        Text.winnowOfHof(col("hs"), w).as("h"))
+        HofReference.winnowOfHof(col("hs"), w).as("h"))
         .selectExpr("id", "cast(n as string) n", "cast(h as string) h")
         .collect()
       diff.foreach { r =>
@@ -44,7 +44,7 @@ class WinnowExprsSpec extends SparkSpec {
     for (w <- 1 to 7) {
       val bad = df.select(
         Text.winnowOf(col("hs"), w).as("n"),
-        Text.winnowOfHof(col("hs"), w).as("h"))
+        HofReference.winnowOfHof(col("hs"), w).as("h"))
         .where(col("n") =!= col("h") || col("n").isNull =!= col("h").isNull)
       assert(bad.count() === 0, s"w=$w")
     }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ class WsTokensSpec extends SparkSpec {
       .toDF("id", "text")
     val diff = df.select(
       Text.tokens(col("text")).as("native"),
-      Text.tokensHof(col("text")).as("hof"))
+      HofReference.tokensHof(col("text")).as("hof"))
       .where(
         // element-wise AND null-vs-empty exact: =!= alone is null-blind
         (col("native") =!= col("hof")) ||
