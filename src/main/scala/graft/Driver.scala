@@ -51,6 +51,11 @@ object Driver {
     // (~50-100 KB metaspace per cached class; 5000 entries is a few
     // hundred MB bounded, static conf so it must ride the builder).
     "spark.sql.codegen.cache.maxEntries" -> "5000",
+    // Strict codegen: a generated class that fails to compile fails the
+    // query instead of silently falling back to interpreted execution,
+    // so a native expression's codegen path is the path every driver
+    // and spec exercises.
+    "spark.sql.codegen.fallback" -> "false",
     // Let AQE size the partitioning INSIDE cached plans too: the
     // default (false) freezes an operator-persisted aggregate at the
     // static shuffle partition count, so every downstream stage of a

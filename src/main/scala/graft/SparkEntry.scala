@@ -1475,27 +1475,34 @@ object SparkEntry {
     val corpus = docs.where(col("doc_id") % 10 =!= 0)
     val bench = docs.where(col("doc_id") % 10 === 0)
     // 1. quality gate: >= 30 tokens, 3-gram repetition <= 300000 ppm.
-    // Cached WITH the distinct-trigram arrays: dedup, the decontamination
-    // explode, and the budget stage all reuse this one tokenize pass.
-    // The cache carries only narrow derived columns (hash + trigram set),
-    // never the raw text — the rest of the pipeline needs nothing else
+    // Every per-document value the later stages need is computed HERE,
+    // in the one tokenize pass before the first exchange: the token
+    // count, the content md5, the 16-value minhash signature (the
+    // per-row MinhashSig kernel) and the distinct-trigram set. The text
+    // itself stops here, so from this point on only fixed-width hash
+    // columns cross an exchange. Cached: the exact-dedup window and the
+    // decontamination probe both read it.
     val gated = graft.PersistScope.cache(corpus
       .select(col("doc_id"), col("source"), col("text"),
         Text.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"), col("source"), col("text"),
+      .select(col("doc_id"), col("source"), col("text"), col("__toks"),
         size(col("__toks")).cast("long").as("n_tokens"),
         graft.plans.NGrams.ngrams(col("__toks"), 3).as("__g3"))
       .withColumn("__rep", when(size(col("__g3")) > 0,
         expr("((size(__g3) - size(array_distinct(__g3))) * CAST(1000000 AS BIGINT)) DIV size(__g3)"))
         .otherwise(lit(0L)))
       .where(col("n_tokens") >= 30 && col("__rep") <= 300000L)
-      .select(col("doc_id"), col("source"), col("text"), col("n_tokens"),
-        array_distinct(col("__g3")).as("__g3d"),
-        md5(col("text").cast("binary")).as("__md5")))
+      .select(col("doc_id"), col("source"), col("n_tokens"),
+        md5(col("text").cast("binary")).as("__md5"),
+        Dedup.minhashSig(col("__toks"), 16).as("__mh"),
+        array_distinct(col("__g3")).as("__g3d")))
     // 2a. exact dedup keep-min as ONE windowed rank on the content hash
-    // (rank-1 == min doc_id per group; no groupBy + join-back pass)
+    // (rank-1 == min doc_id per group; no groupBy + join-back pass). The
+    // window's exchange carries the narrow columns only, never the
+    // trigram arrays.
     val dw = Window.partitionBy(col("__md5")).orderBy(col("doc_id"))
     val exactDeduped = graft.PersistScope.cache(gated
+      .select("doc_id", "source", "n_tokens", "__md5", "__mh")
       .withColumn("__rn", row_number().over(dw))
       .where(col("__rn") === 1)
       .drop("__rn", "__md5"))
@@ -1503,9 +1510,12 @@ object SparkEntry {
     // non-canonical member of a minhash-LSH cluster — same machinery as
     // q_dedup_keep over the exact-deduped survivors, but with 2 bands of
     // 8 rows (candidate threshold ~0.92 Jaccard: only true near-dups
-    // cluster, where the 4x4 layout collapses this synthetic corpus)
-    val labels = DupClusters.clustersAdaptive(
-      Dedup.minhashBucketStars(exactDeduped, "doc_id", "text", 16, 2))
+    // cluster, where the 4x4 layout collapses this synthetic corpus).
+    // The stars band the signatures the gate already computed: no
+    // second tokenize, and survivor ids are unique (the window's rank 1)
+    val labels = DupClusters.clustersAdaptive(Dedup.bucketStarsFromSigs(
+      Dedup.sigColumns(exactDeduped.select(col("doc_id").as("doc"), col("__mh")),
+        "__mh", 16), 16, 2))
     val dropNear = labels.where(col("doc") =!= col("cluster"))
       .select(col("doc").as("doc_id"))
     // 3. decontamination vs the benchmark split — same semantics and caps
@@ -1519,16 +1529,18 @@ object SparkEntry {
     val benchAll = Dedup.shingleRows(bench, "doc_id", "text", 3)
     val benchIdx = Dedup.capByFreq(benchAll, Seq("sh"), 64, Seq("doc", "sh"))
       .select(col("doc").as("doc_b"), col("sh"))
-    // contamination probes run over exactDeduped, NOT the near-dup
-    // survivors (r21, guide §2.4): per-doc contamination is independent
-    // of which OTHER docs the minhash stage drops, so probing the
-    // superset yields the identical contaminated set on the survivors —
-    // and both drop reasons then apply as ONE anti-join on their union
-    // instead of two chained anti-joins over an extra intermediate.
-    // (No .distinct() on the drop set either: anti-join semantics are
-    // multiplicity-blind, the old distinct bought an exchange for
-    // nothing.) Oracle unchanged, cell-exact.
-    val contaminated = exactDeduped
+    // contamination probes run over `gated`, the superset of both the
+    // exact- and the near-dup survivors (r21): contamination
+    // is a per-document property, independent of which OTHER docs the
+    // dedup stages drop, so probing the superset yields the identical
+    // contaminated set on the survivors — and the trigram arrays are
+    // exploded straight out of the cache, never shuffled. Both drop
+    // reasons then apply as ONE anti-join on their union instead of two
+    // chained anti-joins over an extra intermediate. (No .distinct() on
+    // the drop set either: anti-join semantics are multiplicity-blind,
+    // a distinct would buy an exchange for nothing.) Oracle unchanged,
+    // cell-exact.
+    val contaminated = gated
       .select(col("doc_id").as("doc_a"), explode(col("__g3d")).as("sh"))
       .join(broadcast(benchIdx), Seq("sh"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("__ns"))

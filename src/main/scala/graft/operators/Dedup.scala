@@ -177,27 +177,42 @@ object Dedup {
       .where(col("n_shared") >= minShared)
   }
 
-  /** MinHash signature columns: k permutations h_i(x) = (a_i*x + b_i) mod P
-    * over md5-derived 60-bit token hashes reduced mod P. Deterministic and
+  /** MinHash scheme: k permutations h_i(x) = (a_i*x + b_i) mod P over
+    * md5-derived 60-bit token hashes reduced mod P. Deterministic and
     * reproducible in ANSI SQL (oracle-verifiable). */
   val MinhashMod = 1000000007L
   def minhashPerm(i: Int) = (2L * i + 3L, 5L * i + 7L)
 
+  /** A token array's k-value MinHash signature as one `array<bigint>`:
+    * token hashes ([[graft.plans.WinnowExprs.md5LongMap]]) folded by the
+    * per-row [[graft.plans.MinhashSig]] kernel. NULL for a NULL or empty
+    * token array. */
+  def minhashSig(toks: Column, k: Int): Column =
+    graft.plans.MinhashSig.minhashSig(graft.plans.WinnowExprs.md5LongMap(toks), k)
+
+  /** MinHash signature columns `(doc, mh0 .. mh{k-1})`: a projection,
+    * ONE output row per input row that has at least one token (NULL or
+    * token-less text has no signature and emits no row). No explode, no
+    * shuffle: the signature is computed where the document is, so this
+    * frame keeps its input's partitioning.
+    *
+    * Contract: `idCol` must be unique in `df`. A repeated id yields one
+    * signature row per occurrence, not one signature of the merged token
+    * set, and every consumer bands and joins on `doc`. Every caller's
+    * ids are unique: `documents`' key, an exact-dedup survivor set, a
+    * stream micro-batch. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int): DataFrame = {
     require(k >= 1, s"minhash needs k >= 1 (got $k)")
-    // Materialize the md5-derived token hash ONCE per token row: inlining
-    // it would duplicate the md5+conv tree into all k aggregates.
-    val hashed = df.select(
-        col(idCol).as("doc"),
-        explode(array_distinct(Text.tokens(col(textCol)))).as("tok"))
-      .select(col("doc"), pmod(Text.md5Long(col("tok")), lit(MinhashMod)).as("hv"))
-    val mins = (0 until k).map { i =>
-      val (a, b) = minhashPerm(i)
-      min(pmod(col("hv") * a + b, lit(MinhashMod))).as(s"mh$i")
-    }
-    hashed.groupBy("doc").agg(mins.head, mins.tail: _*)
+    sigColumns(df.select(col(idCol).as("doc"),
+      minhashSig(Text.tokens(col(textCol)), k).as("__mh")), "__mh", k)
   }
+
+  /** `(doc, mh0 .. mh{k-1})` from a frame holding `doc` and a signature
+    * array column; rows with a NULL signature drop out. */
+  private[graft] def sigColumns(df: DataFrame, sigCol: String, k: Int): DataFrame =
+    df.where(col(sigCol).isNotNull)
+      .select(col("doc") +: (0 until k).map(i => col(sigCol)(i).as(s"mh$i")): _*)
 
   /** LSH candidate pairs: band the k-signature into `bands` groups of
     * k/bands rows; docs sharing any band signature are candidates.
@@ -302,19 +317,26 @@ object Dedup {
     * with k docs is a clique; for connectivity purposes a star to the
     * bucket's min doc carries the same components with k-1 edges instead
     * of k(k-1)/2 pairs. Feed these to [[DupClusters.clusters]] — never
-    * materialize the quadratic candidate-pair set just to cluster it. */
+    * materialize the quadratic candidate-pair set just to cluster it.
+    * The signatures are [[minhashSignatures]]' per-row projection, so
+    * the only exchanges are [[bucketStarsFromSigs]]'. */
   def minhashBucketStars(df: DataFrame, idCol: String, textCol: String,
-                         k: Int, bands: Int): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, k)
-    // hub aggregation + the star join both consume the banded relation:
-    // materialize once (the minhash pipeline above it is the heavy part)
-    val banded = PersistScope.cache(bandedSigs(sigs, k, bands))
-    val hubs = banded.groupBy("band", "sig").agg(min(col("doc")).as("hub"))
-    banded.join(hubs, Seq("band", "sig"))
-      .where(col("doc") =!= col("hub"))
-      .select(col("hub").as("doc_a"), col("doc").as("doc_b"))
+                         k: Int, bands: Int): DataFrame =
+    bucketStarsFromSigs(minhashSignatures(df, idCol, textCol, k), k, bands)
+
+  /** [[minhashBucketStars]] from a PRE-COMPUTED signature frame `(doc,
+    * mh0 .. mh{k-1})` — the twin of [[candidatePairsFromSigs]]. The hub
+    * is `min(doc)` over a `(band, sig)` window: the banded rows shuffle
+    * once, on the bucket key, and the star edges are the rows that are
+    * not their bucket's hub. No `groupBy` + join-back, and the banded
+    * relation has one consumer, so nothing is cached. */
+  def bucketStarsFromSigs(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    bandedSigs(sigs, k, bands)
+      .withColumn("__hub", min(col("doc")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")))
+      .where(col("doc") =!= col("__hub"))
+      .select(col("__hub").as("doc_a"), col("doc").as("doc_b"))
       .distinct()
-  }
 
   /** 64-bit SimHash: per-token md5-derived 60-bit hash -> +-1 per bit ->
     * per-doc bit-wise sum via a zip_with fold (no explode, no shuffle:

@@ -272,9 +272,13 @@ object Stats {
     * under any distribution), each range partition learns the total
     * weight of all strictly-earlier partitions from one bounded collect,
     * and the running sum inside each partition is an ordinary partitioned
-    * window. The classic distributed prefix-sum: one range shuffle + one
-    * `numParts`-row collect, vs `SUM(w) OVER (ORDER BY ...)`'s
-    * whole-table single task.
+    * window. The classic distributed prefix-sum, vs `SUM(w) OVER (ORDER
+    * BY ...)`'s whole-table single task. It costs one range shuffle, one
+    * `numParts`-row collect, and a SECOND full shuffle: the window's
+    * `partitionBy(__p)` asks for hash clustering on `__p`, and the
+    * planner cannot see that the range partitioning already clusters
+    * the rows by their partition id, so the whole relation is
+    * re-shuffled by `hashpartitioning(__p)` before the window.
     *
     * The input is persisted (the totals job and the window job both scan
     * it); callers streaming 100 TB through this should pass a projection

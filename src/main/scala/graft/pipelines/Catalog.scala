@@ -661,11 +661,18 @@ object Catalog {
         password = Some("VelvetSweatshop"))
       val snake = raw.toDF(raw.columns.map(
         _.toLowerCase.replace(" ", "_").replace("/", "_")): _*)
-      val fixed = geoplaceFixups.foldLeft(
-        geoplaceCleanName(col("account_name"))) { case (acc, (from, to)) =>
-        when(acc === from, to).otherwise(acc)
-      }
+      // the cleaned name lands once, then the fixups apply as one CASE
+      // over that column: a when/otherwise fold holds its accumulator
+      // twice per level, so the 15-deep clean chain would appear 2^8
+      // times in the tree and its projection would outgrow a codegen
+      // method. No `to` is a later `from`, so first match == the fold.
+      val name = col("account_name")
+      val fixed = geoplaceFixups.tail.foldLeft(
+        when(name === geoplaceFixups.head._1, geoplaceFixups.head._2)) {
+        case (acc, (from, to)) => acc.when(name === from, to)
+      }.otherwise(name)
       Seq(TableLoad("LATEST_ACTIVE", snake
+        .withColumn("account_name", geoplaceCleanName(name))
         .withColumn("account_name", fixed)
         .withColumn("date_time_processed",
           date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss"))))

@@ -740,7 +740,11 @@ object EventStream {
   }
 
   /** Band signatures of one micro-batch: (doc, band, sig), cached in
-    * the trigger's scope. Delegates to
+    * the trigger's scope (the survivor filter and the store append both
+    * read them). The signatures are
+    * [[graft.operators.Dedup.minhashSignatures]]' per-row projection, so
+    * the cached relation is built without a shuffle; a batch's ids are
+    * unique, as that projection's contract asks. Banding delegates to
     * [[graft.operators.Dedup.bandedSigs]], the ONE banding expression
     * (with its k/bands fail-fast), so stream and batch LSH schemes
     * cannot drift. */

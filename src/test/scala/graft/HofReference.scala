@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Interpreted higher-order-function (and built-in-only) formulations of
@@ -72,6 +72,35 @@ object HofReference {
     aggregate(
       zip_with(sums, powers, (s, p) => when(s > 0, p).otherwise(lit(0L))),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
+  }
+
+  /** [[graft.operators.Dedup.minhashSignatures]] as the relational plan
+    * the per-row [[graft.plans.MinhashSig]] kernel replaced: one row per
+    * distinct token by `explode`, then `k` `min` aggregates in a
+    * `groupBy(doc)`. Output `(doc, mh0 .. mh{k-1})`; a document without
+    * tokens has no row. */
+  def minhashSignaturesRef(df: DataFrame, idCol: String, textCol: String,
+                           k: Int): DataFrame =
+    minhashOfHashRows(df
+      .select(col(idCol).as("doc"),
+        explode(array_distinct(graft.functions.Text.tokens(col(textCol)))).as("tok"))
+      .select(col("doc"), graft.functions.Text.md5Long(col("tok")).as("h")), k)
+
+  /** The same plan over a `(doc, hs: array<bigint>)` frame of token
+    * hashes. NULL elements are dropped before the aggregate, so a
+    * document with no non-null hash has no row (the kernel's NULL). */
+  def minhashOfHashesRef(df: DataFrame, hsCol: String, k: Int): DataFrame =
+    minhashOfHashRows(df.select(col("doc"), explode(col(hsCol)).as("h")), k)
+
+  private def minhashOfHashRows(rows: DataFrame, k: Int): DataFrame = {
+    val p = graft.operators.Dedup.MinhashMod
+    val mins = (0 until k).map { i =>
+      val (a, b) = graft.operators.Dedup.minhashPerm(i)
+      min(pmod(col("hv") * a + b, lit(p))).as(s"mh$i")
+    }
+    rows.where(col("h").isNotNull)
+      .select(col("doc"), pmod(col("h"), lit(p)).as("hv"))
+      .groupBy("doc").agg(mins.head, mins.tail: _*)
   }
 
   /** [[graft.operators.Similarity.dot]]. */

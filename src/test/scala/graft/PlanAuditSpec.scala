@@ -7,6 +7,10 @@ package graft
   * these properties at runtime.)
   */
 class PlanAuditSpec extends SparkSpec {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
@@ -209,6 +213,57 @@ class PlanAuditSpec extends SparkSpec {
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"$q lost the inverted-index equi-join shape")
     }
+  }
+
+  /** `p`'s nodes, descending into adaptive plans, their query stages,
+    * and the plans of the cached relations `p` reads. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case _ => Nil
+  }) ++ p.children.flatMap(nodes))
+
+  /** The nodes of every physical plan `q` runs: its builder's eager jobs
+    * (probes, collects) and a noop write of its result. */
+  private def executedNodes(q: String): Seq[SparkPlan] =
+    org.apache.spark.sql.ExecutedPlans.during(spark) {
+      SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }.flatMap(nodes)
+
+  private def shuffles(ns: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    ns.collect { case e: ShuffleExchangeExec => e }
+
+  test("q_minhash_pairs / q_dup_clusters: no exchange keyed on doc below the LSH banding") {
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    for (q <- Seq("q_minhash_pairs", "q_dup_clusters")) {
+      val banding = executedNodes(q).collect {
+        case g: GenerateExec if g.generator.isInstanceOf[PosExplode] => g
+      }
+      assert(banding.nonEmpty, s"$q: no banding posexplode found")
+      // below the banding is the signature computation: a per-row
+      // projection, never a groupBy(doc) over exploded token rows
+      val docKeyed = shuffles(banding.flatMap(g => nodes(g.child)))
+        .map(_.outputPartitioning).filter {
+          case h: HashPartitioning =>
+            h.expressions.exists(_.references.exists(_.name == "doc"))
+          case _ => false
+        }
+      assert(docKeyed.isEmpty,
+        s"$q shuffles by doc before banding: ${docKeyed.mkString("; ")}")
+    }
+  }
+
+  test("q_curation_pipeline: no shuffle exchange carries the text or a string array") {
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val wide = shuffles(executedNodes("q_curation_pipeline")).flatMap(e =>
+      e.output.filter(a => a.name == "text" || (a.dataType match {
+        case ArrayType(StringType, _) => true
+        case _ => false
+      })).map(a => s"${a.name} in ${e.outputPartitioning}"))
+    assert(wide.isEmpty, s"shuffled wide columns: ${wide.distinct.mkString("; ")}")
   }
 
   test("q_source_cap's grouped prefix sum: partitioned windows only, offsets broadcast") {

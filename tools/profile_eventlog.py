@@ -15,6 +15,9 @@ read it:
     python3 tools/profile_eventlog.py target/sparklogs --sql [N]  # plan trees
 
 Reading the output:
+- shuffle_w_kb: the bytes a stage's tasks wrote to shuffle files; the
+  per-query table sums them over every run in the log (divide by
+  SPARK_GRAFT_BENCH_RUNS for per-run bytes).
 - jobs/stages: with runs=2 the SECOND half of the job list is the warm
   run — cold stages carry JIT warmup (up to 10x CPU) and must be
   ignored. Each AQE stage materialization is one job; a long tail of
@@ -62,6 +65,7 @@ def load_events(path):
 def jobs_stages(events):
     jobs, stages = {}, []
     cpu = collections.defaultdict(lambda: [0, 0])
+    shuffle_w = collections.defaultdict(int)
     for e in events:
         t = e.get("Event", "")
         if t == "SparkListenerJobStart":
@@ -81,6 +85,8 @@ def jobs_stages(events):
             m = e.get("Task Metrics") or {}
             cpu[e["Stage ID"]][0] += m.get("Executor Run Time", 0)
             cpu[e["Stage ID"]][1] += 1
+            shuffle_w[e["Stage ID"]] += (m.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0)
     if not jobs:
         raise SystemExit("no jobs in log")
     query_of = {sid: desc for _, _, sts, desc in jobs.values() for sid in sts}
@@ -93,13 +99,20 @@ def jobs_stages(events):
         print(f"job {jid:3d}  {desc:{width}s}  start={(s - base) / 1000:8.3f}  "
               f"dur={(e2 - s) / 1000:6.3f}  stages={sorted(sts)}")
     print("== stages ==")
+    per_query = collections.defaultdict(int)
     for sid, name, s, c, n in sorted(stages):
         if s is None:
             continue
-        print(f"stage {sid:3d}  {query_of.get(sid, '-'):{width}s}  "
+        q = query_of.get(sid, '-')
+        per_query[q] += shuffle_w[sid]
+        print(f"stage {sid:3d}  {q:{width}s}  "
               f"start={(s - base) / 1000:8.3f} "
               f"dur={(c - s) / 1000:6.3f} tasks={n:3d} "
-              f"cpu_ms={cpu[sid][0]:7d}  {name}")
+              f"cpu_ms={cpu[sid][0]:7d}  shuffle_w_kb={shuffle_w[sid] / 1024:9.1f}  "
+              f"{name}")
+    print("== shuffle write per query (KB, all runs in the log) ==")
+    for q, b in sorted(per_query.items()):
+        print(f"{q:{width}s}  {b / 1024:10.1f}")
 
 
 def sql_plans(events, want=None):
