@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Atomic multi-file publish for parquet tables — the "readers never see
   * a partial write" guarantee the reference's pipelines get from their
@@ -17,6 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <root>/data/d-<uuid>/part-*.parquet  immutable per-commit file set
   *   <root>/_manifests/claim-<N>          empty O_EXCL claim marker
   *   <root>/_manifests/manifest-<N>       JSON: exact file list of commit N
+  *                                        + the schema of those files
   * }}}
   *
   * Commit protocol: write the (UUID-named) data directory once, CLAIM a
@@ -31,6 +33,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * an unreferenced data directory (or a burned claim slot) that
   * `vacuum` reclaims after a grace period. Old manifests stay until
   * vacuumed -> free time travel by version.
+  *
+  * ==Manifest==
+  * `{"version": N, "files": [...], "schema": "<StructType json>"}`, plus
+  * `"void": true` on a void. The schema is the one the commit's writer
+  * held (all fields nullable, as a parquet read reports them), so a
+  * reader passes it to `spark.read.schema` and building a snapshot read
+  * starts no footer-inference job. It is written only when every file
+  * of the snapshot has it: a replace, merge or compact whose output
+  * schema equals that of the files it carries, or an append of the same
+  * schema. An append that changes the schema, and every manifest
+  * written before schemas were recorded, has no `"schema"` field; such
+  * a snapshot is read as before, by inferring from the files' footers
+  * (the only fallback). A void copies the schema of the version it
+  * carries. The field comes after `"files"`, so a column named `files`
+  * inside the escaped schema string is never taken for the file list.
   *
   * ==Supported-filesystem contract==
   * The claim/land primitives REQUIRE two store guarantees: atomic
@@ -98,6 +115,27 @@ object SnapshotTable {
       case c => c.toString
     } + "\""
 
+  /** `t` with every field, array element and map value nullable: the
+    * schema a parquet read reports for files written with `t`. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** One parsed manifest: the snapshot's root-relative data files and,
+    * when recorded, the schema all of them were written with. */
+  private case class Manifest(files: Vector[String], schema: Option[StructType])
+  private val NoFiles = Manifest(Vector.empty, None)
+
+  private def manifestBody(version: Long, m: Manifest, void: Boolean): String =
+    s"""{"version": $version, "files": [${m.files.map(jsonStr).mkString(", ")}]""" +
+      m.schema.fold("")(s => s""", "schema": ${jsonStr(s.json)}""") +
+      (if (void) """, "void": true""" else "") + "}"
+
   /** Publish `df` as the table's next version; returns the version id.
     * `append = true` makes the new snapshot the previous file list PLUS
     * this commit's files (incremental loads keep every older commit's
@@ -117,18 +155,24 @@ object SnapshotTable {
             maxClaimRetries: Int = 20,
             store: Option[CommitStore] = None): Long =
     commitWith(df, root, maxClaimRetries, store = store) { (ms, version) =>
-      if (!append) Vector.empty
+      if (!append) NoFiles
       else {
         awaitLowerClaims(ms, root, version)
-        versionsIn(ms).filter(_ < version).lastOption
-          .map(manifestFilesIn(ms, root, _)).getOrElse(Vector.empty)
+        carriedBelow(ms, root, version)
       }
     }
+
+  /** The highest landed manifest below `version` (none: no files). */
+  private def carriedBelow(ms: CommitStore, root: String, version: Long): Manifest =
+    versionsIn(ms).filter(_ < version).lastOption
+      .map(manifestIn(ms, root, _)).getOrElse(NoFiles)
 
   /** The shared commit core: write `df`'s files once, claim a version,
     * land the manifest as `carried(version) ++ fresh`. The `carried`
     * callback runs AFTER the claim is exclusive (append resolves the
-    * previous manifest there; replace/merge pass a fixed list).
+    * previous manifest there; replace/merge pass a fixed list, with the
+    * schema of the snapshot those files come from). The new manifest
+    * records `df`'s schema when the carried files have the same one.
     *
     * `requireBase = Some(v)`: optimistic concurrency for read-modify-
     * write commits (merge, compact) whose output was DERIVED from
@@ -142,7 +186,7 @@ object SnapshotTable {
   private def commitWith(df: DataFrame, root: String, maxClaimRetries: Int,
       requireBase: Option[Long] = None,
       store: Option[CommitStore] = None)(
-      carried: (CommitStore, Long) => Vector[String]): Long = {
+      carried: (CommitStore, Long) => Manifest): Long = {
     val spark = df.sparkSession
     val rootP = new Path(root)
     val ms = manifestStore(spark, rootP, store)
@@ -214,10 +258,8 @@ object SnapshotTable {
           if (debris.isEmpty) staleBase(base) // live claim (or released
           // between our create attempt and this listing: the racer is
           // active either way)
-          val carriedV = versionsIn(ms).filter(_ < version).lastOption
-            .map(manifestFilesIn(ms, root, _)).getOrElse(Vector.empty)
-          val voidBody = s"""{"version": $version, "files": [${
-            carriedV.map(jsonStr).mkString(", ")}], "void": true}"""
+          val voidBody = manifestBody(version,
+            carriedBelow(ms, root, version), void = true)
           if (!ms.putIfAbsent(s"manifest-$version",
               CommitStoreText.bytes(voidBody)))
             staleBase(base) // lost the void race: a manifest landed at our
@@ -240,9 +282,11 @@ object SnapshotTable {
     // milliseconds) and its burned slot is skipped. Replace/merge carry
     // a fixed list, so late-landing lower versions are legitimately
     // shadowed by them.
-    val carriedFiles = carried(ms, version)
-    val body = s"""{"version": $version, "files": [${
-      (carriedFiles ++ fresh).map(jsonStr).mkString(", ")}]}"""
+    val base = carried(ms, version)
+    val written = asNullable(df.schema).asInstanceOf[StructType]
+    val body = manifestBody(version, Manifest(base.files ++ fresh,
+      Some(written).filter(w => base.files.isEmpty || base.schema.contains(w))),
+      void = false)
     // land WITHOUT overwrite: a concurrent appender that graced this
     // claim out has VOIDED the slot by landing an empty manifest here
     // (awaitLowerClaims) — overwriting it would let this commit return
@@ -322,10 +366,7 @@ object SnapshotTable {
     while (left.nonEmpty) {
       val (k, mtime) = left.head // lowest first: voids carry a final chain
       if (System.currentTimeMillis() - mtime >= claimGraceMs) {
-        val carriedK = versionsIn(ms).filter(_ < k).lastOption
-          .map(manifestFilesIn(ms, root, _)).getOrElse(Vector.empty)
-        val voidBody = s"""{"version": $k, "files": [${
-          carriedK.map(jsonStr).mkString(", ")}], "void": true}"""
+        val voidBody = manifestBody(k, carriedBelow(ms, root, k), void = true)
         // the void lands through the SAME atomic put-if-absent path as
         // a real manifest: a visible manifest is ALWAYS complete, and
         // a crash mid-void leaves at most store-side litter, never a
@@ -377,21 +418,37 @@ object SnapshotTable {
   private def latestVersionIn(ms: CommitStore): Option[Long] =
     versionsIn(ms).lastOption
 
-  /** Root-relative file paths of manifest `v` (no JSON lib dep: minimal
-    * field pull from our own format). */
-  private def manifestFilesIn(ms: CommitStore, root: String,
-                              v: Long): Vector[String] = {
+  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Manifest `v`: its root-relative file paths and recorded schema. */
+  private def manifestIn(ms: CommitStore, root: String, v: Long): Manifest = {
     val manifest = CommitStoreText.utf8(ms.read(s"manifest-$v"))
     // a visible manifest is complete under the protocol (landed by one
     // atomic put-if-absent) — anything else is corruption worth a clear
     // error
-    "\"files\": \\[([^\\]]*)\\]".r.findFirstMatchIn(manifest).getOrElse(
-        sys.error(s"snapshot-table: corrupt manifest-$v at $root " +
-          s"(no files field; ${manifest.length} bytes)"))
-      .group(1)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toVector
+    def corrupt(why: String): Nothing =
+      sys.error(s"snapshot-table: corrupt manifest-$v at $root " +
+        s"($why; ${manifest.length} bytes)")
+    val node =
+      try manifestJson.readTree(manifest)
+      catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          corrupt(e.getOriginalMessage)
+      }
+    val files = Option(node).map(_.get("files")).filter(f => f != null && f.isArray)
+      .getOrElse(corrupt("no files field"))
+    Manifest(
+      (0 until files.size).map(files.get(_).asText).toVector,
+      Option(node.get("schema")).map(s =>
+        DataType.fromJson(s.asText).asInstanceOf[StructType]))
   }
+
+  /** A parquet scan of root-relative `files`, with the manifest's schema
+    * when it has one (no footer-inference job), else inferred. */
+  private def scan(spark: SparkSession, root: String, files: Seq[String],
+                   schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s))
+      .parquet(files.map(n => new Path(root, n).toString): _*)
 
   /** The live version IS the highest manifest — no pointer file. */
   private def liveVersionIn(ms: CommitStore, root: String): Long =
@@ -400,14 +457,15 @@ object SnapshotTable {
 
   /** Read the live snapshot (or a pinned `version` — time travel). Only
     * the manifest's exact file list is scanned: concurrent publishes and
-    * crashed writers cannot tear the read. */
+    * crashed writers cannot tear the read. With a recorded schema,
+    * building the read runs no Spark job. */
   def read(spark: SparkSession, root: String, version: Option[Long] = None,
            store: Option[CommitStore] = None): DataFrame = {
     val ms = readStore(spark, root, store)
     val v = version.getOrElse(liveVersionIn(ms, root))
-    val files = manifestFilesIn(ms, root, v)
-    require(files.nonEmpty, s"snapshot-table: empty manifest $v at $root")
-    spark.read.parquet(files.map(n => new Path(root, n).toString): _*)
+    val m = manifestIn(ms, root, v)
+    require(m.files.nonEmpty, s"snapshot-table: empty manifest $v at $root")
+    scan(spark, root, m.files, m.schema)
   }
 
   /** Incremental consumption: only the files ADDED after `sinceVersion`
@@ -421,10 +479,11 @@ object SnapshotTable {
                   store: Option[CommitStore] = None): DataFrame = {
     val ms = readStore(spark, root, store)
     val until = untilVersion.getOrElse(liveVersionIn(ms, root))
-    val old = manifestFilesIn(ms, root, sinceVersion).toSet
-    val added = manifestFilesIn(ms, root, until).filterNot(old)
+    val old = manifestIn(ms, root, sinceVersion).files.toSet
+    val m = manifestIn(ms, root, until)
+    val added = m.files.filterNot(old)
     if (added.isEmpty) read(spark, root, Some(until), store).limit(0)
-    else spark.read.parquet(added.map(n => new Path(root, n).toString): _*)
+    else scan(spark, root, added, m.schema)
   }
 
   /** Copy-on-write MERGE (upsert) by key — the warehouse-table half of
@@ -474,9 +533,8 @@ object SnapshotTable {
     graft.PersistScope.within {
       val src = graft.PersistScope.cache(source)
       val live = liveVersionIn(ms, root)
-      val files = manifestFilesIn(ms, root, live)
-      val rootP = new Path(root)
-      val abs = files.map(n => new Path(rootP, n).toString)
+      val liveM = manifestIn(ms, root, live)
+      val files = liveM.files
       val srcKeys = src.select(keys.map(col): _*).distinct()
       // NULL-SAFE key equality (<=>) throughout: with plain equality a
       // null-keyed source row never matches its stored twin, so every
@@ -486,7 +544,7 @@ object SnapshotTable {
       def keyCond(l: DataFrame, r: DataFrame) =
         keys.map(k => l(k) <=> r(k)).reduce(_ && _)
       // one key-pruned scan to locate the files holding matched keys
-      val keyed = spark.read.parquet(abs: _*)
+      val keyed = scan(spark, root, files, liveM.schema)
         .select(keys.map(col) :+ input_file_name().as("__file"): _*)
       val touchedAbs = keyed
         .join(srcKeys, keyCond(keyed, srcKeys), "left_semi")
@@ -498,12 +556,12 @@ object SnapshotTable {
       val remainder =
         if (touched.isEmpty) src.limit(0)
         else {
-          val t = spark.read
-            .parquet(touched.map(n => new Path(rootP, n).toString): _*)
+          val t = scan(spark, root, touched, liveM.schema)
           t.join(srcKeys, keyCond(t, srcKeys), "left_anti")
         }
       commitWith(remainder.unionByName(src), root, maxClaimRetries = 20,
-        requireBase = Some(live), store = store)((_, _) => untouched)
+        requireBase = Some(live), store = store)(
+        (_, _) => Manifest(untouched, liveM.schema))
     }
   }
 
@@ -533,7 +591,7 @@ object SnapshotTable {
     val sizeBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1L, (sizeBytes / (targetFileMB.toLong << 20)).toLong)
     commitWith(df.repartition(nFiles.toInt), root, maxClaimRetries = 20,
-      requireBase = Some(live), store = store)((_, _) => Vector.empty)
+      requireBase = Some(live), store = store)((_, _) => NoFiles)
   }
 
   /** Drop all but the newest `keep` manifests (the newest is the live
@@ -554,7 +612,7 @@ object SnapshotTable {
     val kept = all.takeRight(keep)
     // append-mode manifests reference older versions' dirs: keep every
     // dir a KEPT manifest mentions, not just the kept version numbers
-    val referenced = kept.flatMap(v => manifestFilesIn(ms, root, v))
+    val referenced = kept.flatMap(v => manifestIn(ms, root, v).files)
       .map(p => new Path(p).getParent.getName).toSet
     val cutoff = System.currentTimeMillis() - orphanGraceMs
     all.filterNot(kept.contains).foreach { v =>

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming twins of the batch event analytics.
   *
@@ -646,7 +647,7 @@ object EventStream {
       // upsertBatch guard, same rationale)
       if (batch.isEmpty) ()
       else {
-      val ledger = readStoreIfExists(spark, statePath)
+      val ledger = readStoreIfExists(spark, statePath, Some(LedgerSchema))
       val mine = ledger.flatMap(
         _.where(col("batch_id") === batchId)
           .select("start_off").collect().headOption.map(_.getLong(0)))
@@ -729,15 +730,33 @@ object EventStream {
       emit = df => emit(df.drop(textCol))))
   }
 
-  /** Read the signature store iff its path exists. A missing store is the
-    * normal first-batch state and means "empty"; any OTHER failure (FS
-    * flake, corrupted files) must FAIL the batch — treating it as empty
-    * would silently re-admit duplicates. */
-  private def readStoreIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+  /** Read a gate's state store iff its path exists. A missing store is
+    * the normal first-batch state and means "empty"; any OTHER failure
+    * (FS flake, corrupted files) must FAIL the batch — treating it as
+    * empty would silently re-admit duplicates.
+    *
+    * `schema`: the fixed columns of a store this file writes unpartitioned
+    * ([[SigStoreSchema]], [[LedgerSchema]]). Reading with it plans the
+    * scan without a footer-inference job, which would otherwise run once
+    * per trigger. The partitioned stores pass None and are inferred, so
+    * their `batch_id`/cell partition columns are discovered from the
+    * directory names. */
+  private[streaming] def readStoreIfExists(spark: SparkSession, path: String,
+                                schema: Option[StructType]): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+    if (fs.exists(p))
+      Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path))
+    else None
   }
+
+  /** The near-dup signature store: one row per stored LSH bucket key,
+    * as [[graft.operators.Dedup.bandedSigs]] produces it. */
+  private[streaming] val SigStoreSchema = StructType.fromDDL("band INT, sig STRING")
+
+  /** [[packStream]]'s ledger: one row per committed batch. */
+  private val LedgerSchema =
+    StructType.fromDDL("batch_id BIGINT, start_off BIGINT, end_off BIGINT")
 
   /** Band signatures of one micro-batch: (doc, band, sig), cached in
     * the trigger's scope (the survivor filter and the store append both
@@ -820,8 +839,7 @@ object EventStream {
         // No distinct: the store holds each key once except after a
         // replay, and a repeated key only repeats a drop — a distinct
         // would cost one more shuffle of the store per trigger
-        val hitKeys = readStoreIfExists(spark, storePath)
-          .map(_.select("band", "sig"))
+        val hitKeys = readStoreIfExists(spark, storePath, Some(SigStoreSchema))
         // commit survivors' signatures AFTER the emit so replays re-filter
         filterAndEmit(docs, idCol, banded, hitKeys, emit)
           .write.mode("append").parquet(storePath)
@@ -850,7 +868,7 @@ object EventStream {
         // cached once per trigger, see nearDupFilterBatch
         val docs = graft.PersistScope.cache(batch)
         val banded = bandSignatures(docs, idCol, textCol, k, bands)
-        val store = readStoreIfExists(spark, storePath)
+        val store = readStoreIfExists(spark, storePath, Some(SigStoreSchema))
         if (bloom == null) {
           bloom = store match {
             // stat.bloomFilter over ZERO rows yields a null sketch — a
@@ -924,7 +942,7 @@ object EventStream {
         .localCheckpoint() // assignment reused 3x below; never re-derive
       try {
         val cells = assigned.select("cell").distinct().as[Int].collect().toSeq
-        val store = readStoreIfExists(spark, storePath)
+        val store = readStoreIfExists(spark, storePath, None)
           .map(_.where(col("cell").isin(cells: _*))) // partition-pruned
           .getOrElse(Seq.empty[(Long, Int, Seq[Double], Double)]
             .toDF("vid", "cell", "v", "nv"))
@@ -1055,7 +1073,7 @@ object EventStream {
     val tmp = new org.apache.hadoop.fs.Path(p, ".compact-tmp")
     fs.delete(tmp, true) // litter from a crashed prior run (invisible to
     // readers — dot-prefixed — but in the way of this run's rename)
-    readStoreIfExists(spark, path).foreach { df =>
+    readStoreIfExists(spark, path, None).foreach { df =>
       val ids = df.select(col("batch_id").cast("long")).distinct()
         .as[Long].collect().sorted.toSeq // bounded: one id per trigger epoch
       if (ids.length > 1) {

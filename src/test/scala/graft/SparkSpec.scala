@@ -21,4 +21,27 @@ abstract class SparkSpec extends AnyFunSuite {
 
   override def withFixture(test: NoArgTest): Outcome =
     PersistScope.within(super.withFixture(test))
+
+  /** `f`'s result and the number of Spark jobs it started, counted by
+    * job group. The status tracker learns of jobs from the asynchronous
+    * listener bus, so a one-task marker job in a second group is the
+    * barrier: the bus delivers in order, and once the marker is visible
+    * every job `f` started is too. */
+  protected def jobsStarted[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def inGroup[U](group: String)(g: => U): U = {
+      sc.setJobGroup(group, group)
+      try g finally sc.clearJobGroup()
+    }
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val result = inGroup(group)(f)
+    val marker = s"$group-marker"
+    inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.currentTimeMillis() + 30000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty,
+      "the marker job never reached the status tracker")
+    (result, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }

@@ -406,4 +406,126 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("object store"))
   }
+
+  // ---------------------------------------------- schema in the manifest
+
+  private def manifestText(root: String, v: Long): String = {
+    val src = scala.io.Source.fromFile(s"$root/_manifests/manifest-$v")
+    try src.mkString finally src.close()
+  }
+
+  /** Version `v` (live if None) reads with exactly the schema and rows a
+    * footer-inferring `spark.read.parquet` of the same files gives. */
+  private def readsAsInferred(root: String, v: Option[Long] = None): Unit = {
+    val got = SnapshotTable.read(spark, root, v)
+    val inferred = spark.read.parquet(got.inputFiles: _*)
+    assert(got.schema === inferred.schema)
+    assert(got.orderBy("id").collect().toSeq === inferred.orderBy("id").collect().toSeq)
+  }
+
+  /** One column of each type family whose parquet round trip a recorded
+    * schema must reproduce, nested non-null fields included, plus a
+    * column named like the manifest's file-list field. */
+  private def typed(from: Long, to: Long) = spark.range(from, to).select(
+    col("id"),
+    (col("id") * 1.25).cast("decimal(18,4)").as("dec"),
+    expr("timestamp_seconds(id * 86400)").as("ts"),
+    expr("cast(timestamp_seconds(id * 86400) as timestamp_ntz)").as("ts_ntz"),
+    expr("date_add(date'2024-01-01', cast(id as int))").as("d"),
+    expr("cast(cast(id as string) as binary)").as("bin"),
+    expr("array(id, id + 1)").as("arr"),
+    expr("map(cast(id as string), id)").as("m"),
+    expr("named_struct('a', id, 'b', cast(id as string))").as("st"),
+    expr("cast(null as string)").as("nothing"),
+    expr("concat('f', id)").as("files"))
+
+  test("the manifest records the schema: reads equal footer inference across commits") {
+    val root = tmp()
+    SnapshotTable.write(typed(0, 5), root)
+    assert(manifestText(root, 1L).contains("\"schema\": "))
+    readsAsInferred(root)
+    SnapshotTable.write(typed(5, 8), root, append = true) // same schema
+    assert(manifestText(root, 2L).contains("\"schema\": "))
+    readsAsInferred(root)
+    val upsert = typed(6, 10).withColumn("nothing", lit("set"))
+    SnapshotTable.merge(upsert, root, Seq("id"))
+    assert(manifestText(root, 3L).contains("\"schema\": "))
+    readsAsInferred(root)
+    assert(SnapshotTable.read(spark, root).where(col("id") === 7)
+      .select("nothing").as[String].collect().toSeq === Seq("set"))
+    SnapshotTable.compact(spark, root)
+    assert(manifestText(root, 4L).contains("\"schema\": "))
+    readsAsInferred(root)
+    assert(SnapshotTable.read(spark, root).count() === 10L)
+    // every older version keeps its own schema
+    (1L to 3L).foreach(v => readsAsInferred(root, Some(v)))
+  }
+
+  test("an append that changes the schema records none and reads by inference") {
+    val root = tmp()
+    SnapshotTable.write(Seq((1L, "a")).toDF("id", "v"), root)
+    SnapshotTable.write(Seq((2L, "b", 2.5)).toDF("id", "v", "x"), root, append = true)
+    assert(!manifestText(root, 2L).contains("\"schema\""))
+    readsAsInferred(root)
+    // replacing the mixed snapshot records a schema again
+    SnapshotTable.compact(spark, root)
+    assert(manifestText(root, 3L).contains("\"schema\": "))
+    readsAsInferred(root)
+  }
+
+  test("a void copies the schema of the version it carries") {
+    val root = tmp()
+    SnapshotTable.write(typed(0, 3), root)
+    val f = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val burned = new org.apache.hadoop.fs.Path(root, "_manifests/claim-2")
+    f.create(burned, false).close()
+    f.setTimes(burned,
+      System.currentTimeMillis() - SnapshotTable.claimGraceMs - 1000L, -1L)
+    SnapshotTable.write(typed(3, 6), root, append = true)
+    val void = manifestText(root, 2L)
+    assert(void.contains("\"void\": true"))
+    val schemaField = "\"schema\": \"(?:[^\"\\\\]|\\\\.)*\"".r
+    assert(schemaField.findFirstIn(void).isDefined)
+    assert(schemaField.findFirstIn(void) === schemaField.findFirstIn(manifestText(root, 1L)))
+    readsAsInferred(root, Some(2L))
+    readsAsInferred(root)
+  }
+
+  test("a manifest without a schema field (written before schemas) reads by inference") {
+    val root = tmp()
+    SnapshotTable.write(typed(0, 4), root)
+    val files = SnapshotTable.read(spark, root).inputFiles
+      .map(p => "data/" + p.split("/data/").last)
+    val legacy = new java.io.File(s"$root/_manifests/manifest-2")
+    java.nio.file.Files.write(legacy.toPath, files
+      .map(n => "\"" + n + "\"").mkString("{\"version\": 2, \"files\": [", ", ", "]}")
+      .getBytes("UTF-8"))
+    val (df, jobs) = jobsStarted(SnapshotTable.read(spark, root))
+    assert(jobs >= 1, "a legacy manifest should infer its schema from the footers")
+    assert(df.inputFiles.length === files.length)
+    readsAsInferred(root)
+    // an append onto the schema-less snapshot cannot vouch for the
+    // carried files, so it records none either
+    SnapshotTable.write(typed(4, 6), root, append = true)
+    assert(!manifestText(root, 3L).contains("\"schema\""))
+    readsAsInferred(root)
+  }
+
+  test("building read and readChanges over recorded schemas starts no Spark job") {
+    val root = tmp()
+    SnapshotTable.write(typed(0, 3), root)
+    SnapshotTable.write(typed(3, 6), root, append = true)
+    val (live, liveJobs) = jobsStarted(SnapshotTable.read(spark, root))
+    assert(liveJobs === 0)
+    val (pinned, pinnedJobs) = jobsStarted(SnapshotTable.read(spark, root, Some(1L)))
+    assert(pinnedJobs === 0)
+    val (changes, changeJobs) = jobsStarted(SnapshotTable.readChanges(spark, root, 1L))
+    assert(changeJobs === 0)
+    val (none, noneJobs) = jobsStarted(SnapshotTable.readChanges(spark, root, 2L))
+    assert(noneJobs === 0)
+    assert(live.count() === 6L && pinned.count() === 3L)
+    assert(changes.select("id").as[Long].collect().sorted.toSeq === Seq(3L, 4L, 5L))
+    assert(none.count() === 0L && none.schema === live.schema)
+  }
 }

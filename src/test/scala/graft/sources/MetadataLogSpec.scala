@@ -37,4 +37,33 @@ class MetadataLogSpec extends SparkSpec {
     assert(back.count() === 2)
     assert(back.select("pipeline").distinct().as[String].head() === "test_pipe")
   }
+
+  test("append writes from the driver: no Spark job, no partial file visible") {
+    val dir = java.nio.file.Files.createTempDirectory("mlog").toString
+    val rec = MetadataLog.RunRecord("p", "load", "success", 7L, 12L, 1000L)
+    val (_, jobs) = jobsStarted(MetadataLog.append(spark, Seq(rec, rec.copy(stage = null)), dir))
+    assert(jobs === 0)
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.count(_.endsWith(".parquet")) === 1 &&
+      names.forall(n => n.endsWith(".parquet") || n.startsWith(".")), names)
+    val (back, readJobs) = jobsStarted(MetadataLog.read(spark, dir))
+    assert(readJobs === 0)
+    assert(back.as[MetadataLog.RunRecord].collect().toSet ===
+      Set(rec, rec.copy(stage = null)))
+  }
+
+  test("a log mixing a Spark-written file and a driver-written file reads with today's schema") {
+    val dir = java.nio.file.Files.createTempDirectory("mlog").toString
+    val old = MetadataLog.RunRecord("p", "load", "failure", -1L, 5L, 1000L)
+    // a log appended before the driver-side writer: Spark's own parquet
+    // writer over the same case class
+    Seq(old).toDF().write.mode("append").parquet(dir)
+    val sparkSchema = spark.read.parquet(dir).schema
+    val rec = old.copy(stage = "conform", status = "success", n_rows = 3L)
+    MetadataLog.append(spark, Seq(rec), dir)
+    val back = MetadataLog.read(spark, dir)
+    assert(back.schema === sparkSchema)
+    assert(spark.read.parquet(dir).schema === sparkSchema)
+    assert(back.as[MetadataLog.RunRecord].collect().toSet === Set(old, rec))
+  }
 }

@@ -1054,4 +1054,22 @@ class EventStreamSpec extends SparkSpec {
       streamed.foreach { case (id, sh) => assert(layout(id) == sh) }
     } finally q.stop()
   }
+
+  test("the near-dup signature store plans from its fixed schema with no job") {
+    val store = java.nio.file.Files.createTempDirectory("sigstore").toString + "/s"
+    Seq((0, "1_2_3_4"), (3, "5_6_7_8")).toDF("band", "sig").write.parquet(store)
+    // a fresh session: nothing about the store is cached from the write
+    val fresh = spark.newSession()
+    val (_, jobs) = jobsStarted(EventStream.readStoreIfExists(
+      fresh, store, Some(EventStream.SigStoreSchema)).get.queryExecution.executedPlan)
+    assert(jobs === 0)
+    val (inferred, inferJobs) = jobsStarted(EventStream.readStoreIfExists(
+      spark.newSession(), store, None).get)
+    assert(inferJobs >= 1, "footer inference should be a job")
+    val read = EventStream.readStoreIfExists(fresh, store, Some(EventStream.SigStoreSchema)).get
+    assert(read.schema === inferred.schema)
+    assert(read.as[(Int, String)].collect().toSet === Set((0, "1_2_3_4"), (3, "5_6_7_8")))
+    assert(EventStream.readStoreIfExists(fresh, store + "-missing",
+      Some(EventStream.SigStoreSchema)).isEmpty)
+  }
 }

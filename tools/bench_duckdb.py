@@ -13,9 +13,11 @@ heavy tier some oracles are quadratic (IEJoin radius join) and would run
 for hours — the timeout marker IS the scale finding. A query that errors
 reports -1.
 
-`connect` and `duck_min` are the one DuckDB set-up and timer; the
-structural sweep (tools/bench_structural.py) imports them.
+`connect`, `deadline` and `duck_min` are the one DuckDB set-up, query
+timeout and timer; the structural sweep (tools/bench_structural.py) and
+the oracle compare (tools/compare.py) import them.
 """
+import contextlib
 import json
 import os
 import sys
@@ -38,6 +40,34 @@ def connect(sf):
     return con
 
 
+@contextlib.contextmanager
+def deadline(con, timeout):
+    """Interrupt the query `con` runs inside the block once `timeout`
+    seconds pass (None: never). Yields a dict whose "fired" reads True
+    once the interrupt was sent. The done-flag + lock close the race
+    where the timer fires between the query returning and the block's
+    exit: a stray interrupt would poison the connection and abort the
+    NEXT query instantly."""
+    lock = threading.Lock()
+    state = {"done": False, "fired": False}
+
+    def maybe_interrupt():
+        with lock:
+            if not state["done"]:
+                state["fired"] = True
+                con.interrupt()
+    timer = threading.Timer(timeout, maybe_interrupt) if timeout else None
+    if timer:
+        timer.start()
+    try:
+        yield state
+    finally:
+        with lock:
+            state["done"] = True
+        if timer:
+            timer.cancel()
+
+
 def duck_min(con, sql, runs, timeout=None):
     """Min wall seconds over `runs` fully materialized runs of `sql`.
     A run past `timeout` is interrupted and ends the series: the result
@@ -46,37 +76,18 @@ def duck_min(con, sql, runs, timeout=None):
     other error raises."""
     best = None
     for _ in range(runs):
-        # the done-flag + lock close the race where the timer fires
-        # between fetchall() returning and cancel(): a stray interrupt
-        # would poison the connection and abort the NEXT run instantly
-        lock = threading.Lock()
-        done = [False]
-
-        def maybe_interrupt():
-            with lock:
-                if not done[0]:
-                    con.interrupt()
-        timer = threading.Timer(timeout, maybe_interrupt) if timeout else None
-        if timer:
-            timer.start()
         t0 = time.monotonic()
         try:
-            con.execute(sql).fetchall()
-            with lock:
-                done[0] = True
-            took = time.monotonic() - t0
-            best = took if best is None else min(best, took)
+            with deadline(con, timeout) as d:
+                con.execute(sql).fetchall()
         except Exception:
-            with lock:
-                done[0] = True
             # an interrupt surfaces as InterruptException or, depending
-            # on where it lands, as another error type: judge by the clock
-            if timeout and time.monotonic() - t0 >= timeout - 0.5:
+            # on where it lands, as another error type: judge by the flag
+            if d["fired"]:
                 return best if best is not None else -timeout
             raise
-        finally:
-            if timer:
-                timer.cancel()
+        took = time.monotonic() - t0
+        best = took if best is None else min(best, took)
     return best
 
 

@@ -3,12 +3,20 @@
 DuckDB against the testdata parquet, load the Verify parquet dump, sort
 columns by name + rows by value, and compare cell-exactly.
 
-Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [query ...]
-"""
-import sys, glob, math
-import duckdb
+Usage: python3 tools/compare.py [--timeout S] <sfDir> <verifyOutDir> [query ...]
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+An oracle query still running after S seconds (default 600) is
+interrupted and reported as `TIMEOUT <name>`: a failure, never a pass,
+so the run exits 1.
+"""
+import argparse
+import json
+import math
+import sys
+
+from bench_duckdb import connect, deadline
+
+TIMEOUT_S = 600.0
 
 def canon(rows, cols):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -37,25 +45,33 @@ def cell_eq(a, b):
     return a == b
 
 def main():
-    sf, vout = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    import json
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf")
+    ap.add_argument("vout")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--timeout", type=float, default=TIMEOUT_S,
+                    help=f"seconds per oracle query (default {TIMEOUT_S:g})")
+    args = ap.parse_args()
+    vout, only = args.vout, set(args.queries)
+    con = connect(args.sf)
     oracles = json.load(open(f"{vout}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_timeout = 0
     for name, sql in sorted(oracles.items()):
         if only and name not in only: continue
         try:
-            ores = con.execute(sql)
-            ocols = [d[0] for d in ores.description]
-            orows = ores.fetchall()
+            with deadline(con, args.timeout) as dl:
+                ores = con.execute(sql)
+                ocols = [d[0] for d in ores.description]
+                orows = ores.fetchall()
             sres = con.execute(f"SELECT * FROM '{vout}/{name}/*.parquet'")
             scols = [d[0] for d in sres.description]
             srows = sres.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: ERROR {str(e)[:200]}")
+            if dl["fired"]:
+                print(f"TIMEOUT {name} (oracle past {args.timeout:g} s)")
+                n_timeout += 1
+            else:
+                print(f"FAIL {name}: ERROR {str(e)[:200]}")
             n_fail += 1
             continue
         oc, orr = canon(orows, ocols)
@@ -84,7 +100,7 @@ def main():
         else:
             print(f"PASS {name} ({len(orr)} rows)")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail, {len(oracles)} oracles")
+    print(f"== {n_pass} pass, {n_fail} fail ({n_timeout} timeout), {len(oracles)} oracles")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

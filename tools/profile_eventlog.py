@@ -62,6 +62,19 @@ def load_events(path):
                 continue
 
 
+def label(desc):
+    """A job description on one line. Structured Streaming describes a
+    micro-batch job as `<query name>\nid = ...\nrunId = ...\nbatch = 9`;
+    that becomes `stream batch=9` (`stream[<name>] batch=9` for a named
+    query). Any other multi-line description keeps its first line."""
+    lines = desc.split("\n")
+    if len(lines) > 1 and lines[-1].startswith("batch = "):
+        name = lines[0].strip()
+        return (f"stream[{name}]" if name else "stream") + \
+            f" batch={lines[-1][len('batch = '):].strip()}"
+    return lines[0]
+
+
 def jobs_stages(events):
     jobs, stages = {}, []
     cpu = collections.defaultdict(lambda: [0, 0])
@@ -69,7 +82,7 @@ def jobs_stages(events):
     for e in events:
         t = e.get("Event", "")
         if t == "SparkListenerJobStart":
-            desc = (e.get("Properties") or {}).get("spark.job.description") or "-"
+            desc = label((e.get("Properties") or {}).get("spark.job.description") or "-")
             jobs[e["Job ID"]] = [e["Submission Time"], None,
                                  [s["Stage ID"] for s in e["Stage Infos"]],
                                  desc]
@@ -104,7 +117,8 @@ def jobs_stages(events):
         if s is None:
             continue
         q = query_of.get(sid, '-')
-        per_query[q] += shuffle_w[sid]
+        # a stream's batches add up under one key
+        per_query[q.split(" batch=")[0]] += shuffle_w[sid]
         print(f"stage {sid:3d}  {q:{width}s}  "
               f"start={(s - base) / 1000:8.3f} "
               f"dur={(c - s) / 1000:6.3f} tasks={n:3d} "
