@@ -165,13 +165,27 @@ object Catalog {
   /** The Street Manager feed parse shape — zip of nested event json,
     * flattened with the `object_data.` prefix stripped — shared by the
     * raw monthly load above and the Section 58 staging load
-    * ([[Section58.stage]]), which consume the same archive format. */
+    * ([[Section58.stage]]), which consume the same archive format.
+    *
+    * Each permit file is read as ONE whole-text row and parsed as a JSON
+    * document (a top-level array yields one row per element), the rows a
+    * multiLine JSON read gives. The schema is still inferred over every
+    * file, so a drifted key still reaches `conform`'s check, but through
+    * an ordinary text scan: the multiLine reader opens each file as a
+    * `PortableDataStream`, whose per-file Hadoop configuration copy cost
+    * ~20 ms a permit. The text is decoded as UTF-8 and a leading byte
+    * order mark is dropped, as Jackson drops it from a multiLine read;
+    * UTF-16/32 files, which Jackson would detect from their bytes, are not
+    * read (the feed is UTF-8). A row is one JVM string, so a single permit
+    * file is limited to 2 GB. */
   private[pipelines] def parseStreetManagerArchive(spark: SparkSession,
       input: String, scratch: String): DataFrame = {
+    import spark.implicits._
     val dir =
       if (input.toLowerCase.endsWith(".zip")) { Fetch.unzip(input, scratch); scratch }
       else input
-    val nested = spark.read.option("multiLine", "true").json(dir)
+    val nested = spark.read.json(spark.read.option("wholetext", "true").text(dir)
+      .select(ltrim(col("value"), "\uFEFF").as("value")).as[String])
     ColumnNormalizer.stripPrefix(
       JsonFlatten.flatten(nested, sep = "."), "object_data.")
   }

@@ -49,7 +49,16 @@ object ParquetSink {
     * partitions whose open/seek overhead eventually dominates scans at
     * 100 TB. Rewrites each partition into ~`targetFileMB` files via
     * per-partition-dir dynamic overwrite — a metadata-safe, idempotent
-    * maintenance pass (re-running compacts nothing further). */
+    * maintenance pass (re-running compacts nothing further).
+    *
+    * File count is the scoped scan's size over `targetFileMB`, the rule
+    * [[SnapshotTable.compact]] shares. A partitioned table needs a
+    * shuffle to keep every file partition-pure, so it hash-repartitions
+    * on the partition columns plus a source-file salt. An unpartitioned
+    * one has no purity to keep: it coalesces the scan to that count, with
+    * no exchange, and with a `targetFileMB` below
+    * `spark.sql.files.maxPartitionBytes` writes fewer, larger files than
+    * the count (coalescing cannot split a scan partition). */
   def compactPartitioned(spark: org.apache.spark.sql.SparkSession, path: String,
                          partitionCols: Seq[String],
                          targetFileMB: Int = 512,
@@ -78,7 +87,7 @@ object ParquetSink {
       // writes it as one arbitrarily large file; the salt splits big dirs
       // while still keeping files partition-pure
       val salted =
-        if (partitionCols.isEmpty) scoped.repartition(nFiles)
+        if (partitionCols.isEmpty) scoped.coalesce(nFiles)
         else scoped
           .withColumn("__salt",
             pmod(xxhash64(input_file_name()), lit(nFiles.toLong)).cast("int"))

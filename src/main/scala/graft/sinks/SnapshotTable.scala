@@ -535,7 +535,10 @@ object SnapshotTable {
       val live = liveVersionIn(ms, root)
       val liveM = manifestIn(ms, root, live)
       val files = liveM.files
-      val srcKeys = src.select(keys.map(col): _*).distinct()
+      // No distinct: the semi and anti joins below ignore how often a key
+      // repeats, so deduplicating the keys would only add an aggregate
+      // and an exchange to both executions
+      val srcKeys = src.select(keys.map(col): _*)
       // NULL-SAFE key equality (<=>) throughout: with plain equality a
       // null-keyed source row never matches its stored twin, so every
       // replay of the same batch would insert another copy — breaking
@@ -576,7 +579,15 @@ object SnapshotTable {
     *
     * File count comes from the live snapshot's scan stats against
     * `targetFileMB` (the [[ParquetSink.compactPartitioned]] sizing
-    * rule). SAFE ALONGSIDE APPENDERS, like [[merge]]: the rewrite is
+    * rule), and the scan is COALESCED to that count, not repartitioned:
+    * no exchange, each byte is read once and written once. The scan
+    * already packs the input files into partitions of at most
+    * `spark.sql.files.maxPartitionBytes`, so while `targetFileMB` is at
+    * least that (512 vs 128 MB by default) the count is at or below the
+    * scan's partition count and each output task reads about
+    * `targetFileMB`. With a smaller target, coalescing cannot split a
+    * scan partition, so it writes fewer, larger files than the count.
+    * SAFE ALONGSIDE APPENDERS, like [[merge]]: the rewrite is
     * derived from the live version it read, so the commit must land at
     * exactly that version + 1 — a concurrent commit on the same base
     * aborts the compact loudly (ConcurrentModificationException, re-run
@@ -590,7 +601,7 @@ object SnapshotTable {
     val df = read(spark, root, Some(live), store)
     val sizeBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1L, (sizeBytes / (targetFileMB.toLong << 20)).toLong)
-    commitWith(df.repartition(nFiles.toInt), root, maxClaimRetries = 20,
+    commitWith(df.coalesce(nFiles.toInt), root, maxClaimRetries = 20,
       requireBase = Some(live), store = store)((_, _) => NoFiles)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,10 +30,6 @@ abstract class SparkSpec extends AnyFunSuite {
     * every job `f` started is too. */
   protected def jobsStarted[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
-    def inGroup[U](group: String)(g: => U): U = {
-      sc.setJobGroup(group, group)
-      try g finally sc.clearJobGroup()
-    }
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val result = inGroup(group)(f)
     val marker = s"$group-marker"
@@ -43,5 +40,33 @@ abstract class SparkSpec extends AnyFunSuite {
     assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty,
       "the marker job never reached the status tracker")
     (result, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** `f`'s result and the shuffle bytes its jobs' tasks wrote (the sum of
+    * `shuffleWriteMetrics.bytesWritten`), counted by job group. */
+  protected def shuffleBytesWritten[T](f: => T): (T, Long) = {
+    val group = s"shuffle-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = inGroup(group)(f)
+      org.apache.spark.sql.ExecutedPlans.flushListenerBus(spark)
+      (result, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def inGroup[U](group: String)(g: => U): U = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try g finally sc.clearJobGroup()
   }
 }

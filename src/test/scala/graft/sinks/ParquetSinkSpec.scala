@@ -46,6 +46,18 @@ class ParquetSinkSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() === 60)
   }
 
+  test("compactPartitioned on an unpartitioned table coalesces: no shuffle, rows kept") {
+    val dir = java.nio.file.Files.createTempDirectory("psink4").toString
+    ParquetSink.writeReplace((1L to 60L).toDF("id").repartition(6), dir)
+    assert(spark.read.parquet(dir).inputFiles.length === 6)
+    val (_, shuffled) = shuffleBytesWritten(
+      ParquetSink.compactPartitioned(spark, dir, Nil, targetFileMB = 512))
+    assert(shuffled === 0L)
+    val back = spark.read.parquet(dir)
+    assert(back.inputFiles.length === 1)
+    assert(back.as[Long].collect().sorted.toSeq === (1L to 60L))
+  }
+
   test("writeWithBloom writes a working parquet bloom filter for point probes") {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader

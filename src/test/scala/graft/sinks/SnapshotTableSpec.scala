@@ -82,8 +82,9 @@ class SnapshotTableSpec extends SparkSpec {
     def manifestCount(v: Long): Int =
       SnapshotTable.read(spark, root, Some(v)).inputFiles.length
     assert(manifestCount(3L) == 12)
-    val v4 = SnapshotTable.compact(spark, root)
+    val (v4, shuffled) = shuffleBytesWritten(SnapshotTable.compact(spark, root))
     assert(v4 == 4L)
+    assert(shuffled === 0L, "compact coalesces the scan, it never shuffles")
     // data identical, file count reset (120 tiny rows -> one target file)
     assert(manifestCount(4L) == 1)
     assert(SnapshotTable.read(spark, root).as[Long].collect().sorted.toSeq ==
@@ -111,6 +112,34 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root, Some(1L)).orderBy("id")
       .as[(Long, String)].collect().toSeq ==
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
+  test("merge: a source holding one key twice lands both rows, as a SQL MERGE would") {
+    val root = tmp()
+    SnapshotTable.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), root)
+    SnapshotTable.merge(
+      Seq((2L, "B1"), (2L, "B2"), (4L, "d")).toDF("id", "v"), root, Seq("id"))
+    assert(SnapshotTable.read(spark, root).orderBy("id", "v").as[(Long, String)]
+      .collect().toSeq ==
+      Seq((1L, "a"), (2L, "B1"), (2L, "B2"), (3L, "c"), (4L, "d")))
+  }
+
+  test("merge: the key probe and the rewrite join the source keys as projected, with no aggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val root = tmp()
+    SnapshotTable.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), root)
+    val plans = org.apache.spark.sql.ExecutedPlans.during(spark) {
+      SnapshotTable.merge(Seq((2L, "B"), (4L, "d")).toDF("id", "v"), root, Seq("id"))
+    }
+    val aggregates = plans.flatMap(Plans.collect(_) { case a: HashAggregateExec => a })
+    // the touched-file probe still takes the distinct file names
+    assert(aggregates.exists(_.groupingExpressions.exists(_.references.exists(_.name == "__file"))))
+    val onKeys = aggregates.filter(_.groupingExpressions.exists(_.references.exists(_.name == "id")))
+    assert(onKeys.isEmpty, s"source keys aggregated: ${onKeys.mkString("; ")}")
+    assert(SnapshotTable.read(spark, root).orderBy("id").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a"), (2L, "B"), (3L, "c"), (4L, "d")))
   }
 
   test("merge: a grace-expired debris claim at base+1 is voided, not a permanent wedge") {

@@ -18,8 +18,12 @@ object ExecutedPlans {
     spark.listenerManager.register(listener)
     try {
       body
-      spark.sparkContext.listenerBus.waitUntilEmpty()
+      flushListenerBus(spark)
     } finally spark.listenerManager.unregister(listener)
     plans.synchronized(plans.toList)
   }
+
+  /** Returns once every event posted so far has reached every listener. */
+  def flushListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -15,6 +15,11 @@ read it:
     python3 tools/profile_eventlog.py target/sparklogs --sql [N]  # plan trees
 
 Reading the output:
+- a stage line sums its tasks' metrics: in_rec and in_kb are the records
+  and bytes they read from the stage's input files (0 for a stage that
+  reads only shuffle), run_ms is executor run time, cpu_ms the part of it
+  on CPU. A stage whose run_ms is large for its in_kb pays a per-task or
+  per-file fixed cost, not a per-byte one.
 - shuffle_w_kb: the bytes a stage's tasks wrote to shuffle files; the
   per-query table sums them over every run in the log (divide by
   SPARK_GRAFT_BENCH_RUNS for per-run bytes).
@@ -77,7 +82,8 @@ def label(desc):
 
 def jobs_stages(events):
     jobs, stages = {}, []
-    cpu = collections.defaultdict(lambda: [0, 0])
+    # per stage: executor run ms, executor cpu ns, input records, input bytes
+    task = collections.defaultdict(lambda: [0, 0, 0, 0])
     shuffle_w = collections.defaultdict(int)
     for e in events:
         t = e.get("Event", "")
@@ -96,8 +102,12 @@ def jobs_stages(events):
                            si["Number of Tasks"]))
         elif t == "SparkListenerTaskEnd":
             m = e.get("Task Metrics") or {}
-            cpu[e["Stage ID"]][0] += m.get("Executor Run Time", 0)
-            cpu[e["Stage ID"]][1] += 1
+            inp = m.get("Input Metrics") or {}
+            t = task[e["Stage ID"]]
+            t[0] += m.get("Executor Run Time", 0)
+            t[1] += m.get("Executor CPU Time", 0)
+            t[2] += inp.get("Records Read", 0)
+            t[3] += inp.get("Bytes Read", 0)
             shuffle_w[e["Stage ID"]] += (m.get("Shuffle Write Metrics") or {}).get(
                 "Shuffle Bytes Written", 0)
     if not jobs:
@@ -119,11 +129,13 @@ def jobs_stages(events):
         q = query_of.get(sid, '-')
         # a stream's batches add up under one key
         per_query[q.split(" batch=")[0]] += shuffle_w[sid]
+        run_ms, cpu_ns, in_rec, in_b = task[sid]
         print(f"stage {sid:3d}  {q:{width}s}  "
               f"start={(s - base) / 1000:8.3f} "
               f"dur={(c - s) / 1000:6.3f} tasks={n:3d} "
-              f"cpu_ms={cpu[sid][0]:7d}  shuffle_w_kb={shuffle_w[sid] / 1024:9.1f}  "
-              f"{name}")
+              f"in_rec={in_rec:8d} in_kb={in_b / 1024:9.1f} "
+              f"run_ms={run_ms:7d} cpu_ms={cpu_ns // 1000000:7d}  "
+              f"shuffle_w_kb={shuffle_w[sid] / 1024:9.1f}  {name}")
     print("== shuffle write per query (KB, all runs in the log) ==")
     for q, b in sorted(per_query.items()):
         print(f"{q:{width}s}  {b / 1024:10.1f}")
