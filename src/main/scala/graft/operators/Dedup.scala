@@ -316,8 +316,9 @@ object Dedup {
   /** Star edges for duplicate CLUSTERING: each LSH bucket (band, sig)
     * with k docs is a clique; for connectivity purposes a star to the
     * bucket's min doc carries the same components with k-1 edges instead
-    * of k(k-1)/2 pairs. Feed these to [[DupClusters.clusters]] — never
-    * materialize the quadratic candidate-pair set just to cluster it.
+    * of k(k-1)/2 pairs. Feed these to [[DupClusters.clustersAdaptive]]
+    * — never materialize the quadratic candidate-pair set just to
+    * cluster it.
     * The signatures are [[minhashSignatures]]' per-row projection, so
     * the only exchanges are [[bucketStarsFromSigs]]'. */
   def minhashBucketStars(df: DataFrame, idCol: String, textCol: String,

@@ -5,17 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster resolution: collapse near-dup edges (minhash bucket
   * stars, jaccard pairs, ...) into connected components, so each dup group
-  * gets one canonical id.
+  * gets one canonical id. Output contract: (doc, cluster = min doc of the
+  * component), one row per doc drawn from the input pairs; a doc whose
+  * only pair is a self-loop is its own cluster.
   *
-  * Algorithm: alternating min-label propagation WITH edge contraction
-  * (hash-to-min style). Each round:
-  *   1. every node adopts the min label in its neighborhood (incl. itself);
-  *   2. edges are rewritten to connect LABELS instead of nodes and
-  *      self-loops are dropped — so resolved structure disappears and the
-  *      effective diameter roughly halves each round: O(log d) rounds,
-  *      each a pair of equi-joins with map-side combine.
-  * `localCheckpoint` truncates the growing lineage so round N's plan does
-  * not replay rounds 1..N-1.
+  * [[clustersAdaptive]] is the entry point every driver query uses: an
+  * edge set of up to `driverEdgeLimit` (4M) edges is collected once and
+  * labelled by union-find on the driver; a larger one runs the
+  * distributed [[clustersStar]] rounds, which also take non-integral
+  * doc ids at any size.
   */
 object DupClusters {
 
@@ -23,9 +21,13 @@ object DupClusters {
     * MapReduce-and-Beyond formulation): each round is two groupBy+join
     * passes keyed on node id, which (a) bounds rounds ~O(log^2 n) even on
     * adversarial long chains and (b) never materializes a node's whole
-    * neighborhood in memory — the hot-hub-safe variant of [[clusters]]
-    * for web-scale graphs. Same output contract: (doc, cluster = min doc
-    * of component), docs drawn from the input pairs.
+    * neighborhood in memory — hot hubs and long chains are safe at
+    * web scale. Every round is lineage-truncated: `durable = true`
+    * switches `localCheckpoint` (executor-local blocks — fast, but a
+    * lost executor kills the job since the truncated lineage can't
+    * recompute) to reliable `checkpoint()` into
+    * `spark.sparkContext.setCheckpointDir(...)`, the production setting
+    * on a multi-node cluster.
     *
     * large-star: every neighbor v > u connects to min(N(u) ∪ u) — tall
     * trees flatten. small-star (on max-oriented edges): every v <= u and
@@ -144,9 +146,9 @@ object DupClusters {
     // jobs plus a cache round-trip for the same information. The limit
     // stops the scan at driverEdgeLimit+1 rows, so an over-limit edge set
     // costs a bounded partial pass, not a full materialization. The
-    // threshold now counts self-loop pairs too (the old count excluded
-    // them) — a plan-choice heuristic only: both branches produce
-    // identical labels (DupClustersSpec union-find pins).
+    // threshold counts self-loop pairs too — a plan-choice heuristic
+    // only: both branches produce identical labels (DupClustersSpec
+    // union-find pins).
     val probe = (math.min(driverEdgeLimit, Int.MaxValue.toLong - 1) + 1).toInt
     val local = pairs.select(col("doc_a"), col("doc_b"))
       .limit(probe).as[(Long, Long)].collect()
@@ -175,76 +177,6 @@ object DupClusters {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       parent.keys.toSeq.map(d => (d, find(d))).toDF("doc", "cluster")
-    }
-  }
-
-  /** pairs(doc_a, doc_b) -> (doc, cluster) with cluster = min doc id of the
-    * component. Includes only docs appearing in at least one pair.
-    *
-    * `durable = true` switches the per-round lineage truncation from
-    * `localCheckpoint` (executor-local blocks — fast, but a lost executor
-    * kills the job since the truncated lineage can't recompute) to reliable
-    * `checkpoint()` into `spark.sparkContext.setCheckpointDir(...)` —
-    * the production setting on a multi-node cluster. Local default stays
-    * executor-local. */
-  def clusters(pairs: DataFrame, maxIters: Int = 25,
-               durable: Boolean = false): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint() else df.localCheckpoint()
-    // contracted edge set between current labels — the ONLY relation the
-    // loop materializes; membership relabeling is deferred to one pass at
-    // the end (each round's label moves are tiny checkpointed deltas)
-    var edges = ck(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct())
-    var moves = List.empty[DataFrame] // per-round (cluster -> new_cluster)
-    var iter = 0
-    var done = edges.isEmpty
-    while (!done && iter < maxIters) {
-      // 1. each label adopts the min adjacent label (both directions)
-      val adj = edges.unionByName(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-      val newForLabel = ck(adj.groupBy(col("src").as("cluster"))
-        .agg(least(min(col("dst")), col("cluster")).as("new_cluster"))
-        .where(col("cluster") =!= col("new_cluster")))
-      if (newForLabel.isEmpty) {
-        done = true
-      } else {
-        moves ::= newForLabel
-        // 2. contract edges to the new labels
-        val relabel = (c: String) => coalesce(col(s"nc_$c"), col(c))
-        edges = ck(edges
-          .join(newForLabel.select(col("cluster").as("src"),
-            col("new_cluster").as("nc_src")), Seq("src"), "left")
-          .join(newForLabel.select(col("cluster").as("dst"),
-            col("new_cluster").as("nc_dst")), Seq("dst"), "left")
-          .select(relabel("src").as("src"), relabel("dst").as("dst"))
-          .where(col("src") =!= col("dst"))
-          .distinct())
-        done = edges.isEmpty
-      }
-      iter += 1
-    }
-    // unconverged propagation means the recorded moves label ONE
-    // component as several clusters — refuse loudly like clustersStar
-    // does. (Contraction converges in O(component diameter) rounds, not
-    // O(log d): a 30-edge chain needs 30 rounds. clustersStar is the
-    // adversarial-shape path; this guard keeps this variant honest.)
-    if (!done) throw new IllegalStateException(
-      s"clusters: min-label propagation did not converge in $maxIters " +
-        "rounds (long-chain graph?); raise maxIters or use clustersStar")
-    // membership: every node starts as its own label, then the recorded
-    // rounds of label moves apply in order — one lazy join chain over the
-    // (checkpointed, small) deltas instead of a materialized relabel per
-    // round
-    val nodes = pairs.select(col("doc_a").as("doc"))
-      .unionByName(pairs.select(col("doc_b").as("doc")))
-      .distinct()
-      .withColumn("cluster", col("doc"))
-    moves.reverse.foldLeft(nodes) { (lab, m) =>
-      lab.join(m, Seq("cluster"), "left")
-        .select(col("doc"),
-          coalesce(col("new_cluster"), col("cluster")).as("cluster"))
     }
   }
 }

@@ -78,8 +78,8 @@ case class UnigramSegment(child: Expression, table: UnigramTable)
 
 object UnigramSegment {
 
-  /** The DP, shared verbatim by eval and codegen (static call keeps the
-    * stage inside whole-stage codegen, the [[BloomProbe]] pattern). */
+  /** The DP, shared verbatim by eval and codegen (a static call keeps
+    * the stage inside whole-stage codegen). */
   def run(t: UnigramTable, word: UTF8String): ArrayData = {
     val s = word.toString
     if (s.isEmpty) return new GenericArrayData(Array.empty[Any])

@@ -16,14 +16,10 @@ import org.apache.spark.sql.types.StructType
   * into a warehouse table. Same contract here, as a Spark-native log with
   * an appendable parquet sink.
   *
-  * Two ways to get per-stage row counts:
-  *  - [[observed]]: attaches an `observe()` metric to the stage's plan; the
-  *    count is collected as a side effect of the pipeline's ONE terminal
-  *    action. This is the scale path — an N-stage pipeline does O(N) total
-  *    work. Use via [[Pipeline.runObserved]].
-  *  - [[tracked]]: eager `count()` per stage. Each count executes the full
-  *    upstream plan, so an N-stage chain does O(N^2) work — debugging only,
-  *    never in a 100 TB pipeline.
+  * Per-stage row counts come from [[observed]]: it attaches an
+  * `observe()` metric to the stage's plan, and the count is collected as
+  * a side effect of the pipeline's ONE terminal action, so an N-stage
+  * pipeline does O(N) total work. Use via [[Pipeline.runObserved]].
   *
   * The log itself is a parquet directory of [[RunRecord]]s. The records
   * are few and already on the driver, so [[append]] writes them as one
@@ -50,32 +46,6 @@ object MetadataLog {
               elapsedMs: Long): RunRecord =
     RunRecord(pipeline, stage, "success",
       obs.get("n_rows").asInstanceOf[Long], elapsedMs, System.currentTimeMillis())
-
-  /** Run `f`, record outcome + row count of its result EAGERLY (extra job
-    * per stage — see class doc; prefer observed/runObserved). */
-  def tracked(pipeline: String, stage: String)(f: => DataFrame): (DataFrame, RunRecord) = {
-    val t0 = System.currentTimeMillis()
-    try {
-      val df = f
-      val n = df.count()
-      (df, RunRecord(pipeline, stage, "success", n,
-        System.currentTimeMillis() - t0, System.currentTimeMillis()))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        throw new StageFailure(pipeline, stage,
-          RunRecord(pipeline, stage, "failure", -1L,
-            System.currentTimeMillis() - t0, System.currentTimeMillis()), e)
-    }
-  }
-
-  /** Stage failure carrying the status='failure' RunRecord, so callers
-    * (Pipeline.run) can LOG the failure before rethrowing — without it
-    * the metadata parquet could not distinguish 'failed' from 'never
-    * ran', defeating the run log's monitoring purpose. */
-  final class StageFailure(val pipeline: String, val stage: String,
-                           val record: RunRecord, cause: Throwable)
-      extends RuntimeException(
-        s"[$pipeline/$stage] failed after ${record.elapsed_ms} ms", cause)
 
   /** The run log's columns: [[RunRecord]]'s encoding, as Spark writes it. */
   private val RunRecordSchema: StructType = Encoders.product[RunRecord].schema

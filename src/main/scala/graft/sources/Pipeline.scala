@@ -1,19 +1,25 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import graft.sources.MetadataLog.RunRecord
 
 /** Minimal pipeline orchestration mirroring the reference's per-source
   * pipeline scripts (reference: src/pipelines/street_manager.py and
   * siblings: fetch -> process -> load with retry + metadata logging).
-  * A pipeline is a named sequence of DataFrame stages; each stage is
-  * retried with backoff (the reference's insert_into_motherduck retry,
-  * data_processor_utils.py:22) and its row count/timing recorded.
+  * A pipeline is a named sequence of DataFrame stages run by one terminal
+  * action; the action is retried with backoff (the reference's
+  * insert_into_motherduck retry, data_processor_utils.py:22) and each
+  * stage's row count recorded.
   */
 object Pipeline {
 
-  case class Stage(name: String, run: DataFrame => DataFrame,
-                   maxRetries: Int = 3, baseDelayMs: Long = 100)
+  case class Stage(name: String, run: DataFrame => DataFrame)
+
+  /** Attempts of the terminal action before [[runObserved]] gives up. */
+  private val MaxAttempts = 3
+
+  /** Backoff before retry n is `BaseDelayMs * 2^(n-1)`. */
+  private val BaseDelayMs = 100L
 
   /** Single-action pipeline: every stage's plan is built lazily with an
     * `observe()` row counter, then ONE terminal `action` executes the whole
@@ -23,22 +29,11 @@ object Pipeline {
     * the level the reference's insert retry operates at. Observations are
     * rebuilt per attempt (an Observation binds to one action).
     *
-    * Because the stages execute FUSED in one job, per-stage retry knobs
-    * don't apply here (use [[run]] for those); when `maxRetries` /
-    * `baseDelayMs` are not given, the max over the stages' own settings
-    * is used so a `Stage(..., maxRetries = 10)` is still honored.
-    * Each record's `elapsed_ms` is the WHOLE pipeline's wall time — the
-    * fused job has no per-stage boundary to time ([[run]] does). */
+    * The stages execute FUSED in one job, so each record's `elapsed_ms` is
+    * the WHOLE pipeline's wall time: there is no per-stage boundary to
+    * time. */
   def runObserved(pipeline: String, input: DataFrame, stages: Seq[Stage],
-                  action: DataFrame => Unit,
-                  maxRetries: Int = -1, baseDelayMs: Long = -1)
-      : Seq[RunRecord] = {
-    val retries =
-      if (maxRetries > 0) maxRetries
-      else stages.map(_.maxRetries).maxOption.getOrElse(3)
-    val delay =
-      if (baseDelayMs > 0) baseDelayMs
-      else stages.map(_.baseDelayMs).maxOption.getOrElse(100L)
+                  action: DataFrame => Unit): Seq[RunRecord] = {
     var attempt = 0
     while (true) {
       attempt += 1
@@ -46,11 +41,11 @@ object Pipeline {
       // observations afterwards must not re-run a committed terminal
       // write (a post-commit InterruptedException would have re-run a
       // non-idempotent append and duplicated rows in the warehouse)
-      val succeeded: Option[(Seq[(String, org.apache.spark.sql.Observation)], Long)] =
+      val succeeded: Option[(Seq[(String, Observation)], Long)] =
         try {
           val t0 = System.currentTimeMillis()
           val (out, observations) =
-            stages.foldLeft((input, Seq.empty[(String, org.apache.spark.sql.Observation)])) {
+            stages.foldLeft((input, Seq.empty[(String, Observation)])) {
               case ((df, acc), stage) =>
                 val (observedDf, obs) = MetadataLog.observed(pipeline, stage.name)(stage.run(df))
                 (observedDf, acc :+ (stage.name -> obs))
@@ -59,10 +54,10 @@ object Pipeline {
           Some((observations, System.currentTimeMillis() - t0))
         } catch {
           case scala.util.control.NonFatal(e) =>
-            if (attempt >= retries)
+            if (attempt >= MaxAttempts)
               throw new RuntimeException(
                 s"[$pipeline] failed after $attempt attempts", e)
-            Thread.sleep(delay * (1L << (attempt - 1)))
+            Thread.sleep(BaseDelayMs * (1L << (attempt - 1)))
             None
         }
       succeeded.foreach { case (observations, elapsed) =>
@@ -72,42 +67,5 @@ object Pipeline {
       }
     }
     sys.error("unreachable")
-  }
-
-  /** Eager per-stage variant (extra count job per stage — debugging only;
-    * see MetadataLog.tracked). */
-  def run(pipeline: String, input: DataFrame, stages: Seq[Stage])
-      : (DataFrame, Seq[RunRecord]) = {
-    val records = Seq.newBuilder[RunRecord]
-    val out = stages.foldLeft(input) { (df, stage) =>
-      var attempt = 0
-      var result: Option[DataFrame] = None
-      var lastErr: Throwable = null
-      while (result.isEmpty && attempt < stage.maxRetries) {
-        try {
-          val (res, rec) = MetadataLog.tracked(pipeline, stage.name)(stage.run(df))
-          records += rec
-          result = Some(res)
-        } catch {
-          case e: MetadataLog.StageFailure =>
-            // LOG the failure attempt: without its record the metadata
-            // parquet shows a failed stage as simply absent, and
-            // monitoring cannot tell "failed" from "never ran"
-            records += e.record
-            lastErr = e
-            attempt += 1
-            if (attempt < stage.maxRetries)
-              Thread.sleep(stage.baseDelayMs * (1L << (attempt - 1)))
-          case scala.util.control.NonFatal(e) =>
-            lastErr = e
-            attempt += 1
-            if (attempt < stage.maxRetries)
-              Thread.sleep(stage.baseDelayMs * (1L << (attempt - 1)))
-        }
-      }
-      result.getOrElse(throw new RuntimeException(
-        s"[$pipeline/${stage.name}] failed after ${stage.maxRetries} attempts", lastErr))
-    }
-    (out, records.result())
   }
 }

@@ -658,7 +658,7 @@ object EventStream {
       // per-batch scope: the prefix sum persists its repartitioned
       // input, and a foreachBatch handler runs for the stream's
       // lifetime — without closing, every micro-batch would pin one
-      // more cached DataFrame (the NearDupFilter lesson)
+      // more cached DataFrame
       graft.PersistScope.within {
         val laid = graft.operators.Stats.withRunningTotal(
             positive, orderCols.map(col), col(tokensCol), "__cum")
@@ -774,39 +774,6 @@ object EventStream {
         batch.select(col(idCol), col(textCol)), idCol, textCol, k),
       k, bands))
 
-  /** Shared survivor computation + emit of the two near-dup variants
-    * (plain store join vs bloom-prefiltered), parameterized by the
-    * store-hit keys: drop store hits and intra-batch dups, emit
-    * survivors, return their signatures for the store commit.
-    *
-    * Both drop reasons come from ONE (band, sig)-partitioned pass over
-    * the banded rows: a window `min(doc)` per bucket (the min doc id of a
-    * bucket wins inside the batch) and a left join to `hitKeys`, which
-    * shares that partitioning. A doc is dropped when any of its buckets
-    * is a store hit or has a smaller doc of this batch; the drop set
-    * only feeds an anti join, so repeated hit keys are harmless. */
-  private def filterAndEmit(batch: DataFrame, idCol: String, banded: DataFrame,
-                            hitKeys: Option[DataFrame],
-                            emit: DataFrame => Unit): DataFrame = {
-    val hubbed = banded.withColumn("__hub", min(col("doc")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")))
-    val dropped = hitKeys.fold(hubbed.where(col("doc") =!= col("__hub"))) { hits =>
-      hubbed.join(hits.withColumn("__hit", lit(true)), Seq("band", "sig"), "left")
-        .where(col("__hit").isNotNull || col("doc") =!= col("__hub"))
-    }.select("doc")
-    // base the survivor set on ALL batch docs, not just docs that
-    // produced signatures: a token-less document has no bands, is
-    // trivially not a near-dup, and must pass through (it previously
-    // vanished from the left_semi emit).
-    // survivors' lineage holds the STORE scan (via hitKeys), and both
-    // the emit here and the caller's store append consume it: cache it
-    // or every trigger pays the O(corpus) store read twice
-    val survivors = graft.PersistScope.cache(
-      batch.select(col(idCol).as("doc")).join(dropped, Seq("doc"), "left_anti"))
-    emit(batch.join(survivors, batch(idCol) === survivors("doc"), "left_semi"))
-    banded.join(survivors, Seq("doc"), "left_semi").select("band", "sig")
-  }
-
   /** Continuous NEAR-dup filtering for an ingestion stream: per
     * micro-batch, compute MinHash LSH band signatures, anti-join against
     * the accumulated signature store, emit only docs no band of which has
@@ -820,6 +787,13 @@ object EventStream {
     * is one deterministic batch-plan, and the store append commits after
     * the filtered output — at-least-once on replay errs toward dropping
     * re-seen docs, never emitting a dup twice.
+    *
+    * Both drop reasons come from ONE (band, sig)-partitioned pass over
+    * the banded rows: a window `min(doc)` per bucket (the min doc id of a
+    * bucket wins inside the batch) and a left join to the store, which
+    * shares that partitioning. A doc is dropped when any of its buckets
+    * is a store hit or has a smaller doc of this batch; the drop set
+    * only feeds an anti join, so repeated store keys are harmless.
     *
     * The micro-batch is cached once per trigger: the banding, the survivor
     * set and the emit all read it, and its lineage is the upstream gates
@@ -839,79 +813,26 @@ object EventStream {
         // No distinct: the store holds each key once except after a
         // replay, and a repeated key only repeats a drop — a distinct
         // would cost one more shuffle of the store per trigger
-        val hitKeys = readStoreIfExists(spark, storePath, Some(SigStoreSchema))
+        val store = readStoreIfExists(spark, storePath, Some(SigStoreSchema))
+        val hubbed = banded.withColumn("__hub", min(col("doc")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")))
+        val dropped = store.fold(hubbed.where(col("doc") =!= col("__hub"))) { keys =>
+          hubbed.join(keys.withColumn("__hit", lit(true)), Seq("band", "sig"), "left")
+            .where(col("__hit").isNotNull || col("doc") =!= col("__hub"))
+        }.select("doc")
+        // base the survivor set on ALL batch docs, not just docs that
+        // produced signatures: a token-less document has no bands, is
+        // trivially not a near-dup, and must pass through. survivors'
+        // lineage holds the STORE scan, and both the emit and the store
+        // append consume it: cache it or every trigger pays the
+        // O(corpus) store read twice
+        val survivors = graft.PersistScope.cache(
+          docs.select(col(idCol).as("doc")).join(dropped, Seq("doc"), "left_anti"))
+        emit(docs.join(survivors, docs(idCol) === survivors("doc"), "left_semi"))
         // commit survivors' signatures AFTER the emit so replays re-filter
-        filterAndEmit(docs, idCol, banded, hitKeys, emit)
+        banded.join(survivors, Seq("doc"), "left_semi").select("band", "sig")
           .write.mode("append").parquet(storePath)
       }
-  }
-
-  /** [[nearDupFilterBatch]] with a driver-held Bloom sidecar over the
-    * store's signatures: only bloom-POSITIVE bands consult the parquet
-    * store, so the per-batch store join shrinks from O(corpus) to
-    * O(possible hits). False positives just cause a store lookup; false
-    * negatives are impossible, so results are identical to the plain
-    * variant. The bloom rebuilds from the store on (re)start — restart
-    * safety comes from the store, the bloom is pure acceleration. */
-  class NearDupFilter(storePath: String, idCol: String, textCol: String,
-                      k: Int = 16, bands: Int = 4,
-                      expectedSigs: Long = 1000000L, fpp: Double = 0.01,
-                      emit: DataFrame => Unit)
-      extends ((DataFrame, Long) => Unit) with Serializable {
-    @transient private var bloom: org.apache.spark.util.sketch.BloomFilter = _
-
-    override def apply(batch: DataFrame, batchId: Long): Unit = {
-      val spark = batch.sparkSession
-      var b: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter] = null
-      try graft.PersistScope.within {
-        // cached once per trigger, see nearDupFilterBatch
-        val docs = graft.PersistScope.cache(batch)
-        val banded = bandSignatures(docs, idCol, textCol, k, bands)
-        val store = readStoreIfExists(spark, storePath, Some(SigStoreSchema))
-        if (bloom == null) {
-          bloom = store match {
-            // stat.bloomFilter over ZERO rows yields a null sketch — a
-            // store dir can exist with no rows (first run saw only
-            // token-less docs), and a null here would NPE every batch
-            // after a restart
-            case Some(s) if !s.isEmpty =>
-              s.stat.bloomFilter("sig", expectedSigs, fpp)
-            case _ => org.apache.spark.util.sketch.BloomFilter
-              .create(expectedSigs, fpp)
-          }
-        }
-        b = spark.sparkContext.broadcast(bloom)
-        // only bands the bloom cannot rule out consult the store; the
-        // probe is a codegen'd native expression (plans.BloomProbe), so
-        // the gate stage stays inside whole-stage codegen
-        val hitKeys = store.map(s =>
-          banded.where(graft.plans.BloomProbe.mightContain(col("sig"), b))
-            .select("band", "sig")
-            .join(s.select("band", "sig"), Seq("band", "sig"), "left_semi"))
-        // newSigs' lineage re-reads the store + re-runs the survivor
-        // joins: cache it, or the bloom merge and the store write each
-        // pay a full store scan per trigger
-        val newSigs = graft.PersistScope.cache(
-          filterAndEmit(docs, idCol, banded, hitKeys, emit))
-        // bloom merge BEFORE the store write: extra bloom entries are
-        // only false positives (a store lookup), but the reverse order
-        // can lose entries — a failure between write and merge followed
-        // by an in-JVM replay finds its own sigs already stored, skips
-        // the merge, and a later near-dup passes the bloom gate and is
-        // EMITTED. stat.bloomFilter over ZERO rows yields a null sketch
-        // (NPE on merge) — a batch can legitimately contribute no
-        // signatures (all dups, or all token-less docs), so skip then
-        if (!newSigs.isEmpty)
-          bloom.mergeInPlace(
-            newSigs.stat.bloomFilter("sig", expectedSigs, fpp))
-        newSigs.write.mode("append").parquet(storePath)
-      } finally {
-        // a fresh broadcast per micro-batch: destroy it or thousands of
-        // batches pin gigabytes of dead broadcast blocks
-        if (b != null) b.destroy()
-      }
-    }
   }
 
   /** Streaming SEMANTIC near-dup gate — the embedding-space twin of
@@ -1034,8 +955,7 @@ object EventStream {
     * folds every per-trigger `batch_id=K` directory into ONE new
     * batch-id partition, resetting the store's small-file count and
     * directory-listing growth (it otherwise accretes one batch dir per
-    * trigger FOREVER — the lexical gate got its bloom-rebuild pass in
-    * R10; this is the IVF cell store's equivalent). Gate decisions are
+    * trigger FOREVER). Gate decisions are
     * preserved EXACTLY: the gate consumes the store only through
     * cell-restricted cosine hit sets (semi/anti joins), which are
     * invariant under row relocation and FULL-row deduplication —

@@ -63,9 +63,9 @@ class DedupSpec extends SparkSpec {
 
   test("bucket stars carry the same connected components as candidate pairs") {
     val stars = Dedup.minhashBucketStars(docs, "doc_id", "text", 16, 4)
-    val viaStars = DupClusters.clusters(stars)
+    val viaStars = DupClusters.clustersStar(stars)
       .as[(Long, Long)].collect().toMap
-    val viaPairs = DupClusters.clusters(
+    val viaPairs = DupClusters.clustersStar(
       Dedup.minhashCandidatePairs(docs, "doc_id", "text", 16, 4))
       .as[(Long, Long)].collect().toMap
     assert(viaStars === viaPairs)

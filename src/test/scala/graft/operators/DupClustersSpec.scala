@@ -5,18 +5,20 @@ import graft.SparkSpec
 class DupClustersSpec extends SparkSpec {
   import spark.implicits._
 
-  test("connected components via min-label propagation") {
+  test("connected components of a chain and a pair, labelled by their min doc") {
     // components: {1,2,3,4} (chain), {10,11}, singleton edges only
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("doc_a", "doc_b")
-    val out = DupClusters.clusters(pairs).as[(Long, Long)].collect().toMap
+    val out = DupClusters.clustersStar(pairs).as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("long chain converges within diameter rounds") {
     val chain = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("doc_a", "doc_b")
-    val out = DupClusters.clusters(chain).as[(Long, Long)].collect().toMap
+    // 11 rounds = the chain's diameter
+    val out = DupClusters.clustersStar(chain, maxIters = 11)
+      .as[(Long, Long)].collect().toMap
     assert(out.values.toSet === Set(0L))
     assert(out.size === 12)
   }
@@ -42,9 +44,9 @@ class DupClustersSpec extends SparkSpec {
         (27L, 100L),                                                       // bridges chain->triangle
         (200L, 200L),                                                      // self-loop
         (301L, 300L), (303L, 302L), (302L, 301L))).toSeq                   // zigzag chain
-    val out = DupClusters.clusters(edges.toDF("doc_a", "doc_b"))
+    val out = DupClusters.clustersStar(edges.toDF("doc_a", "doc_b"))
       .as[(Long, Long)].collect().toMap
-    // self-loops union nothing but still register the node (as clusters does)
+    // self-loops union nothing but still register the node
     val brute = bruteComponents(edges)
     assert(out === brute)
   }
@@ -111,19 +113,11 @@ class DupClustersSpec extends SparkSpec {
     assert(ok.values.toSet === Set(0L) && ok.size === 60)
   }
 
-  test("clustersStar and clusters agree") {
-    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (7L, 7L))
-      .toDF("doc_a", "doc_b")
-    val a = DupClusters.clusters(pairs).as[(Long, Long)].collect().toMap
-    val b = DupClusters.clustersStar(pairs).as[(Long, Long)].collect().toMap
-    assert(a === b)
-  }
-
   test("durable=true reliable checkpointing gives identical clusters") {
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val durable = DupClusters.clusters(pairs, durable = true)
+    val durable = DupClusters.clustersStar(pairs, durable = true)
       .as[(Long, Long)].collect().toMap
     assert(durable === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // reliable checkpoint files actually landed in the checkpoint dir

@@ -60,27 +60,6 @@ class GeoPointsSpec extends SparkSpec {
     }
   }
 
-  test("area and length of one geometry compile in one projection") {
-    // Over a non-nullable child both generated bodies share one Java
-    // scope, so a fixed local name declared by each fails to compile;
-    // with fallback off that is an error, not a silent interpreted run.
-    val fallback = "spark.sql.codegen.fallback"
-    spark.conf.set(fallback, "false")
-    try {
-      val geom = array(
-        struct(lit(0.0).as("x"), lit(0.0).as("y")),
-        struct(col("id").cast("double").as("x"), lit(0.0).as("y")),
-        struct(lit(0.0).as("x"), (col("id") * 2 + 1).cast("double").as("y")))
-      // the HOF specs are CodegenFallback, which would take the whole
-      // projection out of whole-stage codegen: select them apart
-      val native = spark.range(4)
-        .select(Geo.stArea(geom), Geo.stLength(geom)).collect().toSeq
-      val hof = spark.range(4)
-        .select(HofReference.stAreaHof(geom), HofReference.stLengthHof(geom)).collect().toSeq
-      assert(native.length == 4 && native == hof)
-    } finally spark.conf.unset(fallback)
-  }
-
   test("null element propagates null like the HOF folds") {
     val df = spark.sql(
       "SELECT array(struct(1.0d AS x, 2.0d AS y), " +

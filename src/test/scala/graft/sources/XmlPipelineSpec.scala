@@ -40,20 +40,33 @@ class XmlPipelineSpec extends SparkSpec {
 
   test("Pipeline retries flaky stages and records metadata") {
     var calls = 0
-    val (out, recs) = Pipeline.run("naptan", Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      Seq(
-        Pipeline.Stage("clean", df => ColumnNormalizer.snakeCase(df)),
-        Pipeline.Stage("flaky", df => {
-          calls += 1
-          if (calls < 2) throw new RuntimeException("transient")
-          df.withColumn("ok", lit(true))
-        }, maxRetries = 3, baseDelayMs = 1)))
-    assert(out.columns.contains("ok"))
-    // the failed attempt is LOGGED (status=failure) before the retry —
-    // monitoring must be able to tell "failed then recovered" from
-    // "succeeded first try"
-    assert(recs.map(r => (r.stage, r.status)) ===
-      Seq(("clean", "success"), ("flaky", "failure"), ("flaky", "success")))
+    val stages = Seq(
+      Pipeline.Stage("clean", df => ColumnNormalizer.snakeCase(df)),
+      Pipeline.Stage("flaky", df => df.withColumn("ok", lit(true))))
+    // the first attempt runs the whole chain, then fails: a transient
+    // after the plan executed, as a failed commit would be
+    val recs = Pipeline.runObserved("naptan", Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      stages, out => {
+        calls += 1
+        assert(out.columns.contains("ok"))
+        if (calls == 1) { out.collect(); throw new RuntimeException("transient") }
+        out.write.format("noop").mode("overwrite").save()
+      })
     assert(calls === 2)
+    // one record per stage, from the successful attempt only
+    assert(recs.map(r => (r.pipeline, r.stage, r.status, r.n_rows)) ===
+      Seq(("naptan", "clean", "success", 2L), ("naptan", "flaky", "success", 2L)))
+  }
+
+  test("Pipeline gives up after 3 attempts and keeps the cause") {
+    var calls = 0
+    val cause = new IllegalStateException("warehouse down")
+    val e = intercept[RuntimeException] {
+      Pipeline.runObserved("p", Seq(1L, 2L).toDF("id"),
+        Seq(Pipeline.Stage("load", identity)), _ => { calls += 1; throw cause })
+    }
+    assert(e.getMessage === "[p] failed after 3 attempts")
+    assert(e.getCause eq cause)
+    assert(calls === 3)
   }
 }

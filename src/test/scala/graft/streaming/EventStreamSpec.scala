@@ -334,25 +334,6 @@ class EventStreamSpec extends SparkSpec {
     assert(survivors === Set(1L, 3L, 5L))
   }
 
-  test("bloom-sidecar NearDupFilter matches the plain variant across restarts") {
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("bloom-store").toString + "/sigs"
-    var emitted = Seq.empty[Long]
-    val emit: org.apache.spark.sql.DataFrame => Unit =
-      df => emitted = emitted ++ df.select("doc_id").as[Long].collect()
-    val f1 = new EventStream.NearDupFilter(store, "doc_id", "text",
-      expectedSigs = 1000L, emit = emit)
-    f1(Seq(1L -> "alpha beta gamma delta", 2L -> "alpha beta gamma delta",
-      3L -> "totally different words here").toDF("doc_id", "text"), 0L)
-    assert(emitted.toSet === Set(1L, 3L))
-    // "restart": a NEW instance must rebuild its bloom from the store
-    val f2 = new EventStream.NearDupFilter(store, "doc_id", "text",
-      expectedSigs = 1000L, emit = emit)
-    f2(Seq(4L -> "alpha beta gamma delta", 5L -> "yet another fresh document")
-      .toDF("doc_id", "text"), 1L)
-    assert(emitted.toSet === Set(1L, 3L, 5L))
-  }
-
   test("near-dup filter replay of the same batch emits nothing twice") {
     // at-least-once contract: signatures commit AFTER the emit, so a
     // replayed batch finds its own signatures in the store and drops
@@ -462,13 +443,6 @@ class EventStreamSpec extends SparkSpec {
       .toDF("doc_id", "text"), 0L)
     assert(emitted.toSet === Set(1L, 2L, 3L),
       s"token-less docs were dropped: emitted only $emitted")
-    // and the bloom-sidecar variant agrees
-    val store2 = java.nio.file.Files.createTempDirectory("notok2").toString + "/sigs"
-    var emitted2 = Seq.empty[Long]
-    val f2 = new EventStream.NearDupFilter(store2, "doc_id", "text",
-      emit = df => emitted2 = emitted2 ++ df.select("doc_id").as[Long].collect())
-    f2(Seq(7L -> "").toDF("doc_id", "text"), 0L)
-    assert(emitted2 === Seq(7L))
   }
 
   test("RocksDB state store backs stateful streaming with identical results") {
