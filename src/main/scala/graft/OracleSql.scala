@@ -516,9 +516,6 @@ object OracleSql {
        |  FROM (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) - 1 AS dim FROM $aPrev)
        |  GROUP BY cid, dim) GROUP BY cid)""".stripMargin
 
-  /** Min reachable label via recursive transitive closure — the fixpoint
-    * both distributed CC algorithms (contraction + large/small-star)
-    * converge to. */
   /** Shared PQ pipeline (q_ann_pq / q_pq_verify): codebook → positional
     * argmin encode → ADC sums, ending at `ranked(vec_id, adc_d2)` with
     * the query vector excluded. */
@@ -599,6 +596,9 @@ object OracleSql {
        |LIMIT 10""".stripMargin
   }
 
+  /** Min reachable label via recursive transitive closure — the fixpoint
+    * both distributed connected-components paths (q_dup_clusters,
+    * q_dup_clusters_star) converge to. */
   private def dupClustersSql: String =
     s"""$dupClusterCtes
        |SELECT n AS doc, MIN(m) AS cluster FROM reach GROUP BY n""".stripMargin

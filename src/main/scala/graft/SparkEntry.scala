@@ -109,7 +109,7 @@ object SparkEntry {
     val scored = graft.PersistScope.cache(perCustScores(s, d)
       .select(col("o_custkey"), col("n_orders"),
         (col("total10").cast("double") / 10).as("total_impact_level")))
-    ImpactScore.withPercentRank100(scored, "total_impact_level", "impact_index_score")
+    Stats.withPercentRank100(scored, "total_impact_level", "impact_index_score")
       .withColumn("impact_category",
         ImpactScore.severityBucket(col("impact_index_score")))
       .select("o_custkey", "n_orders", "total_impact_level",
@@ -127,7 +127,7 @@ object SparkEntry {
         sum(col("total10")).as("t10"),
         max(col("total10")).as("mx10"),
         min(col("total10")).as("mn10")))
-    ImpactScore.withPercentRank100(byAuth, "t10", "authority_score")
+    Stats.withPercentRank100(byAuth, "t10", "authority_score")
       .select(
         col("authority"), col("n_customers"),
         (col("t10").cast("double") / 10).as("total_impact_level"),
@@ -623,11 +623,6 @@ object SparkEntry {
       topK = 10, nProbes = 4, excludeId = Some(0L))
   }
 
-  /** [[qAnnIvf]] routed through the materialized cell-partitioned index
-    * — the 100 TB shape: train + [[IvfIndex.buildIndex]] once per
-    * dataset (cached across calls), then every query partition-prunes to
-    * its probed cells instead of re-assigning the full table. Same
-    * centroids, same probes, same unrolled-Lloyd oracle as q_ann_ivf. */
   /** Session-temp materialized-index dir, deleted at JVM exit — repeated
     * Bench/Verify runs would otherwise accumulate full embedding-table
     * copies in /tmp until the disk fills. */
@@ -645,6 +640,11 @@ object SparkEntry {
   }
 
   private val ivfIndexCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** [[qAnnIvf]] routed through the materialized cell-partitioned index
+    * — the 100 TB shape: train + [[IvfIndex.buildIndex]] once per
+    * dataset (cached across calls), then every query partition-prunes to
+    * its probed cells instead of re-assigning the full table. Same
+    * centroids, same probes, same unrolled-Lloyd oracle as q_ann_ivf. */
   private def qAnnIvfIndexed(s: SparkSession, d: String): DataFrame = {
     val root = ivfIndexCache.getOrElseUpdate(d, {
       val dir = tempIndexDir("graft-ivf-index")
@@ -814,7 +814,8 @@ object SparkEntry {
 
   /** Token-budget selection: best-first (n_chars DESC, doc_id) prefix of
     * the corpus whose inclusive cumulative token count fits 15000 tokens —
-    * distributed prefix sum, no global window (Stats.withRunningTotal). */
+    * distributed prefix sum, no global window (Stats.withRunningTotal
+    * with no group columns). */
   private def qTokenBudget(s: SparkSession, d: String): DataFrame =
     Curate.tokenBudgetSelect(
       Tables.documents(s, d)

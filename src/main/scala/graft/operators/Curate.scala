@@ -121,8 +121,9 @@ object Curate {
     * training mix is cut from a scored corpus.
     *
     * The cumulative sum is [[Stats.withRunningTotal]]'s distributed
-    * prefix sum (range shuffle + bounded offset collect), never a global
-    * single-task window; the budget cut is then a per-row filter.
+    * prefix sum with no group columns (range shuffle + bounded offset
+    * collect), never a global single-task window; the budget cut is then
+    * a per-row filter.
     *
     * `orderCols` must be a TOTAL order (append the doc id as the final
     * tiebreak, as q_token_budget and its oracle do): with ties at the
@@ -131,7 +132,7 @@ object Curate {
   def tokenBudgetSelect(df: DataFrame, orderCols: Seq[org.apache.spark.sql.Column],
                         tokenCount: org.apache.spark.sql.Column,
                         budget: Long): DataFrame =
-    Stats.withRunningTotal(df, orderCols, tokenCount, "cum_tokens")
+    Stats.withRunningTotal(df, Nil, orderCols, tokenCount, "cum_tokens")
       .where(col("cum_tokens") <= budget)
 
   /** The distinct (df-capped) benchmark n-gram universe, collected — eval
@@ -220,7 +221,7 @@ object Curate {
     * driver-side budget constant.
     *
     * Scale shape: the per-source running total is
-    * [[Stats.withRunningTotalBy]]'s grouped distributed prefix sum —
+    * [[Stats.withRunningTotal]] grouped by the source —
     * a source holding 30% of 100 TB spans many range partitions instead
     * of one window task — and the corpus total is a 1-row aggregate
     * cross-joined (broadcast) into the filter. */
@@ -233,7 +234,7 @@ object Curate {
     // the raw text
     val withN = PersistScope.cache(df.withColumn("n_tokens", tokenCount.cast("long")))
     val total = withN.agg(sum(col("n_tokens")).cast("decimal(38,0)").as("__total"))
-    Stats.withRunningTotalBy(withN, Seq(col(groupCol)), orderCols,
+    Stats.withRunningTotal(withN, Seq(col(groupCol)), orderCols,
         col("n_tokens"), "cum_tokens")
       .crossJoin(broadcast(total))
       .where(col("cum_tokens").cast("decimal(38,0)") * lit(1000000L)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's flagship analysis: additive CASE-based impact scoring,
@@ -34,16 +34,6 @@ object ImpactScore {
     bands.foldLeft(when(lit(false), lit(0))) { case (acc, (hi, w)) =>
       acc.when(c <= lit(hi), lit(w))
     }.otherwise(lit(above))
-
-  /** Adds `outCol` = percent_rank()*100 over `scoreCol`. Cell-identical to
-    * the window formulation FOR NON-NULL SCORES, but with no
-    * single-partition WindowExec — delegates to
-    * [[Stats.withPercentRank100]]. NULL-score rows are DROPPED (the
-    * window form ranks them first): coalesce upstream if they must be
-    * kept — caseWeight/bandWeight outputs are never null, so the built-in
-    * scoring paths are unaffected. */
-  def withPercentRank100(df: DataFrame, scoreCol: String, outCol: String): DataFrame =
-    Stats.withPercentRank100(df, scoreCol, outCol)
 
   /** Reference's severity buckets (lines 143-150): thresholds descending. */
   def severityBucket(score100: Column): Column =

@@ -75,7 +75,7 @@ object Sessionize {
           nulU.as("u"), nulSid.as("sid")))).as("__r"))
       .select(col("__r.t").as("t"), col("__r.tag").as("tag"),
         col("__r.w").as("w"), col("__r.u").as("u"), col("__r.sid").as("sid"))
-    Stats.withRunningTotal(sweep, Seq(col("t"), col("tag")), col("w"), "__n")
+    Stats.withRunningTotal(sweep, Nil, Seq(col("t"), col("tag")), col("w"), "__n")
       .where(col("tag") === 1)
       .select(col("u").as(userCol), col("sid").as(sidCol),
         col("t").as("start_sec"), col("__n").as("n_concurrent"))

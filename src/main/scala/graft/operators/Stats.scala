@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Order statistics + skew-safe aggregation.
   *
@@ -120,23 +123,11 @@ object Stats {
   }
 
   /** Exact count of rows strictly below each distinct `scoreCol` value,
-    * with NO single-partition window: the distinct-score table is
-    * range-partitioned (Spark's RangePartitioner — sampled boundaries, so
-    * the split stays balanced under ANY score distribution, unlike
-    * equi-width histogram buckets which collapse under skew), each range
-    * partition learns its global offset from one bounded collect of
-    * per-partition totals, and the only windows are partitioned by range
-    * id. Partition boundaries only balance the work — ANY monotonic split
-    * yields the same counts, because the offsets absorb whatever lands in
-    * each partition.
+    * with NO single-partition window.
     *
     * This is the scale-safe replacement for `rank()/percent_rank() OVER
     * (ORDER BY score)` with no PARTITION BY, which moves the entire
-    * dataset into one task. Cost shape: one groupBy(score) shuffle, one
-    * range shuffle of the (already aggregated) distinct-score table, ONE
-    * driver collect of `numParts` totals (a bounded constant, like
-    * broadcasting k-means centroids), range-partitioned windows, and an
-    * equi-join back to the caller.
+    * dataset into one task.
     *
     * Returns (DataFrame(scoreCol, __cnt_less), totalRowCount).
     *
@@ -156,75 +147,43 @@ object Stats {
     * to 1. Post-aggregation score tables are bounded by the score
     * domain, not the row count (an integer impact score has thousands of
     * distinct values at any SF), so the fast path is the one that fires
-    * at the 100 TB design point too; a genuinely high-cardinality score
+    * at the 100 TB design point too. A genuinely high-cardinality score
     * column (e.g. ranking on a float measure) overflows the probe and
-    * falls back to the proven range machinery unchanged.
+    * falls back to [[withRunningTotal]] over the (score, count)
+    * histogram: count-less = inclusive running count − the score's own
+    * count.
     */
   def cumLess(df: DataFrame, scoreCol: String,
-              numParts: Int = 0,
               maxDriverHist: Int = 1 << 18): (DataFrame, Long) = {
     val spark = df.sparkSession
-    import spark.implicits._
+    val grouped = df.where(col(scoreCol).isNotNull)
+      .groupBy(col(scoreCol)).agg(count(lit(1)).as("__cnt"))
     if (maxDriverHist > 0) {
-      val grouped0 = df.where(col(scoreCol).isNotNull)
-        .groupBy(col(scoreCol)).agg(count(lit(1)).as("__cnt"))
       // sorted limit-probe: TakeOrderedAndProject ships only the first
       // maxDriverHist + 1 (score, cnt) pairs to the driver — bounded
       // state (~16 B/row), like broadcasting k-means centroids
-      val probe = grouped0.sort(col(scoreCol).asc)
+      val probe = grouped.sort(col(scoreCol).asc)
         .limit(math.min(maxDriverHist.toLong + 1, Int.MaxValue.toLong).toInt)
         .collect()
       if (probe.length <= maxDriverHist) {
         var acc = 0L
         val rows = probe.map { r =>
           val c = r.getLong(1); val off = acc; acc += c
-          org.apache.spark.sql.Row(r.get(0), off)
+          Row(r.get(0), off)
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          grouped0.schema.head,
-          org.apache.spark.sql.types.StructField("__cnt_less",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        import scala.jdk.CollectionConverters._
+        val schema = StructType(Seq(grouped.schema.head,
+          StructField("__cnt_less", LongType, nullable = false)))
         return (broadcast(spark.createDataFrame(rows.toSeq.asJava, schema)),
           acc)
       }
-      // else: fall through to the distributed range path (the probe's
+      // else: fall through to the distributed prefix sum (the probe's
       // groupBy shuffle re-runs there; callers cache their input, so the
       // recompute reads the cache, not the raw pipeline)
     }
-    // persisted at the range shuffle: the totals job and the window job
-    // must see the SAME partition ids (they do regardless — RangePartitioner
-    // boundary sampling is seeded deterministically — but the cache also
-    // saves recomputing the groupBy).
-    // numParts <= 0 leaves the count to AQE: without an explicit N the
-    // range shuffle is coalescable, so a post-aggregation score table of
-    // a few thousand rows runs its offset window in 1-2 tasks instead of
-    // numShufflePartitions near-empty ones (the offsets absorb ANY
-    // monotonic split, so the partition count is pure cost tuning).
-    // Coalescing merges ADJACENT range partitions — ids stay contiguous
-    // and monotonic, which is all the prefix-sum needs.
-    val grouped = df.where(col(scoreCol).isNotNull)
-      .groupBy(col(scoreCol)).agg(count(lit(1)).as("__cnt"))
-    val ranged =
-      if (numParts > 0) grouped.repartitionByRange(numParts, col(scoreCol))
-      else grouped.repartitionByRange(col(scoreCol))
-    val parted =
-      graft.PersistScope.cache(ranged.withColumn("__p", spark_partition_id()))
-    val totals = parted.groupBy("__p").agg(sum("__cnt").as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    if (totals.isEmpty)
-      return (parted.select(col(scoreCol), lit(0L).as("__cnt_less")), 0L)
-    val totalN = totals.iterator.map(_._2).sum
-    // exclusive prefix sums: rows in strictly-lower range partitions
-    val offsets = totals.map(_._1).zip(totals.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = offsets.toSeq.toDF("__p", "__off")
-    val w = Window.partitionBy(col("__p")).orderBy(col(scoreCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cl = parted
-      .withColumn("__within", coalesce(sum(col("__cnt")).over(w), lit(0L)))
-      .join(broadcast(offDf), Seq("__p"))
-      .select(col(scoreCol), (col("__off") + col("__within")).as("__cnt_less"))
-    (cl, totalN)
+    val (cum, n) = runningTotal(grouped, Nil, Seq(col(scoreCol)),
+      col("__cnt"), "__cnt_less")
+    (cum.select(col(scoreCol), (col("__cnt_less") - col("__cnt")).as("__cnt_less")),
+      n)
   }
 
   /** `percent_rank() OVER (ORDER BY scoreCol) * 100` as a join-back —
@@ -266,126 +225,98 @@ object Stats {
       .drop("__cnt_less", "__rn")
   }
 
-  /** Global INCLUSIVE running total of `weight` in `orderCols` order,
-    * with no single-partition window: the rows are range-partitioned on
-    * the order columns (RangePartitioner — sampled boundaries, balanced
-    * under any distribution), each range partition learns the total
-    * weight of all strictly-earlier partitions from one bounded collect,
-    * and the running sum inside each partition is an ordinary partitioned
-    * window. The classic distributed prefix-sum, vs `SUM(w) OVER (ORDER
-    * BY ...)`'s whole-table single task. It costs one range shuffle, one
-    * `numParts`-row collect, and a SECOND full shuffle: the window's
-    * `partitionBy(__p)` asks for hash clustering on `__p`, and the
+  /** INCLUSIVE running total of `weight` in `orderCols` order within
+    * each group of `groupCols` (`Nil`: one global total) — `SUM(w) OVER
+    * (PARTITION BY g ORDER BY ...)` with no single-task window, even
+    * when there is no group or one group holds most of the data. The
+    * classic distributed prefix sum, in four steps:
+    *  1. range-partition the rows on `groupCols ++ orderCols` into
+    *     `spark.sql.shuffle.partitions` partitions (RangePartitioner —
+    *     sampled boundaries, balanced under any distribution, so a group
+    *     holding 30% of a 100 TB corpus spans many contiguous partitions)
+    *     and persist them: the totals job and the window both scan it;
+    *  2. collect the weight total of every (partition, group) slice in
+    *     one job. A range partition holds a contiguous run of groups, so
+    *     that is at most #groups + #partitions rows of driver state —
+    *     aggregated, never the raw rows, and the same rows the broadcast
+    *     in step 4 holds on the driver anyway;
+    *  3. on the driver, each slice's exclusive offset: its group's
+    *     weight in strictly-earlier partitions;
+    *  4. add the offsets to a (partition, group)-local ROWS running
+    *     window through a broadcast LocalRelation, joined NULL-SAFELY on
+    *     the group columns: an equi-join would drop every null-group
+    *     row, while the window form keeps them as their own group.
+    *
+    * Besides the range shuffle, it costs a SECOND full shuffle: the
+    * window's `partitionBy(__p, ...)` asks for hash clustering, and the
     * planner cannot see that the range partitioning already clusters
     * the rows by their partition id, so the whole relation is
-    * re-shuffled by `hashpartitioning(__p)` before the window.
+    * re-shuffled by `hashpartitioning(__p, ...)` before the window.
+    * Callers streaming 100 TB through this should pass a projection of
+    * only the columns they need downstream.
     *
-    * The input is persisted (the totals job and the window job both scan
-    * it); callers streaming 100 TB through this should pass a projection
-    * of only the columns they need downstream.
+    * `orderCols` must be a TOTAL order within a group (append a unique
+    * id as the final tiebreak, as every caller in this repo does): the
+    * within-slice frame is ROWS-based, so rows TIED on the full ordering
+    * receive arbitrary, run-varying prefixes (the SQL default RANGE
+    * frame would instead give all ties the tie-group-inclusive total —
+    * neither is meaningful without a total order).
     *
-    * `orderCols` must be a TOTAL order (append a unique id as the final
-    * tiebreak, as every caller in this repo does): the within-partition
-    * frame is ROWS-based, so rows TIED on the full ordering receive
-    * arbitrary, run-varying prefixes (the SQL default RANGE frame would
-    * instead give all ties the tie-group-inclusive total — neither is
-    * meaningful without a total order). Same contract for
-    * [[withRunningTotalBy]].
+    * `weight` must be NON-NULL and integral; sums are exact longs. A
+    * slice whose prefix weights are all NULL contributes 0 where the
+    * window form `SUM(w) OVER (...)` (and DuckDB) would yield NULL —
+    * equivalence holds only under non-null weights, which every caller
+    * in this repo satisfies (counts and token lengths). Coalesce a
+    * nullable weight upstream if NULL prefixes must stay NULL.
     *
-    * `weight` must be NON-NULL (integral): the per-partition offset
-    * coalesces an all-NULL-weight prefix to 0 where the single-window
-    * SQL form `SUM(w) OVER (ORDER BY ...)` (and DuckDB) would yield
-    * NULL — equivalence to the window form holds only under non-null
-    * weights, which every caller in this repo satisfies (counts and
-    * token lengths). Coalesce a nullable weight upstream if NULL
-    * prefixes must stay NULL. */
-  def withRunningTotal(df: DataFrame, orderCols: Seq[Column], weight: Column,
-                       outCol: String, numParts: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numParts > 0) numParts else spark.sessionState.conf.numShufflePartitions
-    val parted = graft.PersistScope.cache(df
-      .repartitionByRange(parts, orderCols: _*)
-      .withColumn("__p", spark_partition_id())
-      .withColumn("__w", weight.cast("long"))) // integral weights: exact, order-free
-    val totals = parted.groupBy("__p").agg(coalesce(sum("__w"), lit(0L)).as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    if (totals.isEmpty)
-      return parted.withColumn(outCol, col("__w")).drop("__p", "__w")
-    // exclusive prefix sums: weight in strictly-earlier range partitions
-    val offsets = totals.map(_._1).zip(totals.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = offsets.toSeq.toDF("__p", "__off")
-    val w = Window.partitionBy(col("__p")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted
-      // coalesce like cumLess: a partition slice whose prefix weights are
-      // all NULL must contribute 0, not null the carried offset — the
-      // single-window form this replaces sums across the boundary and
-      // never sees the all-null prefix (review-found)
-      .withColumn("__within", coalesce(sum(col("__w")).over(w), lit(0L)))
-      .join(broadcast(offDf), Seq("__p"))
-      .withColumn(outCol, col("__off") + col("__within"))
-      .drop("__p", "__w", "__within", "__off")
-  }
+    * Empty input returns the input with `outCol` added. */
+  def withRunningTotal(df: DataFrame, groupCols: Seq[Column],
+                       orderCols: Seq[Column], weight: Column,
+                       outCol: String): DataFrame =
+    runningTotal(df, groupCols, orderCols, weight, outCol)._1
 
-  /** Per-GROUP inclusive running total of `weight` in `orderCols` order,
-    * with no per-group single-task window even when one group dominates
-    * the data: rows are range-partitioned on (group, order) — a group
-    * occupying 30% of a 100 TB corpus spans many contiguous range
-    * partitions instead of landing in one window task. Each range
-    * partition's slice of a group learns the group's weight in
-    * strictly-earlier partitions from a window over the per-(partition,
-    * group) totals (≤ numParts rows per group — aggregated data, never
-    * the raw rows), then adds an ordinary (partition, group)-local
-    * running sum. Unlike [[withRunningTotal]] there is no EXPLICIT
-    * driver collect — the offset table stays a DataFrame — though the
-    * broadcast join-back does materialize it (~numParts + spanning
-    * groups rows; with extreme group cardinality drop the broadcast
-    * hint or raise numParts).
-    *
-    * This is `SUM(w) OVER (PARTITION BY g ORDER BY ...)` made safe for
-    * skewed/low-cardinality `g`. The input is persisted (totals pass +
-    * window pass); pass a pruned projection at 100 TB. */
-  def withRunningTotalBy(df: DataFrame, groupCols: Seq[Column],
-                         orderCols: Seq[Column], weight: Column,
-                         outCol: String, numParts: Int = 0): DataFrame = {
+  /** [[withRunningTotal]] plus the sum of every weight, which the
+    * collected slice totals give for free. */
+  private def runningTotal(df: DataFrame, groupCols: Seq[Column],
+                           orderCols: Seq[Column], weight: Column,
+                           outCol: String): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val parts =
-      if (numParts > 0) numParts else spark.sessionState.conf.numShufflePartitions
     val parted = graft.PersistScope.cache(df
-      .repartitionByRange(parts, (groupCols ++ orderCols): _*)
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+        (groupCols ++ orderCols): _*)
       .withColumn("__p", spark_partition_id())
       .withColumn("__w", weight.cast("long"))) // integral weights: exact, order-free
-    val groupNames = groupCols.indices.map(i => s"__g$i")
-    val gCols = groupCols.zip(groupNames).map { case (c, n) => c.as(n) }
-    // per-(partition, group) totals: bounded by rows-per-partition but in
-    // practice ~(numParts + spanning groups) rows — aggregated, cheap
-    val pg = parted.select(col("__p") +: col("__w") +: gCols: _*)
-      .groupBy("__p", groupNames: _*).agg(sum("__w").as("__t"))
-    // exclusive prefix across partitions WITHIN each group: window over
-    // the aggregated totals, partitioned by group (≤ numParts rows each)
-    val wOff = Window.partitionBy(groupNames.map(col): _*).orderBy(col("__p"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = pg.withColumn("__off", coalesce(sum(col("__t")).over(wOff), lit(0L)))
-      .drop("__t")
-    val wIn = Window.partitionBy(col("__p") +: groupNames.map(col): _*)
-      .orderBy(orderCols: _*)
+    val slices = parted.groupBy(col("__p") +: groupCols: _*)
+      .agg(coalesce(sum("__w"), lit(0L)).as("__t"))
+    val totals = slices.collect().sortBy(_.getInt(0))
+    if (totals.isEmpty)
+      return (parted.withColumn(outCol, col("__w")).drop("__p", "__w"), 0L)
+    // exclusive prefix sums: the group's weight in strictly-earlier
+    // partitions (a Row's Seq equality keeps NULL keys one group)
+    val carried = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+    val offsets = totals.map { r =>
+      val g = r.toSeq.slice(1, r.length - 1)
+      val off = carried.getOrElse(g, 0L)
+      carried(g) = off + r.getLong(r.length - 1)
+      Row.fromSeq(r.toSeq.init :+ off)
+    }
+    val keys = groupCols.indices.map(i => s"__g$i")
+    val keyFields = slices.schema.fields.slice(1, 1 + groupCols.size)
+      .zip(keys).map { case (f, k) => f.copy(name = k) }
+    val offDf = spark.createDataFrame(offsets.toSeq.asJava, StructType(
+      StructField("__po", IntegerType, nullable = false) +: keyFields :+
+        StructField("__off", LongType, nullable = false)))
+    val on = groupCols.zip(keys).foldLeft(col("__p") === col("__po")) {
+      case (c, (g, k)) => c && (g <=> col(k))
+    }
+    val w = Window.partitionBy(col("__p") +: groupCols: _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // NULL-SAFE join back: an equi-join on the group columns would
-    // silently DROP every null-group row (null never satisfies EqualTo),
-    // while the window form this replaces keeps them as their own group
-    val offR = off.select(
-      (col("__p").as("__po") +: groupNames.map(n => col(n).as(n + "o"))) :+
-        col("__off"): _*)
-    val joinCond = (col("__p") === col("__po")) +: groupNames.map(n =>
-      col(n) <=> col(n + "o"))
-    parted.select(col("*") +: gCols: _*)
-      .withColumn("__within", coalesce(sum(col("__w")).over(wIn), lit(0L)))
-      .join(broadcast(offR), joinCond.reduce(_ && _))
+    (parted
+      .withColumn("__within", coalesce(sum(col("__w")).over(w), lit(0L)))
+      .join(broadcast(offDf), on)
       .withColumn(outCol, col("__off") + col("__within"))
-      .drop("__p" :: "__po" :: "__w" :: "__within" :: "__off" ::
-        (groupNames.toList ++ groupNames.map(_ + "o")): _*)
+      .drop(Seq("__p", "__po", "__w", "__within", "__off") ++ keys: _*),
+      totals.iterator.map(r => r.getLong(r.length - 1)).sum)
   }
 
   /** Deterministic hash sampling: keep a row iff

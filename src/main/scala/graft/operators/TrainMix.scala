@@ -9,7 +9,7 @@ import graft.plans.Md5Long
   * trainer actually reads. Three primitives, all deterministic (no rand()
   * anywhere — retries, reruns, and the DuckDB oracle agree cell-exactly)
   * and all built on the repo's skew-safe distributed prefix-sum machinery
-  * ([[Stats.withRunningTotal]] / [[Stats.withRunningTotalBy]]) so none of
+  * ([[Stats.withRunningTotal]], global or per group) so none of
   * them degenerates into a single-task global window at corpus scale:
   *
   *  - [[temperatureSample]] — WHAT to sample: per-source keep rates from
@@ -103,13 +103,22 @@ object TrainMix {
     * packing" signal curation reports track, 0 when it fits entirely
     * inside its sequence).
     *
-    * The global token offset is [[Stats.withRunningTotal]]'s distributed
-    * prefix sum (range shuffle + bounded offsets collect) — NOT
+    * The global token offset is [[Stats.withRunningTotal]] with no group
+    * columns (range shuffle + bounded offsets collect) — NOT
     * `SUM() OVER (ORDER BY ...)`, whose single task would hold the whole
     * corpus. Zero-token documents are dropped (they occupy no tokens, so
     * "which sequence" is undefined for them).
     *
     * `tokensCol` must be a non-negative integral column. */
+  def packSequences(df: DataFrame, orderCols: Seq[Column], tokensCol: String,
+                    budget: Long): DataFrame = {
+    packedStarts(df, orderCols, tokensCol, budget)
+      .withColumn("seq_id", expr(s"__start DIV ${budget}L"))
+      .withColumn("seq_off", pmod(col("__start"), lit(budget)))
+      .withColumn("n_splits", expr(s"(__cum - 1) DIV ${budget}L") - col("seq_id"))
+      .drop("__cum", "__start")
+  }
+
   /** The shared packing prelude (zero-token filter, distributed prefix
     * sum, per-doc start offset) — ONE definition so [[packSequences]]
     * and [[packSegments]]' spec-pinned seq_id/seq_off agreement cannot
@@ -118,17 +127,8 @@ object TrainMix {
                            tokensCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     Stats.withRunningTotal(
-        df.where(col(tokensCol) > 0), orderCols, col(tokensCol), "__cum")
+        df.where(col(tokensCol) > 0), Nil, orderCols, col(tokensCol), "__cum")
       .withColumn("__start", col("__cum") - col(tokensCol))
-  }
-
-  def packSequences(df: DataFrame, orderCols: Seq[Column], tokensCol: String,
-                    budget: Long): DataFrame = {
-    packedStarts(df, orderCols, tokensCol, budget)
-      .withColumn("seq_id", expr(s"__start DIV ${budget}L"))
-      .withColumn("seq_off", pmod(col("__start"), lit(budget)))
-      .withColumn("n_splits", expr(s"(__cum - 1) DIV ${budget}L") - col("seq_id"))
-      .drop("__cum", "__start")
   }
 
   /** The materialized form of [[packSequences]]: one row per
@@ -265,8 +265,8 @@ object TrainMix {
     *
     * `partsPerShard` splits a shard across that many writer tasks
     * (contiguous `shard_pos` ranges via range repartition) — at 100 TB
-    * a shard is written in parallel and read as a few ordered files. */
-  /** Size `partsPerShard` so one part fits a writer task: the DEFAULT 1
+    * a shard is written in parallel and read as a few ordered files.
+    * Size `partsPerShard` so one part fits a writer task: the DEFAULT 1
     * funnels each shard through a single sorting/writing task — fine for
     * the spec-scale layouts this default serves, a multi-TB straggler at
     * corpus scale (aim for shards x partsPerShard >= cluster cores and
@@ -293,11 +293,11 @@ object TrainMix {
     * cycle through sources instead of draining one source before the
     * next (the curriculum failure mode source-sequential layouts have).
     *
-    * Both ranks are the skew-safe prefix-sum machines: the per-source
-    * round via [[Stats.withRunningTotalBy]] (a source holding 30% of
-    * the corpus spans many range partitions, not one window task), the
-    * global position via [[Stats.withRunningTotal]] over (round,
-    * source) — never a global `ROW_NUMBER() OVER (ORDER BY ...)`.
+    * The per-source round is [[Stats.withRunningTotal]] grouped by the
+    * source (a source holding 30% of the corpus spans many range
+    * partitions, not one window task); the global position is a closed
+    * form over the per-source sizes — never a global `ROW_NUMBER() OVER
+    * (ORDER BY ...)`.
     *
     * Null sources are dropped (same contract as [[temperatureSample]]).
     * Output adds `round` and the 1-based `global_pos`. */
@@ -305,7 +305,7 @@ object TrainMix {
                          key: Column): DataFrame = {
     val hashed = df.where(col(sourceCol).isNotNull)
       .withColumn("__ord", Md5Long.md5Long(concat(lit("i|"), key.cast("string"))))
-    val rounds = Stats.withRunningTotalBy(hashed, Seq(col(sourceCol)),
+    val rounds = Stats.withRunningTotal(hashed, Seq(col(sourceCol)),
         Seq(col("__ord"), key), lit(1L), "round")
       .drop("__ord")
     // global_pos in CLOSED FORM instead of a second distributed prefix
@@ -342,8 +342,8 @@ object TrainMix {
     * trainer reading shard files in `shard_pos` order sees a fixed
     * pseudo-random document order with no coordination.
     *
-    * `shard_pos` comes from [[Stats.withRunningTotalBy]]'s grouped
-    * distributed prefix sum, NOT `row_number() OVER (PARTITION BY
+    * `shard_pos` comes from [[Stats.withRunningTotal]] grouped by the
+    * shard, NOT `row_number() OVER (PARTITION BY
     * shard)`: with a handful of shards over a 100 TB corpus a
     * per-shard window is a single multi-TB task, while the grouped
     * prefix sum range-partitions on (shard, order-hash) so each shard
@@ -363,7 +363,7 @@ object TrainMix {
           lit(shards.toLong)))
       .withColumn("__ord",
         Md5Long.md5Long(concat(lit("o|"), key.cast("string"))))
-    Stats.withRunningTotalBy(keyed, Seq(col("shard")),
+    Stats.withRunningTotal(keyed, Seq(col("shard")),
         Seq(col("__ord"), key), lit(1L), "shard_pos")
       .drop("__ord")
   }

@@ -108,10 +108,6 @@ object Unigram {
     new UnigramTable(costs, costs.map(_._2).max + scale)
   }
 
-  /** Viterbi-segment one word column against a trained table. */
-  def segmentWord(word: Column, table: UnigramTable): Column =
-    UnigramSegment.segment(word, table)
-
   /** Whole-text encode: pretokenize (the shared GPT-2-shaped split),
     * Viterbi-segment each pretoken, concatenate in document order —
     * lossless (piece concatenation reconstructs the text). */

@@ -193,17 +193,6 @@ object Models {
     Relational.distinctOn(dim, Seq(key),
       dim.columns.filterNot(_ == key).map(col(_).desc_nulls_last).toSeq)
 
-  /** The three dimension enrichments shared by both lists (lines 31-40):
-    * street geometry by USRN, regulator licences by promoter SWA code
-    * (both sides cast to INT exactly like the dbt join), UPRN count by
-    * USRN with COALESCE 0. Dimensions pass through [[uniqueDim]], so
-    * enriching AFTER the per-permit dedup is row-for-row identical to the
-    * dbt join-then-DISTINCT-ON order — and cheaper: the joins see one row
-    * per permit. */
-  /** The geometry + UPRN-count dimension joins shared by the list route
-    * and the fused event route — ONE definition so the dim-key casting
-    * and the zero-fill cannot drift between the two spec-pinned-equal
-    * paths. Adds `geometry` (left) and a coalesced `uprn_count`. */
   /** Broadcast hint gated on the optimizer's size estimate: the dims are
     * broadcast BY CONTRACT (key universe = the national street registry,
     * ~1.6M USRNs, bounded by the political map, not the permit data),
@@ -225,6 +214,10 @@ object Models {
     }
   }
 
+  /** The geometry + UPRN-count dimension joins shared by the list route
+    * and the fused event route — ONE definition so the dim-key casting
+    * and the zero-fill cannot drift between the two spec-pinned-equal
+    * paths. Adds `geometry` (left) and a coalesced `uprn_count`. */
   private def joinGeoAndCounts(df: DataFrame, openUsrns: DataFrame,
                                uprnCounts: DataFrame): DataFrame =
     // both dims broadcast by contract (size-guarded — see
@@ -246,6 +239,13 @@ object Models {
       .withColumn("uprn_count", coalesce(col("__uprn_count"), lit(0L)))
       .drop("__uprn_count")
 
+  /** The three dimension enrichments shared by both lists (lines 31-40):
+    * street geometry by USRN, regulator licences by promoter SWA code
+    * (both sides cast to INT exactly like the dbt join), UPRN count by
+    * USRN with COALESCE 0. Dimensions pass through [[uniqueDim]], so
+    * enriching AFTER the per-permit dedup is row-for-row identical to the
+    * dbt join-then-DISTINCT-ON order — and cheaper: the joins see one row
+    * per permit. */
   private def enrichPermitList(permits: DataFrame, openUsrns: DataFrame,
                                swaCodes: DataFrame,
                                uprnCounts: DataFrame): DataFrame =

@@ -136,9 +136,6 @@ object SqliteFile {
   private val constraintStart =
     Set("PRIMARY", "UNIQUE", "CHECK", "FOREIGN", "CONSTRAINT")
 
-  /** Split the parenthesized column list on top-level commas and take each
-    * entry's first token as the name, the following tokens (up to any
-    * column-constraint keyword) as the declared type. */
   /** Blank `--` and `/* */` comments (sqlite_master stores the CREATE
     * text verbatim, comments included) without touching string literals
     * or quoted identifiers — a comma inside a comment would otherwise
@@ -165,6 +162,9 @@ object SqliteFile {
     out.result()
   }
 
+  /** Split the parenthesized column list on top-level commas and take each
+    * entry's first token as the name, the following tokens (up to any
+    * column-constraint keyword) as the declared type. */
   private[graft] def parseCreate(rawSql: String): (Vector[ColumnDef], Option[Int]) = {
     val sql = stripSqlComments(rawSql)
     val open = sql.indexOf('(')

@@ -95,12 +95,6 @@ class XlsxScanBuilder(full: StructType, paths: Seq[String],
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Equality and IsNotNull on string cells evaluate INSIDE the StAX row
-    * parse — non-matching rows are dropped before any InternalRow is
-    * built (a folder of monthly workbooks filtered to one month never
-    * materializes the others). Everything is reported back as residual
-    * (`pushFilters` return), so Spark re-checks semantics; the pushdown
-    * is a row-materialization saving, the contract stays exact. */
   /** v1 Filter references arrive backtick-quoted when the header name
     * needs it ("Region Name" -> `Region Name`). */
   private def unquote(a: String): String =
@@ -108,6 +102,12 @@ class XlsxScanBuilder(full: StructType, paths: Seq[String],
       a.substring(1, a.length - 1).replace("``", "`")
     else a
 
+  /** Equality and IsNotNull on string cells evaluate INSIDE the StAX row
+    * parse — non-matching rows are dropped before any InternalRow is
+    * built (a folder of monthly workbooks filtered to one month never
+    * materializes the others). Everything is reported back as residual
+    * (`pushFilters` return), so Spark re-checks semantics; the pushdown
+    * is a row-materialization saving, the contract stays exact. */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     pushed = filters.filter {

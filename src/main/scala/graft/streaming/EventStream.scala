@@ -620,8 +620,8 @@ object EventStream {
     * arriving in micro-batches are laid out into the SAME global
     * training sequences the batch operator would assign: each batch
     * runs the distributed within-batch prefix sum
-    * ([[graft.operators.Stats.withRunningTotal]] — never a global
-    * window) shifted by the carried global token offset, so
+    * ([[graft.operators.Stats.withRunningTotal]] with no group columns —
+    * never a global window) shifted by the carried global token offset, so
     * `seq_id`/`seq_off`/`n_splits` continue the stream-long
     * concatenation across batches (spec pins stream == batch on the
     * same corpus).
@@ -661,7 +661,7 @@ object EventStream {
       // more cached DataFrame
       graft.PersistScope.within {
         val laid = graft.operators.Stats.withRunningTotal(
-            positive, orderCols.map(col), col(tokensCol), "__cum")
+            positive, Nil, orderCols.map(col), col(tokensCol), "__cum")
           .withColumn("__start", col("__cum") - col(tokensCol) + lit(start))
           .withColumn("__end", col("__cum") + lit(start))
           .withColumn("seq_id", expr(s"__start DIV ${budget}L"))

@@ -266,6 +266,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(wide.isEmpty, s"shuffled wide columns: ${wide.distinct.mkString("; ")}")
   }
 
+  test("q_curation_pipeline / q_token_budget: the global prefix sum keeps its executed operator counts") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // counted over every plan the query runs (eager jobs included),
+    // descending into adaptive stages and cached relations
+    def counts(q: String): Seq[(String, Int)] = {
+      val ns = executedNodes(q)
+      Seq("Exchange" -> ns.count(_.isInstanceOf[Exchange]),
+        "WindowExec" -> ns.count(_.isInstanceOf[WindowExec]),
+        "BroadcastHashJoin" -> ns.count(_.isInstanceOf[BroadcastHashJoinExec]),
+        "InMemoryTableScan" -> ns.count(_.isInstanceOf[InMemoryTableScanExec]))
+    }
+    assert(counts("q_curation_pipeline") === Seq("Exchange" -> 19,
+      "WindowExec" -> 5, "BroadcastHashJoin" -> 5, "InMemoryTableScan" -> 10))
+    assert(counts("q_token_budget") === Seq("Exchange" -> 5,
+      "WindowExec" -> 1, "BroadcastHashJoin" -> 1, "InMemoryTableScan" -> 2))
+  }
+
   test("q_source_cap's grouped prefix sum: partitioned windows only, offsets broadcast") {
     import org.apache.spark.sql.execution.window.WindowExec
     val exec = SparkEntry.queries("q_source_cap")(spark, sfDir)

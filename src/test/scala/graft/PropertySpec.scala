@@ -148,7 +148,8 @@ class PropertySpec extends SparkSpec {
 
   test("property: cumLess == brute-force rank counts under skewed scores") {
     // heavy duplication (scores 0..5) exercises the tie/boundary paths of
-    // the range-partitioned histogram offsets
+    // the range-partitioned histogram offsets (maxDriverHist = 0 skips the
+    // driver-histogram fast path; `parts` shuffle partitions = 1-5 ranges)
     val gen = for {
       n <- Gen.chooseNum(1, 60)
       vs <- Gen.listOfN(n, Gen.chooseNum(0L, 5L))
@@ -156,9 +157,10 @@ class PropertySpec extends SparkSpec {
     } yield (vs, parts)
     val prop = Prop.forAll(gen) { case (vs, parts) =>
       val df = vs.toDF("score")
-      val (cum, total) = graft.operators.Stats.cumLess(df, "score", parts)
-      val got = cum.select("score", "__cnt_less")
-        .as[(Long, Long)].collect().toMap
+      val (total, got) = withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        val (cum, n) = graft.operators.Stats.cumLess(df, "score", maxDriverHist = 0)
+        (n, cum.select("score", "__cnt_less").as[(Long, Long)].collect().toMap)
+      }
       val want = vs.distinct.map(s => s -> vs.count(_ < s).toLong).toMap
       total == vs.size.toLong && got == want
     }
@@ -166,7 +168,7 @@ class PropertySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("property: withRunningTotalBy == per-group prefix sums under hot groups") {
+  test("property: grouped withRunningTotal == per-group prefix sums") {
     // one group holding most rows = the skew the grouped prefix sum exists
     // for; order key (ord, uid) is a total order per group
     val gen = for {
@@ -181,10 +183,11 @@ class PropertySpec extends SparkSpec {
       parts)
     val prop = Prop.forAll(gen) { case (rows, parts) =>
       val df = rows.toDF("g", "ord", "w", "uid")
-      val got = graft.operators.Stats.withRunningTotalBy(
-          df, Seq(col("g")), Seq(col("ord"), col("uid")), col("w"),
-          "cum", parts)
-        .select("uid", "cum").as[(Long, Long)].collect().toMap
+      val got = withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        graft.operators.Stats.withRunningTotal(
+            df, Seq(col("g")), Seq(col("ord"), col("uid")), col("w"), "cum")
+          .select("uid", "cum").as[(Long, Long)].collect().toMap
+      }
       val want = rows.groupBy(_._1).flatMap { case (_, rs) =>
         rs.sortBy(r => (r._2, r._4))
           .scanLeft((0L, 0L)) { case ((_, acc), r) => (r._4, acc + r._3) }

@@ -23,6 +23,19 @@ abstract class SparkSpec extends AnyFunSuite {
   override def withFixture(test: NoArgTest): Outcome =
     PersistScope.within(super.withFixture(test))
 
+  /** Runs `body` with the session confs `kv` set, then puts back each
+    * key's prior value — the session's own value for a key
+    * `Driver.settings` set (e.g. `spark.sql.shuffle.partitions`), not
+    * Spark's default — and unsets only keys that had none. */
+  protected def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** `f`'s result and the number of Spark jobs it started, counted by
     * job group. The status tracker learns of jobs from the asynchronous
     * listener bus, so a one-task marker job in a second group is the

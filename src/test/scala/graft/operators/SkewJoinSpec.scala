@@ -13,8 +13,8 @@ class SkewJoinSpec extends SparkSpec {
   /** Force-low AQE skew thresholds around `body` (saving/restoring the
     * session confs) so a test-sized hot partition triggers the same
     * split a multi-GB one would in production. */
-  private def withSkewConf[T](body: => T): T = {
-    val conf = Map(
+  private def withSkewConf[T](body: => T): T =
+    withConf(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
@@ -30,15 +30,7 @@ class SkewJoinSpec extends SparkSpec {
       // the MEDIAN one (the skew detector's baseline) — with the spec
       // session's default handful, the hot buckets ARE the median
       "spark.sql.shuffle.partitions" -> "16",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("minhash LSH band join: AQE splits a pathological hot bucket on the OPERATOR's own plan") {
     // 1500 byte-identical documents share every minhash signature, so
@@ -97,15 +89,12 @@ class SkewJoinSpec extends SparkSpec {
       .select(when(col("id") < 190000, 0L).otherwise(col("id")).as("k"),
         sha2(col("id").cast("string"), 256).as("payload"))
     val right = spark.range(10000).select(col("id").as("k"), (col("id") * 2).as("v"))
-    val conf = Map(
+    withConf(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = left.join(right, "k")
         .select(count(col("payload")).as("n"))
       // 190k rows hit the hot key 0; ids >= 190000 have no right match.
@@ -114,9 +103,6 @@ class SkewJoinSpec extends SparkSpec {
       assert(joined.collect().head.getLong(0) === 190000L)
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"expected AQE skew split:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -120,7 +120,7 @@ class StatsSpec extends SparkSpec {
     // desc primary order with heavy ties; unique id tie-break = total order
     val df = (1 to 777).map(i => (i.toLong, (i % 13).toLong, (i % 29).toLong + 1))
       .toDF("id", "score", "w")
-    val dist = Stats.withRunningTotal(df,
+    val dist = Stats.withRunningTotal(df, Nil,
         Seq(col("score").desc, col("id")), col("w"), "cum")
       .select("id", "cum").as[(Long, Long)].collect().toMap
     val win = df.select(col("id"),
@@ -128,7 +128,7 @@ class StatsSpec extends SparkSpec {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"))
       .as[(Long, Long)].collect().toMap
     assert(dist === win)
-    val empty = Stats.withRunningTotal(df.where(col("id") < 0),
+    val empty = Stats.withRunningTotal(df.where(col("id") < 0), Nil,
       Seq(col("id")), col("w"), "cum")
     assert(empty.isEmpty && empty.columns.contains("cum"))
   }
@@ -163,16 +163,17 @@ class StatsSpec extends SparkSpec {
     assert(bulkRate > 0.03 && bulkRate < 0.07, s"bulk rate $bulkRate")
   }
 
-  test("withRunningTotalBy matches the per-group global window cell-exactly") {
+  test("grouped withRunningTotal matches the per-group window") {
     import org.apache.spark.sql.expressions.Window
     // adversarial: one group holds 80% of rows (the skew case the grouped
-    // prefix sum exists for), another has a single row, order ties broken
-    // by id
+    // prefix sum exists for), another has a single row, a NULL group is
+    // its own group (as in the window form), order ties broken by id
     val df = ((1 to 800).map(i => ("hot", i.toLong, (i % 13).toLong)) ++
         (1 to 150).map(i => ("mid", 1000L + i, (i % 7).toLong)) ++
+        (1 to 40).map(i => (null, 2000L + i, (i % 5).toLong)) ++
         Seq(("one", 5000L, 42L)))
       .toDF("g", "id", "w")
-    val dist = Stats.withRunningTotalBy(df, Seq(col("g")),
+    val dist = Stats.withRunningTotal(df, Seq(col("g")),
         Seq(col("w"), col("id")), col("w"), "rt")
       .select("id", "rt").as[(Long, Long)].collect().toMap
     val win = df.withColumn("rt",
@@ -180,7 +181,10 @@ class StatsSpec extends SparkSpec {
           .orderBy(col("w"), col("id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "rt").as[(Long, Long)].collect().toMap
-    assert(dist === win)
+    assert(dist.size === 991 && dist === win)
+    val empty = Stats.withRunningTotal(df.where(col("id") < 0), Seq(col("g")),
+      Seq(col("id")), col("w"), "rt")
+    assert(empty.isEmpty && empty.columns.contains("rt"))
   }
 
   test("groupSample: exactly k per group, deterministic, short groups whole") {

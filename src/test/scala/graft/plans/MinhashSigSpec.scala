@@ -40,11 +40,6 @@ class MinhashSigSpec extends SparkSpec {
     StructType(Seq(StructField("doc", LongType),
       StructField("hs", ArrayType(LongType, containsNull = true)))))
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   private def interpreted[T](body: => T): T =
     withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)

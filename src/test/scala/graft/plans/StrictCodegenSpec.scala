@@ -83,11 +83,6 @@ class StrictCodegenSpec extends SparkSpec {
       Case("WsTokens", StringType, strings, WsTokens.wsTokens))
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   /** Simple names of the `graft.plans` classes inside `exprs`. */
   private def planExprClasses(exprs: Seq[Expression]): Set[String] =
     exprs.flatMap(_.collect {

@@ -12,14 +12,13 @@ class BucketedTableSpec extends SparkSpec {
     BucketedTable.write(facts, "graft_facts_b", "k", 8)
     BucketedTable.write(dims, "graft_dims_b", "k", 8)
     // disable broadcast so the join strategy decision is about shuffles
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = BucketedTable.read(spark, "graft_facts_b")
         .join(BucketedTable.read(spark, "graft_dims_b"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"expected shuffle-free co-located join:\n$plan")
       assert(joined.count() === 1000)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 }

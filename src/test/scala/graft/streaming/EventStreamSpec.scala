@@ -398,7 +398,7 @@ class EventStreamSpec extends SparkSpec {
     assert(pre.toSet === Set(1L, 3L, 4L, 5L))
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    def batchDirs() = fs.listStatus(new org.apache.hadoop.fs.Path(store))
+    def batchDirs(path: String = store) = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .map(_.getPath.getName).filter(_.startsWith("batch_id=")).sorted.toSeq
     assert(batchDirs().size === 3)
     // snapshot an uncompacted copy, compact the original
@@ -428,6 +428,27 @@ class EventStreamSpec extends SparkSpec {
     val after = spark.read.parquet(store)
       .select("vid").as[Long].collect().sorted.toSeq
     assert(after === Seq(1L, 3L, 4L, 5L, 7L))
+    // the same fold over an annIngestBatch index (batch_id / centroid_id
+    // layout): three trigger dirs fold into one, search results unchanged
+    import graft.operators.{IvfIndex, PqIndex}
+    import org.apache.spark.sql.functions.col
+    val emb = (0 until 12).map { i =>
+      (i.toLong, Array.tabulate(4)(d => ((i * 5 + d * 3) % 11).toFloat))
+    }.toDF("id", "emb")
+    val cents = IvfIndex.train(emb, "id", "emb", k = 2, iters = 1)
+    val books = PqIndex.trainBooks(emb, "id", "emb", m = 2, k = 2, iters = 1)
+    val idx = root + "/ann"
+    val ingest = EventStream.annIngestBatch(idx, "id", "emb",
+      cents.collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)), books)
+    (0 until 3).foreach(b => ingest(emb.where(col("id") % 3 === b), b.toLong))
+    def search() = IvfIndex.searchIndexed(spark.read.parquet(idx), "id", cents,
+        Array(1f, 2f, 3f, 4f), topK = 5, nProbes = 2, excludeId = None)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val viaBatches = search()
+    assert(batchDirs(idx).size === 3 && viaBatches.size === 5)
+    EventStream.compactAnnIndex(spark, idx)
+    assert(batchDirs(idx) === Seq("batch_id=-1"), s"got ${batchDirs(idx)}")
+    assert(search() === viaBatches)
   }
 
   test("near-dup filter passes token-less documents through") {
