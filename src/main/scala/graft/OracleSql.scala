@@ -2389,9 +2389,9 @@ object OracleSql {
     // (the exclusion join makes overlap impossible on clean data).
     // not_null is PER-COLUMN sums on BOTH sides (dbt runs one test per
     // column, so a hypothetical both-null row counts twice) — the Spark
-    // side (impactScoresNotNullViolationCount) uses the same two
-    // conditional counts, so the semantics agree even off the
-    // zero-violations happy path
+    // side (Models.dataTestsFromEvents) uses the same two conditional
+    // counts, so the semantics agree even off the zero-violations happy
+    // path
     "q_model_data_tests" ->
       s"""WITH $modelCtes,
          |$modelEngCtes,

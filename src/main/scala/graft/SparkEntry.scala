@@ -1489,9 +1489,7 @@ object SparkEntry {
       .select(col("doc_id"), col("source"), col("text"), col("__toks"),
         size(col("__toks")).cast("long").as("n_tokens"),
         graft.plans.NGrams.ngrams(col("__toks"), 3).as("__g3"))
-      .withColumn("__rep", when(size(col("__g3")) > 0,
-        expr("((size(__g3) - size(array_distinct(__g3))) * CAST(1000000 AS BIGINT)) DIV size(__g3)"))
-        .otherwise(lit(0L)))
+      .withColumn("__rep", Text.repRatioPpm(col("__g3")))
       .where(col("n_tokens") >= 30 && col("__rep") <= 300000L)
       .select(col("doc_id"), col("source"), col("n_tokens"),
         md5(col("text").cast("binary")).as("__md5"),
@@ -1672,18 +1670,18 @@ object SparkEntry {
   private def qModelUprnUsrnCount(s: SparkSession, d: String): DataFrame =
     Models.uprnUsrnCount(modelOpenUsrns(s, d), modelLinkedIds(s, d))
 
-  // the impact models use the FUSED event-level scoring frame
-  // (combinedPermitRowsFromEvents): one narrow events shuffle instead of
-  // building both 27-column lists; row-identical to the list route (the
-  // oracle is the list union, and ModelsSpec pins the two paths equal)
+  // the impact models read the permit events directly
+  // (Models.latestFromEvents): one narrow events shuffle instead of
+  // building both 27-column lists; the oracle scores the list union, and
+  // ModelsSpec pins the event frame against the lists
   private def qModelImpactScores(s: SparkSession, d: String): DataFrame =
-    Models.impactScoresFromEvents(modelPermitEvents(s, d),
+    Models.impactScores(modelPermitEvents(s, d),
       modelOpenUsrns(s, d),
       Models.uprnUsrnCount(modelOpenUsrns(s, d), modelLinkedIds(s, d)),
       modelAuthorities, correlateOnAuthority = true)
 
   private def qModelAuthorityScores(s: SparkSession, d: String): DataFrame =
-    Models.impactScoresHighwayAuthorityFromEvents(modelPermitEvents(s, d),
+    Models.impactScoresHighwayAuthority(modelPermitEvents(s, d),
       modelOpenUsrns(s, d),
       Models.uprnUsrnCount(modelOpenUsrns(s, d), modelLinkedIds(s, d)),
       modelAuthorities, correlateOnAuthority = true)
@@ -1724,14 +1722,14 @@ object SparkEntry {
   // usrn_permit_details_england.sql)
 
   private def qModelImpactScoresEngland(s: SparkSession, d: String): DataFrame =
-    Models.impactScoresFromEvents(modelPermitEvents(s, d),
+    Models.impactScores(modelPermitEvents(s, d),
       modelOpenUsrns(s, d),
       Models.uprnUsrnCount(modelOpenUsrns(s, d), modelLinkedIds(s, d)),
       Nil, correlateOnAuthority = false)
 
   private def qModelAuthorityScoresEngland(s: SparkSession,
                                            d: String): DataFrame =
-    Models.impactScoresHighwayAuthorityFromEvents(modelPermitEvents(s, d),
+    Models.impactScoresHighwayAuthority(modelPermitEvents(s, d),
       modelOpenUsrns(s, d),
       Models.uprnUsrnCount(modelOpenUsrns(s, d), modelLinkedIds(s, d)),
       Nil, correlateOnAuthority = false)
@@ -1761,8 +1759,8 @@ object SparkEntry {
     // halves read (permit, leg) membership off the same post-exclusion
     // frame whose pre-normalisation aggregate the not_null half counts —
     // one event dressing/shuffle instead of two (the r15 sf1.5 residual
-    // was exactly the second dressing). Row-identical to the list route
-    // (ModelsSpec pins both the key-set and the tagged-frame paths).
+    // was exactly the second dressing). ModelsSpec pins the dup counts
+    // against DataQuality.overlappingKeys over the built lists.
     Models.dataTestsFromEvents(ev, usrns, counts, modelAuthorities)
   }
 
@@ -1845,9 +1843,9 @@ object SparkEntry {
   private def qModelWellbeing(s: SparkSession, d: String): DataFrame = {
     val pcs = Models.intPostcodes(modelCodePoint(s, d), modelP001(s, d),
       modelP002(s, d))
-    // the FUSED single-pass variant (one permit scan, one dedup shuffle,
-    // one radius join for both families) — row-identical to the
-    // per-family stg→int→wellbeing chains, pinned in ModelsSpec
+    // both families in one pass (one permit scan, one dedup shuffle,
+    // one radius join); ModelsSpec pins each family's rows equal to its
+    // own single-family run
     Models.wellbeingByModel(modelWellbeingEvents(s, d), pcs,
         Seq("emergency_wellbeing" ->
             Seq("immediate_urgent", "immediate_emergency"),

@@ -72,6 +72,15 @@ object Text {
       lower(graft.plans.NfcNormalize.nfcNormalize(text)),
       "[^a-z0-9]+", " "))
 
+  /** Repeated 3-gram share in ppm: `(size(g3) - size(array_distinct(g3)))
+    * * 1e6 DIV size(g3)` over a document's 3-gram array (the Gopher
+    * repetition signal), exact integer division; a document with no
+    * 3-grams ratios to 0. */
+  def repRatioPpm(g3: Column): Column =
+    when(size(g3) > 0,
+      intDiv((size(g3) - size(array_distinct(g3))) * lit(1000000L), size(g3)))
+      .otherwise(lit(0L))
+
   /** Exact integer division as a Column (the SQL `DIV` operator). */
   private def intDiv(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftShims.column(

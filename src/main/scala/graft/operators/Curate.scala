@@ -221,25 +221,19 @@ object Curate {
     * driver-side budget constant.
     *
     * Scale shape: the per-source running total is
-    * [[Stats.withRunningTotal]] grouped by the source —
-    * a source holding 30% of 100 TB spans many range partitions instead
-    * of one window task — and the corpus total is a 1-row aggregate
-    * cross-joined (broadcast) into the filter. */
+    * [[Stats.withRunningTotal]]'s core grouped by the source — a source
+    * holding 30% of 100 TB spans many range partitions instead of one
+    * window task — and the corpus total is the sum of the slice totals
+    * that core already collects, entering the filter as a literal. */
   def sourceShareCap(df: DataFrame, groupCol: String,
                      orderCols: Seq[org.apache.spark.sql.Column],
                      tokenCount: org.apache.spark.sql.Column,
                      sharePpm: Long): DataFrame = {
-    // cached: the total aggregate and the prefix-sum's range shuffle both
-    // consume it — without this the token count is computed twice from
-    // the raw text
-    val withN = PersistScope.cache(df.withColumn("n_tokens", tokenCount.cast("long")))
-    val total = withN.agg(sum(col("n_tokens")).cast("decimal(38,0)").as("__total"))
-    Stats.withRunningTotal(withN, Seq(col(groupCol)), orderCols,
-        col("n_tokens"), "cum_tokens")
-      .crossJoin(broadcast(total))
-      .where(col("cum_tokens").cast("decimal(38,0)") * lit(1000000L)
-        <= col("__total") * lit(sharePpm))
-      .drop("__total")
+    val (cum, total) = Stats.runningTotal(
+      df.withColumn("n_tokens", tokenCount.cast("long")),
+      Seq(col(groupCol)), orderCols, col("n_tokens"), "cum_tokens")
+    cum.where(col("cum_tokens").cast("decimal(38,0)") * lit(1000000L)
+      <= lit(total).cast("decimal(38,0)") * lit(sharePpm))
   }
 
   /** (doc, g = "w1 w2") bigram instances with multiplicity — a

@@ -28,19 +28,7 @@ object RangeJoin {
   def radiusJoin(left: DataFrame, right: DataFrame,
                  lx: String, ly: String, rx: String, ry: String,
                  r: Double): DataFrame = {
-    val cellL = left
-      .withColumn("__cx0", floor(col(lx) / r))
-      .withColumn("__cy0", floor(col(ly) / r))
-      .withColumn("__dc", explode(expr(
-        "array(-1L, 0L, 1L)")))
-      .withColumn("__dr", explode(expr(
-        "array(-1L, 0L, 1L)")))
-      .withColumn("__cx", col("__cx0") + col("__dc"))
-      .withColumn("__cy", col("__cy0") + col("__dr"))
-      .drop("__cx0", "__cy0", "__dc", "__dr")
-    val cellR = right
-      .withColumn("__cx", floor(col(rx) / r))
-      .withColumn("__cy", floor(col(ry) / r))
+    val (cellL, cellR) = cells(left, right, lx, ly, rx, ry, r, "__cx", "__cy")
     val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
       (col(ly) - col(ry)) * (col(ly) - col(ry))
     cellL.join(cellR, Seq("__cx", "__cy"))
@@ -59,11 +47,11 @@ object RangeJoin {
     * ONLY under aggregates that ignore NULL right-side values —
     * count(rightCol) / countDistinct / sum / min / max grouped by left
     * columns — NOT under count(*) or row-level consumers. Callers that
-    * need the exact dbt LEFT JOIN row shape keep the union route
-    * (Models.intWorksPostcodes); callers that immediately aggregate
-    * (Models.wellbeingByModel) use this and fold away the anti-join,
-    * the union, and both persists the union route needed (guide §2.4:
-    * remove shuffles outright — measured r21, 21 → 13 jobs/pass).
+    * need the exact dbt LEFT JOIN row shape take the union route
+    * (Models.intWorksPostcodes); a caller that immediately aggregates
+    * (Models.wellbeingByModel) uses this and needs no anti-join, no
+    * union and no persist (guide §2.4: remove shuffles outright —
+    * measured r21, 21 → 13 jobs/pass).
     *
     * The distance predicate rides IN the join condition (a residual on
     * the cell equi-keys): an outer join followed by a `where` would
@@ -71,6 +59,21 @@ object RangeJoin {
   def radiusJoinLeft(left: DataFrame, right: DataFrame,
                      lx: String, ly: String, rx: String, ry: String,
                      r: Double): DataFrame = {
+    val (cellL, cellR) = cells(left, right, lx, ly, rx, ry, r, "__rcx", "__rcy")
+    val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
+      (col(ly) - col(ry)) * (col(ly) - col(ry))
+    cellL.join(cellR,
+        col("__cx") === col("__rcx") && col("__cy") === col("__rcy") &&
+          d2 <= lit(r * r), "left")
+      .drop("__cx", "__cy", "__rcx", "__rcy")
+  }
+
+  /** The grid of both joins: `left` exploded to its 3x3 probe cells
+    * (`__cx`, `__cy`) and `right` keyed by its own cell, named
+    * (`rcx`, `rcy`). */
+  private def cells(left: DataFrame, right: DataFrame, lx: String,
+      ly: String, rx: String, ry: String, r: Double, rcx: String,
+      rcy: String): (DataFrame, DataFrame) = {
     val cellL = left
       .withColumn("__cx0", floor(col(lx) / r))
       .withColumn("__cy0", floor(col(ly) / r))
@@ -82,13 +85,8 @@ object RangeJoin {
       .withColumn("__cy", col("__cy0") + col("__dr"))
       .drop("__cx0", "__cy0", "__dc", "__dr")
     val cellR = right
-      .withColumn("__rcx", floor(col(rx) / r))
-      .withColumn("__rcy", floor(col(ry) / r))
-    val d2 = (col(lx) - col(rx)) * (col(lx) - col(rx)) +
-      (col(ly) - col(ry)) * (col(ly) - col(ry))
-    cellL.join(cellR,
-        col("__cx") === col("__rcx") && col("__cy") === col("__rcy") &&
-          d2 <= lit(r * r), "left")
-      .drop("__cx", "__cy", "__rcx", "__rcy")
+      .withColumn(rcx, floor(col(rx) / r))
+      .withColumn(rcy, floor(col(ry) / r))
+    (cellL, cellR)
   }
 }

@@ -277,9 +277,9 @@ object Stats {
 
   /** [[withRunningTotal]] plus the sum of every weight, which the
     * collected slice totals give for free. */
-  private def runningTotal(df: DataFrame, groupCols: Seq[Column],
-                           orderCols: Seq[Column], weight: Column,
-                           outCol: String): (DataFrame, Long) = {
+  private[operators] def runningTotal(df: DataFrame,
+      groupCols: Seq[Column], orderCols: Seq[Column], weight: Column,
+      outCol: String): (DataFrame, Long) = {
     val spark = df.sparkSession
     val parted = graft.PersistScope.cache(df
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions,

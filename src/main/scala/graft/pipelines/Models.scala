@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
-import graft.operators.{DataQuality, ImpactScore, RangeJoin, Relational, Stats}
+import graft.operators.{ImpactScore, RangeJoin, Relational, Stats}
 
 /** The reference's dbt analytics DAG as named transforms over the
   * Catalog's REAL landed schemas — staging → int → marts for the
@@ -42,12 +42,20 @@ import graft.operators.{DataQuality, ImpactScore, RangeJoin, Relational, Stats}
   *    emitted (callers append `current_timestamp()` at write time);
   *    model outputs stay pure functions of their inputs.
   *
-  * Scale shape: every model is one declarative plan — the permit table is
-  * the only big input and is touched by at most one hash shuffle per
-  * dedup/rollup; dimension joins (open_usrns, swa codes, uprn counts) are
-  * plain equi-joins Spark broadcasts when small; the two global
-  * normalisations avoid single-partition windows (min–max is a 1-row
-  * broadcast agg; percent-rank is the distributed [[Stats.cumLess]]).
+  * One implementation per mart: the impact scores and the data tests
+  * read the permit events directly through [[latestFromEvents]] (one
+  * exclusion + latest-event pass, no list build), and both wellbeing
+  * marts are [[wellbeingByModel]]; the permit lists stay as models in
+  * their own right ([[usrnPermitDetails]] unions them).
+  *
+  * Scale shape: the permit table is the only big input and is touched
+  * by at most one hash shuffle per dedup/rollup; dimension joins
+  * (open_usrns, swa codes, uprn counts) are plain equi-joins Spark
+  * broadcasts when small; the two global normalisations avoid
+  * single-partition windows (min–max is a 1-row broadcast agg;
+  * percent-rank is the distributed [[Stats.cumLess]]). Every model is
+  * one lazy plan except [[impactScoresHighwayAuthority]], which finishes
+  * its registry-bounded authority rank on the driver.
   */
 object Models {
 
@@ -81,22 +89,16 @@ object Models {
   val mediumImpactTm: Seq[String] =
     Seq("give_and_take", "stop_go_boards", "priority_working")
 
-  /** Per-permit impact weight in integer DECI-points (×10 — 5 == the dbt
-    * 0.5), so per-key sums are exact and order-independent under partial
+  /** The event-attribute half of the per-permit impact weight:
+    * everything except the UPRN-density band ([[densityWeight10]]). The
+    * weight is in integer DECI-points (×10 — 5 == the dbt 0.5), so
+    * per-key sums are exact and order-independent under partial
     * aggregation (the dbt CASE ladder sums 0.5-granular decimals:
-    * impact_scores_highway_authority_london.sql:17-70). Divide by 10 at
-    * the edge for the reference's scale. */
-  def permitImpact10(workCategory: Column, isTtro: Column,
-                     isSensitive: Column, tmRef: Column,
-                     uprnCount: Column): Column =
-    permitImpactBase10(workCategory, isTtro, isSensitive, tmRef) +
-      densityWeight10(uprnCount)
-
-  /** The event-attribute half of [[permitImpact10]] (everything except
-    * the UPRN-density band). The split is load-bearing for the fused
-    * event route: the weight is ADDITIVE in its two halves and the
-    * density half depends only on `uprn_count` — a per-USRN dimension
-    * attribute constant within a scoring group — so per-group
+    * impact_scores_highway_authority_london.sql:17-70); divide by 10 at
+    * the edge for the reference's scale. The split is load-bearing: the
+    * weight is ADDITIVE in its two halves and the density half depends
+    * only on `uprn_count` — a per-USRN dimension attribute constant
+    * within a scoring group — so per-group
     * `SUM(impact10) = SUM(base10) + COUNT(*) * density10(uprn_count)`,
     * letting the aggregation run BEFORE the dimension join (the join
     * then probes one row per USRN group instead of one per permit). */
@@ -121,7 +123,7 @@ object Models {
     cat + ttro + sens + tm
   }
 
-  /** The UPRN-density band of [[permitImpact10]]
+  /** The UPRN-density band of the per-permit impact weight
     * (impact_scores_highway_authority_london.sql:59-69). */
   def densityWeight10(uprnCount: Column): Column =
     ImpactScore.bandWeight(uprnCount,
@@ -214,10 +216,10 @@ object Models {
     }
   }
 
-  /** The geometry + UPRN-count dimension joins shared by the list route
-    * and the fused event route — ONE definition so the dim-key casting
-    * and the zero-fill cannot drift between the two spec-pinned-equal
-    * paths. Adds `geometry` (left) and a coalesced `uprn_count`. */
+  /** The geometry + UPRN-count dimension joins shared by the permit
+    * lists and the impact scores — ONE definition so the dim-key casting
+    * and the zero-fill cannot drift between a list row and the score it
+    * feeds. Adds `geometry` (left) and a coalesced `uprn_count`. */
   private def joinGeoAndCounts(df: DataFrame, openUsrns: DataFrame,
                                uprnCounts: DataFrame): DataFrame =
     // both dims broadcast by contract (size-guarded — see
@@ -311,89 +313,29 @@ object Models {
 
   // ------------------------------------------------------- impact scores
 
-  /** base_permit_data → raw_impact_level (impact_scores_london.sql:9-134):
-    * both lists unioned, per-permit deci-point weights, summed per
-    * (usrn, street, authority, LOWER(swa), uprn_count, geometry). The
-    * lists already carry the COALESCE'd uprn_count the dbt inner
-    * subquery re-joins for — same value, one join less. */
-  private val scoringCols = Seq("usrn", "street_name", "highway_authority",
-    "highway_authority_swa_code", "work_category", "is_ttro_required",
-    "is_traffic_sensitive", "traffic_management_type_ref", "uprn_count",
-    "geometry")
+  /** The event-side scoring columns (no dimension attributes): what
+    * base_permit_data (impact_scores_london.sql:9-134) reads off each
+    * permit before the per-USRN aggregation. */
+  private val eventScoringCols = Seq("usrn", "street_name",
+    "highway_authority", "highway_authority_swa_code", "work_category",
+    "is_ttro_required", "is_traffic_sensitive",
+    "traffic_management_type_ref")
 
-  /** UNION ALL of both lists projected to the 10 scoring columns — the
-    * frame every impact model aggregates; callers cache THIS projection
-    * (not the 27-column lists) when it is scanned twice. */
-  private def combinedPermitRows(inProgress: DataFrame,
-                                 completed: DataFrame): DataFrame =
-    inProgress.select(scoringCols.map(col): _*)
-      .unionByName(completed.select(scoringCols.map(col): _*))
-
-  /** The same 10-column scoring frame built DIRECTLY from permit events —
-    * row-identical to unioning [[inProgressList]] + [[completedList]] and
-    * projecting [[scoringCols]] (the oracle the correctness gate checks),
-    * but fused for scale. Through the lists, the permit events shuffle
-    * TWICE through 27-column dedup windows, every dimension joins once
-    * per leg, and the licence-dimension join survives even though the
-    * impact models project it away (Catalyst cannot prune a LEFT join —
-    * it can't prove the dim side unique). Here both the completed-stop
-    * exclusion (the dbt event-level NOT-IN,
-    * in_progress_list_london.sql:81-87) and the per-(leg, permit)
-    * latest-event dedup are AGGREGATIONS, not windows: `max` of a struct
-    * ordered (event_time, event_reference) picks the same row the dbt
-    * `DISTINCT ON ... ORDER BY event_time DESC, event_reference DESC`
-    * does, and the exclusion becomes a flag on the aggregation grain —
-    * per (permit, authority) when the exclusion correlates on authority
-    * (a stop in the SAME authority group is exactly a NOT-IN hit), per
-    * permit when it doesn't. Aggregation gets what windows cannot:
-    * map-side partial combine (a permit's event history collapses to at
-    * most one candidate per grain BEFORE the exchange) and no
-    * per-partition sort+buffer (the r16 plan spent ~56 CPU-seconds at
-    * sf1.5 in the two window sorts + per-row `array_contains`; the agg
-    * form spends it nowhere). The geometry and uprn-count dimensions
-    * then join once, on the deduped frame (half the probe rows). */
-  def combinedPermitRowsFromEvents(permits: DataFrame, openUsrns: DataFrame,
-      uprnCounts: DataFrame, authorities: Seq[String] = Nil,
-      correlateOnAuthority: Boolean = true): DataFrame =
-    combinedPermitRowsFromEventsImpl(permits, openUsrns, uprnCounts,
-      authorities, correlateOnAuthority, keepTags = false)
-
-  /** [[combinedPermitRowsFromEvents]] plus the permit reference and leg
-    * (`__leg`: 0 = in-progress, 1 = completed stop) — the tagged frame
-    * lets ONE cached pass serve both the scoring aggregate and the
-    * duplicate-permit key-set tests ([[dataTestsFromEvents]]): a permit
-    * holding BOTH legs post-exclusion is exactly a row of both dbt lists,
-    * i.e. a duplicate-permit violation. */
-  def combinedPermitRowsFromEventsTagged(permits: DataFrame,
-      openUsrns: DataFrame, uprnCounts: DataFrame,
-      authorities: Seq[String] = Nil,
-      correlateOnAuthority: Boolean = true): DataFrame =
-    combinedPermitRowsFromEventsImpl(permits, openUsrns, uprnCounts,
-      authorities, correlateOnAuthority, keepTags = true)
-
-  private def combinedPermitRowsFromEventsImpl(permits: DataFrame,
-      openUsrns: DataFrame, uprnCounts: DataFrame,
-      authorities: Seq[String], correlateOnAuthority: Boolean,
-      keepTags: Boolean): DataFrame =
-    joinGeoAndCounts(latestFromEvents(permits, authorities,
-        correlateOnAuthority), openUsrns, uprnCounts)
-      .select((scoringCols ++
-        (if (keepTags) Seq("permit_reference_number", "__leg")
-         else Nil)).map(col): _*)
-
-  /** The event-side scoring columns (no dimension attributes). */
-  private val eventScoringCols =
-    scoringCols.filterNot(c => c == "geometry" || c == "uprn_count")
-
-  /** The exclusion + latest-event dedup of the fused route, BEFORE any
-    * dimension join: one row per surviving (permit, leg) with the
+  /** The permit rows every impact mart and data test reads, straight
+    * from the events: one row per surviving (permit, leg) with the
     * event-side scoring columns plus `permit_reference_number` and
-    * `__leg` (0 = in-progress, 1 = completed stop). The impact models
+    * `__leg` (0 = in-progress, 1 = completed stop) — row for row the
+    * UNION ALL of [[inProgressList]] and [[completedList]] projected to
+    * those columns (ModelsSpec pins it against the lists), BEFORE any
+    * dimension join. Through the lists, the permit events would shuffle
+    * TWICE through 27-column dedup windows, every dimension would join
+    * once per leg, and the licence-dimension join would survive even
+    * though the impact marts project it away (Catalyst cannot prune a
+    * LEFT join — it can't prove the dim side unique). The impact marts
     * aggregate THIS frame to the USRN grain and only then join the
     * geometry/UPRN dimensions (one probe per group, not per permit —
-    * sound because [[permitImpact10]] is additive with its density half
-    * a pure function of the per-USRN `uprn_count`); the list-equivalent
-    * 10-column frame is [[combinedPermitRowsFromEvents]] = this + dims. */
+    * sound because the weight is additive with its density half a pure
+    * function of the per-USRN `uprn_count`, see [[permitImpactBase10]]). */
   private[graft] def latestFromEvents(permits: DataFrame,
       authorities: Seq[String], correlateOnAuthority: Boolean): DataFrame = {
     val needed = (Seq("permit_reference_number", "event_time",
@@ -520,17 +462,25 @@ object Models {
       .select(Seq(ref, col("__leg")) ++ payFields.map(col): _*)
   }
 
-  /** [[rawImpactLevel]] over the dims-free [[latestFromEvents]] frame:
-    * aggregate to the USRN grain FIRST (event-attribute weights and
-    * breakdown counts need no dimension), join the geometry/UPRN-count
-    * dimensions at that grain, and add the density half of the weight as
+  /** raw_impact_level (impact_scores_london.sql:9-134) over the
+    * dims-free [[latestFromEvents]] frame: per-permit deci-point weights
+    * summed per (usrn, street, authority, LOWER(swa)) as `total10`, plus
+    * the dimension columns `uprn_count` and `geometry`. Aggregates to the
+    * USRN grain FIRST (event-attribute weights and breakdown counts need
+    * no dimension), joins the geometry/UPRN-count dimensions at that
+    * grain, and adds the density half of the weight as
     * `COUNT(*) * density10(uprn_count)` — exactly `SUM(impact10)` by the
-    * additive split ([[permitImpactBase10]]). Row-identical to
-    * `rawImpactLevel(joinGeoAndCounts(latest, ...))`: the dims are
-    * [[uniqueDim]]-deduped, so (uprn_count, geometry) is a pure function
-    * of the usrn value (unmatched or NULL usrns get (0, NULL) either
-    * way) and adding them to the grouping key changes nothing. The dim
-    * join probes one row per USRN group instead of one per permit. */
+    * additive split ([[permitImpactBase10]]). Grouping by the dbt key
+    * (usrn, street, authority, LOWER(swa), uprn_count, geometry) gives
+    * the same rows: the dims are [[uniqueDim]]-deduped, so
+    * (uprn_count, geometry) is a pure function of the usrn value
+    * (unmatched or NULL usrns get (0, NULL) either way). The dim join
+    * probes one row per USRN group instead of one per permit.
+    *
+    * With `withBreakdown`, the per-USRN-group aggregate also carries the
+    * work-category breakdown counts at this grain — counts are
+    * associative, so summing them per authority later equals the dbt
+    * permit-level breakdown groupBy without a second pass. */
   private[graft] def rawImpactFromLatest(latest: DataFrame, openUsrns: DataFrame,
       uprnCounts: DataFrame, withBreakdown: Boolean = false): DataFrame = {
     val aggs = Seq(sum(col("__b10")).as("__sb10"),
@@ -547,24 +497,6 @@ object Models {
       .withColumn("total10",
         col("__sb10") + col("__np") * densityWeight10(col("uprn_count")))
       .drop("__sb10", "__np")
-  }
-
-  /** With `withBreakdown`, the per-USRN-group aggregate also carries the
-    * work-category breakdown counts at this grain — counts are
-    * associative, so summing them per authority later equals the dbt
-    * permit-level breakdown groupBy without a second pass over `both`. */
-  private def rawImpactLevel(both: DataFrame,
-                             withBreakdown: Boolean = false): DataFrame = {
-    both
-      .withColumn("impact10", permitImpact10(col("work_category"),
-        col("is_ttro_required"), col("is_traffic_sensitive"),
-        col("traffic_management_type_ref"), col("uprn_count")))
-      .groupBy(col("usrn"), col("street_name"), col("highway_authority"),
-        lower(col("highway_authority_swa_code"))
-          .as("highway_authority_swa_code"),
-        col("uprn_count"), col("geometry"))
-      .agg(sum(col("impact10")).as("total10"),
-        (if (withBreakdown) breakdownAggs else Nil): _*)
   }
 
   /** work_category_breakdown (impact_scores_highway_authority_london.sql:
@@ -594,22 +526,20 @@ object Models {
     * single-partition sort; the normalisation on deci-point INTEGERS is
     * value-identical to the dbt decimal form ((t-mn)/(mx-mn) is scale
     * invariant) and engine-exact (integer differences are exact doubles;
-    * one rounding at the division). */
-  def impactScores(inProgress: DataFrame, completed: DataFrame): DataFrame =
-    impactScoresOver(combinedPermitRows(inProgress, completed))
-
-  /** [[impactScores]] over the fused event-level scoring frame
-    * ([[combinedPermitRowsFromEvents]]) — same result, one events
-    * shuffle instead of the two list builds. */
-  def impactScoresFromEvents(permits: DataFrame, openUsrns: DataFrame,
+    * one rounding at the division).
+    *
+    * The scored permits are the rows of the in-progress and completed
+    * lists (the dbt base_permit_data UNION ALL), read straight off the
+    * events by [[latestFromEvents]]: `authorities` and
+    * `correlateOnAuthority` mean what they mean for [[inProgressList]]
+    * (London: the listed authorities, correlated; England: `Nil`,
+    * uncorrelated). */
+  def impactScores(permits: DataFrame, openUsrns: DataFrame,
       uprnCounts: DataFrame, authorities: Seq[String] = Nil,
       correlateOnAuthority: Boolean = true): DataFrame =
     finishImpactScores(rawImpactFromLatest(
       latestFromEvents(permits, authorities, correlateOnAuthority),
       openUsrns, uprnCounts))
-
-  private def impactScoresOver(both: DataFrame): DataFrame =
-    finishImpactScores(rawImpactLevel(both))
 
   private def finishImpactScores(rawLevel: DataFrame): DataFrame = {
     // raw feeds both the bounds agg and the normalised output. The cache
@@ -646,13 +576,12 @@ object Models {
     * `100*SUM(cnt_less)/(n-1)` — the integer rank counts sum exactly, so
     * the result doesn't depend on partial-agg order (a naive SUM of
     * per-row doubles does). AVG columns divide those exact sums by the
-    * row count. The authority-level rank is a single-partition
-    * `percent_rank` window on the integer deci-point totals (same
-    * ordering as the dbt SUM(total_impact_level)): its input is the
-    * one-row-per-authority aggregate, cardinality bounded by the
-    * political map, so a global window is correct at every scale —
-    * PlanAuditSpec whitelists exactly this shape (the per-USRN rank
-    * above stays on the distributed [[Stats.cumLess]]).
+    * row count. The authority-level rank orders the integer deci-point
+    * totals (same ordering as the dbt SUM(total_impact_level)) and is
+    * finished on the driver: its input is the one-row-per-authority
+    * aggregate, cardinality bounded by the political map (the per-USRN
+    * rank above stays on the distributed [[Stats.cumLess]]). The scored
+    * permits are read as in [[impactScores]].
     *
     * Deliberate deviation: the work-category breakdown rides the SAME
     * aggregate as the rollup (associative counts), where the dbt SQL
@@ -669,24 +598,13 @@ object Models {
     * call time and the returned frame is a driver LocalRelation whose
     * row order is unspecified (sort on the score columns if a stable
     * order is needed downstream). */
-  def impactScoresHighwayAuthority(inProgress: DataFrame,
-      completed: DataFrame): DataFrame =
-    impactScoresHighwayAuthorityOver(
-      combinedPermitRows(inProgress, completed))
-
-  /** [[impactScoresHighwayAuthority]] over the fused event-level scoring
-    * frame ([[combinedPermitRowsFromEvents]]) — same result, one events
-    * shuffle instead of the two list builds. */
-  def impactScoresHighwayAuthorityFromEvents(permits: DataFrame,
+  def impactScoresHighwayAuthority(permits: DataFrame,
       openUsrns: DataFrame, uprnCounts: DataFrame,
       authorities: Seq[String] = Nil,
       correlateOnAuthority: Boolean = true): DataFrame =
     finishAuthorityScores(rawImpactFromLatest(
       latestFromEvents(permits, authorities, correlateOnAuthority),
       openUsrns, uprnCounts, withBreakdown = true))
-
-  private def impactScoresHighwayAuthorityOver(bothRows: DataFrame): DataFrame =
-    finishAuthorityScores(rawImpactLevel(bothRows, withBreakdown = true))
 
   /** `bound` is the driver-state guard (package-visible so the spec can
     * exercise the refusal path without a million-row frame). */
@@ -848,36 +766,52 @@ object Models {
     * in-progress permit of the given work-category refs for one
     * authority SWA code, with the WKT centroid, display
     * easting/northing, and the duration-days rule
-    * (stg_emergency_works_by_authority.sql:10-108).
+    * (stg_emergency_works_by_authority.sql:10-108) — the one-family call
+    * of [[stagedWorks]]. */
+  def stgWorksByAuthority(permits: DataFrame, categoryRefs: Seq[String],
+                          swaCode: String): DataFrame = {
+    val centroid = Geo.stCentroid(
+      Geo.stGeomFromText(col("works_location_coordinates")))
+    stagedWorks(permits, Seq("works" -> categoryRefs), swaCode)
+      .drop("model")
+      .withColumn("work_point", centroid)
+      .withColumn("easting", round(col("work_point.x"), 2))
+      .withColumn("northing", round(col("work_point.y"), 2))
+      .withColumn("actual_start_date_time", col("__start"))
+      .withColumn("actual_end_date_time", col("__end"))
+      .drop("__start", "__end")
+  }
+
+  /** The works staging of stg_{emergency,major}_works_by_authority for
+    * several work-category families at once: rows are tagged with their
+    * family's name (`model`; refs outside every family drop), and there
+    * is one row per (model, permit) carrying the staging columns,
+    * `duration_days` and the work window as `__start`/`__end`.
     *
     * Duration: same start/end month → day(end)-day(start); otherwise
     * days into the end month (lines 40-49). In-progress works get
     * end = start + 7 days and duration 7 (lines 70-96), and exclude
-    * permits with a completed WORK_STOP anywhere (uncorrelated NOT IN →
-    * anti-join). The dedup here IS ordered in the dbt source
-    * (ORDER BY permit_reference_number, actual_start_date_time) —
-    * earliest start wins; event_reference breaks residual ties. */
-  def stgWorksByAuthority(permits: DataFrame, categoryRefs: Seq[String],
-                          swaCode: String): DataFrame = {
+    * permits with a completed WORK_STOP anywhere in `permits`
+    * (uncorrelated NOT IN → anti-join). The dedup here IS ordered in the
+    * dbt source (ORDER BY permit_reference_number,
+    * actual_start_date_time) — earliest start wins; event_reference
+    * breaks residual ties. */
+  private def stagedWorks(permits: DataFrame,
+      families: Seq[(String, Seq[String])], swaCode: String): DataFrame = {
+    val tag = coalesce(families.map { case (name, refs) =>
+      when(col("work_category_ref").isin(refs.map(lit): _*), lit(name))
+    }: _*)
     val startTs = col("actual_start_date_time").cast("timestamp")
     val endTs = col("actual_end_date_time").cast("timestamp")
-    val sharedCols = Seq("permit_reference_number", "promoter_organisation",
-      "promoter_swa_code", "highway_authority", "street_name",
-      "activity_type", "work_category", "work_status",
+    val sharedCols = Seq("model", "permit_reference_number",
+      "promoter_organisation", "promoter_swa_code", "highway_authority",
+      "street_name", "activity_type", "work_category", "work_status",
       "works_location_coordinates", "usrn").map(col)
-
-    def dressed(df: DataFrame): DataFrame = {
-      val centroid = Geo.stCentroid(
-        Geo.stGeomFromText(col("works_location_coordinates")))
-      df.withColumn("work_point", centroid)
-        .withColumn("easting", round(col("work_point.x"), 2))
-        .withColumn("northing", round(col("work_point.y"), 2))
-    }
-
-    val completed = permits
-      .where(col("work_status_ref") === "completed" &&
+    val tagged = permits.withColumn("model", tag)
+    val completed = tagged
+      .where(col("model").isNotNull &&
+        col("work_status_ref") === "completed" &&
         col("event_type") === "WORK_STOP" &&
-        col("work_category_ref").isin(categoryRefs.map(lit): _*) &&
         col("actual_start_date_time").isNotNull &&
         col("actual_end_date_time").isNotNull &&
         col("works_location_coordinates").isNotNull &&
@@ -889,15 +823,13 @@ object Models {
           month(col("__start")) === month(col("__end")),
           dayofmonth(col("__end")) - dayofmonth(col("__start")))
           .otherwise(dayofmonth(col("__end"))).cast("long"))
-
     val completedAnywhere = permits
       .where(col("work_status_ref") === "completed" &&
         col("event_type") === "WORK_STOP")
       .select("permit_reference_number")
-
-    val inProgress = permits
-      .where(col("work_status_ref") === "in_progress" &&
-        col("work_category_ref").isin(categoryRefs.map(lit): _*) &&
+    val inProgress = tagged
+      .where(col("model").isNotNull &&
+        col("work_status_ref") === "in_progress" &&
         col("actual_start_date_time").isNotNull &&
         col("works_location_coordinates").isNotNull &&
         col("highway_authority_swa_code") === swaCode)
@@ -907,13 +839,10 @@ object Models {
         :+ (startTs + expr("INTERVAL 7 DAYS")).as("__end")
         :+ col("event_reference"): _*)
       .withColumn("duration_days", lit(7L))
-
-    val unioned = completed.unionByName(inProgress)
-    dressed(Relational.distinctOn(unioned, Seq("permit_reference_number"),
-        Seq(col("__start").asc, col("event_reference").asc)))
-      .withColumn("actual_start_date_time", col("__start"))
-      .withColumn("actual_end_date_time", col("__end"))
-      .drop("__start", "__end", "event_reference")
+    Relational.distinctOn(completed.unionByName(inProgress),
+        Seq("model", "permit_reference_number"),
+        Seq(col("__start").asc, col("event_reference").asc))
+      .drop("event_reference")
   }
 
   /** int_postcodes (int_postcodes.sql:7-49): Code-Point postcodes with
@@ -991,97 +920,32 @@ object Models {
         allowMissingColumns = true)
   }
 
-  /** {emergency,major}_wellbeing: per-permit rollup of affected
-    * postcodes with the DfT wellbeing formula £2.10 × days × households
-    * ({emergency,major}_wellbeing.sql:5-47). The £2.10 multiply runs in
-    * DECIMAL against integer day/household counts — exact to the penny,
-    * so ROUND(…, 2) is a no-op both here and in DuckDB. */
-  def wellbeingImpact(worksPostcodes: DataFrame, stgWorks: DataFrame): DataFrame =
-    worksPostcodes
-      .join(stgWorks.select("permit_reference_number",
-        "promoter_organisation", "highway_authority", "street_name",
-        "activity_type", "work_category", "work_status", "usrn")
-        .withColumnRenamed("highway_authority", "__ha"),
-        Seq("permit_reference_number"))
-      .drop("highway_authority").withColumnRenamed("__ha", "highway_authority")
-      .groupBy("permit_reference_number", "promoter_organisation",
-        "highway_authority", "street_name", "activity_type",
-        "work_category", "work_status", "usrn", "work_easting",
-        "work_northing", "actual_start_date_time", "actual_end_date_time",
-        "duration_days")
-      .agg(
-        countDistinct(col("postcode")).as("postcode_count"),
-        sum("total_population").as("total_population_affected"),
-        sum("female_population").as("total_female_population"),
-        sum("male_population").as("total_male_population"),
-        sum("total_households").as("total_households_affected"))
-      .withColumn("wellbeing_total_impact",
-        round(lit(BigDecimal("2.10")) * col("duration_days") *
-          col("total_households_affected"), 2).cast("double"))
-
-  /** The wellbeing mart for SEVERAL work-category families in ONE pass —
-    * the fused twin of stgWorksByAuthority → intWorksPostcodes →
-    * wellbeingImpact run once per family (the dbt emergency/major pair).
-    * Families tag rows (`model` column); because the category-ref sets
-    * are DISJOINT (required), deduping per (model, permit) and running
-    * one radius join is row-identical to the per-family chains — pinned
-    * in ModelsSpec — while the permit scan, the completed-anywhere
-    * aggregate, the dedup shuffle, the postcode prep, and the radius
-    * join all run once instead of once per family. The descriptive
-    * columns ride THROUGH the radius join (bounded fanout), so the
-    * composed route's join-back to stg disappears entirely. */
+  /** {emergency,major}_wellbeing for SEVERAL work-category families in
+    * ONE pass: per-permit rollup of affected postcodes with the DfT
+    * wellbeing formula £2.10 × days × households
+    * ({emergency,major}_wellbeing.sql:5-47), rows tagged with their
+    * family (`model`). The £2.10 multiply runs in DECIMAL against integer
+    * day/household counts — exact to the penny, so ROUND(…, 2) is a
+    * no-op both here and in DuckDB. Because the category-ref sets are
+    * DISJOINT (required), deduping per (model, permit) and running one
+    * radius join gives each family exactly the rows it would get alone
+    * (ModelsSpec pins it), while the permit scan, the completed-anywhere
+    * aggregate, the dedup shuffle, the postcode prep and the radius join
+    * all run once instead of once per family. The descriptive columns
+    * ride THROUGH the radius join (bounded fanout), so there is no
+    * join-back to the staging rows.
+    *
+    * NULL permit refs never reach the output, as in the dbt
+    * {emergency,major}_wellbeing JOIN back to staging (NULL never
+    * equi-joins): they drop before [[stagedWorks]], which leaves the
+    * completed-anywhere exclusion unchanged (a NULL ref never matches
+    * the anti-join). */
   def wellbeingByModel(permits: DataFrame, postcodes: DataFrame,
       families: Seq[(String, Seq[String])], swaCode: String): DataFrame = {
     require(families.nonEmpty, "wellbeingByModel: families must be non-empty")
     val allRefs = families.flatMap(_._2)
     require(allRefs.distinct.size == allRefs.size,
       "wellbeingByModel: family category-ref sets must be disjoint")
-    val tag = coalesce(families.map { case (name, refs) =>
-      when(col("work_category_ref").isin(refs.map(lit): _*), lit(name))
-    }: _*)
-    val startTs = col("actual_start_date_time").cast("timestamp")
-    val endTs = col("actual_end_date_time").cast("timestamp")
-    val sharedCols = Seq("model", "permit_reference_number",
-      "promoter_organisation", "highway_authority", "street_name",
-      "activity_type", "work_category", "work_status",
-      "works_location_coordinates", "usrn").map(col)
-    // NULL permit refs drop here: the composed route loses them at
-    // wellbeingImpact's inner join back to staging (NULL never
-    // equi-joins, same as the dbt {emergency,major}_wellbeing JOIN), so
-    // the fused path must not let them reach the output
-    val base = permits.withColumn("model", tag)
-      .where(col("permit_reference_number").isNotNull)
-    val completed = base
-      .where(col("model").isNotNull &&
-        col("work_status_ref") === "completed" &&
-        col("event_type") === "WORK_STOP" &&
-        col("actual_start_date_time").isNotNull &&
-        col("actual_end_date_time").isNotNull &&
-        col("works_location_coordinates").isNotNull &&
-        col("highway_authority_swa_code") === swaCode)
-      .select(sharedCols :+ startTs.as("__start") :+ endTs.as("__end")
-        :+ col("event_reference"): _*)
-      .withColumn("duration_days",
-        when(year(col("__start")) === year(col("__end")) &&
-          month(col("__start")) === month(col("__end")),
-          dayofmonth(col("__end")) - dayofmonth(col("__start")))
-          .otherwise(dayofmonth(col("__end"))).cast("long"))
-    val completedAnywhere = permits
-      .where(col("work_status_ref") === "completed" &&
-        col("event_type") === "WORK_STOP")
-      .select("permit_reference_number")
-    val inProgress = base
-      .where(col("model").isNotNull &&
-        col("work_status_ref") === "in_progress" &&
-        col("actual_start_date_time").isNotNull &&
-        col("works_location_coordinates").isNotNull &&
-        col("highway_authority_swa_code") === swaCode)
-      .join(completedAnywhere.distinct(),
-        Seq("permit_reference_number"), "left_anti")
-      .select(sharedCols :+ startTs.as("__start")
-        :+ (startTs + expr("INTERVAL 7 DAYS")).as("__end")
-        :+ col("event_reference"): _*)
-      .withColumn("duration_days", lit(7L))
     val point = Geo.stCentroid(
       Geo.stGeomFromText(col("works_location_coordinates")))
     // NO persist and NO anti-join/union here (r21, guide §2.4): the
@@ -1094,10 +958,9 @@ object Models {
     // aggregate), and the union: measured 21 → 13 AQE jobs/pass,
     // q_model_wellbeing 3.06 → ~1.9 s at sf0.1; at scale it removes
     // two full-relation persists from the hot path.
-    val stg =
-      Relational.distinctOn(completed.unionByName(inProgress),
-          Seq("model", "permit_reference_number"),
-          Seq(col("__start").asc, col("event_reference").asc))
+    val stg = stagedWorks(
+        permits.where(col("permit_reference_number").isNotNull),
+        families, swaCode)
         .withColumn("__wp", point)
         .withColumn("work_easting", round(col("__wp.x"), 2))
         .withColumn("work_northing", round(col("__wp.y"), 2))
@@ -1105,8 +968,7 @@ object Models {
         .withColumn("__wy", col("__wp.y"))
         .withColumn("actual_start_date_time", col("__start"))
         .withColumn("actual_end_date_time", col("__end"))
-        .drop("__start", "__end", "event_reference",
-          "works_location_coordinates", "__wp")
+        .drop("__start", "__end", "works_location_coordinates", "__wp")
     val pcs = postcodes.select(col("postcode"),
       Geo.stX(Geo.stCentroid(Geo.stGeomFromText(col("postcode_point"))))
         .as("postcode_easting"),
@@ -1143,128 +1005,42 @@ object Models {
 
   // ----------------------------------------------------------- data tests
 
-  /** data_tests/assert_no_duplicate_permits_between_progress_and_completed:
-    * rows = permits in BOTH lists (must be empty). */
-  def duplicatePermitsAcrossLists(inProgress: DataFrame,
-                                  completed: DataFrame): DataFrame =
-    DataQuality.overlappingKeys(
-      inProgress.select("permit_reference_number"),
-      completed.select("permit_reference_number"), "permit_reference_number")
-
-  /** Both duplicate-permit data_tests WITHOUT building the lists: the
-    * tests compare DISTINCT permit keys, and neither the per-permit
-    * dedup nor the dimension enrichments can change key membership, so
-    * the London (authority-correlated exclusion) and England
-    * (key-correlated) list pairs reduce to ONE (permit, authority) flag
-    * aggregate plus one permit-level rollup — two narrow shuffles
-    * instead of four full list DAGs. Row-count-identical to
-    * duplicatePermitsAcrossLists over inProgressList/completedList
-    * (spec-pinned, including a cross-authority violation). England's
-    * overlap is structurally empty in a single-frame run (its exclusion
-    * key IS the test key — the dbt test exists because dbt's two lists
-    * materialize at different times); the predicate keeps its honest
-    * form and folds at plan time. Returns (test_name, violations). */
-  def duplicatePermitTestCounts(permits: DataFrame,
-                                authorities: Seq[String]): DataFrame = {
-    // Nil here would freeze the correlated test at 0 (empty isin is
-    // always false) — unlike the list builders, where Nil means
-    // unfiltered; refuse the ambiguity
-    require(authorities.nonEmpty,
-      "duplicatePermitTestCounts: the correlated test needs an authority list")
-    val flags = permits
-      // NULL keys pool under groupBy but NEVER match the list route's
-      // equi-joins (the overlappingKeysWithin hazard): drop them, like
-      // the inner-join form and the dbt test do
-      .where(col("permit_reference_number").isNotNull)
-      .groupBy(col("permit_reference_number"), col("highway_authority"))
-      .agg(
-        max(when(col("work_status_ref") === "in_progress", 1).otherwise(0))
-          .as("__ip"),
-        max(when(col("work_status_ref") === "completed" &&
-          col("event_type") === "WORK_STOP", 1).otherwise(0)).as("__st"))
-      // NULL authorities never pass the isin filter, matching the list
-      // route where they are dropped by the authority predicate
-      .withColumn("__inA",
-        col("highway_authority").isin(authorities.map(lit): _*))
-    val perPrn = flags.groupBy("permit_reference_number").agg(
-      max(when(col("__inA") && col("__ip") === 1 && col("__st") === 0, 1)
-        .otherwise(0)).as("__in_corr"),
-      max(when(col("__inA") && col("__st") === 1, 1).otherwise(0))
-        .as("__done_corr"),
-      max(col("__ip")).as("__ip_any"),
-      max(col("__st")).as("__st_any"))
-    val london = perPrn
-      .where(col("__in_corr") === 1 && col("__done_corr") === 1)
-      .agg(count(lit(1)).as("violations"))
-      .select(lit("assert_no_duplicate_permits_london").as("test_name"),
-        col("violations"))
-    // England's in-list excludes on the test key itself, so the overlap
-    // predicate (in = __ip_any ∧ ¬__st_any, done = __st_any) is a
-    // contradiction — Catalyst does NOT fold two attribute equalities to
-    // false, so spelling it out would re-run the aggregates for a count
-    // that is 0 by construction; emit the provably-empty filter directly
-    val england = perPrn.where(lit(false))
-      .agg(count(lit(1)).as("violations"))
-      .select(lit("assert_no_duplicate_permits_england").as("test_name"),
-        col("violations"))
-    london.unionByName(england)
-  }
-
-  /** test_impact_scores_{london,england}.yml: not_null on
-    * total_impact_level and uprn_count — rows = violations. */
-  def impactScoresNullViolations(impactScores: DataFrame): DataFrame =
-    DataQuality.notNullViolations(impactScores, "total_impact_level")
-      .unionByName(DataQuality.notNullViolations(impactScores, "uprn_count"))
-
-  /** The same two not_null tests as ONE count over the PRE-normalisation
-    * scoring aggregate — dbt runs one test per column, so the count is the
-    * per-column SUM (a hypothetical both-null row counts twice, exactly
-    * like filtering the final frame once per column). Identical to
-    * counting over [[impactScores]] output because the min–max
-    * normalisation is a row bijection that preserves both columns'
-    * null-ness: the bounds cross-join multiplies by a 1-row global
-    * aggregate (never drops or duplicates), `total_impact_level` is
-    * `total10 / 10` (null iff `total10` is), and `uprn_count` is a group
-    * key carried through untouched — pinned with constructed nulls in
-    * ModelsSpec. Skips the bounds broadcast job, the raw persist, and the
-    * two filter passes the list formulation pays just to count zeros. */
-  def impactScoresNotNullViolationCount(scoringRows: DataFrame): DataFrame =
-    rawImpactLevel(scoringRows).agg(
-      (count(when(col("total10").isNull, 1)) +
-        count(when(col("uprn_count").isNull, 1))).as("violations"))
-
-  /** [[impactScoresNotNullViolationCount]] over the built list pair —
-    * the spec seam that lets the bijection claim be tested against
-    * [[impactScores]] on the same inputs. */
-  def impactScoresNotNullViolationCount(inProgress: DataFrame,
-                                        completed: DataFrame): DataFrame =
-    impactScoresNotNullViolationCount(combinedPermitRows(inProgress, completed))
-
-  /** The dbt data_tests of one `dbt build` — both duplicate-permit tests
-    * plus the LONDON impact-scores not_null pair (the shape the driver
-    * query and its oracle pin; the England family's structurally
-    * identical not_null tests are not separately evaluated here — run
-    * [[impactScoresNotNullViolationCount]] over the England frame for
-    * those) — from ONE event pass: the tagged London scoring frame
-    * ([[combinedPermitRowsFromEventsTagged]]) is cached and serves every
-    * half, so the expensive event dressing/shuffle runs once instead of
-    * twice ([[duplicatePermitTestCounts]] + a separate scoring build).
+  /** The dbt data_tests of one `dbt build`, as (test_name, violations)
+    * rows: both duplicate-permit tests
+    * (data_tests/assert_no_duplicate_permits_*) plus the LONDON
+    * impact-scores not_null pair (test_impact_scores_london.yml) — the
+    * shape the driver query and its oracle pin; the England family's
+    * structurally identical not_null tests are not evaluated here. All
+    * halves read ONE cached [[latestFromEvents]] pass for the London
+    * family.
     *
-    * Why the tagged frame decides the London dup test: its rows ARE the
-    * dbt lists' union post-exclusion — an in-progress row survives iff
-    * its authority is in the list with no completed stop at that
-    * authority (= membership in in_progress_list_london), a stop row
-    * survives iff its authority is in the list (= completed_list_london)
-    * — and the lag dedup keeps exactly one row per (permit, leg), so
-    * `both legs present` ⇔ `permit in both lists`. NULL references are
-    * dropped like the dbt inner-join test drops them (the frame keeps
-    * them for scoring, gated un-excludable, but they can never match the
-    * test's equi-join). England's overlap is structurally empty in a
-    * single-frame run (its exclusion key IS the test key — see
-    * [[duplicatePermitTestCounts]]); the not_null half counts the
-    * pre-normalisation aggregate ([[impactScoresNotNullViolationCount]]).
-    * Row-identical to the list route — pinned in ModelsSpec alongside
-    * the fused key-set formulation. */
+    * Duplicate permits: the frame's rows ARE the dbt lists' union
+    * post-exclusion — an in-progress row survives iff its authority is
+    * in the list with no completed stop at that authority (= membership
+    * in in_progress_list_london), a stop row survives iff its authority
+    * is in the list (= completed_list_london) — and the dedup keeps
+    * exactly one row per (permit, leg), so `both legs present` ⇔
+    * `permit in both lists` (ModelsSpec pins the count against
+    * [[graft.operators.DataQuality.overlappingKeys]] over the built
+    * lists). NULL references are dropped like the dbt inner-join test
+    * drops them (the frame keeps them for scoring, but they can never
+    * match the test's equi-join). England's overlap is structurally empty in a
+    * single-frame run: its exclusion key IS the test key (the dbt test
+    * exists because dbt's two lists materialize at different times), so
+    * the predicate is the provably-empty filter — Catalyst does NOT fold
+    * two attribute equalities to false, so spelling the contradiction
+    * out would re-run the aggregates for a count that is 0 by
+    * construction.
+    *
+    * not_null on total_impact_level and uprn_count: dbt runs one test
+    * per column, so the count is the per-column SUM (a hypothetical
+    * both-null row counts twice), taken over the PRE-normalisation
+    * scoring aggregate ([[rawImpactFromLatest]]). That equals counting
+    * the [[impactScores]] output, because the min–max normalisation is a
+    * row bijection that preserves both columns' null-ness: the bounds
+    * cross-join multiplies by a 1-row global aggregate,
+    * `total_impact_level` is `total10 / 10`, and `uprn_count` is carried
+    * through untouched. */
   def dataTestsFromEvents(permits: DataFrame, openUsrns: DataFrame,
       uprnCounts: DataFrame, authorities: Seq[String]): DataFrame = {
     require(authorities.nonEmpty,
@@ -1290,8 +1066,7 @@ object Models {
       .select(lit("assert_no_duplicate_permits_london").as("test_name"),
         col("violations"))
     // England: provably 0 in a single-frame run (the exclusion key IS
-    // the test key); same honest-but-folding predicate the key-set
-    // formulation emits
+    // the test key) — the provably-empty filter, see above
     val england = legs.where(lit(false))
       .agg(count(lit(1)).as("violations"))
       .select(lit("assert_no_duplicate_permits_england").as("test_name"),
@@ -1309,7 +1084,12 @@ object Models {
   /** The complete dbt DAG by model name over the landed tables — the
     * run-everything entry a dbt user maps their `dbt run` onto. Wellbeing
     * staging/intermediate models are parameterized the reference's way
-    * (emergency = immediate refs, major = 'major', authority 4720).
+    * (emergency = immediate refs, major = 'major', authority 4720). The
+    * marts are the same functions the driver queries run: the impact
+    * scores read the permit events ([[impactScores]] — London correlated
+    * over [[londonAuthorities]], England uncorrelated over every
+    * authority), and both wellbeing marts are one [[wellbeingByModel]]
+    * frame split by `model`.
     *
     * Cost note: constructing the map is NOT free — the two authority-
     * score entries EXECUTE their whole model pipeline at composition
@@ -1317,7 +1097,9 @@ object Models {
     * authority rank on the driver and returns a LocalRelation, which
     * also runs [[Stats.cumLess]]'s histogram action). `dbt run`
     * materializes everything anyway (this entry's purpose); a caller
-    * wanting ONE cheap model should call its method directly.
+    * wanting ONE cheap model should call its method directly. The
+    * returned frames share no cache: each wellbeing mart, and clean_up,
+    * re-runs the one wellbeing plan.
     * Intermediates cached inside the models belong to the caller's
     * [[graft.PersistScope]]: materialize the returned frames inside
     * `PersistScope.within`, which releases them once the block ends. */
@@ -1335,33 +1117,43 @@ object Models {
     val inEngland = inProgressList(permits, openUsrns, swaCodes, counts,
       Nil, correlateOnAuthority = false)
     val doneEngland = completedList(permits, openUsrns, swaCodes, counts, Nil)
-    val stgEmergency = stgWorksByAuthority(permits,
-      Seq("immediate_urgent", "immediate_emergency"), wellbeingSwaCode)
+    val emergencyRefs = Seq("immediate_urgent", "immediate_emergency")
+    val stgEmergency = stgWorksByAuthority(permits, emergencyRefs,
+      wellbeingSwaCode)
     val stgMajor = stgWorksByAuthority(permits, Seq("major"), wellbeingSwaCode)
     val pcs = intPostcodes(codePoint, p001, p002)
-    val emergencyPcs = intWorksPostcodes(stgEmergency, pcs)
-    val majorPcs = intWorksPostcodes(stgMajor, pcs)
-    val emergencyWellbeing = wellbeingImpact(emergencyPcs, stgEmergency)
-    val majorWellbeing = wellbeingImpact(majorPcs, stgMajor)
+    val wellbeing = wellbeingByModel(permits, pcs,
+      Seq("emergency_wellbeing" -> emergencyRefs,
+        "major_wellbeing" -> Seq("major")), wellbeingSwaCode)
+    def wellbeingOf(model: String): DataFrame =
+      wellbeing.where(col("model") === model).drop("model")
+    val emergencyWellbeing = wellbeingOf("emergency_wellbeing")
+    val majorWellbeing = wellbeingOf("major_wellbeing")
     Map(
       "uprn_usrn_count" -> counts,
       "in_progress_list_london" -> inLondon,
       "completed_list_london" -> doneLondon,
       "usrn_permit_details_london" -> usrnPermitDetails(inLondon, doneLondon),
-      "impact_scores_london" -> impactScores(inLondon, doneLondon),
+      "impact_scores_london" -> impactScores(permits, openUsrns, counts,
+        londonAuthorities, correlateOnAuthority = true),
       "impact_scores_highway_authority_london" ->
-        impactScoresHighwayAuthority(inLondon, doneLondon),
+        impactScoresHighwayAuthority(permits, openUsrns, counts,
+          londonAuthorities, correlateOnAuthority = true),
       "in_progress_list_england" -> inEngland,
       "completed_list_england" -> doneEngland,
       "usrn_permit_details_england" -> usrnPermitDetails(inEngland, doneEngland),
-      "impact_scores_england" -> impactScores(inEngland, doneEngland),
+      "impact_scores_england" -> impactScores(permits, openUsrns, counts,
+        Nil, correlateOnAuthority = false),
       "impact_scores_highway_authority_england" ->
-        impactScoresHighwayAuthority(inEngland, doneEngland),
+        impactScoresHighwayAuthority(permits, openUsrns, counts,
+          Nil, correlateOnAuthority = false),
       "stg_emergency_works_by_authority" -> stgEmergency,
       "stg_major_works_by_authority" -> stgMajor,
       "int_postcodes" -> pcs,
-      "int_emergency_works_postcodes_by_authority" -> emergencyPcs,
-      "int_major_works_postcodes_by_authority" -> majorPcs,
+      "int_emergency_works_postcodes_by_authority" ->
+        intWorksPostcodes(stgEmergency, pcs),
+      "int_major_works_postcodes_by_authority" ->
+        intWorksPostcodes(stgMajor, pcs),
       "emergency_wellbeing" -> emergencyWellbeing,
       "major_wellbeing" -> majorWellbeing,
       "clean_up" -> wellbeingCleanupSummary(emergencyWellbeing, majorWellbeing))

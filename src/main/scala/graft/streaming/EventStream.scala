@@ -356,9 +356,7 @@ object EventStream {
         graft.plans.NGrams.ngrams(col("__toks"), 3).as("__g3"))
       .select(col(idCol), col(textCol),
         size(col("__toks")).cast("long").as("n_tokens"),
-        when(size(col("__g3")) > 0,
-          expr("((size(__g3) - size(array_distinct(__g3))) * CAST(1000000 AS BIGINT)) DIV size(__g3)"))
-          .otherwise(lit(0L)).as("rep_ratio_ppm"))
+        Text.repRatioPpm(col("__g3")).as("rep_ratio_ppm"))
       .where(col("n_tokens") >= minTokens && col("rep_ratio_ppm") <= maxRepRatioPpm)
       // the RAW text rides along: downstream gates whose models are
       // trained on raw reference text (benchmark n-grams, the LM) must

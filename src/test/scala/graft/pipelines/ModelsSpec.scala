@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.SparkSpec
+import graft.operators.DataQuality
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,6 +79,49 @@ class ModelsSpec extends SparkSpec {
     Models.completedList(permits, openUsrns, swaCodes, counts,
       Models.londonAuthorities))
 
+  private def londonScores(events: DataFrame): DataFrame =
+    Models.impactScores(events, openUsrns, counts, Models.londonAuthorities,
+      correlateOnAuthority = true)
+
+  /** Extra events in the [[permits]] dressing. */
+  private def dressed(evs: Seq[Ev]): DataFrame = evs.toDF()
+    .withColumn("promoter_organisation", lit("ACME"))
+    .withColumn("activity_type", lit("utility"))
+    .withColumn("works_location_type", lit("Footway"))
+    .withColumn("road_category", lit("3"))
+    .withColumn("proposed_start_date", lit("2025-01-01"))
+    .withColumn("proposed_end_date", lit("2025-01-31"))
+    .withColumn("actual_start_date_time", lit("2025-01-02 00:00:00"))
+    .withColumn("actual_end_date_time", lit("2025-01-20 00:00:00"))
+    .withColumn("collaborative_working", lit("No"))
+    .withColumn("work_category_ref", lit("standard"))
+    .withColumn("work_status", lit("Works in progress"))
+    .withColumn("works_location_coordinates", lit("POINT (1 1)"))
+
+  private val camden = "LONDON BOROUGH OF CAMDEN"
+
+  /** [[permits]] plus P6, a London duplicate-permit violation:
+    * in-progress at Westminster with no stop there (survives the
+    * correlated exclusion) AND a completed stop at Camden (enters the
+    * completed list) -> the permit appears in both London lists. */
+  private def withViolation: DataFrame = permits.unionByName(dressed(Seq(
+    Ev("P6", 8L, "60", "WORK_START", "in_progress", westminster, "SWA1",
+      "07", "Standard", "No", "No", Some("road_closure"), "Oxford St", "100"),
+    Ev("P6", 9L, "61", "WORK_STOP", "completed", camden, "SWA2",
+      "07", "Standard", "No", "No", Some("road_closure"), "Camden Rd", "400"))))
+
+  /** (test_name -> violations) of [[Models.dataTestsFromEvents]]. */
+  private def dataTests(events: DataFrame): Map[String, Long] =
+    Models.dataTestsFromEvents(events, openUsrns, counts,
+        Models.londonAuthorities)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** Permits in both lists, as the dbt data test counts them. */
+  private def listOverlap(inP: DataFrame, done: DataFrame): Long =
+    DataQuality.overlappingKeys(inP.select("permit_reference_number"),
+      done.select("permit_reference_number"), "permit_reference_number")
+      .count()
+
   test("uprn_usrn_count: linked identifiers counted per USRN, unmatched dropped") {
     val rows = counts.orderBy("usrn").collect()
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((100L, 3L)))
@@ -117,11 +161,12 @@ class ModelsSpec extends SparkSpec {
     assert(doneE.count() === 2)
   }
 
-  test("combinedPermitRowsFromEvents: the fused scale path is row-identical to the list union, with and without authority correlation") {
-    val scoring = Seq("usrn", "street_name", "highway_authority",
-      "highway_authority_swa_code", "work_category", "is_ttro_required",
-      "is_traffic_sensitive", "traffic_management_type_ref", "uprn_count",
-      "geometry")
+  test("latestFromEvents: the event frame is row-identical to the list union, with and without authority correlation") {
+    // the event-side columns every impact mart and data test reads
+    val eventCols = Seq("permit_reference_number", "usrn", "street_name",
+      "highway_authority", "highway_authority_swa_code", "work_category",
+      "is_ttro_required", "is_traffic_sensitive",
+      "traffic_management_type_ref")
     // P6: in-progress under a LISTED authority, its completed WORK_STOP
     // under an UNLISTED one — the dbt NOT-IN subquery has no authority
     // predicate, so with corr=false the stop must exclude P6 from an
@@ -130,7 +175,7 @@ class ModelsSpec extends SparkSpec {
     // AFTER the authority filter would silently keep the row
     // NULL-ref pair: a NULL join key never matches an anti-join, so the
     // NULL-ref in-progress row survives its NULL-ref stop in the list
-    // route — the fused path must not pool NULL refs into one window
+    // route — the event frame must not pool NULL refs into one window
     // partition and exclude it
     val crossAuthority = Seq(
       ModelsSpec.Ev("P6", 8L, "60", "WORK_START", "in_progress", westminster,
@@ -154,11 +199,14 @@ class ModelsSpec extends SparkSpec {
         auth, correlateOnAuthority = corr)
       val done = Models.completedList(events, openUsrns, swaCodes, counts,
         auth)
-      val viaLists = inP.select(scoring.map(col): _*)
-        .unionByName(done.select(scoring.map(col): _*))
+      // leg 0 = the in-progress list, leg 1 = the completed list
+      val viaLists = inP.select(eventCols.map(col): _*)
+        .withColumn("__leg", lit(0))
+        .unionByName(done.select(eventCols.map(col): _*)
+          .withColumn("__leg", lit(1)))
         .collect().map(_.toSeq).sortBy(_.mkString("|"))
-      val fused = Models.combinedPermitRowsFromEvents(events, openUsrns,
-        counts, auth, correlateOnAuthority = corr)
+      val fused = Models.latestFromEvents(events, auth, corr)
+        .select((eventCols :+ "__leg").map(col): _*)
         .collect().map(_.toSeq).sortBy(_.mkString("|"))
       assert(fused.toSeq === viaLists.toSeq, s"(auth=$auth corr=$corr)")
       // pin the ground truth itself, not just route agreement: under
@@ -169,16 +217,6 @@ class ModelsSpec extends SparkSpec {
       assert(inRefs.contains("P6") === corr,
         s"(auth=$auth corr=$corr) in-progress refs: $inRefs")
     }
-  }
-
-  test("impactScoresHighwayAuthorityFromEvents ≡ the list route") {
-    val (inP, done) = londonLists
-    val viaLists = Models.impactScoresHighwayAuthority(inP, done)
-      .collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val fused = Models.impactScoresHighwayAuthorityFromEvents(permits,
-      openUsrns, counts, Models.londonAuthorities, correlateOnAuthority = true)
-      .collect().map(_.toSeq).sortBy(_.mkString("|"))
-    assert(fused.toSeq === viaLists.toSeq)
   }
 
   test("usrn_permit_details: union of both lists with the detail columns") {
@@ -195,9 +233,7 @@ class ModelsSpec extends SparkSpec {
     //                        P3 (Standard 20 + no_carriageway 0 + 2)        = 22
     // usrn 100 total10 = 62+27 = 89; usrn 200 total10 = 22
     // min-max: 1 + 99*(89-22)/67 = 100 (Severe); 1 + 0 = 1 (Minimal)
-    val (inP, done) = londonLists
-    val scores = Models.impactScores(inP, done)
-      .orderBy("usrn").collect()
+    val scores = londonScores(permits).orderBy("usrn").collect()
     assert(scores.length === 2)
     val (u100, u200) = (scores(0), scores(1))
     assert(u100.getAs[String]("usrn") === "100")
@@ -211,17 +247,19 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("impact_scores degenerate: all totals equal -> 50.0") {
-    val (_, done) = londonLists
-    val only3 = done.where(col("permit_reference_number") === "P3")
-    val scores = Models.impactScores(only3.limit(0).unionByName(only3), only3)
-    // two identical P3 rows -> one group, mx10 == mn10
+    // P3 and a twin on another street (uprn_count 0 on both): two USRN
+    // groups with the same total -> mx10 == mn10
+    val p3 = permits.where(col("permit_reference_number") === "P3")
+    val twin = p3.withColumn("permit_reference_number", lit("P3b"))
+      .withColumn("usrn", lit("300"))
+    val scores = londonScores(p3.unionByName(twin))
     assert(scores.select("impact_index_score").as[Double].collect().toSeq ===
-      Seq(50.0))
+      Seq(50.0, 50.0))
   }
 
   test("impact_scores_highway_authority: rollup, rank sums, breakdown — hand-computed") {
-    val (inP, done) = londonLists
-    val rows = Models.impactScoresHighwayAuthority(inP, done).collect()
+    val rows = Models.impactScoresHighwayAuthority(permits, openUsrns, counts,
+      Models.londonAuthorities, correlateOnAuthority = true).collect()
     assert(rows.length === 1)
     val r = rows.head
     assert(r.getAs[String]("highway_authority") === westminster)
@@ -248,6 +286,17 @@ class ModelsSpec extends SparkSpec {
     assert(r.getAs[Long]("ttro_required_count") === 1L)      // P1 Yes
     assert(r.getAs[Long]("traffic_sensitive_count") === 1L)  // P2 Yes
     assert(r.getAs[Long]("high_impact_traffic_mgmt_count") === 0L)
+    // England (uncorrelated, every authority): Leeds' P4 joins as a third
+    // USRN and a second authority — whole rows, as the list route scored
+    // them on this fixture
+    val england = Models.impactScoresHighwayAuthority(permits, openUsrns,
+        counts, Nil, correlateOnAuthority = false)
+      .orderBy("highway_authority").collect().map(_.toSeq)
+    assert(england.toSeq === Seq(
+      Seq(westminster, "swa1", 2L, 1.5, 3L, 11.1, 5.55, 8.9, 2.2, 100.0,
+        50.0, 100.0, "Severe", 1L, 1L, 1L, 0L, 0L, 1L, 1L, 0L),
+      Seq(leeds, "swa9", 1L, 0.0, 0L, 2.2, 2.2, 2.2, 2.2, 0.0, 0.0, 0.0,
+        "Minimal", 0L, 0L, 1L, 0L, 0L, 0L, 0L, 0L)))
   }
 
   // --------------------------------------------------- wellbeing fixture
@@ -303,6 +352,38 @@ class ModelsSpec extends SparkSpec {
   private def p002: DataFrame = Seq(("AA1 1AA", 50L))
     .toDF("Postcode", "Count")
 
+  private val families = Seq(
+    "emergency_wellbeing" -> Seq("immediate_urgent", "immediate_emergency"),
+    "major_wellbeing" -> Seq("major"))
+
+  /** Both wellbeing marts over [[wellbeingPermits]], as the per-family
+    * stg -> int_works_postcodes -> wellbeing chains computed them: one
+    * line per row, `|`-joined in [[wellbeingLines]]'s column order.
+    * W1/W2/W3 emergency (W3 has no postcode in range), W4's completed
+    * major row. */
+  private val wellbeingRows: Seq[String] = Seq(
+    "emergency_wellbeing|W1|2025-01-05 00:00:00.0|2025-01-09 00:00:00.0|4|101.0|101.0|1|100|60|40|50|420.0",
+    "emergency_wellbeing|W2|2025-02-20 00:00:00.0|2025-02-27 00:00:00.0|7|500.0|500.0|2|110|70|40|50|735.0",
+    "emergency_wellbeing|W3|2024-12-28 00:00:00.0|2025-01-03 00:00:00.0|3|2000.0|2000.0|0|null|null|null|null|null",
+    "major_wellbeing|W4|2025-03-01 00:00:00.0|2025-03-02 00:00:00.0|1|100.0|100.0|1|100|60|40|50|105.0")
+
+  /** The rows of a [[Models.wellbeingByModel]] frame in the
+    * [[wellbeingRows]] form; the descriptive columns every fixture row
+    * shares (ACME, Westminster, ...) are checked once, here. */
+  private def wellbeingLines(wb: DataFrame): Seq[String] = {
+    val shared = wb.select("promoter_organisation", "highway_authority",
+        "street_name", "activity_type", "work_category", "work_status", "usrn")
+      .distinct().collect().map(_.toSeq)
+    assert(shared.toSeq === Seq(Seq("ACME", westminster, "Oxford St",
+      "utility", "Immediate - urgent", "Works in progress", "100")))
+    wb.select("model", "permit_reference_number", "actual_start_date_time",
+        "actual_end_date_time", "duration_days", "work_easting",
+        "work_northing", "postcode_count", "total_population_affected",
+        "total_female_population", "total_male_population",
+        "total_households_affected", "wellbeing_total_impact")
+      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+  }
+
   test("stg works: category/status/swa filters, exclusion, centroid, duration rules") {
     val stg = Models.stgWorksByAuthority(wellbeingPermits,
       Seq("immediate_urgent", "immediate_emergency"), "4720")
@@ -352,10 +433,9 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("emergency_wellbeing: £2.10 × days × households, null pass-through on unmatched") {
-    val stg = Models.stgWorksByAuthority(wellbeingPermits,
-      Seq("immediate_urgent", "immediate_emergency"), "4720")
     val pcs = Models.intPostcodes(codePoint, p001, p002)
-    val wb = Models.wellbeingImpact(Models.intWorksPostcodes(stg, pcs), stg)
+    val wb = Models.wellbeingByModel(wellbeingPermits, pcs, families.take(1),
+      "4720")
     val rows = wb.orderBy("permit_reference_number").collect()
     assert(rows.length === 3)
     val w1 = rows(0)
@@ -374,23 +454,14 @@ class ModelsSpec extends SparkSpec {
   }
 
   test("wellbeingByModel: the fused single-pass twin is row-identical to the per-family chains") {
-    val families = Seq(
-      "emergency_wellbeing" -> Seq("immediate_urgent", "immediate_emergency"),
-      "major_wellbeing" -> Seq("major"))
     val pcs = Models.intPostcodes(codePoint, p001, p002)
     val fused = Models.wellbeingByModel(wellbeingPermits, pcs, families, "4720")
-    val composed = families.map { case (name, refs) =>
-      val stg = Models.stgWorksByAuthority(wellbeingPermits, refs, "4720")
-      Models.wellbeingImpact(Models.intWorksPostcodes(stg, pcs), stg)
-        .withColumn("model", lit(name))
-    }.reduce(_.unionByName(_))
-    assert(fused.columns.sorted.toSeq === composed.columns.sorted.toSeq)
-    val cols = fused.columns.sorted.map(col)
-    assert(fused.select(cols: _*).collect().toSet ===
-      composed.select(cols: _*).collect().toSet)
-    // both families present: W1/W2/W3 emergency, W4's completed major row
-    assert(fused.where(col("model") === "major_wellbeing").count() === 1)
-    assert(fused.count() === 4)
+    // the per-family chains: one single-family run per family
+    val perFamily = families
+      .map(f => Models.wellbeingByModel(wellbeingPermits, pcs, Seq(f), "4720"))
+      .reduce(_.unionByName(_))
+    assert(fused.collect().toSet === perFamily.collect().toSet)
+    assert(wellbeingLines(fused) === wellbeingRows)
     // overlapping family refs are a contract violation, not silent dedup
     intercept[IllegalArgumentException](Models.wellbeingByModel(
       wellbeingPermits, pcs,
@@ -426,35 +497,9 @@ class ModelsSpec extends SparkSpec {
 
   // ------------------------------------------------------ dbt data tests
 
-  test("duplicatePermitTestCounts: fused key-set counts == testing the built lists (incl. a cross-authority violation)") {
-    val camden = "LONDON BOROUGH OF CAMDEN"
-    // P6 IS the London violation the fused path must count: in-progress
-    // at Westminster with no stop there (survives the correlated
-    // exclusion) AND a completed stop at Camden (enters the completed
-    // list) -> the permit appears in both London lists
-    val withViolation = permits.unionByName(Seq(
-      Ev("P6", 8L, "60", "WORK_START", "in_progress", westminster, "SWA1",
-        "07", "Standard", "No", "No", Some("road_closure"), "Oxford St", "100"),
-      Ev("P6", 9L, "61", "WORK_STOP", "completed", camden, "SWA2",
-        "07", "Standard", "No", "No", Some("road_closure"), "Camden Rd", "400"))
-      .toDF()
-      .withColumn("promoter_organisation", lit("ACME"))
-      .withColumn("activity_type", lit("utility"))
-      .withColumn("works_location_type", lit("Footway"))
-      .withColumn("road_category", lit("3"))
-      .withColumn("proposed_start_date", lit("2025-01-01"))
-      .withColumn("proposed_end_date", lit("2025-01-31"))
-      .withColumn("actual_start_date_time", lit("2025-01-02 00:00:00"))
-      .withColumn("actual_end_date_time", lit("2025-01-20 00:00:00"))
-      .withColumn("collaborative_working", lit("No"))
-      .withColumn("work_category_ref", lit("standard"))
-      .withColumn("work_status", lit("Works in progress"))
-      .withColumn("works_location_coordinates", lit("POINT (1 1)")))
+  test("dataTestsFromEvents: dup counts == overlappingKeys over the built lists (incl. a cross-authority violation)") {
     for (ev <- Seq(permits, withViolation)) {
-      val counts = Models.uprnUsrnCount(openUsrns, linkedIds)
-      val fused = Models.duplicatePermitTestCounts(ev,
-          Models.londonAuthorities)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val tests = dataTests(ev)
       val inL = Models.inProgressList(ev, openUsrns, swaCodes, counts,
         Models.londonAuthorities, correlateOnAuthority = true)
       val doneL = Models.completedList(ev, openUsrns, swaCodes, counts,
@@ -462,73 +507,44 @@ class ModelsSpec extends SparkSpec {
       val inE = Models.inProgressList(ev, openUsrns, swaCodes, counts,
         Nil, correlateOnAuthority = false)
       val doneE = Models.completedList(ev, openUsrns, swaCodes, counts, Nil)
-      assert(fused("assert_no_duplicate_permits_london") ===
-        Models.duplicatePermitsAcrossLists(inL, doneL).count())
-      assert(fused("assert_no_duplicate_permits_england") ===
-        Models.duplicatePermitsAcrossLists(inE, doneE).count())
-      // the single-pass tagged-frame route (dup tests + not_null from
-      // ONE cached frame) must agree with BOTH the key-set formulation
-      // and the built lists, including the not_null count
-      val onePass = Models.dataTestsFromEvents(ev, openUsrns, counts,
-          Models.londonAuthorities)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(onePass("assert_no_duplicate_permits_london") ===
-        fused("assert_no_duplicate_permits_london"))
-      assert(onePass("assert_no_duplicate_permits_england") ===
-        fused("assert_no_duplicate_permits_england"))
-      assert(onePass("impact_scores_not_null") ===
-        Models.impactScoresNotNullViolationCount(inL, doneL)
-          .collect().head.getLong(0))
+      assert(tests("assert_no_duplicate_permits_london") ===
+        listOverlap(inL, doneL))
+      assert(tests("assert_no_duplicate_permits_england") ===
+        listOverlap(inE, doneE))
+      // not_null: dbt's per-column counts over the impact_scores_london
+      // output
+      val scores = londonScores(ev)
+      assert(tests("impact_scores_not_null") ===
+        scores.where(col("total_impact_level").isNull).count() +
+          scores.where(col("uprn_count").isNull).count())
     }
     // and the violation case really is non-zero (the test can fail)
-    assert(Models.duplicatePermitTestCounts(withViolation,
-        Models.londonAuthorities)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      .apply("assert_no_duplicate_permits_london") === 1L)
-    // authorities = Nil is refused (it would freeze the test at 0, not
-    // mean 'unfiltered' like the list builders)
+    assert(dataTests(withViolation)("assert_no_duplicate_permits_london") === 1L)
+    // authorities = Nil is refused (it would not mean 'unfiltered' for the
+    // correlated London test)
     intercept[IllegalArgumentException](
-      Models.duplicatePermitTestCounts(permits, Nil))
-    intercept[IllegalArgumentException](
-      Models.dataTestsFromEvents(permits, openUsrns,
-        Models.uprnUsrnCount(openUsrns, linkedIds), Nil))
+      Models.dataTestsFromEvents(permits, openUsrns, counts, Nil))
   }
 
   test("NULL permit references: no spurious dup-test violation, no double-emit in the radius join, fused wellbeing stays list-identical") {
-    val camden = "LONDON BOROUGH OF CAMDEN"
     // a NULL-ref in-progress row at Westminster + a NULL-ref stop at
     // Camden would pool under one groupBy key and read as a London
     // violation — the equi-join route (and the dbt inner-join test)
     // counts 0 because NULL keys never match
-    val withNulls = permits.unionByName(Seq(
+    val withNulls = permits.unionByName(dressed(Seq(
       Ev(null, 10L, "70", "WORK_START", "in_progress", westminster, "SWA1",
         "07", "Standard", "No", "No", Some("road_closure"), "Oxford St", "100"),
       Ev(null, 11L, "71", "WORK_STOP", "completed", camden, "SWA2",
-        "07", "Standard", "No", "No", Some("road_closure"), "Camden Rd", "400"))
-      .toDF()
-      .withColumn("promoter_organisation", lit("ACME"))
-      .withColumn("activity_type", lit("utility"))
-      .withColumn("works_location_type", lit("Footway"))
-      .withColumn("road_category", lit("3"))
-      .withColumn("proposed_start_date", lit("2025-01-01"))
-      .withColumn("proposed_end_date", lit("2025-01-31"))
-      .withColumn("actual_start_date_time", lit("2025-01-02 00:00:00"))
-      .withColumn("actual_end_date_time", lit("2025-01-20 00:00:00"))
-      .withColumn("collaborative_working", lit("No"))
-      .withColumn("work_category_ref", lit("standard"))
-      .withColumn("work_status", lit("Works in progress"))
-      .withColumn("works_location_coordinates", lit("POINT (1 1)")))
-    val fused = Models.duplicatePermitTestCounts(withNulls,
-        Models.londonAuthorities)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fused("assert_no_duplicate_permits_london") === 0L)
-    // the tagged-frame route keeps NULL-ref rows for scoring but must
-    // drop them from the dup-test membership exactly like the key-set
-    // route (and the dbt inner-join test) does
-    assert(Models.dataTestsFromEvents(withNulls, openUsrns,
-        Models.uprnUsrnCount(openUsrns, linkedIds), Models.londonAuthorities)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      .apply("assert_no_duplicate_permits_london") === 0L)
+        "07", "Standard", "No", "No", Some("road_closure"), "Camden Rd", "400"))))
+    assert(listOverlap(
+      Models.inProgressList(withNulls, openUsrns, swaCodes, counts,
+        Models.londonAuthorities, correlateOnAuthority = true),
+      Models.completedList(withNulls, openUsrns, swaCodes, counts,
+        Models.londonAuthorities)) === 0L)
+    // the event frame keeps NULL-ref rows for scoring but must drop them
+    // from the dup-test membership exactly like the list route (and the
+    // dbt inner-join test) does
+    assert(dataTests(withNulls)("assert_no_duplicate_permits_london") === 0L)
 
     // a MATCHED NULL-ref work emits only its matched rows — the anti-join
     // emulation of the dbt LEFT JOIN must not re-add it as an extra
@@ -557,72 +573,38 @@ class ModelsSpec extends SparkSpec {
     assert(wp.where(col("permit_reference_number").isNull &&
       col("postcode").isNull).count() === 0)
 
-    // fused wellbeing == per-family chains WITH the NULL-ref row present
-    // (both drop it: the composed route at the inner join back to stg)
-    val families = Seq(
-      "emergency_wellbeing" -> Seq("immediate_urgent", "immediate_emergency"),
-      "major_wellbeing" -> Seq("major"))
+    // the wellbeing marts WITH the NULL-ref row present are the per-family
+    // chains' rows without it (they dropped it at the inner join back to
+    // stg, like the dbt JOIN)
     val fusedWb = Models.wellbeingByModel(wvWithNull, pcs, families, "4720")
-    val composedWb = families.map { case (name, refs) =>
-      val s = Models.stgWorksByAuthority(wvWithNull, refs, "4720")
-      Models.wellbeingImpact(Models.intWorksPostcodes(s, pcs), s)
-        .withColumn("model", lit(name))
-    }.reduce(_.unionByName(_))
-    val cols = fusedWb.columns.sorted.map(col)
-    assert(fusedWb.select(cols: _*).collect().toSet ===
-      composedWb.select(cols: _*).collect().toSet)
-    assert(fusedWb.where(col("permit_reference_number").isNull).count() === 0)
+    assert(wellbeingLines(fusedWb) === wellbeingRows)
   }
 
   test("data test: no duplicate permits between in-progress and completed (clean + broken)") {
-    val (inP, done) = londonLists
-    assert(Models.duplicatePermitsAcrossLists(inP, done).count() === 0)
-    // a deliberately-broken pair IS caught
-    val broken = Models.duplicatePermitsAcrossLists(done, done)
-    assert(broken.count() > 0)
+    val clean = dataTests(permits)
+    assert(clean("assert_no_duplicate_permits_london") === 0L)
+    assert(clean("assert_no_duplicate_permits_england") === 0L)
+    // a deliberately-broken input IS caught
+    assert(dataTests(withViolation)("assert_no_duplicate_permits_london") > 0L)
   }
 
   test("data test: impact-score not_null columns (clean + broken)") {
-    val (inP, done) = londonLists
-    val scores = Models.impactScores(inP, done)
-    assert(Models.impactScoresNullViolations(scores).count() === 0)
+    assert(dataTests(permits)("impact_scores_not_null") === 0L)
+    def violations(df: DataFrame): Long =
+      DataQuality.notNullViolations(df, "total_impact_level").count() +
+        DataQuality.notNullViolations(df, "uprn_count").count()
+    val scores = londonScores(permits)
+    assert(violations(scores) === 0L)
     val withNull = scores.withColumn("total_impact_level",
       when(col("usrn") === "100", lit(null).cast("double"))
         .otherwise(col("total_impact_level")))
-    assert(Models.impactScoresNullViolations(withNull).count() === 1)
-  }
-
-  test("impactScoresNotNullViolationCount: pre-normalisation count == counting the final frame (constructed nulls)") {
-    val (inP, done) = londonLists
-    // clean fixture: zero, agreeing with the final-frame formulation
-    assert(Models.impactScoresNotNullViolationCount(inP, done)
-      .collect().head.getLong(0) === 0L)
-    // NULL the uprn_count of one street (a group KEY of the scoring
-    // aggregate): the fused count must equal per-column filtering of the
-    // FINAL normalised frame — the bijection claim with real violations
-    def breakU(df: DataFrame): DataFrame = df.withColumn("uprn_count",
-      when(col("usrn") === "100", lit(null).cast("long"))
-        .otherwise(col("uprn_count")))
-    val fast = Models.impactScoresNotNullViolationCount(
-      breakU(inP), breakU(done)).collect().head.getLong(0)
-    val finalFrame = Models.impactScores(breakU(inP), breakU(done))
-    val perColumn =
-      finalFrame.where(col("total_impact_level").isNull).count() +
-        finalFrame.where(col("uprn_count").isNull).count()
-    assert(fast === perColumn)
-    assert(fast > 0L) // the test CAN fail — this is not a SELECT 0
-    // and the fused event-level route (what q_model_data_tests runs)
-    // agrees with the list route on the clean fixture
-    assert(Models.impactScoresNotNullViolationCount(
-        Models.combinedPermitRowsFromEvents(permits, openUsrns, counts,
-          Models.londonAuthorities, correlateOnAuthority = true))
-      .collect().head.getLong(0) === 0L)
+    assert(violations(withNull) === 1L)
   }
 
   test("finishAuthorityScores: the driver-state guard probes BEFORE materializing and refuses loudly") {
     import org.apache.spark.sql.functions.lit
     // a synthetic USRN-grain frame with 3 distinct authorities; the
-    // breakdown columns rawImpactLevel(withBreakdown = true) carries
+    // breakdown columns rawImpactFromLatest(withBreakdown = true) carries
     val base = Seq(
       ("a1", "s1", "u1", 10L, 50L),
       ("a2", "s2", "u2", 11L, 60L),
