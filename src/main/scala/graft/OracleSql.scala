@@ -497,10 +497,10 @@ object OracleSql {
     s"CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN (CAST(1 AS BIGINT) << $b) ELSE 0 END"
   }.mkString("\n    + ")
 
-  /** One Lloyd round as SQL: argmin assignment against `cPrev` (tie-break
-    * on centroid id, mirroring min_by over struct(d2, cid)), then
-    * string-routed decimal-exact per-(cell, dim) means — the exact
-    * arithmetic IvfIndex.train runs, so 2 unrolled rounds reproduce
+  /** One Lloyd round as SQL: argmin assignment against `cPrev` (ties to
+    * the lowest centroid id, as IvfIndex.nearest's first-position
+    * argmin), then string-routed decimal-exact per-(cell, dim) means —
+    * the exact arithmetic IvfIndex.lloyd runs, so 2 unrolled rounds reproduce
     * training bit-for-bit. */
   private def ivfAssign(aName: String, cPrev: String): String =
     ivfAssignRel(aName, cPrev, "ev")

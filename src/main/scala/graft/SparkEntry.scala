@@ -348,19 +348,9 @@ object SparkEntry {
     // >= cores. Measured at sf0.1 (2 row groups, local[32]): solo
     // min-of-6 2.11 s before, with 2.1 CPU-s across 2 tasks; floored
     // the same work spreads across the box.
-    //
-    // NOTE (cost, do not copy blindly): `ids0.rdd.getNumPartitions`
-    // forces eager physical planning of the scan at query-BUILD time and
-    // reads the pre-AQE partition count — fine for this bench query
-    // (the scan is the whole plan and AQE never coalesces a map-only
-    // chain), but a pattern that would silently bypass AQE coalescing if
-    // reused on a plan with exchanges; prefer planning-free source
-    // metadata (file/row-group counts) there.
-    val sc = s.sparkContext
-    val ids0 = Tables.events(s, d).select(col("event_id"), col("user_id"))
-    val ids = if (ids0.rdd.getNumPartitions < sc.defaultParallelism)
-      ids0.repartition(sc.defaultParallelism) else ids0
-    ids
+    Guards.floorPartitions(
+        Tables.events(s, d).select(col("event_id"), col("user_id")),
+        s.sparkContext.defaultParallelism)
       .select(col("event_id"), gj.as("gj"))
       .select(col("event_id"), col("gj"),
         get_json_object(col("gj"), "$.type").as("gtype"))
@@ -1199,13 +1189,9 @@ object SparkEntry {
     * single-row-group bench parquet otherwise pins the whole encode to
     * ONE task (splits below the row group are empty, so no split config
     * can help). At real scale the source already has more partitions
-    * than the box and this is a no-op. Same build-time
-    * `rdd.getNumPartitions` cost note as q_geo_geojson above: fine on a
-    * map-only chain, don't copy onto plans with exchanges. */
-  private def floorTextScan(s: SparkSession, df: DataFrame): DataFrame = {
-    val want = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
-  }
+    * than the box and this is a no-op. */
+  private def floorTextScan(s: SparkSession, df: DataFrame): DataFrame =
+    Guards.floorPartitions(df, s.sparkContext.defaultParallelism)
 
   /** Fixed literal merge table for q_bpe_encode — trained once with
     * `Bpe.train(documents@sf0.001, text, 16)` and embedded as literals on

@@ -75,10 +75,9 @@ object Curate {
     // and is a no-op at real scale where file count >= cores. Measured
     // at sf1.5 (one 8 MB file, local[32]): broadcast without the floor
     // 56 s — single task; with it 4.2 s vs 7.8 s for the shuffled join.
-    val sc = corpus.sparkSession.sparkContext
     val corpSrc =
-      if (benchIsSmall && corpus.rdd.getNumPartitions < sc.defaultParallelism)
-        corpus.repartition(sc.defaultParallelism)
+      if (benchIsSmall) Guards.floorPartitions(corpus,
+        corpus.sparkSession.sparkContext.defaultParallelism)
       else corpus
     val corp = hashed(corpSrc)
     val nBench = bench.groupBy(col("doc").as("doc_b"))
@@ -155,12 +154,8 @@ object Curate {
       else all.groupBy("sh").agg(count(lit(1)).as("__df"))
         .where(col("__df") <= maxNgramDf).select("sh")
     // Int.MaxValue means "deliberately uncapped" (the same sentinel as
-    // maxNgramDf above): skip the probe limit — maxCollected + 1 would
-    // wrap negative and throw instead of collecting
-    val rows =
-      if (maxCollected == Int.MaxValue) kept.collect()
-      else kept.limit(maxCollected + 1).collect()
-    require(rows.length <= maxCollected,
+    // maxNgramDf above)
+    val rows = Guards.collectAtMost(kept, maxCollected)(
       s"benchmarkNgrams: benchmark yields more than $maxCollected " +
         s"distinct $n-grams — this is a driver-collected EVAL-BENCHMARK " +
         "model, not a corpus operator. Train on a bounded reference set " +
@@ -321,12 +316,8 @@ object Curate {
               maxCollected: Int = 4 << 20): Map[String, Long] = {
     // the key already IS "w1 w2" — no concat_ws rebuild
     val scored = bigramModel(bigramRows(df, idCol, textCol))
-    // Int.MaxValue = deliberately uncapped (see benchmarkNgrams): the
-    // +1 probe would wrap negative and throw
-    val rows =
-      if (maxCollected == Int.MaxValue) scored.collect()
-      else scored.limit(maxCollected + 1).collect()
-    require(rows.length <= maxCollected,
+    // Int.MaxValue = deliberately uncapped (see benchmarkNgrams)
+    val rows = Guards.collectAtMost(scored, maxCollected)(
       s"lmModel: reference corpus yields more than $maxCollected " +
         "distinct bigrams — the collected model would not be " +
         "broadcast-sized. Train on a bounded reference corpus or raise " +

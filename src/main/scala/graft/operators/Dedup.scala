@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.PersistScope
 import graft.functions.Text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -79,13 +79,8 @@ object Dedup {
         .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
         .select(keys.map(col): _*)
       // limit-probe, not count(): on a pathological key universe the
-      // probe stops scanning at maxHotKeys + 1 rows; clamp BEFORE the
-      // increment — maxHotKeys == Long.MaxValue would wrap the +1 to
-      // Long.MinValue, whose .toInt is 0, making the probe limit(0) and
-      // the guard vacuous (the exact hazard this clamp exists to stop)
-      val probe = (math.min(maxHotKeys, Int.MaxValue.toLong - 1) + 1).toInt
-      val hotRows = hot.limit(probe).collect()
-      require(hotRows.length <= maxHotKeys,
+      // probe stops scanning at maxHotKeys + 1 rows
+      val hotRows = Guards.collectAtMost(hot, maxHotKeys)(
         s"capByFreq: more than $maxHotKeys keys exceed cap=$cap on " +
           s"(${keys.mkString(", ")}) — the hot set no longer fits a " +
           "broadcast. Raise the frequency cap (fewer keys qualify as " +
@@ -436,29 +431,29 @@ object Dedup {
     * index is linear in corpus tokens exactly like the shingle family. */
   def dupSpans(df: DataFrame, idCol: String, textCol: String,
                n: Int, minDocs: Int = 2): DataFrame = {
-    val pos = PersistScope.cache(
-      df.select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__t"))
-        .select(col("doc_id"),
-          posexplode(graft.plans.NGrams.ngrams(col("__t"), n)).as(Seq("pos", "__g")))
-        .select(col("doc_id"), col("pos"),
-          Text.md5Long(col("__g")).as("g"))) // long key: 8-byte shuffle rows
-    val dup = dupGrams(pos, minDocs)
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    pos.join(dup, Seq("g"))
-      .select("doc_id", "pos")
-      .withColumn("__brk",
-        when(lag(col("pos"), 1).over(wDoc).isNull
-          .or(col("pos") - lag(col("pos"), 1).over(wDoc) > n), 1).otherwise(0))
-      .withColumn("__span", sum(col("__brk")).over(wDoc))
-      .groupBy(col("doc_id"), col("__span"))
+    val pos = gramIndex(
+      df.select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__t")), n)
+    spanGroups(pos.join(dupGrams(pos, minDocs), Seq("g")), n)
       .agg(min(col("pos")).cast("long").as("span_start"),
         (max(col("pos")) + lit(n - 1)).cast("long").as("span_end"),
         count(lit(1)).cast("long").as("n_windows"))
       .select("doc_id", "span_start", "span_end", "n_windows")
   }
 
-  /** Grams present in >= minDocs DISTINCT documents. For the common
+  /** The cached positional n-gram index (doc_id, pos, g) of a tokenized
+    * frame (doc_id, __t): `pos` is the window's first token position,
+    * `g` the gram's [[Text.md5Long]] — a long key, 8-byte shuffle rows.
+    * It is the heaviest chain of the span operators (tokenize →
+    * n-grams → md5) and feeds both the gram-frequency aggregate and the
+    * join back onto it. */
+  private def gramIndex(tokens: DataFrame, n: Int): DataFrame =
+    PersistScope.cache(
+      tokens.select(col("doc_id"),
+          posexplode(graft.plans.NGrams.ngrams(col("__t"), n)).as(Seq("pos", "__g")))
+        .select(col("doc_id"), col("pos"), Text.md5Long(col("__g")).as("g")))
+
+  /** Grams present in >= minDocs DISTINCT documents: (g, `__mn` = the
+    * lowest doc holding it, the canonical occurrence). For the common
     * minDocs=2 the distinct test is `min(doc) != max(doc)` — a
     * single-phase aggregate whose partials combine map-side, vs
     * count_distinct's per-(gram, doc) expansion; the oracle keeps the
@@ -468,12 +463,27 @@ object Dedup {
       pos.groupBy("g")
         .agg(min(col("doc_id")).as("__mn"), max(col("doc_id")).as("__mx"))
         .where(col("__mn") =!= col("__mx"))
-        .select("g")
+        .select("g", "__mn")
     else
       pos.groupBy("g")
-        .agg(count_distinct(col("doc_id")).as("__df"))
+        .agg(count_distinct(col("doc_id")).as("__df"), min(col("doc_id")).as("__mn"))
         .where(col("__df") >= minDocs)
-        .select("g")
+        .select("g", "__mn")
+
+  /** Duplicated-window hits (doc_id, pos) grouped by maximal span:
+    * windows p < p' of one document share a span iff no gap between
+    * consecutive hits exceeds n — touching or overlapping coverage of
+    * [p, p+n-1] and [p', p'+n-1]. ONE per-document window. */
+  private def spanGroups(hits: DataFrame, n: Int): RelationalGroupedDataset = {
+    val wDoc = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("pos")
+    hits.select("doc_id", "pos")
+      .withColumn("__brk",
+        when(lag(col("pos"), 1).over(wDoc).isNull
+          .or(col("pos") - lag(col("pos"), 1).over(wDoc) > n), 1).otherwise(0))
+      .withColumn("__span", sum(col("__brk")).over(wDoc))
+      .groupBy(col("doc_id"), col("__span"))
+  }
 
   /** Substring-dedup MATERIALIZATION — the corpus with every duplicated
     * span's tokens REMOVED (the cut step after [[dupSpans]] detection;
@@ -482,11 +492,11 @@ object Dedup {
     * every token is cut, and empty docs, drop out entirely — the same
     * contract as a length-0 filter downstream.
     *
-    * Shape: the same positional-gram inverted index as [[dupSpans]],
-    * covered token positions by exploding each duplicated window's
-    * [p, p+n-1] range, then a LEFT ANTI equi-join on (doc, pos) —
-    * co-partitioned with the token relation — and one groupBy(doc) to
-    * reassemble the kept text in position order. Never doc x doc. */
+    * Shape: the same positional-gram index ([[gramIndex]]), duplicate
+    * test ([[dupGrams]], whose min doc is the canonical occurrence) and
+    * span merge ([[spanGroups]]) as [[dupSpans]]; each document's merged
+    * spans then filter its cached token array in position order. Never
+    * doc x doc. */
   def cutSpans(df: DataFrame, idCol: String, textCol: String,
                n: Int, minDocs: Int = 2,
                keepCanonical: Boolean = false): DataFrame = {
@@ -496,41 +506,20 @@ object Dedup {
     // would otherwise run twice over the full corpus
     val base = PersistScope.cache(
       df.select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__t")))
-    // the heaviest chain in the operator (tokenize -> n-grams -> md5),
-    // consumed by the dupCols aggregate AND the hits join: cache like
-    // dupSpans does for the identical relation
-    val pos = PersistScope.cache(
-      base.select(col("doc_id"),
-          posexplode(graft.plans.NGrams.ngrams(col("__t"), n)).as(Seq("pos", "__g")))
-        .select(col("doc_id"), col("pos"), Text.md5Long(col("__g")).as("g")))
+    val pos = gramIndex(base, n)
     // keepCanonical = the Lee-et-al. keep-one policy: each duplicated
     // gram's min-doc occurrence survives, every other doc's is cut —
     // one per-window predicate on the same join, zero extra shuffles
-    val dupCols =
-      if (keepCanonical && minDocs == 2)
-        pos.groupBy("g")
-          .agg(min(col("doc_id")).as("__canon"), max(col("doc_id")).as("__mx"))
-          .where(col("__canon") =!= col("__mx"))
-          .select(col("g"), col("__canon"))
-      else if (keepCanonical)
-        pos.groupBy("g")
-          .agg(count_distinct(col("doc_id")).as("__df"),
-            min(col("doc_id")).as("__canon"))
-          .where(col("__df") >= minDocs)
-          .select(col("g"), col("__canon"))
-      else dupGrams(pos, minDocs)
-    val hits =
-      if (keepCanonical)
-        pos.join(dupCols, Seq("g")).where(col("doc_id") =!= col("__canon"))
-      else pos.join(dupCols, Seq("g"))
+    val hits0 = pos.join(dupGrams(pos, minDocs), Seq("g"))
+    val hits = if (keepCanonical) hits0.where(col("doc_id") =!= col("__mn")) else hits0
     // Cut with merged INTERVALS at doc grain, not exploded positions:
     // the position form generated n rows per hit window (135M at sf6),
     // deduped them through two aggregation passes, and handed AQE a
     // CORPUS-SIZED relation as the anti-join's small side — at sf6 it
     // broadcast 16M covered positions (~0.5 GB of driver hash table, an
     // OOM in waiting at any larger SF), then collected every surviving
-    // token through an ObjectHashAggregate sort. The window-start merge
-    // below is exactly [[dupSpans]]'s (gap > n breaks; gap <= n unions
+    // token through an ObjectHashAggregate sort. The span merge below
+    // is [[dupSpans]]' [[spanGroups]] (gap > n breaks; gap <= n unions
     // contiguously, so merged intervals ARE the covered-position set),
     // producing a FEW DISJOINT SPANS per document; the reassembly then
     // filters the already-cached per-doc token ARRAY against them with
@@ -539,15 +528,7 @@ object Dedup {
     // hit index's (the part measured at dupSpans speed). Per-token cost
     // is O(spans-in-doc); spans are disjoint and merged, so the worst
     // case (everything duplicated) collapses to ONE span per doc.
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    val spans = hits
-      .select(col("doc_id"), col("pos"))
-      .withColumn("__brk",
-        when(lag(col("pos"), 1).over(wDoc).isNull
-          .or(col("pos") - lag(col("pos"), 1).over(wDoc) > n), 1).otherwise(0))
-      .withColumn("__span", sum(col("__brk")).over(wDoc))
-      .groupBy(col("doc_id"), col("__span"))
+    val spans = spanGroups(hits, n)
       .agg(min(col("pos")).as("s"), (max(col("pos")) + lit(n - 1)).as("e"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("s"), col("e"))))

@@ -81,37 +81,19 @@ object IvfPq {
   /** ADC top-k over an already-encoded relation (vid, centroid_id,
     * code_0..m-1 — [[buildIndex]]'s persisted layout or [[encode]]'s
     * output directly). The `centroid_id.isin(probes)` filter is a
-    * PARTITION filter on the persisted layout; the per-cell ADC tables
-    * are driver-computed literal arrays from the QUERY's residual in
-    * each probed cell. Returns (idCol, cell, adc_d2). */
+    * PARTITION filter on the persisted layout; probes rank like
+    * [[IvfIndex.search]]'s, and each probed cell's ADC sum is
+    * [[PqIndex.adcSum]] over the table of the QUERY's residual in that
+    * cell. Returns (idCol, cell, adc_d2). */
   def searchEncoded(encoded: DataFrame, idCol: String, model: Model,
                     queryVec: Array[Float], topK: Int, nProbes: Int,
                     excludeId: Option[Long]): DataFrame = {
-    val m = model.books.length
-    val sub = model.books(0)(0).length
     val q = queryVec.map(_.toDouble)
-
-    // probes: nearest cells to the query (same fold order as IvfIndex)
-    val qq = Similarity.dotSeq(q.toSeq, q.toSeq)
-    val probes = model.centArr.toSeq.map { case (cid, c) =>
-      (cid, Similarity.dotSeq(c.toSeq, c.toSeq) - 2.0 * Similarity.dotSeq(c.toSeq, q.toSeq) + qq)
-    }.sortBy { case (cid, d) => (d, cid) }.take(nProbes).map(_._1)
-
-    // per-cell ADC tables from the QUERY's residual in that cell
-    val adc: Map[Int, Array[Array[Double]]] = probes.map { cell =>
-      val rq = q.zip(model.centArr(cell)).map { case (a, b) => a - b }
-      cell -> Array.tabulate(m) { s =>
-        val qs = rq.slice(s * sub, (s + 1) * sub).toSeq
-        val sqq = Similarity.dotSeq(qs, qs)
-        model.books(s).map(c =>
-          sqq - 2.0 * Similarity.dotSeq(qs, c.toSeq) + Similarity.dotSeq(c.toSeq, c.toSeq))
-      }
-    }.toMap
-
-    def cellApprox(cell: Int): Column =
-      (0 until m).map(s =>
-          element_at(array(adc(cell)(s).map(lit): _*), col(s"code_$s") + 1))
-        .reduceLeft(_ + _)
+    val probes = IvfIndex.probeCells(
+      model.centArr.toSeq.map { case (cid, c) => (cid, c.toSeq) }, q, nProbes)
+    // per-cell ADC sums from the QUERY's residual in that cell
+    def cellApprox(cell: Int): Column = PqIndex.adcSum(PqIndex.adcTable(
+      q.zip(model.centArr(cell)).map { case (a, b) => a - b }, model.books))
     val approx = probes.tail.foldLeft(
         when(col("centroid_id") === probes.head, cellApprox(probes.head))) {
       case (acc, cell) => acc.when(col("centroid_id") === cell, cellApprox(cell))

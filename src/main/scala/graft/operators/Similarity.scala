@@ -217,15 +217,11 @@ object Similarity {
     // Flooring BEFORE the a/b split keeps the two sides sameResult, so
     // the shuffle-join ReusedExchange pin still holds; no-op whenever
     // the corpus already has >= box-width partitions (any real scale).
-    val assigned0 =
-      graft.operators.IvfIndex.assign(df, idCol, vecCol, centroids)
+    val assigned = Guards.floorPartitions(
+      IvfIndex.assign(df, idCol, vecCol, centroids)
         .select(col("vid"), col("centroid_id").as("cell"), col("v"))
-        .withColumn("nv", norm(col("v")))
-    val sc = df.sparkSession.sparkContext
-    val assigned =
-      if (assigned0.rdd.getNumPartitions < sc.defaultParallelism)
-        assigned0.repartition(sc.defaultParallelism)
-      else assigned0
+        .withColumn("nv", norm(col("v"))),
+      df.sparkSession.sparkContext.defaultParallelism)
     val a = assigned.select(col("cell"), col("vid").as("vec_a"),
       col("v").as("va"), col("nv").as("na"))
     val b = assigned.select(col("cell"), col("vid").as("vec_b"),

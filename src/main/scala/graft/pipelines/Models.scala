@@ -707,8 +707,7 @@ object Models {
     // grouping key ever breaks, the driver refuses LOUDLY after
     // materializing at most bound+1 rows — a bare collect-then-require
     // would OOM before it could fire the very error it exists for
-    val collected = pre.limit(bound + 1).collect()
-    require(collected.length <= bound,
+    val collected = graft.operators.Guards.collectAtMost(pre, bound)(
       s"finishAuthorityScores: more than $bound authority rows — the " +
         "bounded-driver-state guard refused to materialize the frame. " +
         "The authority key is expected to be registry-bounded (~400 in " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-import graft.operators.Curate
+import graft.operators.{Curate, IvfIndex, PqIndex}
 import graft.pipelines.Catalog
 import graft.streaming.EventStream
 
@@ -57,6 +57,17 @@ class JobBudgetSpec extends SparkSpec {
       Seq(col("q").desc, col("doc_id")), col("toks"), 300000L).collect())
     assert(kept.length === 240)
     assert(jobs === 8)
+  }
+
+  test("IvfIndex.train and PqIndex.trainBooks: 3 jobs each for 2 Lloyd rounds") {
+    // one job for the init rows (it fills the cache), one per round
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val (cents, ivf) = jobsStarted(
+      IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2).collect())
+    val (books, pq) = jobsStarted(
+      PqIndex.trainBooks(emb, "vec_id", "embedding", m = 4, k = 8, iters = 2))
+    assert(cents.length === 8 && books.map(_.length).toSeq === Seq(8, 8, 8, 8))
+    assert((ivf, pq) === ((3, 3)))
   }
 
   test("q_model_*: build and action jobs of the nine dbt marts") {

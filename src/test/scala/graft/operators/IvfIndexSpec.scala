@@ -85,7 +85,8 @@ class IvfIndexSpec extends SparkSpec {
       .select(col("centroid_id"), col("v"))
     for (parts <- Seq(1, 7)) {
       val df = if (parts == 1) assigned.coalesce(1) else assigned.repartition(parts)
-      val fused = IvfIndex.meansByDim(df)
+      val fused = IvfIndex.meansByDim(
+        df.select(col("centroid_id").as("cid_0"), col("v").as("__sub_0")), m = 1).head
       val sql = df
         .select(col("centroid_id"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("centroid_id", "dim")
@@ -97,6 +98,36 @@ class IvfIndexSpec extends SparkSpec {
         }.toSeq.sortBy(_._1)
       assert(fused === sql, s"fused means diverged from SQL route at parts=$parts")
     }
+  }
+
+  test("adaptiveFloor counts partitions without planning a DeserializeToObject") {
+    // Dataset.rdd plans a full-width DeserializeToObject over the frame
+    // (an executed plan to any QueryExecutionListener); the floor reads
+    // the partition count of the frame's own plan, the same number
+    val deserializes = new java.util.concurrent.atomic.AtomicInteger()
+    object Spy extends org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+          : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+        if (plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.DeserializeToObject])
+          deserializes.incrementAndGet()
+        Nil
+      }
+    }
+    val experimental =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    val prior = experimental.extraStrategies
+    experimental.extraStrategies = prior :+ Spy
+    val frames = try {
+      val fs = Seq(
+        spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding"),
+        spark.read.parquet(s"$sfDir/embeddings.parquet").where(col("vec_id") % 3 === 0),
+        spark.range(0, 1000, 1, 3).toDF("id"))
+      fs.foreach(IvfIndex.adaptiveFloor(_, perPartBytes = 1L))
+      assert(deserializes.get === 0)
+      fs
+    } finally experimental.extraStrategies = prior
+    frames.foreach(df =>
+      assert(df.queryExecution.toRdd.getNumPartitions === df.rdd.getNumPartitions))
   }
 
   test("a centroid model one term past the literal bound fails before any job runs") {

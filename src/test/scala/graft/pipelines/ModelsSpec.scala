@@ -627,6 +627,8 @@ class ModelsSpec extends SparkSpec {
     val ok = Models.finishAuthorityScores(rawLevel, bound = 3)
     assert(ok.count() === 3L)
     assert(ok.columns.contains("highway_authority_impact_score"))
+    // uncapped: the probe's bound + 1 must not wrap to a negative limit
+    assert(Models.finishAuthorityScores(rawLevel, bound = Int.MaxValue).count() === 3L)
   }
 }
 
